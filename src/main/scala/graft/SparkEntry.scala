@@ -7508,7 +7508,9 @@ object SparkEntry {
         // persisted: globalNtile consumes its input twice (bucket
         // offsets + numbering join) — uncached, each consumer re-runs
         // the corpus-sized orders aggregate. Customer-dim-sized rows;
-        // open-ended cache contract (harness clearCache releases).
+        // open-ended: clearCache() does NOT free localCheckpoint
+        // blocks — the ContextCleaner frees them once the driver GCs
+        // the checkpointed RDD.
         val rev = Tables.orders(s, d)
           .groupBy(col("o_custkey"))
           .agg(sum(col("o_totalprice")).as("rev"))

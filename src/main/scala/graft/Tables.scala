@@ -1,7 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Loaders for the driver-generated testdata tables (see TESTDATA.md).
   *
@@ -11,22 +15,89 @@ import org.apache.spark.sql.functions._
   * microsecond TIMESTAMP_NTZ on read whatever the file carries, so every
   * consumer sees one contract and a generator change can never again
   * break the read path (the round-9 lesson).
+  *
+  * Schema cache contract. A table's schema is catalog metadata, not
+  * per-request work: every read here goes through [[read]], which infers
+  * a path's schema once (Spark 4 runs a schema-merge JOB for that, even
+  * for one footer) and then reads with the schema pinned, so a warm read
+  * launches zero Spark jobs. The process-wide entry per path holds a
+  * fingerprint — the sorted leaf files as (path, length, mtime) plus the
+  * session values of the parquet inference confs ([[inferenceConfs]]) —
+  * and the schema inferred under it. Any change to the fingerprint (a
+  * file added, removed, rewritten or touched, or an inference conf
+  * flipped) re-infers and REPLACES the path's entry, so the map holds one
+  * entry per path. A rewrite that keeps every leaf file's path, length
+  * and mtime is invisible to the fingerprint; Spark's own writers never
+  * produce one (every write names fresh part files).
   */
 object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    read(spark, s"$sfDir/$name.parquet")
 
-  /** Spark-visible dtype of the events `ts` column, probed from the
-    * parquet footer only (no row groups read). With `nanosAsLong` set, a
-    * TIMESTAMP(NANOS) file surfaces as LongType; a timestamp[us] file as
-    * TimestampType/TimestampNTZType. This is the single branch point for
-    * every events read path — batch, streaming, and ScaleUp.
-    */
-  def eventsTsIsLong(spark: SparkSession, sfDir: String): Boolean = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$sfDir/events.parquet")
-      .schema("ts").dataType == org.apache.spark.sql.types.LongType
+  /** The session confs that change what parquet schema inference returns
+    * for the same files; their values are part of the fingerprint. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  private case class Fingerprint(
+      files: Seq[(String, Long, Long)], confs: Seq[String])
+
+  private val schemas =
+    new ConcurrentHashMap[String, (Fingerprint, StructType)]()
+
+  /** The one parquet read of this object: the cached schema when the
+    * path's fingerprint still matches, otherwise one inference that
+    * replaces the entry. The listing runs BEFORE the inference, so an
+    * entry's fingerprint is never newer than its schema — a concurrent
+    * rewrite costs at most one extra inference on the next read, never a
+    * stale schema. */
+  private def read(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = leaves(fs, fs.getFileStatus(p))
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      .sortBy(_._1)
+    val fp = Fingerprint(files, inferenceConfs.map(spark.conf.get))
+    val schema = Option(schemas.get(path)).collect {
+      case (`fp`, cached) => cached
+    }.getOrElse {
+      val inferred = spark.read.parquet(path).schema
+      schemas.put(path, (fp, inferred))
+      inferred
+    }
+    spark.read.schema(schema).parquet(path)
   }
+
+  /** Leaf files under `st`. Plain status calls, not `listFiles`: on the
+    * local filesystem a located status also loads each file's
+    * permissions, about 4 ms per single-file table against 0.02 ms. */
+  private def leaves(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
+    if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(leaves(fs, _))
+    else Seq(st)
+
+  /** Raw events read with `nanosAsLong` set: the probe and the read share
+    * one schema lookup. The conf must be set before the read — without
+    * it a NANOS-encoded file throws before any branch is taken. */
+  private def rawEvents(spark: SparkSession, sfDir: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    read(spark, s"$sfDir/events.parquet")
+  }
+
+  private def tsIsLong(raw: DataFrame): Boolean =
+    raw.schema("ts").dataType == LongType
+
+  /** Spark-visible dtype of the events `ts` column, from the cached
+    * schema (footer-only inference on first sight of the file). With
+    * `nanosAsLong` set, a TIMESTAMP(NANOS) file surfaces as LongType; a
+    * timestamp[us] file as TimestampType/TimestampNTZType. This is the
+    * single branch point for every events read path — batch, streaming,
+    * and ScaleUp.
+    */
+  def eventsTsIsLong(spark: SparkSession, sfDir: String): Boolean =
+    tsIsLong(rawEvents(spark, sfDir))
 
   /** Schema-adaptive events read: nanosecond-INT64 `ts` is floor-divided
     * to microseconds (identical to DuckDB's ns→µs truncation); a native
@@ -34,11 +105,8 @@ object Tables {
     * match the naive timestamps of every other table.
     */
   private def loadEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    // probe FIRST: it sets nanosAsLong, without which the raw read below
-    // throws on a NANOS-encoded file before any branch is taken
-    val tsIsLong = eventsTsIsLong(spark, sfDir)
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    if (tsIsLong)
+    val raw = rawEvents(spark, sfDir)
+    if (tsIsLong(raw))
       raw.withColumn("ts",
         timestamp_micros(expr("ts div 1000")).cast("timestamp_ntz"))
     else
@@ -55,14 +123,16 @@ object Tables {
     * own scale killer: per-file open/listing cost swamps the scan),
     * fine enough that a typical export window prunes most of a year.
     * In a deployment this IS the table's storage layout; for the
-    * harness it is materialized once per (JVM, sfDir) under tmpdir.
+    * harness it is materialized once per (JVM, sfDir) under tmpdir. This
+    * JVM owns that directory, so the schema read back right after the
+    * write is kept beside it and every later read pins it (zero jobs).
     */
   def eventsChunked(
       s: SparkSession,
       d: String,
       fromDay: String,
       toDay: String): DataFrame = {
-    val dir = partitionedEvents.computeIfAbsent(d, _ => {
+    val (dir, schema) = partitionedEvents.computeIfAbsent(d, _ => {
       // harness hygiene: the materialized copy dies with the JVM (in a
       // deployment the layout is the permanent table, not a copy)
       val tmp = Scratch.dir("graft_events_chunked")
@@ -82,14 +152,14 @@ object Tables {
           s.sparkContext.defaultParallelism, col("chunk"), col("ts"))
         .sortWithinPartitions(col("chunk"), col("ts"))
         .write.mode("overwrite").partitionBy("chunk").parquet(tmp)
-      tmp
+      (tmp, s.read.parquet(tmp).schema)
     })
     // the chunk containing fromDay starts at that week's Monday
     // (date_trunc('week') is ISO — Monday), matching Spark's week rule
     val fromChunk = java.time.LocalDate.parse(fromDay)
       .`with`(java.time.temporal.TemporalAdjusters
         .previousOrSame(java.time.DayOfWeek.MONDAY)).toString
-    s.read.parquet(dir)
+    s.read.schema(schema).parquet(dir)
       .filter(col("chunk").between(fromChunk, toDay))
       .filter(to_date(col("ts")).between(fromDay, toDay))
       // partitioned reads append the partition column last, so dropping
@@ -98,7 +168,7 @@ object Tables {
   }
 
   private val partitionedEvents =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    new ConcurrentHashMap[String, (String, StructType)]()
 
   /** (min day, max day) of the events table, cached per (JVM, sfDir) —
     * one 1-column scan at plan-build time. Callers that want "the whole
@@ -120,7 +190,7 @@ object Tables {
     })
 
   private val eventsSpans =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+    new ConcurrentHashMap[String, (String, String)]()
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = load(s, d, "nation")

@@ -8,8 +8,10 @@ import graft.ops.{Aggregates, Relational, ScalableRank}
 /** The reference API's read queries (SURVEY §3.3, `src/api/main.py`) as
   * named DataFrame functions over the same tables — the serving surface a
   * Spark Connect / cached-DataFrame deployment would expose. Thin
-  * compositions of the core ops; everything short-circuits through
-  * limit/TakeOrdered or tiny aggregates, never a full materialization.
+  * compositions of the core ops. Most reads end in limit/TakeOrdered or
+  * a tiny aggregate; `chartSeries` does not — its global row numbering
+  * (`ScalableRank.globalRowNumber`) shuffles every input row before the
+  * stride filter keeps `maxPoints` of them.
   */
 object Serving {
 

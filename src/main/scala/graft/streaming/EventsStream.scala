@@ -54,19 +54,30 @@ object EventsStream {
     * optimum (r18: tiny state, commit fan-out dominates); the cap is
     * the session's core count — state partitions beyond available
     * slots buy no parallelism, only fan-out. An unreadable input path
-    * takes the core-count cap — conservative for real state volume (an
-    * unknown input is sized like a large one).
+    * takes a fixed 8 partitions: sizing an unknown input like a large
+    * one would pin the stream at the core-count cap for good.
     */
   def stateParts(spark: SparkSession, dir: String): Int = {
     val bytes = try {
       val p = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getContentSummary(p).getLength
-    } catch { case _: Throwable => Long.MaxValue }
-    val target = sys.env.getOrElse("SPARK_GRAFT_STATE_TARGET_BYTES",
-      (128L * 1024 * 1024).toString).toLong
-    statePartsFor(bytes, target, spark.sparkContext.defaultParallelism)
+      Some(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getContentSummary(p).getLength)
+    } catch { case scala.util.control.NonFatal(_) => None }
+    val target = stateTargetBytes(sys.env.get("SPARK_GRAFT_STATE_TARGET_BYTES"))
+    bytes.fold(unknownInputParts)(
+      statePartsFor(_, target, spark.sparkContext.defaultParallelism))
   }
+
+  private val unknownInputParts = 8
+
+  /** The per-partition state budget from `SPARK_GRAFT_STATE_TARGET_BYTES`:
+    * a positive integer byte count, otherwise (unset, non-numeric, zero
+    * or negative) the 128 MiB default — a bad knob never crashes a
+    * stream at start.
+    */
+  def stateTargetBytes(raw: Option[String]): Long =
+    raw.flatMap(_.trim.toLongOption).filter(_ > 0)
+      .getOrElse(128L * 1024 * 1024)
 
   /** The pure scale law behind [[stateParts]] — split out so the
     * clamp arithmetic is unit-testable without filesystem fixtures.

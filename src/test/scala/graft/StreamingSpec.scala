@@ -132,9 +132,27 @@ class StreamingSpec extends SparkSpecBase {
     assert(statePartsFor(1280 * MiB, target, 32) == 10)
     // cap: never beyond available cores (beyond slots = pure fan-out)
     assert(statePartsFor(100L * 1024 * MiB, target, 32) == 32)
-    // unreadable-input fallback (Long.MaxValue) sizes like a large one
+    // saturating input size stays inside [floor, cap]
     assert(statePartsFor(Long.MaxValue, target, 32) == 32)
     // degenerate cores still respect the floor
     assert(statePartsFor(Long.MaxValue, target, 1) == 4)
+  }
+
+  test("stateParts: an unreadable input takes the fixed fallback, not the cap") {
+    val missing = java.nio.file.Files.createTempDirectory("graft_no_events")
+      .resolve("absent").toString
+    assert(graft.streaming.EventsStream.stateParts(spark, missing) == 8)
+  }
+
+  test("stateTargetBytes: a bad SPARK_GRAFT_STATE_TARGET_BYTES takes the default") {
+    import graft.streaming.EventsStream.stateTargetBytes
+    val default = 128L * 1024 * 1024
+    assert(stateTargetBytes(None) == default)
+    assert(stateTargetBytes(Some("64MiB")) == default)
+    assert(stateTargetBytes(Some("")) == default)
+    assert(stateTargetBytes(Some("0")) == default)
+    assert(stateTargetBytes(Some("-5")) == default)
+    assert(stateTargetBytes(Some("99999999999999999999")) == default)
+    assert(stateTargetBytes(Some(" 1048576 ")) == 1048576L)
   }
 }
