@@ -434,13 +434,7 @@ object AdversarialScale {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val load1Before = HostLoad.load1()
     val stealBefore = HostLoad.stealSeconds()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
 
     val lanes = scala.collection.mutable.LinkedHashMap[String, String]()
     var failure: Option[String] = None

@@ -145,6 +145,8 @@ object Bench {
     if (afterStream) System.gc()
   }
 
+  // Not Sessions.local: this session sets no time zone, and the timed
+  // bench must keep its session byte-identical across rounds.
   private def session(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

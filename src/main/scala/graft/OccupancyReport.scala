@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Multimodal, Similarity}
@@ -24,13 +23,7 @@ object OccupancyReport {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val load1Before = HostLoad.load1()
     val stealBefore = HostLoad.stealSeconds()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
 
     // `cap`: when given, the registered query's maxBucketSize is
     // recorded alongside how many buckets EXCEED it — VERDICT r17

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Throwaway local probe (not part of the library surface).
   *
@@ -11,11 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Probe {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     if (args.isEmpty) {
       val e = SparkEntry.entry(spark)

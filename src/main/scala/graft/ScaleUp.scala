@@ -53,6 +53,8 @@ object ScaleUp {
     require(args.length >= 2, "usage: ScaleUp <srcSfDir> <destDir> [factor]")
     val (src, dest) = (args(0), args(1))
     val factor = if (args.length > 2) args(2).toInt else 10
+    // Not Sessions.local: pins 32 shuffle partitions whatever the core
+    // count, and sets no session time zone.
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
       .config("spark.sql.shuffle.partitions", "32")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Long-session soak (VERDICT r15 task 4): run the FULL query surface
   * twice in ONE SparkSession/JVM and assert the steady state between
   * passes — the whole-suite complement to CacheHygieneSpec's
@@ -42,13 +40,7 @@ object Soak {
     // artifact — same protocol as Bench, VERDICT r16 task 4)
     val load1Before = HostLoad.load1()
     val stealBefore = HostLoad.stealSeconds()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
     val sc = spark.sparkContext
 
     def runPass(pass: Int): (Double, Int) = {

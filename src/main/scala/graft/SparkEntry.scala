@@ -6736,23 +6736,7 @@ object SparkEntry {
     // (degree, id)-smallest endpoint and close with one equi-join.
     Q("graph_triangles",
       (s, d) => {
-        val li = Tables.lineitem(s, d)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          // ONE exchange feeds dedup AND the ok-keyed self-join (r19):
-          // hash partitioning on ok (a subset of the distinct's keys)
-          // co-locates equal (ok, pk) rows, so the distinct reuses it,
-          // and both self-join sides are already clustered on ok — the
-          // old distinct() shuffled by (ok, pk) and the join then
-          // re-shuffled both sides by ok (guide §2.4)
-          .repartition(col("ok"))
-          .distinct()
-        val edges = li.as("x")
-          .join(li.as("y"),
-            col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
-          .groupBy(col("x.pk").as("a"), col("y.pk").as("b"))
-          .agg(count(lit(1)).as("__sup"))
-          .filter(col("__sup") >= 2)
-          .select(col("a"), col("b"))
+        val edges = Graph.coOrderEdges(Tables.lineitem(s, d))
         // lazy localCheckpoint (r19, VERDICT r18 item 4): triangleCount
         // references the edge relation ~9x (orientation, both wedge
         // sides, the closing probe), so the planner replicated this
@@ -10686,23 +10670,7 @@ object SparkEntry {
     // degree-oriented wedge join.
     Q("graph_clustering_coeff",
       (s, d) => {
-        val li = Tables.lineitem(s, d)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          // ONE exchange feeds dedup AND the ok-keyed self-join (r19):
-          // hash partitioning on ok (a subset of the distinct's keys)
-          // co-locates equal (ok, pk) rows, so the distinct reuses it,
-          // and both self-join sides are already clustered on ok — the
-          // old distinct() shuffled by (ok, pk) and the join then
-          // re-shuffled both sides by ok (guide §2.4)
-          .repartition(col("ok"))
-          .distinct()
-        val edges = li.as("x")
-          .join(li.as("y"),
-            col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
-          .groupBy(col("x.pk").as("a"), col("y.pk").as("b"))
-          .agg(count(lit(1)).as("__sup"))
-          .filter(col("__sup") >= 2)
-          .select(col("a"), col("b"))
+        val edges = Graph.coOrderEdges(Tables.lineitem(s, d))
         // lazy localCheckpoint — same rationale as graph_triangles
         // (r19): clusteringCoefficient references the edge relation
         // ~11x (degrees, orientation x3 consumers, nEdges, wedge sum);
@@ -10734,28 +10702,10 @@ object SparkEntry {
     // plots before trusting any graph statistic (and the input to a
     // power-law eyeball). Two keyed aggregates.
     Q("graph_degree_histogram",
-      (s, d) => {
-        val li = Tables.lineitem(s, d)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          // ONE exchange feeds dedup AND the ok-keyed self-join (r19):
-          // hash partitioning on ok (a subset of the distinct's keys)
-          // co-locates equal (ok, pk) rows, so the distinct reuses it,
-          // and both self-join sides are already clustered on ok — the
-          // old distinct() shuffled by (ok, pk) and the join then
-          // re-shuffled both sides by ok (guide §2.4)
-          .repartition(col("ok"))
-          .distinct()
-        val edges = li.as("x")
-          .join(li.as("y"),
-            col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
-          .groupBy(col("x.pk").as("a"), col("y.pk").as("b"))
-          .agg(count(lit(1)).as("__sup"))
-          .filter(col("__sup") >= 2)
-          .select(col("a"), col("b"))
-        edges.select(explode(array(col("a"), col("b"))).as("n"))
-          .groupBy(col("n")).agg(count(lit(1)).as("degree"))
-          .groupBy(col("degree")).agg(count(lit(1)).as("n_nodes"))
-      },
+      (s, d) => Graph.coOrderEdges(Tables.lineitem(s, d))
+        .select(explode(array(col("a"), col("b"))).as("n"))
+        .groupBy(col("n")).agg(count(lit(1)).as("degree"))
+        .groupBy(col("degree")).agg(count(lit(1)).as("n_nodes")),
       Some("""WITH li AS (SELECT DISTINCT l_orderkey AS ok,
                     l_partkey AS pk FROM lineitem),
               e AS (SELECT x.pk AS a, y.pk AS b

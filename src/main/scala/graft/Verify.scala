@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -23,14 +22,8 @@ object Verify {
       .split(";").filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2); (k.trim, v.trim)
       }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    extraConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus,
+      ("spark.sql.shuffle.partitions" -> shufflePartitions) +: extraConf.toSeq)
     new java.io.File(outDir).mkdirs()
     // a failed query must leave a visible record, not a silent hole:
     // round 9's artifact shrank 229→99 entries with zero err fields

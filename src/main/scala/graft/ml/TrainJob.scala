@@ -314,13 +314,8 @@ object TrainJob {
     val outDir = if (args.length > 1) args(1)
       else Files.createTempDirectory("graft_trainjob").toString
     val maxIter = if (args.length > 2) Some(args(2).toInt) else None
-    val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-train").getOrCreate()
+    val spark = graft.Sessions.local(
+      Runtime.getRuntime.availableProcessors().toString)
     try {
       val stamp = java.time.LocalDate.now(java.time.ZoneOffset.UTC)
         .format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE)

@@ -314,9 +314,12 @@ object Dedup {
     * branch where the unguarded form filters, so the query THROWS AT
     * EXECUTION (wrapped by Spark in the job-failure exception; the
     * message carries `maxPosting`) instead of returning an approximate
-    * result. A guarded run that completes is PROVEN exact at the cap,
-    * with no metric to remember to read and no second corpus pass paid
-    * for the proof; run [[containmentCapAudit]] for the full df
+    * result. A guarded run whose result is FULLY CONSUMED (collected,
+    * written, counted) is PROVEN exact at the cap, with no metric to
+    * remember to read and no second corpus pass paid for the proof. A
+    * truncating caller (`.first`, `limit`) can return before the guard
+    * has seen every partition, so it proves nothing; run
+    * [[containmentCapAudit]] for such a caller, and for the full df
     * distribution when a guarded run throws.
     *
     * The high default is also MEMORY-safe, not just recall-safe: the
@@ -641,13 +644,15 @@ object Dedup {
     * brute-force oracle makes a green row proven-lossless at the cap).
     *
     * DEFAULT IS LOSSLESS-OR-THROW (round 18, ADVICE r17): with
-    * `failOnCappedBuckets = true` as the default, the bare call either
-    * returns the exact pigeonhole-complete pair set or THROWS AT
-    * EXECUTION — since round 19 the guard is enforced inside the one
-    * banded pass (raise_error where the unguarded form prunes; Spark
-    * wraps it in the job-failure exception, message carries
-    * `maxBucketSize` and the offending occupancy) instead of by a
-    * separate eager audit job over a persisted copy of the hash input.
+    * `failOnCappedBuckets = true` as the default, the bare call, FULLY
+    * CONSUMED, either returns the exact pigeonhole-complete pair set or
+    * THROWS AT EXECUTION. A truncating caller (`.first`, `limit`) can
+    * return before the guard has seen every partition; audit first with
+    * [[simhashCapAudit]] there. Since round 19 the guard is enforced
+    * inside the one banded pass (raise_error where the unguarded form
+    * prunes; Spark wraps it in the job-failure exception, message
+    * carries `maxBucketSize` and the offending occupancy) instead of by
+    * a separate eager audit job over a persisted copy of the hash input.
     * Silent recall loss still requires the explicit
     * `failOnCappedBuckets = false` opt-in (bounded-work mode for
     * corpora whose mega-buckets are known template noise); run

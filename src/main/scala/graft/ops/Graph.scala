@@ -73,6 +73,29 @@ object Graph {
     ranks
   }
 
+  /** Part co-order graph of `lineitem` at support ≥ 2: canonical edges
+    * (`a` < `b`) between parts ordered together in at least two orders.
+    */
+  def coOrderEdges(lineitem: DataFrame): DataFrame = {
+    val li = lineitem
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+      // ONE exchange feeds dedup AND the ok-keyed self-join (r19):
+      // hash partitioning on ok (a subset of the distinct's keys)
+      // co-locates equal (ok, pk) rows, so the distinct reuses it,
+      // and both self-join sides are already clustered on ok — the
+      // old distinct() shuffled by (ok, pk) and the join then
+      // re-shuffled both sides by ok (guide §2.4)
+      .repartition(col("ok"))
+      .distinct()
+    li.as("x")
+      .join(li.as("y"),
+        col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
+      .groupBy(col("x.pk").as("a"), col("y.pk").as("b"))
+      .agg(count(lit(1)).as("__sup"))
+      .filter(col("__sup") >= 2)
+      .select(col("a"), col("b"))
+  }
+
   /** Exact triangle count over an undirected graph given as canonical
     * edges (`a` < `b`, distinct), attributed to each triangle's
     * smallest node id. The clustering signal behind cohesion metrics

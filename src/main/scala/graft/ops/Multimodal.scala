@@ -309,9 +309,12 @@ object Multimodal {
     *    message carrying `maxBucketSize` and the offending occupancy)
     *    instead of by a separate eager audit job over a persisted copy
     *    of the hash input. Silent recall loss requires the explicit
-    *    `failOnCappedBuckets = false` opt-in. The registered query
-    *    runs the guarded form, so its green correctness row is PROVEN
-    *    complete at the cap.
+    *    `failOnCappedBuckets = false` opt-in. The guarantee holds for a
+    *    FULLY CONSUMED result: a truncating caller (`.first`, `limit`)
+    *    can return before the guard has seen every partition, so audit
+    *    first with [[phashCapAudit]] there. The registered query is
+    *    written in full under the guarded form, so its green
+    *    correctness row is PROVEN complete at the cap.
     * CHOOSING THE CAP: candidates are bounded at ≈ 2·n·cap (linear in
     * both), so start from [[phashCapAudit]]'s `max_occupancy` — if it
     * fits the shuffle budget, set the cap above it and the guarded run

@@ -29,15 +29,7 @@ object CusumStream {
   case class CusumOut(event_id: Long, cusum_pos: Long)
 
   /** Drives the stream to completion; returns (event_id, cusum_pos). */
-  def runToCompletion(spark: SparkSession, dir: String): DataFrame =
-    EventsStream.runToMemory(spark, cusumStream(spark, dir),
-      "graft_stream_cusum", "append", EventsStream.stateParts(spark, dir))
-
-  /** The unstarted streaming plan — separated from the memory-sink
-    * driver so the sizing-rule experiment (StreamCusumExperiment) can
-    * attach deployment-shape sinks to the identical query.
-    */
-  def cusumStream(spark: SparkSession, dir: String): DataFrame = {
+  def runToCompletion(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // reference levels: the SAME exact-integer ⌊sum/n⌋ the batch
     // operator derives (one tiny static aggregate, broadcast below)
@@ -83,6 +75,7 @@ object CusumStream {
           state.update(CusumState(s))
           out.iterator
       }
-    cusums.toDF()
+    EventsStream.runToMemory(spark, cusums.toDF(),
+      "graft_stream_cusum", "append", EventsStream.stateParts(spark, dir))
   }
 }

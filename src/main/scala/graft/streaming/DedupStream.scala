@@ -16,15 +16,10 @@ object DedupStream {
     * over the static input (memory sink). Output: one row per event_id.
     */
   def runToCompletion(spark: SparkSession, dir: String): DataFrame =
-    EventsStream.runToMemory(spark, dedupStream(spark, dir),
+    EventsStream.runToMemory(spark,
+      EventsStream.source(spark, dir)
+        .withWatermark("ts", "1 day")
+        .dropDuplicatesWithinWatermark("event_id")
+        .select(col("event_id"), col("event_type"), col("value")),
       "graft_stream_dedup", "append", EventsStream.stateParts(spark, dir))
-
-  /** The pre-sink streaming DataFrame behind [[runToCompletion]] —
-    * exposed for StreamSinkExperiment's file-sink variant.
-    */
-  def dedupStream(spark: SparkSession, dir: String): DataFrame =
-    EventsStream.source(spark, dir)
-      .withWatermark("ts", "1 day")
-      .dropDuplicatesWithinWatermark("event_id")
-      .select(col("event_id"), col("event_type"), col("value"))
 }

@@ -48,29 +48,10 @@ object HourlyRollup {
   def runToCompletion(
       spark: SparkSession,
       dir: String,
-      measure: org.apache.spark.sql.Column = col("value")): DataFrame =
-    EventsStream.runToMemory(spark, rollupStream(spark, dir, measure),
-      "graft_stream_rollup", "complete",
-      EventsStream.stateParts(spark, dir))
-
-  /** The pre-sink streaming DataFrame behind [[runToCompletion]] —
-    * exposed so StreamSinkExperiment can run the SAME transform into a
-    * file sink (deployment shape) for the memory-sink-tax comparison.
-    *
-    * The grouping key is the `window(ts)` STRUCT, projected to its
-    * start only AFTER the aggregate: casting the start out of the
-    * struct inside the groupBy strips the event-time/watermark tag
-    * from the key, which the complete-mode memory sink tolerates but
-    * append mode (the file-sink deployment shape) rejects
-    * ([STREAMING_OUTPUT_MODE.UNSUPPORTED_OPERATION]). Same groups,
-    * same rows either way.
-    */
-  def rollupStream(
-      spark: SparkSession,
-      dir: String,
-      measure: org.apache.spark.sql.Column = col("value")): DataFrame =
-    EventsStream.source(spark, dir)
+      measure: org.apache.spark.sql.Column = col("value")): DataFrame = {
+    val agg = EventsStream.source(spark, dir)
       .withWatermark("ts", "2 days") // ≙ continuous-agg start_offset
+      // struct key: casting its start here drops the event-time tag
       .groupBy(window(col("ts"), "1 hour").as("__w"), col("event_type"))
       .agg(
         avg(measure).as("avg_v"),
@@ -81,6 +62,9 @@ object HourlyRollup {
           .as("bucket"),
         col("event_type"), col("avg_v"), col("min_v"), col("max_v"),
         col("n"))
+    EventsStream.runToMemory(spark, agg, "graft_stream_rollup", "complete",
+      EventsStream.stateParts(spark, dir))
+  }
 
   /** Sliding-window streaming rollup: overlapping 6 h windows sliding
     * by 1 h (each event contributes to six windows — the Expand the

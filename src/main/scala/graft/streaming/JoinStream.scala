@@ -31,15 +31,7 @@ object JoinStream {
     * review); append aggregates, outer joins and timeout-based
     * operators all keep the default.
     */
-  def runToCompletion(spark: SparkSession, dir: String): DataFrame =
-    EventsStream.runToMemory(spark, joinStream(spark, dir),
-      "graft_stream_join", "append", EventsStream.stateParts(spark, dir),
-      noDataBatches = false)
-
-  /** The pre-sink streaming DataFrame behind [[runToCompletion]] —
-    * exposed for StreamSinkExperiment's file-sink variant.
-    */
-  def joinStream(spark: SparkSession, dir: String): DataFrame = {
+  def runToCompletion(spark: SparkSession, dir: String): DataFrame = {
     def src = EventsStream.source(spark, dir)
     val clicks = src.filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"),
@@ -49,11 +41,13 @@ object JoinStream {
       .select(col("event_id").as("view_id"),
         col("user_id").as("v_user"), col("ts").as("v_ts"), col("value"))
       .withWatermark("v_ts", "1 hour")
-    clicks.join(views,
+    val joined = clicks.join(views,
         col("user_id") === col("v_user") &&
           col("v_ts") >= col("c_ts") - expr("INTERVAL 30 MINUTES") &&
           col("v_ts") <= col("c_ts"))
       .select(col("click_id"), col("view_id"),
         r6(col("value")).as("view_value"))
+    EventsStream.runToMemory(spark, joined, "graft_stream_join", "append",
+      EventsStream.stateParts(spark, dir), noDataBatches = false)
   }
 }

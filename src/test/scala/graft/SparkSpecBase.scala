@@ -5,13 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session per suite (one JVM across the test run). */
 trait SparkSpecBase extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local("4")
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 

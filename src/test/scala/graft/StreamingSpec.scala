@@ -103,6 +103,49 @@ class StreamingSpec extends SparkSpecBase {
     assert(got.exceptAll(batch).isEmpty && batch.exceptAll(got).isEmpty)
   }
 
+  test("tumbling streaming rollup equals the batch hourly group-by") {
+    // integer cents: sums of integer-valued doubles are exact in any
+    // order, so avg compares bit-for-bit without rounding
+    val cents = floor(col("value") * 100 + lit(0.5))
+    val got = graft.streaming.HourlyRollup
+      .runToCompletion(spark, sf(), measure = cents)
+    val batch = Tables.events(spark, sf())
+      .groupBy(date_trunc("hour", col("ts")).cast("timestamp_ntz")
+          .as("bucket"),
+        col("event_type"))
+      .agg(avg(cents).as("avg_v"), min(cents).as("min_v"),
+        max(cents).as("max_v"), count(cents).as("n"))
+    assert(got.count() > 0)
+    assert(got.exceptAll(batch).isEmpty && batch.exceptAll(got).isEmpty)
+  }
+
+  test("streaming dedup keeps exactly one row per event_id") {
+    val got = graft.streaming.DedupStream.runToCompletion(spark, sf())
+    val ids = Tables.events(spark, sf()).select(col("event_id")).distinct()
+    assert(got.count() == got.select(col("event_id")).distinct().count())
+    val gotIds = got.select(col("event_id"))
+    assert(gotIds.exceptAll(ids).isEmpty && ids.exceptAll(gotIds).isEmpty)
+  }
+
+  test("streaming click-view join equals the batch 30-minute interval join") {
+    val got = graft.streaming.JoinStream.runToCompletion(spark, sf())
+    val e = Tables.events(spark, sf())
+    val clicks = e.filter(col("event_type") === "click")
+      .select(col("event_id").as("click_id"), col("user_id"),
+        col("ts").as("c_ts"))
+    val views = e.filter(col("event_type") === "view")
+      .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
+        col("ts").as("v_ts"), col("value"))
+    val batch = clicks.join(views,
+        col("user_id") === col("v_user") &&
+          col("v_ts") >= col("c_ts") - expr("INTERVAL 30 MINUTES") &&
+          col("v_ts") <= col("c_ts"))
+      .select(col("click_id"), col("view_id"),
+        graft.functions.Portable.r6(col("value")).as("view_value"))
+    assert(got.count() > 0)
+    assert(got.exceptAll(batch).isEmpty && batch.exceptAll(got).isEmpty)
+  }
+
   test("streaming interval union equals batch islands minus the open one") {
     val got = graft.streaming.IntervalUnionStream
       .runToCompletion(spark, sf(), widthSeconds = 900L)

@@ -3,9 +3,9 @@
 
 Usage: python3 tools/loadgate.py <artifact.json> [...]
 
-Reads the `host` block Bench/Soak/StreamSinkExperiment embed (VERDICT r16
-task 4: two rounds of perf adjudication were burned on external box load)
-and the per-query `load1` samples in Bench's `attrib`, and prints a
+Reads the `host` block Bench/Soak/AdversarialScale/OccupancyReport embed
+(VERDICT r16 task 4: two rounds of perf adjudication were burned on external
+box load) and the per-query `load1` samples in Bench's `attrib`, and prints a
 verdict per artifact:
 
   CLEAN     — adjudicate the numbers as plan costs
