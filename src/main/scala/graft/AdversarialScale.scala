@@ -389,8 +389,8 @@ object AdversarialScale {
     val plantedPairs = 1000
     val docs = templateDocs(spark, n, plantedPairs)
     val (planted, wall) = timed {
-      Dedup.withMinhashLshPairs(docs, col("doc_id"), col("text"),
-        threshold = 0.9)(
+      Caches.scoped(Dedup.minhashLshPairs(docs, col("doc_id"), col("text"),
+        threshold = 0.9))(
         _.filter(col("id_b") - col("id_a") === 100000000L).count())
     }
     require(planted == plantedPairs,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Caches.persist
 import graft.ops._
 import graft.functions.ScalarFns
 import graft.sources.{CsvMulti, JsonShapes, XmlPoints}
@@ -1113,16 +1114,13 @@ object SparkEntry {
     // representative. The oracle recomputes the identical pair set and
     // clusters it with a recursive transitive closure.
     Q("dedup_components",
-      (s, d) => {
-        // bracket variant: the components loop materializes its labels
-        // (lineage cut), so the minhash base cache can be released on
-        // exit instead of leaking until a harness-level clearCache
-        Dedup.withMinhashLshPairs(
-          withPlantedDups(Tables.documents(s, d)),
-          col("doc_id"), col("text"), threshold = 0.5) { pairs =>
-          Components.connectedComponents(pairs)
-        }
-      },
+      // scoped: the components loop materializes its labels (lineage
+      // cut), so the minhash base cache is released on exit instead of
+      // waiting for the harness clearCache
+      (s, d) => Caches.scoped(Dedup.minhashLshPairs(
+        withPlantedDups(Tables.documents(s, d)),
+        col("doc_id"), col("text"), threshold = 0.5))(
+        Components.connectedComponents(_)),
       Some(s"""WITH RECURSIVE $plantedDocsSql,
               $minhashCtesSql,
               dup AS (SELECT id_a, id_b FROM verified WHERE j >= 0.5),
@@ -1575,14 +1573,13 @@ object SparkEntry {
         // persisted: consumed twice (dedup + representative join-back);
         // without the cache the langid pipeline would run twice.
         // Harness clears the cache per query, like the dedup generators.
-        val gated = TextOps.qualityFeatures(planted, col("text"),
-            Seq("the", "a"))
+        val gated = persist(TextOps.qualityFeatures(planted,
+            col("text"), Seq("the", "a"))
           .join(lang, Seq("doc_id"))
           .filter(col("pred_lang") === "en" && col("n_words") >= 40 &&
             col("stopword_ratio") >= 0.02)
           .select(col("doc_id"), col("text"), col("n_words"),
-            col("pred_lang"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            col("pred_lang")))
         val reps = Dedup.exact(gated, col("doc_id"), col("text"))
         reps
           .join(gated.select(col("doc_id").as("rep_id"), col("pred_lang"),
@@ -5859,10 +5856,9 @@ object SparkEntry {
     Q("dedup_cluster_canonical",
       (s, d) => {
         val docs = withPlantedDups(Tables.documents(s, d))
-        val labels = Dedup.withMinhashLshPairs(docs, col("doc_id"),
-          col("text"), threshold = 0.5) { pairs =>
-          Components.connectedComponents(pairs)
-        }
+        val labels = Caches.scoped(Dedup.minhashLshPairs(docs,
+          col("doc_id"), col("text"), threshold = 0.5))(
+          Components.connectedComponents(_))
         val toks = docs.select(col("doc_id").as("id"),
           TextOps.tokenCount(col("text")).cast("long").as("__n_tok"))
         val w = Window.partitionBy(col("component"))
@@ -7935,9 +7931,9 @@ object SparkEntry {
     // dedup_minhash_lsh; the sweep costs one extra decile-sized
     // aggregate, not one run per candidate threshold.
     Q("dedup_threshold_sweep",
-      (s, d) => Dedup.withMinhashLshPairs(
+      (s, d) => Caches.scoped(Dedup.minhashLshPairs(
         withPlantedDups(Tables.documents(s, d)),
-        col("doc_id"), col("text"), threshold = 0.3) { pairs =>
+        col("doc_id"), col("text"), threshold = 0.3)) { pairs =>
         val b = pairs
           .groupBy(floor(col("jaccard") * 10).cast("int").as("bucket"))
           .agg(count(lit(1)).as("n_pairs"))
@@ -8132,11 +8128,10 @@ object SparkEntry {
             Window.partitionBy(col("user_id")).orderBy(col("rn"))))
           .filter(col("j").isNotNull)
           .groupBy(col("st").as("i"), col("j")).agg(count(lit(1)).as("c"))
-        val p = edges
+        val p = persist(edges
           .select(col("i"), col("j"), (col("c") * lit(1.0) /
             sum(col("c")).over(Window.partitionBy(col("i")))).as("pr"))
-          .unionByName(Seq(("__conv", "__conv", 1.0)).toDF("i", "j", "pr"))
-          .persist()
+          .unionByName(Seq(("__conv", "__conv", 1.0)).toDF("i", "j", "pr")))
         // channels = every state seen on either side (a terminal-only
         // channel has no outgoing row but is still removable)
         val vars = p.select(col("i").as("rm"))
@@ -10290,10 +10285,9 @@ object SparkEntry {
     // bit-identical, dump-compared).
     Q("text_ngram_novelty",
       (s, d) => {
-        val base = Par.widen(Tables.documents(s, d))
+        val base = persist(Par.widen(Tables.documents(s, d))
           .select(col("doc_id").as("id"),
-            Dedup.shinglesNative(col("text"), 3).as("sh"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            Dedup.shinglesNative(col("text"), 3).as("sh")))
         val novel = base.select(col("id"), explode(col("sh")).as("s"))
           .groupBy(col("s")).agg(min(col("id")).as("first_id"))
           .groupBy(col("first_id").as("id"))
@@ -10871,10 +10865,9 @@ object SparkEntry {
           floor(col("value") * 100 + lit(0.5)).cast("long").as("yc"),
           col("event_type").as("a"),
           ScalarFns.isWeekend(col("ts")).as("b"))
-        val cells = src.groupBy(col("a"), col("b"))
+        val cells = persist(src.groupBy(col("a"), col("b"))
           .agg(count(lit(1)).as("n"), sum(col("yc")).as("s1"),
-            sum(col("yc") * col("yc")).as("s2"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            sum(col("yc") * col("yc")).as("s2")))
         val gm = cells.agg(sum(col("n")).as("nn"), sum(col("s1")).as("t1"),
           sum(col("s2")).as("t2"))
         val m = col("t1").cast("double") / col("nn").cast("double")

@@ -3,6 +3,7 @@ package graft.exports
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Caches.persist
 import graft.ops.{Quality, Relational, ScalableRank}
 
 /** The reference's feature-export pipeline (`src/processing/
@@ -17,16 +18,57 @@ import graft.ops.{Quality, Relational, ScalableRank}
   */
 object ExportJob {
 
-  /** Every split function evaluates its labeled plan several times (one
+  /** The body the four split functions share: drop rows without a
+    * target, label each row's `split`, then one filtered part per name,
+    * sorted by `order`. The labeled plan is evaluated several times (one
     * sizes count plus one filter+orderBy per split), and the input is
-    * typically the full feature pipeline — persist so the upstream job
-    * runs once, not once per evaluation. Cache contract mirrors
-    * FeatureViews.lagRolling: released by the harness `clearCache()`,
-    * or scoped via the matching with* bracket ([[withSplitUnified]],
-    * [[withSplitUnifiedByDates]], [[withSplitXy]], [[withSplitXyByDates]]).
+    * typically the full feature pipeline, so it is persisted and the
+    * upstream job runs once; the cache is released under the
+    * [[graft.Caches]] contracts. Like the reference's ValueError
+    * (export_pipeline.py:155-161), a split in `nonEmpty` without rows
+    * raises — one small counting job, eager like the reference.
     */
-  private def cacheLabeled(labeled: DataFrame): DataFrame =
-    labeled.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  private def splitParts(
+      features: DataFrame,
+      targetCol: String,
+      order: Seq[Column],
+      names: Seq[String],
+      nonEmpty: Set[String])(
+      label: DataFrame => DataFrame): Map[String, DataFrame] = {
+    val labeled = persist(label(features.na.drop(Seq(targetCol))))
+    val sizes = labeled.groupBy(col("split")).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    names.map { name =>
+      require(!nonEmpty(name) || sizes.getOrElse(name, 0L) > 0,
+        s"empty split: $name")
+      name -> labeled.filter(col("split") === name).orderBy(order: _*)
+    }.toMap
+  }
+
+  private val RatioSplits = Seq("train", "test")
+  private val DateSplits = Seq("train", "val", "test")
+
+  /** A zero-day val/test window is an intentional narrower split, so
+    * only the windows actually requested must be non-empty — an empty
+    * requested window raises instead of training on a zero-row
+    * validation set.
+    */
+  private def requestedDates(valDays: Int, testDays: Int): Set[String] =
+    Set("train") ++ Option.when(valDays > 0)("val") ++
+      Option.when(testDays > 0)("test")
+
+  private def asXy(parts: Map[String, DataFrame], featureCols: Seq[String],
+      targetCol: String): Map[String, (DataFrame, DataFrame)] =
+    parts.map { case (name, part) =>
+      name -> (part.select(featureCols.map(col): _*),
+        part.select(col(targetCol)))
+    }
+
+  private def asUnified(parts: Map[String, DataFrame],
+      featureCols: Seq[String], targetCol: String): Map[String, DataFrame] =
+    parts.map { case (name, part) =>
+      name -> part.select((featureCols :+ targetCol).map(col): _*)
+    }
 
   /** Raises (like the reference's RuntimeError) when a feature column
     * collides with the target/ops set or the newest row is stale. */
@@ -60,44 +102,10 @@ object ExportJob {
       testRatio: Double,
       featureCols: Seq[String],
       targetCol: String): Map[String, (DataFrame, DataFrame)] =
-    splitXyTracked(features, bucket, order, testRatio,
-      featureCols, targetCol)._1
-
-  /** Scoped variant of [[splitXy]] — see [[withSplitUnified]]. */
-  def withSplitXy[T](
-      features: DataFrame,
-      bucket: Column,
-      order: Seq[Column],
-      testRatio: Double,
-      featureCols: Seq[String],
-      targetCol: String)(
-      action: Map[String, (DataFrame, DataFrame)] => T): T = {
-    val (splits, backing) = splitXyTracked(features, bucket, order,
-      testRatio, featureCols, targetCol)
-    try action(splits) finally backing.unpersist()
-  }
-
-  private def splitXyTracked(
-      features: DataFrame,
-      bucket: Column,
-      order: Seq[Column],
-      testRatio: Double,
-      featureCols: Seq[String],
-      targetCol: String): (Map[String, (DataFrame, DataFrame)], DataFrame) = {
-    val labeled = cacheLabeled(ScalableRank.chronoSplit(
-      features.na.drop(Seq(targetCol)), bucket, order, testRatio))
-    // the reference raises ValueError when a split would be empty
-    // (export_pipeline.py:155-161) — one small counting job, eager like
-    // the reference
-    val sizes = labeled.groupBy(col("split")).count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    Seq("train", "test").map { name =>
-      require(sizes.getOrElse(name, 0L) > 0, s"empty split: $name")
-      val part = labeled.filter(col("split") === name).orderBy(order: _*)
-      name -> (part.select(featureCols.map(col): _*),
-        part.select(col(targetCol)))
-    }.toMap -> labeled
-  }
+    asXy(splitParts(features, targetCol, order, RatioSplits,
+      RatioSplits.toSet)(
+      ScalableRank.chronoSplit(_, bucket, order, testRatio)),
+      featureCols, targetCol)
 
   /** Calendar split variant of [[splitUnified]]: one DataFrame per
     * split (train/val/test) carrying features+target — alignment-hazard-
@@ -110,48 +118,10 @@ object ExportJob {
       testDays: Int,
       featureCols: Seq[String],
       targetCol: String): Map[String, DataFrame] =
-    splitUnifiedByDatesTracked(features, dateCol, order, valDays, testDays,
-      featureCols, targetCol)._1
-
-  /** Scoped variant of [[splitUnifiedByDates]] — see [[withSplitUnified]]. */
-  def withSplitUnifiedByDates[T](
-      features: DataFrame,
-      dateCol: Column,
-      order: Seq[Column],
-      valDays: Int,
-      testDays: Int,
-      featureCols: Seq[String],
-      targetCol: String)(action: Map[String, DataFrame] => T): T = {
-    val (splits, backing) = splitUnifiedByDatesTracked(features, dateCol,
-      order, valDays, testDays, featureCols, targetCol)
-    try action(splits) finally backing.unpersist()
-  }
-
-  private def splitUnifiedByDatesTracked(
-      features: DataFrame,
-      dateCol: Column,
-      order: Seq[Column],
-      valDays: Int,
-      testDays: Int,
-      featureCols: Seq[String],
-      targetCol: String): (Map[String, DataFrame], DataFrame) = {
-    val labeled = cacheLabeled(Relational.splitByDates(
-      features.na.drop(Seq(targetCol)), dateCol, valDays, testDays))
-    val sizes = labeled.groupBy(col("split")).count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    Seq("train", "val", "test").map { name =>
-      // empty-split guard at parity with splitUnified — but a zero-day
-      // val/test window is an intentional narrower split, so only
-      // windows that were actually requested must be non-empty
-      val requested = name == "train" ||
-        (name == "val" && valDays > 0) || (name == "test" && testDays > 0)
-      require(!requested || sizes.getOrElse(name, 0L) > 0,
-        s"empty split: $name")
-      name -> labeled.filter(col("split") === name)
-        .orderBy(order: _*)
-        .select((featureCols :+ targetCol).map(col): _*)
-    }.toMap -> labeled
-  }
+    asUnified(splitParts(features, targetCol, order, DateSplits,
+      requestedDates(valDays, testDays))(
+      Relational.splitByDates(_, dateCol, valDays, testDays)),
+      featureCols, targetCol)
 
   /** Calendar split variant anchored to max(date)
     * (`export_pipeline.py:626-641`). `order` must be a total order —
@@ -165,49 +135,10 @@ object ExportJob {
       testDays: Int,
       featureCols: Seq[String],
       targetCol: String): Map[String, (DataFrame, DataFrame)] =
-    splitXyByDatesTracked(features, dateCol, order, valDays, testDays,
-      featureCols, targetCol)._1
-
-  /** Scoped variant of [[splitXyByDates]] — see [[withSplitUnified]]. */
-  def withSplitXyByDates[T](
-      features: DataFrame,
-      dateCol: Column,
-      order: Seq[Column],
-      valDays: Int,
-      testDays: Int,
-      featureCols: Seq[String],
-      targetCol: String)(
-      action: Map[String, (DataFrame, DataFrame)] => T): T = {
-    val (splits, backing) = splitXyByDatesTracked(features, dateCol, order,
-      valDays, testDays, featureCols, targetCol)
-    try action(splits) finally backing.unpersist()
-  }
-
-  private def splitXyByDatesTracked(
-      features: DataFrame,
-      dateCol: Column,
-      order: Seq[Column],
-      valDays: Int,
-      testDays: Int,
-      featureCols: Seq[String],
-      targetCol: String): (Map[String, (DataFrame, DataFrame)], DataFrame) = {
-    val labeled = cacheLabeled(Relational.splitByDates(
-      features.na.drop(Seq(targetCol)), dateCol, valDays, testDays))
-    // requested-window-aware empty-split guard, at parity with
-    // splitUnifiedByDates — an empty val/test window that WAS requested
-    // must raise, not silently train on a zero-row validation set
-    val sizes = labeled.groupBy(col("split")).count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    Seq("train", "val", "test").map { name =>
-      val requested = name == "train" ||
-        (name == "val" && valDays > 0) || (name == "test" && testDays > 0)
-      require(!requested || sizes.getOrElse(name, 0L) > 0,
-        s"empty split: $name")
-      val part = labeled.filter(col("split") === name).orderBy(order: _*)
-      name -> (part.select(featureCols.map(col): _*),
-        part.select(col(targetCol)))
-    }.toMap -> labeled
-  }
+    asXy(splitParts(features, targetCol, order, DateSplits,
+      requestedDates(valDays, testDays))(
+      Relational.splitByDates(_, dateCol, valDays, testDays)),
+      featureCols, targetCol)
 
   /** float32 downcast of the feature matrix, the reference's deliberate
     * export narrowing for ML-consumer speed ("spaltenorientiert, schnell
@@ -263,46 +194,13 @@ object ExportJob {
       testRatio: Double,
       featureCols: Seq[String],
       targetCol: String): Map[String, DataFrame] =
-    splitUnifiedTracked(features, bucket, order, testRatio,
-      featureCols, targetCol)._1
-
-  /** Scoped variant of [[splitUnified]]: runs `action` on the splits and
-    * unpersists the cached labeled plan before returning — for sessions
-    * exporting in a loop, where the plain variant's cache would
-    * accumulate until a global clearCache. */
-  def withSplitUnified[T](
-      features: DataFrame,
-      bucket: Column,
-      order: Seq[Column],
-      testRatio: Double,
-      featureCols: Seq[String],
-      targetCol: String)(action: Map[String, DataFrame] => T): T = {
-    val (splits, backing) = splitUnifiedTracked(features, bucket, order,
-      testRatio, featureCols, targetCol)
-    try action(splits) finally backing.unpersist()
-  }
-
-  private def splitUnifiedTracked(
-      features: DataFrame,
-      bucket: Column,
-      order: Seq[Column],
-      testRatio: Double,
-      featureCols: Seq[String],
-      targetCol: String): (Map[String, DataFrame], DataFrame) = {
-    val labeled = cacheLabeled(ScalableRank.chronoSplit(
-      features.na.drop(Seq(targetCol)), bucket, order, testRatio))
-    val sizes = labeled.groupBy(col("split")).count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    Seq("train", "test").map { name =>
-      require(sizes.getOrElse(name, 0L) > 0, s"empty split: $name")
-      // chronological order like splitXy — not needed for X/y pairing
-      // (that's structural here), but consumers reading sequentially
-      // (walk-forward eval, sequential mini-batches) rely on it
-      name -> labeled.filter(col("split") === name)
-        .orderBy(order: _*)
-        .select((featureCols :+ targetCol).map(col): _*)
-    }.toMap -> labeled
-  }
+    // sorted like splitXy — not needed for X/y pairing (that's
+    // structural here), but consumers reading sequentially (walk-
+    // forward eval, sequential mini-batches) rely on the order
+    asUnified(splitParts(features, targetCol, order, RatioSplits,
+      RatioSplits.toSet)(
+      ScalableRank.chronoSplit(_, bucket, order, testRatio)),
+      featureCols, targetCol)
 
   /** One parquet per split (`xy_<name><suffix>.parquet`), features and
     * target together.

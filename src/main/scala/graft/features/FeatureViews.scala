@@ -3,6 +3,7 @@ package graft.features
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Caches.persist
 import graft.functions.ScalarFns
 import graft.ops.{Aggregates, Relational, ScalableWindow}
 
@@ -33,17 +34,15 @@ object FeatureViews {
     * scale — and ScalableWindow evaluates its input three times (count
     * routing, fringe extraction, final windows). Without the cache each
     * pass would re-run the full upstream aggregation; with it, the fact
-    * table is aggregated exactly once per series at any scale. Cache
-    * contract: released by the caller/harness (`clearCache`), like the
-    * dedup pair generators.
+    * table is aggregated exactly once per series at any scale. The
+    * series are released under the [[graft.Caches]] contracts.
     */
   private def lagRolling(
       df: DataFrame,
       x: Column,
-      defs: Seq[(String, Int, Boolean)], /* (name, n, isRollingAvg) */
-      track: scala.collection.mutable.Buffer[DataFrame]): DataFrame = {
-    val series = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    track += series
+      // (name, n, isRollingAvg)
+      defs: Seq[(String, Int, Boolean)]): DataFrame = {
+    val series = persist(df)
     ScalableWindow.withTrailingColumns(series, monthBucket, order, 168)(
       defs.map { case (name, n, rolling) =>
         name -> ((w: org.apache.spark.sql.expressions.WindowSpec) =>
@@ -53,9 +52,7 @@ object FeatureViews {
   }
 
   /** Model B feature view. Inputs follow graft.Schemas table shapes.
-    * Persists its intermediate series (see [[lagRolling]]); release via
-    * the harness `clearCache()` or use [[withTrainingFeatures]] in
-    * long-lived sessions.
+    * Persists its intermediate series (see [[lagRolling]]).
     */
   def trainingFeatures(
       dayAheadPrices: DataFrame,
@@ -63,37 +60,7 @@ object FeatureViews {
       generation: DataFrame,
       actualLoad: DataFrame,
       crossborderFlows: DataFrame,
-      loadForecast: DataFrame): DataFrame =
-    trainingFeaturesTracked(dayAheadPrices, weatherHourly, generation,
-      actualLoad, crossborderFlows, loadForecast,
-      scala.collection.mutable.Buffer.empty)
-
-  /** Scoped variant: runs `action` on the view and unpersists the seven
-    * cached intermediates before returning — for sessions computing the
-    * view in a loop (per-day refresh), where the plain variant's caches
-    * would accumulate until a global clearCache.
-    */
-  def withTrainingFeatures[T](
-      dayAheadPrices: DataFrame,
-      weatherHourly: DataFrame,
-      generation: DataFrame,
-      actualLoad: DataFrame,
-      crossborderFlows: DataFrame,
-      loadForecast: DataFrame)(action: DataFrame => T): T = {
-    val track = scala.collection.mutable.Buffer.empty[DataFrame]
-    val view = trainingFeaturesTracked(dayAheadPrices, weatherHourly,
-      generation, actualLoad, crossborderFlows, loadForecast, track)
-    try action(view) finally track.foreach(_.unpersist())
-  }
-
-  private def trainingFeaturesTracked(
-      dayAheadPrices: DataFrame,
-      weatherHourly: DataFrame,
-      generation: DataFrame,
-      actualLoad: DataFrame,
-      crossborderFlows: DataFrame,
-      loadForecast: DataFrame,
-      track: scala.collection.mutable.Buffer[DataFrame]): DataFrame = {
+      loadForecast: DataFrame): DataFrame = {
 
     val pf = lagRolling(
       dayAheadPrices.filter(col("domain") === CH)
@@ -101,7 +68,7 @@ object FeatureViews {
       col("price_eur_mwh"),
       Seq(("lag_1h", 1, false), ("lag_24h", 24, false),
         ("lag_168h", 168, false), ("rolling_avg_24h", 24, true),
-        ("rolling_avg_7d", 168, true)), track)
+        ("rolling_avg_7d", 168, true)))
       .withColumn("hour_of_day", ScalarFns.hourOfDay(col("time")))
       .withColumn("day_of_week", ScalarFns.dowPg(col("time")))
       .withColumn("month", ScalarFns.monthOf(col("time")))
@@ -113,8 +80,7 @@ object FeatureViews {
         generation.filter(col("domain") === domain && col("psr_type") === psr)
           .select(col("time"), col("quantity_mwh")),
         col("quantity_mwh"),
-        Seq((s"${p}_lag_24h", 24, false), (s"${p}_lag_168h", 168, false)),
-        track)
+        Seq((s"${p}_lag_24h", 24, false), (s"${p}_lag_168h", 168, false)))
         .drop("quantity_mwh")
 
     val loadLags = lagRolling(
@@ -122,7 +88,7 @@ object FeatureViews {
         .select(col("time"), col("load_mwh")),
       col("load_mwh"),
       Seq(("actual_load_ch_lag_24h", 24, false),
-        ("actual_load_ch_lag_168h", 168, false)), track)
+        ("actual_load_ch_lag_168h", 168, false)))
       .drop("load_mwh")
 
     val netPosRaw = Aggregates.conditionalNetSum(
@@ -133,7 +99,7 @@ object FeatureViews {
       .withColumnRenamed("net", "net_position_ch")
     val netPos = lagRolling(netPosRaw, col("net_position_ch"),
       Seq(("net_position_ch_lag_24h", 24, false),
-        ("net_position_ch_lag_168h", 168, false)), track)
+        ("net_position_ch_lag_168h", 168, false)))
       .drop("net_position_ch")
 
     val joined = pf
@@ -169,9 +135,7 @@ object FeatureViews {
     // joined frame is persisted for the same reason as lagRolling's
     // input: ScalableWindow walks it three times, and re-deriving the
     // 9-way join per pass would triple the whole job.
-    val joinedCached = joined
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    track += joinedCached
+    val joinedCached = persist(joined)
     ScalableWindow.withTrailingColumns(
       joinedCached, monthBucket, order, 24)(
       "temp_rolling_avg_24h" ->
@@ -195,35 +159,12 @@ object FeatureViews {
 
   /** Model A feature view, duplicate aliases included (SURVEY.md §7.4(7):
     * every column emitted explicitly, never `select(*)` across dups).
-    * Persists its net-load series (see [[lagRolling]]); release via the
-    * harness `clearCache()` or use [[withNetLoadFeatures]] in long-lived
-    * sessions — the same cache contract as [[trainingFeatures]].
+    * Persists its net-load series (see [[lagRolling]]).
     */
   def netLoadFeatures(
       winterthurLoad: DataFrame,
       winterthurPv: DataFrame,
-      weatherHourly: DataFrame): DataFrame =
-    netLoadFeaturesTracked(winterthurLoad, winterthurPv, weatherHourly,
-      scala.collection.mutable.Buffer.empty)
-
-  /** Scoped variant: runs `action` on the view and unpersists the cached
-    * net-load series before returning — mirrors [[withTrainingFeatures]].
-    */
-  def withNetLoadFeatures[T](
-      winterthurLoad: DataFrame,
-      winterthurPv: DataFrame,
-      weatherHourly: DataFrame)(action: DataFrame => T): T = {
-    val track = scala.collection.mutable.Buffer.empty[DataFrame]
-    val view = netLoadFeaturesTracked(winterthurLoad, winterthurPv,
-      weatherHourly, track)
-    try action(view) finally track.foreach(_.unpersist())
-  }
-
-  private def netLoadFeaturesTracked(
-      winterthurLoad: DataFrame,
-      winterthurPv: DataFrame,
-      weatherHourly: DataFrame,
-      track: scala.collection.mutable.Buffer[DataFrame]): DataFrame = {
+      weatherHourly: DataFrame): DataFrame = {
 
     val net = winterthurLoad
       .join(winterthurPv, Seq("time"), "left")
@@ -232,8 +173,7 @@ object FeatureViews {
 
     val withLags = lagRolling(net, col("net_load_kwh"),
       Seq(("load_lag_1h", 1, false), ("load_lag_1d", 24, false),
-        ("load_lag_7d", 168, false), ("load_rolling_avg_24h", 24, true)),
-      track)
+        ("load_lag_7d", 168, false), ("load_rolling_avg_24h", 24, true)))
 
     // coarse as-of alignment of 15-min rows to hourly weather:
     // date_trunc('hour', load.time) = weather.time (init.sql:452-455)

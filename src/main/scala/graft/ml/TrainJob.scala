@@ -7,6 +7,8 @@ import org.apache.spark.ml.regression.{GBTRegressor, LinearRegression}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Caches
+import graft.Caches.persist
 import graft.ops.{Aggregates, ScalableRank}
 
 /** Runnable training jobs — the reference's §3.2 export → train →
@@ -133,11 +135,9 @@ object TrainJob {
       dataDir: String, valRatio: Double, testRatio: Double): String = {
     validateNoLeakage(spec.featureCols, spec.targetCol)
     val clean = features.filter(col(spec.targetCol).isNotNull)
-    val split = ScalableRank.chronoSplitThreeWay(clean,
+    Caches.scoped(persist(ScalableRank.chronoSplitThreeWay(clean,
       date_trunc("month", col("time")), Seq(col("time")),
-      valRatio, testRatio)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      valRatio, testRatio))) { split =>
       for (part <- Seq("train", "val", "test")) {
         val p = split.filter(col("split") === part)
         p.select(col("time") +:
@@ -146,7 +146,7 @@ object TrainJob {
         p.select(col("time"), col(spec.targetCol).cast("double"))
           .write.mode("overwrite").parquet(s"$dataDir/y_$part.parquet")
       }
-    } finally split.unpersist()
+    }
     dataDir
   }
 
@@ -210,8 +210,6 @@ object TrainJob {
         (d, c) => d.withColumn(c + "_imp", col(c).cast("double")))
       assembler.transform(withCopies.na.fill(0.0, impCols.toIndexedSeq))
     }
-    val trainP = prep(train)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // 1. Naive mean predictor (DummyRegressor(strategy="mean")).
     val trainMean = train.agg(avg(col(spec.targetCol))).head().getDouble(0)
@@ -220,30 +218,32 @@ object TrainJob {
       s"""{"model": "${spec.naiveName}", "strategy": "mean",""" +
         s""" "mean": $trainMean}""")
 
-    // 2. Linear baseline.
-    val linear = new LinearRegression().setLabelCol(spec.targetCol)
-      .setFeaturesCol("features").fit(trainP)
     val linearPath = s"$modelsDir/${spec.linearName}_$stamp"
-    linear.write.overwrite().save(linearPath)
-
-    // 3. Boosted trees (the XGBRegressor role), early-stopped on the
-    // val split when present (train.py:123-167 / :50-95).
-    val gbtBase = new GBTRegressor().setLabelCol(spec.targetCol)
-      .setFeaturesCol("features")
-      .setMaxIter(maxIterOverride.getOrElse(spec.gbtMaxIter))
-      .setStepSize(0.05).setMaxDepth(spec.gbtMaxDepth)
-      .setSubsamplingRate(0.8).setFeatureSubsetStrategy("0.8")
-      .setMinInstancesPerNode(spec.gbtMinInstances).setSeed(42)
-    val gbt = valDf match {
-      case Some(v) =>
-        val both = trainP.withColumn("__is_val", lit(false))
-          .unionByName(prep(v).withColumn("__is_val", lit(true)))
-        gbtBase.setValidationIndicatorCol("__is_val").fit(both)
-      case None => gbtBase.fit(trainP)
-    }
     val gbtPath = s"$modelsDir/${spec.gbtName}_$stamp"
-    gbt.write.overwrite().save(gbtPath)
-    trainP.unpersist()
+    val (linear, gbt) = Caches.scoped(persist(prep(train))) { trainP =>
+      // 2. Linear baseline.
+      val linear = new LinearRegression().setLabelCol(spec.targetCol)
+        .setFeaturesCol("features").fit(trainP)
+      linear.write.overwrite().save(linearPath)
+
+      // 3. Boosted trees (the XGBRegressor role), early-stopped on the
+      // val split when present (train.py:123-167 / :50-95).
+      val gbtBase = new GBTRegressor().setLabelCol(spec.targetCol)
+        .setFeaturesCol("features")
+        .setMaxIter(maxIterOverride.getOrElse(spec.gbtMaxIter))
+        .setStepSize(0.05).setMaxDepth(spec.gbtMaxDepth)
+        .setSubsamplingRate(0.8).setFeatureSubsetStrategy("0.8")
+        .setMinInstancesPerNode(spec.gbtMinInstances).setSeed(42)
+      val gbt = valDf match {
+        case Some(v) =>
+          val both = trainP.withColumn("__is_val", lit(false))
+            .unionByName(prep(v).withColumn("__is_val", lit(true)))
+          gbtBase.setValidationIndicatorCol("__is_val").fit(both)
+        case None => gbtBase.fit(trainP)
+      }
+      gbt.write.overwrite().save(gbtPath)
+      (linear, gbt)
+    }
 
     val paths = Map(spec.naiveName -> naivePath,
       spec.linearName -> linearPath, spec.gbtName -> gbtPath)
@@ -252,17 +252,16 @@ object TrainJob {
     // (|y| ≥ 10 only, evaluate.py:51) via Aggregates.regressionMetrics.
     test match {
       case Some(t) =>
-        val tp = prep(t)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         def metricsOf(pred: DataFrame): MetricsJson.RegMetrics =
           MetricsJson.fromRow(Aggregates.regressionMetrics(
             pred, col(spec.targetCol), col("prediction")))
-        val metrics = Seq(
-          spec.naiveName ->
-            metricsOf(tp.withColumn("prediction", lit(trainMean))),
-          spec.linearName -> metricsOf(linear.transform(tp)),
-          spec.gbtName -> metricsOf(gbt.transform(tp)))
-        tp.unpersist()
+        val metrics = Caches.scoped(persist(prep(t))) { tp =>
+          Seq(
+            spec.naiveName ->
+              metricsOf(tp.withColumn("prediction", lit(trainMean))),
+            spec.linearName -> metricsOf(linear.transform(tp)),
+            spec.gbtName -> metricsOf(gbt.transform(tp)))
+        }
         val mPath = MetricsJson.save(metrics, spec.metricsName,
           modelsDir, stamp)
         val warning =

@@ -2,7 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.Caches.persist
 
 /** Connected components over a near-duplicate pair list — the step that
   * turns pairwise dedup output (`Dedup.minhashLshPairs` etc.) into
@@ -30,10 +31,9 @@ import org.apache.spark.storage.StorageLevel
   * variant is the right cost profile.
   *
   * Caches: the symmetric edge list and the current labels persist
-  * MEMORY_AND_DISK during the loop; intermediates unpersist as soon as
-  * superseded, and the edge cache is released before returning. The
-  * returned label plan is computed (the loop materializes it), so it is
-  * safe to consume after the internal caches are gone.
+  * during the loop, and intermediates unpersist as soon as superseded.
+  * The final label cache backs the returned plan; it is released under
+  * the [[graft.Caches]] contracts.
   */
 object Components {
 
@@ -51,7 +51,7 @@ object Components {
     * a fixed point — no separate compare-join job per round.
     */
   private def cutLineage(df: DataFrame): (DataFrame, DataFrame, BigDecimal) = {
-    val backing = df.persist(StorageLevel.MEMORY_AND_DISK)
+    val backing = persist(df)
     val labelSum = Option(
       backing.agg(sum(col("label").cast("decimal(38,0)"))).first().get(0))
       .map(d => BigDecimal(d.asInstanceOf[java.math.BigDecimal]))
@@ -62,7 +62,7 @@ object Components {
 
   /** Lineage cut for the (label-less) edge list. */
   private def cutEdges(df: DataFrame): (DataFrame, DataFrame) = {
-    val backing = df.persist(StorageLevel.MEMORY_AND_DISK)
+    val backing = persist(df)
     backing.count()
     (backing.sparkSession.createDataFrame(backing.rdd, backing.schema),
       backing)
@@ -71,24 +71,7 @@ object Components {
   /** @param edges (id_a, id_b) pair rows, any orientation, dups allowed
     * @return (id, component) — component = min reachable id
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 64): DataFrame =
-    connectedComponentsTracked(edges, maxIter)._1
-
-  /** Scoped variant: runs `action` on the label table and unpersists the
-    * final label cache before returning — for long-lived sessions
-    * clustering in a loop, where the plain variant would leak one cached
-    * relation per call until a global clearCache (the same bracket
-    * pattern as Dedup.withMinhashLshPairs). The labels are fully
-    * materialized while cached, so `action` must consume them (write,
-    * collect, join-and-materialize) before returning. */
-  def withConnectedComponents[T](edges: DataFrame, maxIter: Int = 64)(
-      action: DataFrame => T): T = {
-    val (labels, backing) = connectedComponentsTracked(edges, maxIter)
-    try action(labels) finally backing.unpersist()
-  }
-
-  private def connectedComponentsTracked(
-      edges: DataFrame, maxIter: Int): (DataFrame, DataFrame) = {
+  def connectedComponents(edges: DataFrame, maxIter: Int = 64): DataFrame = {
     // materialize the DIRECTED pairs first: the input is typically an
     // expensive pipeline (e.g. the full MinHash candidate generation),
     // and referencing it in both union branches would execute that
@@ -108,11 +91,10 @@ object Components {
     // (scan of the pairs cut + union), so the lineage-growth reason
     // for the RDD round-trip does not apply to it. Materialized by the
     // init-labels job below — no separate count pass.
-    val symBacking = pairsCut
+    val symBacking = persist(pairsCut
       .unionByName(pairsCut.select(col("dst").as("src"),
         col("src").as("dst")))
-      .repartition(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("dst")))
     val sym = symBacking
     // initial labels fold round 1 in: every node appears as `src` in the
     // symmetric edge list, so one aggregate yields both the node set and
@@ -127,7 +109,6 @@ object Components {
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      val t0 = System.nanoTime()
       // one join + one aggregate per round: neighbor labels arrive via
       // the dst-keyed join (edge side pre-partitioned, exchange-free),
       // the node's own label rides the union branch, and a single
@@ -147,22 +128,13 @@ object Components {
       converged = updatedSum == labelSum
       labelSum = updatedSum
       i += 1
-      // progress trace is opt-in: library consumers (tests, embedding
-      // users) should not get per-iteration stderr; bench/A-B sessions
-      // export SPARK_GRAFT_VERBOSE to see convergence
-      if (sys.env.contains("SPARK_GRAFT_VERBOSE"))
-        System.err.println(f"[components] round $i%2d " +
-          f"${(System.nanoTime() - t0) / 1e9}%6.2f s " +
-          s"labelSum=$updatedSum converged=$converged")
     }
     require(converged,
       s"connectedComponents did not converge in $maxIter rounds — " +
         "graph diameter exceeds the dedup-cluster contract; use " +
         "star-contraction for long-chain graphs")
     symBacking.unpersist()
-    // final labels stay materialized in `labelsBacking` so the returned
-    // plan is a cached scan; released by harness-level clearCache or the
-    // withConnectedComponents bracket
-    (labels.select(col("id"), col("label").as("component")), labelsBacking)
+    // the returned plan scans the final label cache, so it stays
+    labels.select(col("id"), col("label").as("component"))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Caches.persist
 import graft.functions.Portable.r6
 import graft.functions.PortableHash
 
@@ -19,13 +20,9 @@ import graft.functions.PortableHash
   * independent, and reproducible by the DuckDB oracle, so even the
   * probabilistic pipelines are hash-exact verifiable end-to-end.
   *
-  * Cache contract: the pair generators `persist(MEMORY_AND_DISK)` their
-  * reused intermediates (shingle bases, band keys) and cannot unpersist
-  * them before the caller consumes the returned plan. Long-lived
-  * sessions calling these per corpus batch should drop them afterwards
-  * (`spark.catalog.clearCache()` or `unpersist()` on the session's
-  * cached relations) — the Verify/Bench harnesses do exactly that
-  * between queries.
+  * Caches: the pair generators persist their reused shingle bases,
+  * which the returned plan still reads; they are released under the
+  * [[graft.Caches]] contracts.
   */
 object Dedup {
 
@@ -129,28 +126,8 @@ object Dedup {
       bands: Int = 4,
       threshold: Double = 0.5,
       maxBucketSize: Int = 1000): DataFrame =
-    minhashLshPairsWithCache(df, idCol, text, shingleK, numHashes, bands,
-      threshold, maxBucketSize)._1
-
-  /** Scoped variant of [[minhashLshPairs]]: runs `action` on the pair
-    * plan and unpersists the cached intermediates before returning —
-    * for long-lived sessions processing corpus batches in a loop, where
-    * the open-ended cache contract of the plain variant would accumulate
-    * cached relations.
-    */
-  def withMinhashLshPairs[T](
-      df: DataFrame,
-      idCol: Column,
-      text: Column,
-      shingleK: Int = 3,
-      numHashes: Int = 16,
-      bands: Int = 4,
-      threshold: Double = 0.5,
-      maxBucketSize: Int = 1000)(action: DataFrame => T): T = {
-    val (pairs, cached) = minhashLshPairsWithCache(df, idCol, text,
-      shingleK, numHashes, bands, threshold, maxBucketSize)
-    try action(pairs) finally cached.unpersist()
-  }
+    scoredLshPairs(df, idCol, text, shingleK, numHashes, bands,
+      threshold, maxBucketSize, score = "jaccard")
 
   /** (id, band_idx, band_key) MinHash-LSH banding of a corpus — the
     * per-document index rows an incremental pipeline persists alongside
@@ -238,10 +215,8 @@ object Dedup {
       bands: Int = 4,
       threshold: Double = 0.8,
       maxBucketSize: Int = 1000): DataFrame =
-    // same open-ended cache contract as [[minhashLshPairs]]: the session
-    // (or harness clearCache) releases the shingle cache
-    minhashLshPairsWithCache(df, idCol, text, shingleK, numHashes, bands,
-      threshold, maxBucketSize, score = "containment")._1
+    scoredLshPairs(df, idCol, text, shingleK, numHashes, bands,
+      threshold, maxBucketSize, score = "containment")
 
   /** Containment pairs with EXACT recall and exact scores via
     * posting-list intersection COUNTING — the round-12 replacement for
@@ -475,7 +450,9 @@ object Dedup {
           .as("excluded_postings"),
         max(col("df")).as("max_df"))
 
-  private def minhashLshPairsWithCache(
+  /** [[minhashLshPairs]] verified by `score`: "jaccard" or
+    * "containment" ([[containmentPairs]]). */
+  private def scoredLshPairs(
       df: DataFrame,
       idCol: Column,
       text: Column,
@@ -484,7 +461,7 @@ object Dedup {
       bands: Int,
       threshold: Double,
       maxBucketSize: Int,
-      score: String = "jaccard"): (DataFrame, DataFrame) = {
+      score: String): DataFrame = {
     val rowsPerBand = numHashes / bands
     // base is consumed three times (signatures + both verify joins);
     // cache it so the shingle computation runs once. The md5 bases are
@@ -492,15 +469,14 @@ object Dedup {
     // otherwise re-inline the md5 pass into every one of the 16 family
     // members — an InMemoryRelation column can't be inlined past.
     // MEMORY_AND_DISK: spills rather than OOMs at corpus scale.
-    val base = Par.widen(df)
+    val base = persist(Par.widen(df)
       .select(idCol.as("id"), shinglesNative(text, shingleK).as("sh"))
       // native codegen'd md5 pass (bit-identical to the composable
       // transform + PortableHash.base28 form — spec-verified): the
       // interpreted HOF lambda and its per-shingle hex/conv strings are
       // the scan-side hot spot of the cache build at corpus scale
       .withColumn("hb", org.apache.spark.sql.graftnative.GraftNative
-        .md5Base28Array(col("sh")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .md5Base28Array(col("sh"))))
     val sigs = base.select(col("id"),
       minhashSignatureFromBases(col("hb"), numHashes).as("sig"))
     // band key: the band's signature values joined as a string — no extra
@@ -551,7 +527,7 @@ object Dedup {
       .withColumn("__inter",
         org.apache.spark.sql.graftnative.GraftNative
           .arrayIntersectSize(col("sh_a"), col("sh_b")).cast("double"))
-    val verified = score match {
+    score match {
       case "jaccard" => scored
         .withColumn("jaccard",
           col("__inter") /
@@ -571,7 +547,6 @@ object Dedup {
       case other => throw new IllegalArgumentException(
         s"unknown verify score: $other")
     }
-    (verified, base)
   }
 
   /** SimHash width: 60 bits (15 md5 hex chars — the widest portable slice
@@ -770,33 +745,10 @@ object Dedup {
       text: Column,
       blockCol: Column,
       n: Int = 3,
-      threshold: Double = 0.3): DataFrame =
-    ngramJaccardPairsWithCache(df, idCol, text, blockCol, n, threshold)._1
-
-  /** Scoped variant of [[ngramJaccardPairs]] — see [[withMinhashLshPairs]]. */
-  def withNgramJaccardPairs[T](
-      df: DataFrame,
-      idCol: Column,
-      text: Column,
-      blockCol: Column,
-      n: Int = 3,
-      threshold: Double = 0.3)(action: DataFrame => T): T = {
-    val (pairs, cached) =
-      ngramJaccardPairsWithCache(df, idCol, text, blockCol, n, threshold)
-    try action(pairs) finally cached.unpersist()
-  }
-
-  private def ngramJaccardPairsWithCache(
-      df: DataFrame,
-      idCol: Column,
-      text: Column,
-      blockCol: Column,
-      n: Int,
-      threshold: Double): (DataFrame, DataFrame) = {
+      threshold: Double = 0.3): DataFrame = {
     // cached: sizes + both sides of the self-join read it (4 consumers)
-    val base = Par.widen(df)
-      .select(idCol.as("id"), blockCol.as("blk"), shinglesNative(text, n).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = persist(Par.widen(df)
+      .select(idCol.as("id"), blockCol.as("blk"), shinglesNative(text, n).as("sh")))
     val sizes = base.select(col("id"), col("blk"), size(col("sh")).as("sz"))
     val ex = base.select(col("id"), col("blk"), explode(col("sh")).as("s"))
     val inter = ex.select(col("blk"), col("s"), col("id").as("id_a"))
@@ -805,14 +757,13 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("n_inter"))
-    val verified = inter
+    inter
       .join(sizes.select(col("id").as("id_a"), col("sz").as("sz_a")), Seq("id_a"))
       .join(sizes.select(col("id").as("id_b"), col("sz").as("sz_b")), Seq("id_b"))
       .withColumn("jaccard", col("n_inter").cast("double") /
         (col("sz_a") + col("sz_b") - col("n_inter")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), r6(col("jaccard")).as("jaccard"))
-    (verified, base)
   }
 
   /** Substring-level duplication signal (the bounded form of exact
@@ -831,29 +782,10 @@ object Dedup {
       df: DataFrame,
       idCol: Column,
       text: Column,
-      k: Int = 8): DataFrame =
-    substringDupFractionWithCache(df, idCol, text, k)._1
-
-  /** Scoped variant of [[substringDupFraction]] — see
-    * [[withMinhashLshPairs]]. */
-  def withSubstringDupFraction[T](
-      df: DataFrame,
-      idCol: Column,
-      text: Column,
-      k: Int = 8)(action: DataFrame => T): T = {
-    val (out, cached) = substringDupFractionWithCache(df, idCol, text, k)
-    try action(out) finally cached.unpersist()
-  }
-
-  private def substringDupFractionWithCache(
-      df: DataFrame,
-      idCol: Column,
-      text: Column,
-      k: Int): (DataFrame, DataFrame) = {
+      k: Int = 8): DataFrame = {
     // cached: span sizes + the explode read it (3 consumers)
-    val base = Par.widen(df)
-      .select(idCol.as("id"), shinglesNative(text, k).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = persist(Par.widen(df)
+      .select(idCol.as("id"), shinglesNative(text, k).as("sh")))
     val ex = base.select(col("id"), explode(col("sh")).as("s"))
     // (id, s) pairs are UNIQUE (shinglesFromTokens is array_distinct),
     // so the doc count per span is a plain count — count_distinct here
@@ -870,12 +802,11 @@ object Dedup {
         Window.partitionBy(col("s"))))
       .filter(col("nd") >= 2)
       .groupBy(col("id")).agg(count(lit(1)).as("n_shared"))
-    val out = base.select(col("id"), size(col("sh")).as("n_spans"))
+    base.select(col("id"), size(col("sh")).as("n_spans"))
       .join(perDoc, Seq("id"), "left")
       .select(col("id"), col("n_spans"),
         r6(coalesce(col("n_shared"), lit(0L)).cast("double") /
           col("n_spans")).as("dup_frac"))
-    (out, base)
   }
 
   /** Edit-distance near-duplicate pairs — the dedup variant that catches

@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.Caches.persist
 import graft.functions.Portable.r6
 
 /** Iterative graph analytics in DataFrame form.
@@ -35,7 +37,9 @@ object Graph {
     * only the (node-sized) rank table, never the edge list; the
     * contribution aggregation is a map-side-combinable sum keyed by
     * `dst`. Iteration count is fixed (no driver-side convergence
-    * collect) — the whole run is one declarative plan.
+    * collect) — the whole run is one declarative plan. The returned
+    * plan reads two caches, released under the [[graft.Caches]]
+    * contracts.
     */
   def pageRank(edges: DataFrame, iters: Int, scale: Long = 1000000L): DataFrame = {
     require(iters >= 1 && iters <= 20, "bounded fixed-iteration contract")
@@ -44,16 +48,14 @@ object Graph {
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
     // one shuffle each for the degree join and the src partitioning; the
     // persisted result is reused by every iteration
-    val ewd = e.join(deg, Seq("src"))
-      .repartition(spark.sparkContext.defaultParallelism, col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ewd = persist(e.join(deg, Seq("src"))
+      .repartition(spark.sparkContext.defaultParallelism, col("src")))
     // node set from the CACHED augmented edge list (r18): ewd's inner
     // degree join keeps every edge row, so its endpoint set is exactly
     // e's — reading the cache twice replaces two more executions of the
     // (often expensive) upstream edge pipeline
-    val nodes = ewd.select(col("src").as("node"))
-      .union(ewd.select(col("dst").as("node"))).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val nodes = persist(ewd.select(col("src").as("node"))
+      .union(ewd.select(col("dst").as("node"))).distinct())
     val base = scale * 15 / 100
     var ranks = nodes.withColumn("rank", lit(scale))
     (1 to iters).foreach { _ =>

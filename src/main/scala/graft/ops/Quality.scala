@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.functions.Portable.r6
 
 /** Data-quality validators (SURVEY.md §2.9). Each returns a small
-  * DataFrame of violation evidence; `require*` variants raise like the
-  * reference's transformers (`src/data_cleaning/transformers.py:54-86`).
+  * DataFrame of violation evidence for the checks the reference's
+  * transformers raise on (`src/data_cleaning/transformers.py:54-86`).
   */
 object Quality {
 
@@ -16,14 +16,6 @@ object Quality {
     df.agg(
       count(lit(1)).as("n_rows"),
       cols.map(c => count(when(col(c).isNull, lit(1))).as(s"nulls_$c")): _*)
-
-  def requireNoNulls(df: DataFrame, cols: Seq[String]): Unit = {
-    val row = nullCounts(df, cols).collect()(0)
-    cols.foreach { c =>
-      val n = row.getAs[Long](s"nulls_$c")
-      require(n == 0, s"column $c contains $n NULLs")
-    }
-  }
 
   /** Count of adjacency violations of a monotonically-increasing time
     * column under the given insertion order (`transformers.py:72-86`).

@@ -145,11 +145,4 @@ object ScalableWindow {
     }
     out.filter(!col(F)).drop(B, F)
   }
-
-  /** Rows-per-bucket profile — diagnostic for choosing bucket granularity
-    * (fringe spanning many buckets still yields correct results, but a
-    * bucket column with ~fringeRows rows per bucket has lost the point of
-    * bucketing). */
-  def checkBucketSizes(df: DataFrame, bucket: Column): DataFrame =
-    df.groupBy(bucket.as("bucket")).count().orderBy("bucket")
 }

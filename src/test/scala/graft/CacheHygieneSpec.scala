@@ -4,25 +4,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.features.FeatureViews
-import graft.ops.{Components, Dedup}
+import graft.ops.{Components, Dedup, Graph}
 
-/** Cache-leak tripwire (round-15 verdict item 4). Several operator
-  * families persist bounded intermediates behind one of two release
-  * contracts:
-  *
-  *  - SCOPED: the `with*` brackets unpersist in `finally`
-  *    (Dedup.withMinhashLshPairs, Components.withConnectedComponents,
-  *    ExportJob.withSplit*, FeatureViews.with*Features);
-  *  - HARNESS: the plain variants leave their caches for the session,
-  *    and Bench/Verify call `spark.catalog.clearCache()` after every
-  *    query (Bench.scala:217, Verify.scala:42).
-  *
-  * Individual suites assert their own helper's release; THIS spec is
-  * the consolidated tripwire — it drives one representative of every
-  * caching family through its release path and asserts the session-wide
-  * `CacheManager` is empty afterwards, so a future refactor cannot
-  * silently turn the bounded caches into a long-session leak without a
-  * test going red here.
+/** Cache-leak tripwire (round-15 verdict item 4): drives one
+  * representative of every caching family through its release path —
+  * [[Caches.scoped]] for library callers, the harness `clearCache()` for
+  * the query surface (the two contracts are stated on [[Caches]]) — and
+  * asserts the session-wide `CacheManager` is empty afterwards, so a
+  * refactor cannot silently turn the bounded caches into a long-session
+  * leak.
   */
 class CacheHygieneSpec extends SparkSpecBase {
   import spark.implicits._
@@ -40,21 +30,22 @@ class CacheHygieneSpec extends SparkSpecBase {
 
   test("scoped dedup brackets leave the cache manager empty") {
     spark.catalog.clearCache()
-    Dedup.withMinhashLshPairs(docs, col("doc_id"), col("text"))(_.count())
-    assertNoCaches("Dedup.withMinhashLshPairs")
-    Dedup.withNgramJaccardPairs(docs, col("doc_id"), col("text"),
-      lit(0))(_.count())
-    assertNoCaches("Dedup.withNgramJaccardPairs")
-    Dedup.withSubstringDupFraction(docs, col("doc_id"), col("text"), 4)(
+    Caches.scoped(Dedup.minhashLshPairs(docs, col("doc_id"), col("text")))(
       _.count())
-    assertNoCaches("Dedup.withSubstringDupFraction")
+    assertNoCaches("scoped Dedup.minhashLshPairs")
+    Caches.scoped(Dedup.ngramJaccardPairs(docs, col("doc_id"), col("text"),
+      lit(0)))(_.count())
+    assertNoCaches("scoped Dedup.ngramJaccardPairs")
+    Caches.scoped(Dedup.substringDupFraction(docs, col("doc_id"),
+      col("text"), 4))(_.count())
+    assertNoCaches("scoped Dedup.substringDupFraction")
   }
 
   test("scoped components bracket leaves the cache manager empty") {
     spark.catalog.clearCache()
     val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("id_a", "id_b")
-    Components.withConnectedComponents(edges)(_.count())
-    assertNoCaches("Components.withConnectedComponents")
+    Caches.scoped(Components.connectedComponents(edges))(_.count())
+    assertNoCaches("scoped Components.connectedComponents")
   }
 
   test("scoped export bracket leaves the cache manager empty") {
@@ -66,10 +57,10 @@ class CacheHygieneSpec extends SparkSpecBase {
           col("id").cast("int"), lit(0), lit(0))).as("ts"),
       (col("id") % 7).cast("double").as("value"),
       (col("id") % 7 * 2 + 1).cast("double").as("y"))
-    graft.exports.ExportJob.withSplitUnified(labeled,
+    Caches.scoped(graft.exports.ExportJob.splitUnified(labeled,
       date_trunc("week", col("ts")), Seq(col("ts"), col("event_id")),
-      0.25, Seq("event_id", "value"), "y")(_.values.map(_.count()).sum)
-    assertNoCaches("ExportJob.withSplitUnified")
+      0.25, Seq("event_id", "value"), "y"))(_.values.map(_.count()).sum)
+    assertNoCaches("scoped ExportJob.splitUnified")
   }
 
   test("scoped feature-view brackets leave the cache manager empty") {
@@ -83,12 +74,53 @@ class CacheHygieneSpec extends SparkSpecBase {
           lit(0), col("id").cast("int"), lit(0), lit(0))).as("time"),
       (lit(50.0) + (col("id") % 30).cast("double")).as("price_eur_mwh"),
       lit("10YCH-SWISSGRIDZ").as("domain"), lit("EUR").as("currency"))
-    FeatureViews.withTrainingFeatures(prices,
+    Caches.scoped(FeatureViews.trainingFeatures(prices,
       empty(Schemas.weatherHourly), empty(Schemas.entsoeGeneration),
       empty(Schemas.entsoeActualLoad),
       empty(Schemas.entsoeCrossborderFlows),
-      empty(Schemas.entsoeLoadForecast))(_.count())
-    assertNoCaches("FeatureViews.withTrainingFeatures")
+      empty(Schemas.entsoeLoadForecast)))(_.count())
+    assertNoCaches("scoped FeatureViews.trainingFeatures")
+  }
+
+  test("a scope releases its caches when the build throws") {
+    spark.catalog.clearCache()
+    // a 5-node path needs more than one round, so the convergence
+    // check throws after the edge and label caches were persisted
+    val path5 = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
+      .toDF("id_a", "id_b")
+    val e = intercept[IllegalArgumentException] {
+      Caches.scoped(Components.connectedComponents(path5, maxIter = 1))(
+        _.count())
+    }
+    assert(e.getMessage.contains("did not converge"))
+    assertNoCaches("a throwing scoped Components.connectedComponents")
+  }
+
+  test("a nested scope releases only its own caches; pageRank is " +
+      "scopeable") {
+    spark.catalog.clearCache()
+    def readsCache(df: DataFrame): Boolean =
+      df.select("*").queryExecution.withCachedData.exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.columnar
+          .InMemoryRelation])
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L))
+      .toDF("src", "dst")
+    Caches.scoped {
+      val frac = Dedup.substringDupFraction(docs, col("doc_id"),
+        col("text"), 4)
+      val ranks = Caches.scoped(Graph.pageRank(edges, iters = 3)) { r =>
+        assert(readsCache(r))
+        assert(r.count() == 4L)
+        r
+      }
+      (frac, ranks)
+    } { case (frac, ranks) =>
+      assert(!readsCache(ranks), "the inner scope kept PageRank's caches")
+      assert(readsCache(frac),
+        "the inner scope released a cache of the enclosing scope")
+      assert(frac.count() == docs.count())
+    }
+    assertNoCaches("nested scopes")
   }
 
   test("representative harness queries: caches exist while running, and " +

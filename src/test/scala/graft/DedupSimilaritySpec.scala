@@ -138,18 +138,19 @@ class DedupSimilaritySpec extends SparkSpecBase {
     assert(got(2L) == (5, 0.2))       // only "t u v w" shared
     assert(got(3L) == (5, 0.0))
     assert(got(4L) == (5, 1.0))
-    // bracket variant releases its cache
+    // scoped, it releases its cache
     spark.catalog.clearCache()
-    Dedup.withSubstringDupFraction(docs, col("doc_id"), col("text"), 4)(
-      _.count())
+    Caches.scoped(Dedup.substringDupFraction(docs, col("doc_id"),
+      col("text"), 4))(_.count())
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 
-  test("withConnectedComponents releases the label cache after the action") {
+  test("scoped connected components release the label cache after the " +
+      "action") {
     import graft.ops.Components
     spark.catalog.clearCache()
     val edges = Seq((2L, 1L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    val got = Components.withConnectedComponents(edges)(
+    val got = Caches.scoped(Components.connectedComponents(edges))(
       _.as[(Long, Long)].collect().toMap)
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L,
       11L -> 10L))
@@ -169,11 +170,11 @@ class DedupSimilaritySpec extends SparkSpecBase {
   test("scoped pair generators release their caches after the action") {
     spark.catalog.clearCache()
     val df = Seq((1L, "a b c d e"), (2L, "a b c d e")).toDF("doc_id", "text")
-    val n = Dedup.withMinhashLshPairs(df, col("doc_id"), col("text"),
-      threshold = 0.5)(_.count())
+    val n = Caches.scoped(Dedup.minhashLshPairs(df, col("doc_id"),
+      col("text"), threshold = 0.5))(_.count())
     assert(n == 1)
-    val m = Dedup.withNgramJaccardPairs(df, col("doc_id"), col("text"),
-      lit(0), threshold = 0.5)(_.count())
+    val m = Caches.scoped(Dedup.ngramJaccardPairs(df, col("doc_id"),
+      col("text"), lit(0), threshold = 0.5))(_.count())
     assert(m == 1)
     assert(spark.sharedState.cacheManager.isEmpty,
       "bracketed variants must leave no cached relations behind")

@@ -106,15 +106,16 @@ class FeatureViewsSpec extends SparkSpecBase {
       lit(8.7502).as("longitude"), lit(10.0).as("temperature_2m"),
       lit(3.0).as("wind_speed_10m"), lit(0.0).as("shortwave_radiation"),
       lit(50.0).as("cloud_cover"), lit(0.0).as("precipitation_mm"))
-    val n = FeatureViews.withNetLoadFeatures(load, pv, weather)(_.count())
+    val n = Caches.scoped(FeatureViews.netLoadFeatures(load, pv, weather))(
+      _.count())
     assert(n == 200)
-    val m = FeatureViews.withTrainingFeatures(
+    val m = Caches.scoped(FeatureViews.trainingFeatures(
       prices,
       empty(Schemas.weatherHourly),
       empty(Schemas.entsoeGeneration),
       empty(Schemas.entsoeActualLoad),
       empty(Schemas.entsoeCrossborderFlows),
-      empty(Schemas.entsoeLoadForecast))(_.count())
+      empty(Schemas.entsoeLoadForecast)))(_.count())
     assert(m == 400)
     assert(spark.sharedState.cacheManager.isEmpty,
       "bracketed feature views must leave no cached relations behind")

@@ -119,12 +119,12 @@ class NativePlanStabilitySpec extends SparkSpecBase {
     // materialized RDD — see Components.cutLineage), so the scan-side
     // expressions live only in the edge plan fed INTO the loop. Pin
     // that plan via the same helper call the query makes
-    // (SparkEntry dedup_cluster_canonical → Dedup.withMinhashLshPairs,
+    // (SparkEntry dedup_cluster_canonical → Dedup.minhashLshPairs,
     // threshold 0.5) — a fallback inside the helper trips this.
     import org.apache.spark.sql.functions.col
     val docs = Tables.documents(spark, sf())
-    try graft.ops.Dedup.withMinhashLshPairs(docs, col("doc_id"),
-      col("text"), threshold = 0.5) { pairs =>
+    try Caches.scoped(graft.ops.Dedup.minhashLshPairs(docs, col("doc_id"),
+      col("text"), threshold = 0.5)) { pairs =>
       val plan = pairs.queryExecution.optimizedPlan
       for ((name, p) <- minhashNatives)
         assert(logicalHas(plan, p),

@@ -183,19 +183,19 @@ class ServingExportSpec extends SparkSpecBase {
     spark.catalog.clearCache()
     val labeled = ev.withColumn("y", col("value"))
       .withColumn("d", to_date(col("ts")))
-    val n1 = ExportJob.withSplitUnified(labeled,
+    val n1 = Caches.scoped(ExportJob.splitUnified(labeled,
       date_trunc("week", col("ts")), Seq(col("ts"), col("event_id")),
-      0.25, Seq("event_id", "value"), "y")(_.values.map(_.count()).sum)
-    val n2 = ExportJob.withSplitUnifiedByDates(labeled, col("d"),
+      0.25, Seq("event_id", "value"), "y"))(_.values.map(_.count()).sum)
+    val n2 = Caches.scoped(ExportJob.splitUnifiedByDates(labeled, col("d"),
       Seq(col("ts"), col("event_id")), valDays = 5, testDays = 5,
-      Seq("event_id", "value", "d"), "y")(_.values.map(_.count()).sum)
+      Seq("event_id", "value", "d"), "y"))(_.values.map(_.count()).sum)
     assert(n1 > 0 && n1 == n2) // both splits partition the same rows
-    val n3 = ExportJob.withSplitXy(labeled,
+    val n3 = Caches.scoped(ExportJob.splitXy(labeled,
       date_trunc("week", col("ts")), Seq(col("ts"), col("event_id")),
-      0.25, Seq("event_id", "value"), "y")(_.values.map(_._1.count()).sum)
-    val n4 = ExportJob.withSplitXyByDates(labeled, col("d"),
+      0.25, Seq("event_id", "value"), "y"))(_.values.map(_._1.count()).sum)
+    val n4 = Caches.scoped(ExportJob.splitXyByDates(labeled, col("d"),
       Seq(col("ts"), col("event_id")), valDays = 5, testDays = 5,
-      Seq("event_id", "value"), "y")(_.values.map(_._2.count()).sum)
+      Seq("event_id", "value"), "y"))(_.values.map(_._2.count()).sum)
     assert(n3 == n1 && n4 == n1)
     assert(spark.sharedState.cacheManager.isEmpty,
       "bracketed split variants must leave no cached relations behind")

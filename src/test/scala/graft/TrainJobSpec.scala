@@ -52,7 +52,12 @@ class TrainJobSpec extends SparkSpecBase {
     val out = Files.createTempDirectory("graft_trainjob_spec").toString
     val features =
       SparkEntry.queries("feature_net_load_view")(spark, sf())
+    // the view persists its series for the harness clearCache; drop them
+    // so the checks below see only what the two phases leave behind
+    spark.catalog.clearCache()
     val dataDir = TrainJob.runLoadExport(features, s"$out/data")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "runLoadExport left its split cache behind")
 
     // export contract: six files, X carries time + features, y carries
     // time + target, no target column in any X file
@@ -74,6 +79,8 @@ class TrainJobSpec extends SparkSpecBase {
 
     val res = TrainJob.runLoadTraining(spark, dataDir, s"$out/models",
       stamp = "19990101", maxIter = 3)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "runLoadTraining left a train or test cache behind")
     // three models persisted, three metric rows, artifact on disk
     assert(res.modelPaths.keySet ==
       Set("naive_load", "linear_load", "model_load"))
