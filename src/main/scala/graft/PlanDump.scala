@@ -36,6 +36,9 @@ object PlanDump {
         } catch { case e: Throwable =>
           System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")
         }
+        // as in Verify and Bench: no key's plan may read an earlier
+        // key's InMemoryRelation
+        spark.catalog.clearCache()
       }
     spark.stop()
   }

@@ -23,7 +23,7 @@ import graft.functions.Portable.r6
   *    under either encoding.
   *  - every aggregate of doubles is rounded to 6 dp on both sides via
   *    the portable guarded floor form (`Portable.r6` / its SQL twin
-  *    `CASE WHEN abs(x) < 8e9 THEN floor(x*1e6+0.5)/1e6 ELSE x END`) —
+  *    `Portable.r6Sql`, which the oracles call) —
   *    NOT `round(x, 6)`: Spark's BigDecimal HALF_UP and DuckDB's C
   *    round flip in opposite directions on boundary doubles (six r15
   *    fuzz catches; the whole class was retired in r16). The sum order
@@ -65,6 +65,447 @@ object SparkEntry {
   /** Global order used for all positional/window ops on events. */
   private val evOrder: Seq[Column] = Seq(col("ts"), col("event_id"))
   private val weekBucket: Column = date_trunc("week", col("ts"))
+
+  // ------------------------------------------------ shared key builders
+  // Preludes and oracle CTE chains that several keys share, each said
+  // once. Oracle CTE vals precede the key lists that interpolate them
+  // (a `val` is read when its list is built). Every oracle text is
+  // whitespace-normalized by [[oracleSql]], so line breaks here are
+  // free.
+
+  /** Events with `__vc`, the value in integer cents by Spark `round`
+    * (HALF_UP). */
+  private def evCents(s: SparkSession, d: String): DataFrame =
+    ev(s, d).withColumn("__vc", round(col("value") * 100, 0).cast("long"))
+
+  /** Events with `__vc`, the value in integer cents by the floor form
+    * `floor(x + 0.5)` that DuckDB's `floor(value*100+0.5)` matches. */
+  private def evFloorCents(s: SparkSession, d: String): DataFrame =
+    ev(s, d).withColumn("__vc",
+      floor(col("value") * 100 + lit(0.5)).cast("long"))
+
+  /** Per-type daily OHLC candles over floor-form cents (`series`,
+    * `bucket`, `open`, `high`, `low`, `close`); the DuckDB twin is
+    * [[dailyHlcSql]]. */
+  private def dailyCandles(s: SparkSession, d: String): DataFrame =
+    TimeSeries.ohlc(evFloorCents(s, d), col("event_type"),
+      to_date(col("ts")), col("ts"), col("__vc").cast("double"),
+      col("event_id"))
+
+  /** Oracle ticks of the daily candles, CTE `k`: cents `vc` and the
+    * zero-padded (ts, event_id) order key `ok` that `arg_min`/`arg_max`
+    * rank by. */
+  private val candleTicksSql =
+    """k AS (SELECT event_type, CAST(ts AS DATE) AS day,
+         CAST(floor(value*100+0.5) AS BIGINT) AS vc,
+         lpad(CAST(epoch_us(CAST(ts AS TIMESTAMP)) AS VARCHAR),
+           20, '0') ||
+           lpad(CAST(event_id AS VARCHAR), 20, '0') AS ok
+       FROM events)"""
+
+  /** DuckDB twin of [[dailyCandles]] without the open: CTEs `k` and
+    * `daily(event_type, day, h, l, c)`. */
+  private val dailyHlcSql =
+    s"""$candleTicksSql,
+       daily AS (SELECT event_type, day,
+           CAST(max(vc) AS DOUBLE) AS h,
+           CAST(min(vc) AS DOUBLE) AS l,
+           CAST(arg_max(vc, ok) AS DOUBLE) AS c
+         FROM k GROUP BY 1, 2)"""
+
+  /** Oracle input of the Holt smoothers: per-type daily cents sums `c`
+    * (CTE `daily`) numbered by day (CTE `d`, column `rn`). */
+  private val holtDailySql =
+    """daily AS (SELECT event_type,
+           CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE)
+             AS day,
+           CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
+             AS DOUBLE) AS c
+         FROM events GROUP BY 1, 2),
+       d AS (SELECT event_type, day, c,
+           row_number() OVER (PARTITION BY event_type
+             ORDER BY day) AS rn
+         FROM daily)"""
+
+  /** The as-of family's inputs: clicks, and views reduced to one payload
+    * per (user, ts), the value of the largest event_id. */
+  private def asofInputs(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = {
+    val e = ev(s, d)
+    val clicks = e.filter(col("event_type") === "click")
+      .select(col("event_id"), col("user_id"), col("ts"))
+    val views = e.filter(col("event_type") === "view")
+      .groupBy(col("user_id"), col("ts"))
+      .agg(max_by(col("value"), col("event_id")).as("v_value"))
+    (clicks, views)
+  }
+
+  /** DuckDB twin of [[asofInputs]]: CTEs `clicks` and `views`, each
+    * with its timestamp as `ts2`. */
+  private val asofCtesSql =
+    """clicks AS (SELECT event_id, user_id,
+           CAST(ts AS TIMESTAMP) AS ts2
+         FROM events WHERE event_type = 'click'),
+       views AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts2,
+           arg_max(value, event_id) AS v_value
+         FROM events WHERE event_type = 'view' GROUP BY 1, 2)"""
+
+  /** Oracle of the prior as-of join, through DuckDB's native ASOF LEFT
+    * JOIN (join_asof and join_asof_native). */
+  private val asofPriorSql =
+    s"""WITH $asofCtesSql
+       SELECT c.event_id, c.user_id, v.v_value
+       FROM clicks c ASOF LEFT JOIN views v
+         ON c.user_id = v.user_id AND c.ts2 >= v.ts2"""
+
+  /** DuckDB twin of `EventAnalytics.funnelTimes` for view → click →
+    * purchase over a preceding `ev0(user_id, event_type, ts)` CTE:
+    * `v`, `c` and `p` hold each user's first time (`t1`, `t2`, `t3`)
+    * at a stage strictly after the previous stage. */
+  private val funnelCtesSql =
+    """v AS (SELECT user_id, min(ts) AS t1 FROM ev0
+           WHERE event_type = 'view' GROUP BY 1),
+       c AS (SELECT e.user_id, min(e.ts) AS t2 FROM ev0 e
+           JOIN v USING (user_id)
+           WHERE e.event_type = 'click' AND e.ts > v.t1 GROUP BY 1),
+       p AS (SELECT e.user_id, min(e.ts) AS t3 FROM ev0 e
+           JOIN c USING (user_id)
+           WHERE e.event_type = 'purchase' AND e.ts > c.t2
+           GROUP BY 1)"""
+
+  /** Oracle of the funnel stage counts (agg_funnel and its streaming
+    * twin stream_funnel_state). */
+  private val funnelStagesSql =
+    s"""WITH ev0 AS (SELECT user_id, event_type,
+           CAST(ts AS TIMESTAMP) AS ts FROM events),
+       $funnelCtesSql
+       SELECT CASE WHEN t3 IS NOT NULL THEN 3
+                   WHEN t2 IS NOT NULL THEN 2 ELSE 1 END AS stage,
+              CAST(count(*) AS INTEGER) AS n_users
+       FROM v LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)
+       GROUP BY 1"""
+
+  /** The interval family's input: `op` over one 15-minute interval per
+    * event, keyed by user; the DuckDB twin is [[quarterHourIvSql]]. */
+  private def quarterHourIntervals(s: SparkSession, d: String)(
+      op: (DataFrame, Column, Column, Column, String) => DataFrame)
+      : DataFrame =
+    op(ev(s, d), col("user_id"), col("ts"),
+      col("ts") + expr("INTERVAL 15 MINUTES"), "user_id")
+
+  /** Oracle CTE `iv(user_id, s, e)`: one [ts, ts + 900 s) interval per
+    * event. */
+  private val quarterHourIvSql =
+    """iv AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS s,
+           CAST(ts AS TIMESTAMP) + INTERVAL 900 SECOND AS e
+         FROM events)"""
+
+  /** DuckDB twin of the gaps-and-islands step of
+    * `Intervals.coalesceIntervals` over a preceding `iv(user_id, s, e)`
+    * CTE: `t` carries the running max end before each row (`pm`), `g`
+    * numbers each user's islands (`island`). */
+  private val islandCtesSql =
+    """t AS (SELECT user_id, s, e,
+           max(epoch_us(e)) OVER (PARTITION BY user_id
+             ORDER BY s, e
+             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+             AS pm
+         FROM iv),
+       g AS (SELECT user_id, s, e,
+           sum(CASE WHEN pm IS NULL OR epoch_us(s) > pm
+             THEN 1 ELSE 0 END) OVER (PARTITION BY user_id
+             ORDER BY s, e ROWS BETWEEN UNBOUNDED PRECEDING
+               AND CURRENT ROW) AS island
+         FROM t)"""
+
+  /** An hourly integer-cents roll-up (`bucket`, `event_type`, `avg_v`,
+    * `min_v`, `max_v`, `n`) in value units, the mean rounded by r6. */
+  private def rollupFromCents(rollup: DataFrame): DataFrame =
+    rollup.select(col("bucket"), col("event_type"),
+      r6(col("avg_v") / 100).as("avg_v"),
+      (col("min_v") / 100).as("min_v"),
+      (col("max_v") / 100).as("max_v"), col("n"))
+
+  /** Oracle of the hourly cents roll-up (agg_time_bucket,
+    * stream_hourly_rollup, rollup_refresh_merge). */
+  private val hourlyRollupSql =
+    s"""SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
+         event_type, ${Portable.r6Sql("avg(vc) / 100")} AS avg_v,
+         min(vc) / 100 AS min_v, max(vc) / 100 AS max_v,
+         count(vc) AS n
+       FROM (SELECT ts, event_type,
+               floor(value * 100 + 0.5) AS vc FROM events)
+       GROUP BY 1, 2"""
+
+  /** Events with 30-minute-gap session ids per user in column `idName`
+    * (the running count of session starts); the oracle is
+    * [[sessionizeSql]]. */
+  private def sessionIds(s: SparkSession, d: String, idName: String)
+      : DataFrame = {
+    val w = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts"), col("event_id"))
+    ev(s, d)
+      .withColumn("__prev", lag(col("ts"), 1).over(w))
+      .withColumn("__new", when(col("__prev").isNull ||
+        col("ts") > col("__prev") + expr("INTERVAL 30 MINUTES"),
+        lit(1)).otherwise(lit(0)))
+      .withColumn(idName, sum(col("__new"))
+        .over(w.rowsBetween(Window.unboundedPreceding, 0)))
+  }
+
+  /** Oracle of 30-minute-gap sessionization (win_sessionize and its
+    * streaming twin stream_sessionize). */
+  private val sessionizeSql =
+    """WITH t AS (SELECT event_id, user_id,
+           CAST(ts AS TIMESTAMP) AS ts2,
+           lag(CAST(ts AS TIMESTAMP)) OVER (PARTITION BY user_id
+             ORDER BY CAST(ts AS TIMESTAMP), event_id) AS p
+         FROM events)
+       SELECT event_id, user_id,
+         CAST(sum(CASE WHEN p IS NULL
+             OR ts2 > p + INTERVAL 30 MINUTE THEN 1 ELSE 0 END)
+           OVER (PARTITION BY user_id ORDER BY ts2, event_id
+             ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
+       FROM t"""
+
+  /** 30-minute-gap session ids per user, CTEs `t` (previous timestamp
+    * `p`) and `s0(user_id, ts2, sid)`: the input of the session
+    * statistics oracles. */
+  private val sessionIdsSql =
+    """t AS (SELECT user_id, event_id,
+           CAST(ts AS TIMESTAMP) AS ts2,
+           lag(CAST(ts AS TIMESTAMP)) OVER (PARTITION BY user_id
+             ORDER BY CAST(ts AS TIMESTAMP), event_id) AS p
+         FROM events),
+       s0 AS (SELECT user_id, ts2,
+           sum(CASE WHEN p IS NULL
+               OR ts2 > p + INTERVAL 30 MINUTE THEN 1 ELSE 0 END)
+             OVER (PARTITION BY user_id ORDER BY ts2, event_id
+               ROWS UNBOUNDED PRECEDING) AS sid
+         FROM t)"""
+
+  /** Oracle of per-user state dwell times (agg_state_durations and its
+    * streaming twin stream_state_durations). */
+  private val stateDurationsSql =
+    s"""WITH t AS (SELECT user_id, event_type AS state,
+           CAST(ts AS TIMESTAMP) AS ts2,
+           lead(CAST(ts AS TIMESTAMP)) OVER (PARTITION BY user_id
+             ORDER BY CAST(ts AS TIMESTAMP), event_id) AS nxt
+         FROM events)
+       SELECT user_id, state,
+         ${Portable.r6Sql("CAST(sum(epoch_us(nxt - ts2)) AS DOUBLE) / 1e6")}
+           AS dur_secs
+       FROM t WHERE nxt IS NOT NULL GROUP BY 1, 2"""
+
+  /** DuckDB twin of `Multimodal.asPayload` framing at 128 bytes: CTEs
+    * `w` (one row per frame index) and `f(media_id, frame_idx,
+    * samples)`. */
+  private val mediaFramesSql =
+    """w AS (SELECT doc_id AS media_id, text,
+           length(text) AS n,
+           unnest(range(0, greatest(CAST(ceil(length(text) / 128.0)
+             AS INT), 1))) AS frame_idx
+         FROM documents),
+       f AS (SELECT media_id, CAST(frame_idx AS INTEGER)
+             AS frame_idx,
+           [ord(substr(text, CAST(frame_idx * 128 + j + 1 AS INT),
+             1)) FOR j IN range(0, least(128, n - frame_idx * 128))]
+             AS samples
+         FROM w)"""
+
+  /** Mann–Kendall S, pair count and tau per type from day pairs
+    * (`s_a`, `n_a`, `s_b`, `n_b`), by the exact cross-multiplied sign;
+    * the DuckDB twin is [[mannKendallTauSql]]. */
+  private def kendallTau(pairs: DataFrame): DataFrame =
+    pairs.groupBy(col("event_type"))
+      .agg(sum(signum(col("s_b") * col("n_a") - col("s_a") * col("n_b"))
+          .cast("long")).as("s_stat"),
+        count(lit(1)).as("n_pairs"))
+      .select(col("event_type"), col("s_stat"), col("n_pairs"),
+        r6(col("s_stat").cast("double") / col("n_pairs")).as("tau"))
+
+  /** Oracle tail of [[kendallTau]] over a preceding `p(event_type, sgn)`
+    * CTE. */
+  private val mannKendallTauSql =
+    s"""SELECT event_type,
+         CAST(sum(sgn) AS BIGINT) AS s_stat,
+         count(*) AS n_pairs,
+         ${Portable.r6Sql("CAST(sum(sgn) AS DOUBLE) / count(*)")} AS tau
+       FROM p GROUP BY 1"""
+
+  /** The ANN family's inputs: the embeddings corpus `(id, vec)` and the
+    * queries `(query_id, qvec)` with id < 5; the DuckDB twin is
+    * [[annBaseSql]]. */
+  private def annInputs(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = {
+    val e = Tables.embeddings(s, d)
+      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val q = e.filter(col("id") < 5)
+      .select(col("id").as("query_id"), col("vec").as("qvec"))
+    (e, q)
+  }
+
+  /** Oracle tail of the approximate ANN keys: the top 10 of a preceding
+    * `sc(query_id, id, cos)` CTE, ties broken by id. */
+  private val annTop10Sql =
+    """r AS (SELECT query_id, id,
+           CAST(row_number() OVER (PARTITION BY query_id
+             ORDER BY cos DESC, id) AS INTEGER) AS rank
+         FROM sc)
+       SELECT query_id, id AS neighbor_id, rank
+       FROM r WHERE rank <= 10"""
+
+  /** Near-duplicate groups: connected components of the 0.5-Jaccard
+    * MinHash pairs. Scoped: the components loop materializes its labels
+    * (lineage cut), so the minhash base cache is released on exit
+    * instead of waiting for the harness clearCache. */
+  private def minhashComponents(docs: DataFrame): DataFrame =
+    Caches.scoped(Dedup.minhashLshPairs(docs,
+      col("doc_id"), col("text"), threshold = 0.5))(
+      Components.connectedComponents(_))
+
+  /** DuckDB twin of [[minhashComponents]]' graph over a preceding
+    * `verified(id_a, id_b, j)` CTE: symmetric edges `sym` and the
+    * recursive reachability closure `reach(src, dst)`. */
+  private val componentsCtesSql =
+    """dup AS (SELECT id_a, id_b FROM verified WHERE j >= 0.5),
+       sym AS (SELECT id_a AS src, id_b AS dst FROM dup
+               UNION SELECT id_b, id_a FROM dup),
+       reach(src, dst) AS (
+         SELECT src, dst FROM sym
+         UNION
+         SELECT r.src, s2.dst FROM reach r JOIN sym s2
+           ON r.dst = s2.src)"""
+
+  /** Event counts per (event_type, Postgres day of week) as doubles
+    * `o`: the contingency table of the independence tests. */
+  private def typeDowCells(s: SparkSession, d: String): DataFrame =
+    ev(s, d)
+      .groupBy(col("event_type"), ScalarFns.dowPg(col("ts")).as("dow"))
+      .agg(count(lit(1)).cast("double").as("o"))
+
+  /** DuckDB twin of [[typeDowCells]], CTE `cells(event_type, dow, o)`. */
+  private val typeDowCellsSql =
+    """cells AS (SELECT event_type,
+           dayofweek(CAST(ts AS TIMESTAMP)) AS dow,
+           CAST(count(*) AS DOUBLE) AS o
+         FROM events GROUP BY 1, 2)"""
+
+  /** Hourly per-type value sums `y` via floor-form integer cents. */
+  private def hourlyCentsSeries(s: SparkSession, d: String): DataFrame =
+    ev(s, d)
+      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hr"))
+      .agg((sum(floor(col("value") * 100 + lit(0.5)).cast("long"))
+        .cast("double") / 100.0).as("y"))
+
+  /** DuckDB twin of [[hourlyCentsSeries]], CTE `h(event_type, hr, y)`. */
+  private val hourlyCentsSql =
+    """h AS (SELECT event_type,
+           date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hr,
+           CAST(sum(CAST(floor(value*100+0.5) AS BIGINT)) AS DOUBLE)
+             / 100.0 AS y
+         FROM events GROUP BY 1, 2)"""
+
+  /** Daily per-type value sums `rev` via floor-form integer cents. */
+  private def dailyRevenue(s: SparkSession, d: String): DataFrame =
+    ev(s, d)
+      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
+      .agg((sum(floor(col("value") * 100 + lit(0.5)).cast("long"))
+        .cast("double") / 100.0).as("rev"))
+
+  /** DuckDB twin of [[dailyRevenue]], CTE `d(event_type, day, rev)`. */
+  private val dailyRevenueSql =
+    """d AS (SELECT event_type, CAST(ts AS DATE) AS day,
+           CAST(sum(CAST(floor(value*100+0.5) AS BIGINT)) AS DOUBLE)
+             / 100.0 AS rev
+         FROM events GROUP BY 1, 2)"""
+
+  /** Calibration input: a deterministic 24-bit md5 score `h` per event
+    * and the label `lab` = value >= 100. */
+  private def hashedLabels(s: SparkSession, d: String): DataFrame =
+    ev(s, d).select(
+      graft.functions.PortableHash
+        .md5Long(col("event_id").cast("string"), 6).as("h"),
+      when(col("value") >= 100, 1L).otherwise(0L).as("lab"))
+
+  /** DuckDB twin of [[hashedLabels]], CTE `t(h, lab)`. */
+  private val hashedLabelsSql =
+    """t AS (SELECT
+           CAST(concat('0x', substr(md5(CAST(event_id AS VARCHAR)),
+             1, 6)) AS BIGINT) AS h,
+           CASE WHEN value >= 100 THEN 1 ELSE 0 END AS lab
+         FROM events)"""
+
+  /** Oracle CTEs `n(n)`, the event count, and `r(event_id, rn)`, each
+    * event's 1-based position in (ts, event_id) order. */
+  private val eventRanksSql =
+    """n AS (SELECT count(*) AS n FROM events),
+       r AS (SELECT event_id,
+           row_number() OVER (ORDER BY ts, event_id) AS rn
+         FROM events)"""
+
+  /** Two-sample input: click and view values, `i1` = 1 for a click. */
+  private def clickViewSample(s: SparkSession, d: String): DataFrame =
+    ev(s, d)
+      .filter(col("event_type").isin("click", "view"))
+      .select(col("value"),
+        when(col("event_type") === "click", 1L).otherwise(0L).as("i1"))
+
+  /** Orders joined to their customer's nation and region through three
+    * broadcast dimensions. */
+  private def ordersByRegion(s: SparkSession, d: String): DataFrame =
+    Tables.orders(s, d)
+      .join(broadcast(Tables.customer(s, d)),
+        col("o_custkey") === col("c_custkey"))
+      .join(broadcast(Tables.nation(s, d)),
+        col("c_nationkey") === col("n_nationkey"))
+      .join(broadcast(Tables.region(s, d)),
+        col("n_regionkey") === col("r_regionkey"))
+
+  /** DuckDB twin of `Graph.coOrderEdges`: CTEs `li(ok, pk)` and the
+    * part pairs co-ordered at least twice, `e(a, b)` with a < b. */
+  private val coOrderEdgesSql =
+    """li AS (SELECT DISTINCT l_orderkey AS ok,
+           l_partkey AS pk FROM lineitem),
+       e AS (SELECT x.pk AS a, y.pk AS b
+         FROM li x JOIN li y ON x.ok = y.ok AND x.pk < y.pk
+         GROUP BY 1, 2 HAVING count(*) >= 2)"""
+
+  /** The language-id keyword profiles as (lang, word). */
+  private val langWords = Seq(
+    ("en", "the"), ("en", "a"), ("en", "fast"),
+    ("de", "der"), ("de", "die"), ("de", "slow"),
+    ("fr", "le"), ("fr", "la"), ("fr", "table"),
+    ("es", "el"), ("es", "los"), ("es", "data"),
+    ("zh", "big"), ("zh", "spark"))
+
+  private def langProfiles(s: SparkSession): DataFrame = {
+    import s.implicits._
+    langWords.toDF("lang", "word")
+  }
+
+  /** DuckDB twin of [[langProfiles]], CTE `profiles(lang, word)`. */
+  private val langProfilesSql = "profiles(lang, word) AS (VALUES " +
+    langWords.map { case (l, w) => s"('$l', '$w')" }.mkString(", ") + ")"
+
+  /** Oracle of the first k-means pass over the x100-floored embeddings
+    * `q(vec_id, v)`: 8 seeds `c0` (every 37th vec_id), squared
+    * distances `d1` and the nearest-seed assignment `a1(vec_id, cid)`. */
+  private val kmeansFirstPassSql =
+    """q AS (SELECT vec_id,
+           list_transform(CAST(embedding AS DOUBLE[]),
+             x -> floor(x * 100.0)) AS v FROM embeddings),
+       init AS (SELECT vec_id, v FROM q WHERE vec_id % 37 = 0
+                ORDER BY vec_id LIMIT 8),
+       c0 AS (SELECT CAST(row_number() OVER (ORDER BY vec_id)
+                AS INTEGER) AS cid, v FROM init),
+       d1 AS (SELECT q.vec_id, c.cid,
+                list_sum(list_transform(range(1, 65),
+                  i -> (q.v[i] - c.v[i]) * (q.v[i] - c.v[i]))) AS dist
+              FROM q, c0 c),
+       a1 AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
+                row_number() OVER (PARTITION BY vec_id
+                  ORDER BY dist, cid) AS rn FROM d1) WHERE rn = 1)"""
 
   // ---------------------------------------------------------------- §2.1
   private val scans = Seq(
@@ -449,20 +890,10 @@ object SparkEntry {
       // double under any partial-aggregation order → bit-identical
       // across engines at every scale factor (raw-double group avgs
       // flip 6-decimal rounding boundaries)
-      (s, d) => Aggregates.timeBucketAgg(
+      (s, d) => rollupFromCents(Aggregates.timeBucketAgg(
           ev(s, d).withColumn("vc", floor(col("value") * 100 + lit(0.5))),
-          col("ts"), "1 hour", Seq(col("event_type")), col("vc"))
-        .select(col("bucket"), col("event_type"),
-          r6(col("avg_v") / 100).as("avg_v"),
-          (col("min_v") / 100).as("min_v"),
-          (col("max_v") / 100).as("max_v"), col("n")),
-      Some("""SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-                event_type, CASE WHEN abs(avg(vc) / 100) < 8.0e9 THEN floor((avg(vc) / 100) * 1e6 + 0.5) / 1e6 ELSE (avg(vc) / 100) END AS avg_v,
-                min(vc) / 100 AS min_v, max(vc) / 100 AS max_v,
-                count(vc) AS n
-              FROM (SELECT ts, event_type,
-                      floor(value * 100 + 0.5) AS vc FROM events)
-              GROUP BY 1, 2""")),
+          col("ts"), "1 hour", Seq(col("event_type")), col("vc"))),
+      Some(hourlyRollupSql)),
 
     Q("agg_conditional_sum",
       (s, d) => Aggregates.conditionalNetSum(Tables.lineitem(s, d),
@@ -507,8 +938,8 @@ object SparkEntry {
       (s, d) => Aggregates.groupDeviation(ev(s, d), to_date(col("ts")),
           col("value"), "deviation")
         .select(col("event_id"), r6(col("deviation")).as("deviation")),
-      Some("""SELECT event_id,
-                CASE WHEN abs(value - avg(value) OVER (PARTITION BY CAST(ts AS DATE))) < 8.0e9 THEN floor((value - avg(value) OVER (PARTITION BY CAST(ts AS DATE))) * 1e6 + 0.5) / 1e6 ELSE (value - avg(value) OVER (PARTITION BY CAST(ts AS DATE))) END
+      Some(s"""SELECT event_id,
+                ${Portable.r6Sql("value - avg(value) OVER (PARTITION BY CAST(ts AS DATE))")}
                   AS deviation
               FROM events""")),
 
@@ -519,10 +950,10 @@ object SparkEntry {
         Aggregates.medianImpute(e, col("event_type"), col("x"), "imputed")
           .select(col("event_id"), r6(col("imputed")).as("imputed"))
       },
-      Some("""WITH e AS (SELECT event_id, event_type,
+      Some(s"""WITH e AS (SELECT event_id, event_type,
                 CASE WHEN value < 10 THEN NULL ELSE value END AS x FROM events),
               m AS (SELECT event_type, median(x) AS med FROM e GROUP BY 1)
-              SELECT e.event_id, CASE WHEN abs(coalesce(e.x, m.med)) < 8.0e9 THEN floor((coalesce(e.x, m.med)) * 1e6 + 0.5) / 1e6 ELSE (coalesce(e.x, m.med)) END AS imputed
+              SELECT e.event_id, ${Portable.r6Sql("coalesce(e.x, m.med)")} AS imputed
               FROM e LEFT JOIN m USING (event_type)""")),
 
     Q("agg_metrics",
@@ -534,10 +965,10 @@ object SparkEntry {
             r6(col("rmse")).as("rmse"),
             r6(col("mape")).as("mape"))
       },
-      Some("""SELECT
-                CASE WHEN abs(avg(abs(err))) < 8.0e9 THEN floor((avg(abs(err))) * 1e6 + 0.5) / 1e6 ELSE (avg(abs(err))) END AS mae,
-                CASE WHEN abs(sqrt(avg(err * err))) < 8.0e9 THEN floor((sqrt(avg(err * err))) * 1e6 + 0.5) / 1e6 ELSE (sqrt(avg(err * err))) END AS rmse,
-                CASE WHEN abs(avg(CASE WHEN abs(l_extendedprice) >= 10 THEN abs(err) / abs(l_extendedprice) END) * 100) < 8.0e9 THEN floor((avg(CASE WHEN abs(l_extendedprice) >= 10 THEN abs(err) / abs(l_extendedprice) END) * 100) * 1e6 + 0.5) / 1e6 ELSE (avg(CASE WHEN abs(l_extendedprice) >= 10 THEN abs(err) / abs(l_extendedprice) END) * 100) END AS mape
+      Some(s"""SELECT
+                ${Portable.r6Sql("avg(abs(err))")} AS mae,
+                ${Portable.r6Sql("sqrt(avg(err * err))")} AS rmse,
+                ${Portable.r6Sql("avg(CASE WHEN abs(l_extendedprice) >= 10 THEN abs(err) / abs(l_extendedprice) END) * 100")} AS mape
               FROM (SELECT l_extendedprice,
                       l_extendedprice * (1 - l_discount) - l_extendedprice AS err
                     FROM lineitem)""")),
@@ -592,11 +1023,9 @@ object SparkEntry {
           r6(col("roll_24")).as("roll_24"),
           r6(col("roll_168")).as("roll_168"))
       },
-      Some("""SELECT event_id,
-                CASE WHEN abs(r24) < 8.0e9 THEN
-                  floor((r24) * 1e6 + 0.5) / 1e6 ELSE (r24) END AS roll_24,
-                CASE WHEN abs(r168) < 8.0e9 THEN
-                  floor((r168) * 1e6 + 0.5) / 1e6 ELSE (r168) END AS roll_168
+      Some(s"""SELECT event_id,
+                ${Portable.r6Sql("r24")} AS roll_24,
+                ${Portable.r6Sql("r168")} AS roll_168
               FROM (SELECT event_id,
                       avg(vc) OVER (w ROWS BETWEEN 23 PRECEDING
                         AND CURRENT ROW) / 100 AS r24,
@@ -661,10 +1090,7 @@ object SparkEntry {
     Q("split_chrono_ratio",
       (s, d) => ScalableRank.chronoSplit(ev(s, d), weekBucket, evOrder, 0.3)
         .select(col("event_id"), col("split")),
-      Some("""WITH n AS (SELECT count(*) AS n FROM events),
-              r AS (SELECT event_id,
-                      row_number() OVER (ORDER BY ts, event_id) AS rn
-                    FROM events)
+      Some(s"""WITH $eventRanksSql
               SELECT r.event_id,
                 CASE WHEN r.rn <= floor(n.n * (1 - 0.3)) THEN 'train'
                      ELSE 'test' END AS split
@@ -683,10 +1109,7 @@ object SparkEntry {
     Q("downsample_stride",
       (s, d) => ScalableRank.downsampleStride(ev(s, d), weekBucket, evOrder, 500)
         .select(col("event_id")),
-      Some("""WITH n AS (SELECT count(*) AS n FROM events),
-              r AS (SELECT event_id,
-                      row_number() OVER (ORDER BY ts, event_id) AS rn
-                    FROM events)
+      Some(s"""WITH $eventRanksSql
               SELECT r.event_id FROM r, n
               WHERE (r.rn - 1) % CAST(ceil(n.n / 500.0) AS BIGINT) = 0""")),
   )
@@ -939,19 +1362,9 @@ object SparkEntry {
   private val streaming = Seq(
     Q("stream_hourly_rollup",
       // integer-cents measure — see agg_time_bucket
-      (s, d) => HourlyRollup.runToCompletion(s, d,
-          measure = floor(col("value") * 100 + lit(0.5)))
-        .select(col("bucket"), col("event_type"),
-          r6(col("avg_v") / 100).as("avg_v"),
-          (col("min_v") / 100).as("min_v"),
-          (col("max_v") / 100).as("max_v"), col("n")),
-      Some("""SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-                event_type, CASE WHEN abs(avg(vc) / 100) < 8.0e9 THEN floor((avg(vc) / 100) * 1e6 + 0.5) / 1e6 ELSE (avg(vc) / 100) END AS avg_v,
-                min(vc) / 100 AS min_v, max(vc) / 100 AS max_v,
-                count(vc) AS n
-              FROM (SELECT ts, event_type,
-                      floor(value * 100 + 0.5) AS vc FROM events)
-              GROUP BY 1, 2""")),
+      (s, d) => rollupFromCents(HourlyRollup.runToCompletion(s, d,
+          measure = floor(col("value") * 100 + lit(0.5)))),
+      Some(hourlyRollupSql)),
   )
 
   // --------------------------------------- LLM training-data pipeline ops
@@ -1105,7 +1518,7 @@ object SparkEntry {
         col("doc_id"), col("text"), threshold = 0.5),
       Some(s"""WITH $plantedDocsSql,
               $minhashCtesSql
-              SELECT id_a, id_b, CASE WHEN abs(j) < 8.0e9 THEN floor((j) * 1e6 + 0.5) / 1e6 ELSE (j) END AS jaccard
+              SELECT id_a, id_b, ${Portable.r6Sql("j")} AS jaccard
               FROM verified WHERE j >= 0.5""")),
 
     // dedup GROUPS from the pair list: connected components via
@@ -1114,23 +1527,10 @@ object SparkEntry {
     // representative. The oracle recomputes the identical pair set and
     // clusters it with a recursive transitive closure.
     Q("dedup_components",
-      // scoped: the components loop materializes its labels (lineage
-      // cut), so the minhash base cache is released on exit instead of
-      // waiting for the harness clearCache
-      (s, d) => Caches.scoped(Dedup.minhashLshPairs(
-        withPlantedDups(Tables.documents(s, d)),
-        col("doc_id"), col("text"), threshold = 0.5))(
-        Components.connectedComponents(_)),
+      (s, d) => minhashComponents(withPlantedDups(Tables.documents(s, d))),
       Some(s"""WITH RECURSIVE $plantedDocsSql,
               $minhashCtesSql,
-              dup AS (SELECT id_a, id_b FROM verified WHERE j >= 0.5),
-              sym AS (SELECT id_a AS src, id_b AS dst FROM dup
-                      UNION SELECT id_b, id_a FROM dup),
-              reach(src, dst) AS (
-                SELECT src, dst FROM sym
-                UNION
-                SELECT r.src, s2.dst FROM reach r JOIN sym s2
-                  ON r.dst = s2.src)
+              $componentsCtesSql
               SELECT src AS id, least(src, min(dst)) AS component
               FROM reach GROUP BY src""")),
 
@@ -1194,7 +1594,7 @@ object SparkEntry {
                     FROM inter i
                     JOIN sizes sa ON i.id_a = sa.id
                     JOIN sizes sb ON i.id_b = sb.id)
-              SELECT id_a, id_b, CASE WHEN abs(j) < 8.0e9 THEN floor((j) * 1e6 + 0.5) / 1e6 ELSE (j) END AS jaccard
+              SELECT id_a, id_b, ${Portable.r6Sql("j")} AS jaccard
               FROM j WHERE j >= 0.5""")),
 
     // CORPUS PRECONDITION (ADVICE r17): the brute-force oracle below
@@ -1216,7 +1616,7 @@ object SparkEntry {
           e.withColumn("id", col("id") + 1000000L))
         Similarity.cosineNearDupPairs(planted, threshold = 0.999)
       },
-      Some("""WITH e AS (SELECT vec_id AS id,
+      Some(s"""WITH e AS (SELECT vec_id AS id,
                            CAST(embedding AS DOUBLE[]) AS vec
                          FROM embeddings
                          UNION ALL
@@ -1227,22 +1627,16 @@ object SparkEntry {
                         / (sqrt(list_dot_product(a.vec, a.vec))
                            * sqrt(list_dot_product(b.vec, b.vec))) AS cos
                     FROM e a JOIN e b ON a.id < b.id)
-              SELECT id_a, id_b, CASE WHEN abs(cos) < 8.0e9 THEN floor((cos) * 1e6 + 0.5) / 1e6 ELSE (cos) END AS cos
+              SELECT id_a, id_b, ${Portable.r6Sql("cos")} AS cos
               FROM p WHERE cos >= 0.999""")),
 
     Q("ann_bruteforce",
       (s, d) => {
-        val e = Tables.embeddings(s, d)
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val q = e.filter(col("id") < 5)
-          .select(col("id").as("query_id"), col("vec").as("qvec"))
+        val (e, q) = annInputs(s, d)
         Similarity.bruteForceTopK(e, q, k = 10)
           .select(col("query_id"), col("neighbor_id"), col("rank"))
       },
-      Some("""WITH e AS (SELECT vec_id AS id,
-                           CAST(embedding AS DOUBLE[]) AS vec
-                         FROM embeddings),
-              q AS (SELECT id AS query_id, vec AS qvec FROM e WHERE id < 5),
+      Some(s"""WITH $annBaseSql,
               s AS (SELECT q.query_id, e.id,
                       list_dot_product(e.vec, q.qvec)
                         / (sqrt(list_dot_product(e.vec, e.vec))
@@ -1257,8 +1651,7 @@ object SparkEntry {
 
     Q("ann_lsh",
       (s, d) => {
-        val e = Tables.embeddings(s, d)
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
+        val (e, q) = annInputs(s, d)
         // the oracle SQL below bakes dim=64 hyperplane literals while
         // lshTopK adapts to the probed dim — enforce the contract here
         // so a testdata dim change fails loudly instead of surfacing as
@@ -1270,8 +1663,6 @@ object SparkEntry {
         require(dim.forall(_ == 64),
           s"ann_lsh oracle is generated for dim=64 but embeddings have " +
             s"dim=${dim.get}; regenerate planesValuesSql for the new dim")
-        val q = e.filter(col("id") < 5)
-          .select(col("id").as("query_id"), col("vec").as("qvec"))
         Similarity.lshTopK(e, q, k = 10)
           .select(col("query_id"), col("neighbor_id"), col("rank"))
       },
@@ -1315,19 +1706,11 @@ object SparkEntry {
                 FROM cand c
                 JOIN e ev ON c.id = ev.id
                 JOIN q qv ON c.query_id = qv.query_id),
-              r AS (SELECT query_id, id,
-                  CAST(row_number() OVER (PARTITION BY query_id
-                    ORDER BY cos DESC, id) AS INTEGER) AS rank
-                FROM sc)
-              SELECT query_id, id AS neighbor_id, rank
-              FROM r WHERE rank <= 10""")),
+              $annTop10Sql""")),
 
     Q("ann_ivf",
       (s, d) => {
-        val e = Tables.embeddings(s, d)
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val q = e.filter(col("id") < 5)
-          .select(col("id").as("query_id"), col("vec").as("qvec"))
+        val (e, q) = annInputs(s, d)
         Similarity.ivfTopK(e, q, k = 10, nCentroids = 16, nProbe = 4)
           .select(col("query_id"), col("neighbor_id"), col("rank"))
       },
@@ -1361,32 +1744,14 @@ object SparkEntry {
                        * sqrt(list_dot_product(p.qvec, p.qvec))) AS cos
                 FROM assigned a JOIN probed p ON a.cell = p.cell
                 WHERE p.query_id <> a.id),
-              r AS (SELECT query_id, id,
-                  CAST(row_number() OVER (PARTITION BY query_id
-                    ORDER BY cos DESC, id) AS INTEGER) AS rank
-                FROM sc)
-              SELECT query_id, id AS neighbor_id, rank
-              FROM r WHERE rank <= 10""")),
+              $annTop10Sql""")),
 
     Q("text_langid",
       (s, d) => {
-        val spark = s
-        import spark.implicits._
-        val profiles = Seq(
-          ("en", "the"), ("en", "a"), ("en", "fast"),
-          ("de", "der"), ("de", "die"), ("de", "slow"),
-          ("fr", "le"), ("fr", "la"), ("fr", "table"),
-          ("es", "el"), ("es", "los"), ("es", "data"),
-          ("zh", "big"), ("zh", "spark")).toDF("lang", "word")
         TextOps.langId(Tables.documents(s, d), col("doc_id"), col("text"),
-          profiles, idName = "doc_id")
+          langProfiles(s), idName = "doc_id")
       },
-      Some("""WITH profiles(lang, word) AS (VALUES
-                ('en', 'the'), ('en', 'a'), ('en', 'fast'),
-                ('de', 'der'), ('de', 'die'), ('de', 'slow'),
-                ('fr', 'le'), ('fr', 'la'), ('fr', 'table'),
-                ('es', 'el'), ('es', 'los'), ('es', 'data'),
-                ('zh', 'big'), ('zh', 'spark')),
+      Some(raw"""WITH $langProfilesSql,
               toks AS (SELECT doc_id,
                          unnest(string_split_regex(lower(trim(text)),
                            '\s+')) AS word
@@ -1498,7 +1863,7 @@ object SparkEntry {
             array_min(col("q")).as("q_min"),
             array_max(col("q")).as("q_max"))
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec
+      Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec
                 FROM embeddings),
               n AS (SELECT vec_id, vec,
                   sqrt(list_dot_product(vec, vec)) AS nrm FROM e),
@@ -1507,7 +1872,7 @@ object SparkEntry {
                     x -> CAST(floor(x * 127.0 / nrm + 0.5) AS BIGINT))
                   END AS q
                 FROM n)
-              SELECT vec_id, CASE WHEN abs(nrm) < 8.0e9 THEN floor((nrm) * 1e6 + 0.5) / 1e6 ELSE (nrm) END AS norm,
+              SELECT vec_id, ${Portable.r6Sql("nrm")} AS norm,
                 CAST(list_reduce(q, (a, b) -> a + b) AS BIGINT) AS q_sum,
                 CAST(list_reduce(q, (a, b) -> least(a, b)) AS BIGINT)
                   AS q_min,
@@ -1556,20 +1921,12 @@ object SparkEntry {
     // hash); the profile table is broadcast; no all-pairs path.
     Q("pipeline_corpus_curation",
       (s, d) => {
-        val spark = s
-        import spark.implicits._
         val docs = Tables.documents(s, d)
         val planted = docs.select(col("doc_id"), col("text"))
           .unionByName(docs.select((col("doc_id") + 2000000L).as("doc_id"),
             col("text")))
-        val profiles = Seq(
-          ("en", "the"), ("en", "a"), ("en", "fast"),
-          ("de", "der"), ("de", "die"), ("de", "slow"),
-          ("fr", "le"), ("fr", "la"), ("fr", "table"),
-          ("es", "el"), ("es", "los"), ("es", "data"),
-          ("zh", "big"), ("zh", "spark")).toDF("lang", "word")
         val lang = TextOps.langId(planted, col("doc_id"), col("text"),
-          profiles, idName = "doc_id")
+          langProfiles(s), idName = "doc_id")
         // persisted: consumed twice (dedup + representative join-back);
         // without the cache the langid pipeline would run twice.
         // Harness clears the cache per query, like the dedup generators.
@@ -1587,16 +1944,11 @@ object SparkEntry {
           .select(col("rep_id"), col("pred_lang"),
             col("n_words").cast("long").as("n_words"), col("n_dups"))
       },
-      Some("""WITH planted AS (
+      Some(raw"""WITH planted AS (
                 SELECT doc_id, text FROM documents
                 UNION ALL
                 SELECT doc_id + 2000000, text FROM documents),
-              profiles(lang, word) AS (VALUES
-                ('en', 'the'), ('en', 'a'), ('en', 'fast'),
-                ('de', 'der'), ('de', 'die'), ('de', 'slow'),
-                ('fr', 'le'), ('fr', 'la'), ('fr', 'table'),
-                ('es', 'el'), ('es', 'los'), ('es', 'data'),
-                ('zh', 'big'), ('zh', 'spark')),
+              $langProfilesSql,
               toks AS (SELECT doc_id,
                   unnest(string_split_regex(lower(trim(text)), '\s+'))
                     AS word
@@ -1736,10 +2088,10 @@ object SparkEntry {
           percentile(col("value"), lit(0.9)).as("p90x"))
         .select(col("event_type"), r6(col("p")).as("p25"),
           r6(col("p50x")).as("p50"), r6(col("p90x")).as("p90")),
-      Some("""SELECT event_type,
-                CASE WHEN abs(quantile_cont(value, 0.25)) < 8.0e9 THEN floor((quantile_cont(value, 0.25)) * 1e6 + 0.5) / 1e6 ELSE (quantile_cont(value, 0.25)) END AS p25,
-                CASE WHEN abs(quantile_cont(value, 0.5)) < 8.0e9 THEN floor((quantile_cont(value, 0.5)) * 1e6 + 0.5) / 1e6 ELSE (quantile_cont(value, 0.5)) END AS p50,
-                CASE WHEN abs(quantile_cont(value, 0.9)) < 8.0e9 THEN floor((quantile_cont(value, 0.9)) * 1e6 + 0.5) / 1e6 ELSE (quantile_cont(value, 0.9)) END AS p90
+      Some(s"""SELECT event_type,
+                ${Portable.r6Sql("quantile_cont(value, 0.25)")} AS p25,
+                ${Portable.r6Sql("quantile_cont(value, 0.5)")} AS p50,
+                ${Portable.r6Sql("quantile_cont(value, 0.9)")} AS p90
               FROM events GROUP BY 1""")),
 
     Q("agg_rollup",
@@ -1747,8 +2099,8 @@ object SparkEntry {
         .rollup(col("l_returnflag"), col("l_linestatus"))
         .agg(r6(sum(col("l_quantity"))).as("sum_qty"),
           count(lit(1)).as("n")),
-      Some("""SELECT l_returnflag, l_linestatus,
-                CASE WHEN abs(sum(l_quantity)) < 8.0e9 THEN floor((sum(l_quantity)) * 1e6 + 0.5) / 1e6 ELSE (sum(l_quantity)) END AS sum_qty, count(*) AS n
+      Some(s"""SELECT l_returnflag, l_linestatus,
+                ${Portable.r6Sql("sum(l_quantity)")} AS sum_qty, count(*) AS n
               FROM lineitem
               GROUP BY ROLLUP (l_returnflag, l_linestatus)""")),
 
@@ -1888,29 +2240,9 @@ object SparkEntry {
               QUALIFY rk <= 3""")),
 
     Q("win_sessionize",
-      (s, d) => {
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts"), col("event_id"))
-        ev(s, d)
-          .withColumn("__prev", lag(col("ts"), 1).over(w))
-          .withColumn("__new", when(col("__prev").isNull ||
-            col("ts") > col("__prev") + expr("INTERVAL 30 MINUTES"),
-            lit(1)).otherwise(lit(0)))
-          .withColumn("session_id", sum(col("__new"))
-            .over(w.rowsBetween(Window.unboundedPreceding, 0)))
-          .select(col("event_id"), col("user_id"), col("session_id"))
-      },
-      Some("""WITH t AS (SELECT event_id, user_id,
-                  CAST(ts AS TIMESTAMP) AS ts2,
-                  lag(CAST(ts AS TIMESTAMP)) OVER (PARTITION BY user_id
-                    ORDER BY CAST(ts AS TIMESTAMP), event_id) AS p
-                FROM events)
-              SELECT event_id, user_id,
-                CAST(sum(CASE WHEN p IS NULL
-                    OR ts2 > p + INTERVAL 30 MINUTE THEN 1 ELSE 0 END)
-                  OVER (PARTITION BY user_id ORDER BY ts2, event_id
-                    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-              FROM t""")),
+      (s, d) => sessionIds(s, d, "session_id")
+        .select(col("event_id"), col("user_id"), col("session_id")),
+      Some(sessionizeSql)),
 
     Q("ml_linreg",
       (s, d) => graft.ml.Baselines.linearFit(Tables.lineitem(s, d),
@@ -1927,9 +2259,9 @@ object SparkEntry {
     Q("ml_naive_baseline",
       (s, d) => graft.ml.Baselines.naiveMeanMetrics(Tables.lineitem(s, d),
         col("l_extendedprice")),
-      Some("""WITH m AS (SELECT avg(l_extendedprice) AS mean FROM lineitem)
-              SELECT CASE WHEN abs(avg(abs(l_extendedprice - m.mean))) < 8.0e9 THEN floor((avg(abs(l_extendedprice - m.mean))) * 1e6 + 0.5) / 1e6 ELSE (avg(abs(l_extendedprice - m.mean))) END AS mae,
-                CASE WHEN abs(sqrt(avg((l_extendedprice - m.mean) * (l_extendedprice - m.mean)))) < 8.0e9 THEN floor((sqrt(avg((l_extendedprice - m.mean) * (l_extendedprice - m.mean)))) * 1e6 + 0.5) / 1e6 ELSE (sqrt(avg((l_extendedprice - m.mean) * (l_extendedprice - m.mean)))) END AS rmse
+      Some(s"""WITH m AS (SELECT avg(l_extendedprice) AS mean FROM lineitem)
+              SELECT ${Portable.r6Sql("avg(abs(l_extendedprice - m.mean))")} AS mae,
+                ${Portable.r6Sql("sqrt(avg((l_extendedprice - m.mean) * (l_extendedprice - m.mean)))")} AS rmse
               FROM lineitem, m""")),
 
     Q("stream_dedup_state",
@@ -1940,47 +2272,24 @@ object SparkEntry {
     // against DuckDB's native ASOF LEFT JOIN
     Q("join_asof",
       (s, d) => {
-        val e = ev(s, d)
-        val clicks = e.filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"), col("ts"))
-        val views = e.filter(col("event_type") === "view")
-          .groupBy(col("user_id"), col("ts"))
-          .agg(max_by(col("value"), col("event_id")).as("v_value"))
+        val (clicks, views) = asofInputs(s, d)
         AsOf.joinPrior(clicks, views, Seq("user_id"),
             col("ts"), col("ts"), Seq("v_value"))
           .select(col("event_id"), col("user_id"), col("v_value"))
       },
-      Some("""WITH clicks AS (SELECT event_id, user_id,
-                  CAST(ts AS TIMESTAMP) AS ts2
-                FROM events WHERE event_type = 'click'),
-              views AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts2,
-                  arg_max(value, event_id) AS v_value
-                FROM events WHERE event_type = 'view' GROUP BY 1, 2)
-              SELECT c.event_id, c.user_id, v.v_value
-              FROM clicks c ASOF LEFT JOIN views v
-                ON c.user_id = v.user_id AND c.ts2 >= v.ts2""")),
+      Some(asofPriorSql)),
 
     // as-of with a staleness bound: the matched prior view must be at
     // most 30 min old or the payload is nulled — same one-shuffle plan,
     // the bound is a row-local filter on the carried match timestamp
     Q("join_asof_tolerance",
       (s, d) => {
-        val e = ev(s, d)
-        val clicks = e.filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"), col("ts"))
-        val views = e.filter(col("event_type") === "view")
-          .groupBy(col("user_id"), col("ts"))
-          .agg(max_by(col("value"), col("event_id")).as("v_value"))
+        val (clicks, views) = asofInputs(s, d)
         AsOf.joinPriorWithin(clicks, views, Seq("user_id"),
             col("ts"), col("ts"), Seq("v_value"), toleranceSeconds = 1800L)
           .select(col("event_id"), col("user_id"), col("v_value"))
       },
-      Some("""WITH clicks AS (SELECT event_id, user_id,
-                  CAST(ts AS TIMESTAMP) AS ts2
-                FROM events WHERE event_type = 'click'),
-              views AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts2,
-                  arg_max(value, event_id) AS v_value
-                FROM events WHERE event_type = 'view' GROUP BY 1, 2)
+      Some(s"""WITH $asofCtesSql
               SELECT c.event_id, c.user_id,
                 CASE WHEN epoch_us(c.ts2) - epoch_us(v.ts2)
                        <= 1800 * 1000000
@@ -2029,39 +2338,14 @@ object SparkEntry {
     Q("stream_funnel_state",
       (s, d) => graft.streaming.FunnelStream.runToCompletion(s, d,
         Seq("view", "click", "purchase")),
-      Some("""WITH ev0 AS (SELECT user_id, event_type,
-                       CAST(ts AS TIMESTAMP) AS ts FROM events),
-              v AS (SELECT user_id, min(ts) AS t1 FROM ev0
-                    WHERE event_type = 'view' GROUP BY 1),
-              c AS (SELECT e.user_id, min(e.ts) AS t2 FROM ev0 e
-                    JOIN v USING (user_id)
-                    WHERE e.event_type = 'click' AND e.ts > v.t1 GROUP BY 1),
-              p AS (SELECT e.user_id, min(e.ts) AS t3 FROM ev0 e
-                    JOIN c USING (user_id)
-                    WHERE e.event_type = 'purchase' AND e.ts > c.t2
-                    GROUP BY 1)
-              SELECT CASE WHEN t3 IS NOT NULL THEN 3
-                          WHEN t2 IS NOT NULL THEN 2 ELSE 1 END AS stage,
-                     CAST(count(*) AS INTEGER) AS n_users
-              FROM v LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)
-              GROUP BY 1""")),
+      Some(funnelStagesSql)),
 
     // win_sessionize's stateful-streaming twin: flatMapGroupsWithState
     // custom state per user; must equal the batch window formulation
     Q("stream_sessionize",
       (s, d) => graft.streaming.SessionizeStream.runToCompletion(s, d)
         .select(col("event_id"), col("user_id"), col("session_id")),
-      Some("""WITH t AS (SELECT event_id, user_id,
-                  CAST(ts AS TIMESTAMP) AS ts2,
-                  lag(CAST(ts AS TIMESTAMP)) OVER (PARTITION BY user_id
-                    ORDER BY CAST(ts AS TIMESTAMP), event_id) AS p
-                FROM events)
-              SELECT event_id, user_id,
-                CAST(sum(CASE WHEN p IS NULL
-                    OR ts2 > p + INTERVAL 30 MINUTE THEN 1 ELSE 0 END)
-                  OVER (PARTITION BY user_id ORDER BY ts2, event_id
-                    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-              FROM t""")),
+      Some(sessionizeSql)),
 
     // continuous-aggregate refresh (init.sql:94-100): a stale rollup
     // (missing late rows inside the refresh window) merged with a
@@ -2077,20 +2361,10 @@ object SparkEntry {
         val stale = Aggregates.timeBucketAgg(
           e.filter(col("ts") < winStart || col("event_id") % 7 =!= 0),
           col("ts"), "1 hour", Seq(col("event_type")), col("vc"))
-        Rollups.refreshMerge(stale, e, col("ts"), "1 hour",
-            Seq(col("event_type")), col("vc"), winStart, winEnd)
-          .select(col("bucket"), col("event_type"),
-            r6(col("avg_v") / 100).as("avg_v"),
-            (col("min_v") / 100).as("min_v"),
-            (col("max_v") / 100).as("max_v"), col("n"))
+        rollupFromCents(Rollups.refreshMerge(stale, e, col("ts"), "1 hour",
+          Seq(col("event_type")), col("vc"), winStart, winEnd))
       },
-      Some("""SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-                event_type, CASE WHEN abs(avg(vc) / 100) < 8.0e9 THEN floor((avg(vc) / 100) * 1e6 + 0.5) / 1e6 ELSE (avg(vc) / 100) END AS avg_v,
-                min(vc) / 100 AS min_v, max(vc) / 100 AS max_v,
-                count(vc) AS n
-              FROM (SELECT ts, event_type,
-                      floor(value * 100 + 0.5) AS vc FROM events)
-              GROUP BY 1, 2""")),
+      Some(hourlyRollupSql)),
 
     // §3.2 end-to-end: the Model A feature view
     // (winterthur_net_load_features, init.sql:421-455) column-for-column —
@@ -2506,8 +2780,8 @@ object SparkEntry {
                         i -> toks[i] || ' ' || toks[i+1]) AS bg
                     FROM base WHERE len(toks) >= 2)
               SELECT doc_id,
-                CASE WHEN abs(CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks)) < 8.0e9 THEN floor((CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks)) * 1e6 + 0.5) / 1e6 ELSE (CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks)) END AS distinct_tok_ratio,
-                CASE WHEN abs(CAST(list_max(list_transform(list_distinct(bg), x -> len(list_filter(bg, y -> y = x)))) AS DOUBLE) / len(bg)) < 8.0e9 THEN floor((CAST(list_max(list_transform(list_distinct(bg), x -> len(list_filter(bg, y -> y = x)))) AS DOUBLE) / len(bg)) * 1e6 + 0.5) / 1e6 ELSE (CAST(list_max(list_transform(list_distinct(bg), x -> len(list_filter(bg, y -> y = x)))) AS DOUBLE) / len(bg)) END AS top_bigram_ratio
+                ${Portable.r6Sql("CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks)")} AS distinct_tok_ratio,
+                ${Portable.r6Sql("CAST(list_max(list_transform(list_distinct(bg), x -> len(list_filter(bg, y -> y = x)))) AS DOUBLE) / len(bg)")} AS top_bigram_ratio
               FROM b""")),
 
     // corpus-wide vocabulary heavy hitters: token frequency top-20 with
@@ -2637,7 +2911,7 @@ object SparkEntry {
               per_doc AS (SELECT ex.id AS id, count(*) AS n_shared
                           FROM ex JOIN shared USING (s) GROUP BY 1)
               SELECT b.id AS id, CAST(len(b.sh) AS INTEGER) AS n_spans,
-                CASE WHEN abs(CAST(coalesce(p.n_shared, 0) AS DOUBLE) / len(b.sh)) < 8.0e9 THEN floor((CAST(coalesce(p.n_shared, 0) AS DOUBLE) / len(b.sh)) * 1e6 + 0.5) / 1e6 ELSE (CAST(coalesce(p.n_shared, 0) AS DOUBLE) / len(b.sh)) END AS dup_frac
+                ${Portable.r6Sql("CAST(coalesce(p.n_shared, 0) AS DOUBLE) / len(b.sh)")} AS dup_frac
               FROM base b LEFT JOIN per_doc p ON b.id = p.id""")),
 
     // watermarked stream-stream interval join (state bounded by
@@ -2645,10 +2919,10 @@ object SparkEntry {
     // interval join
     Q("stream_join_enrich",
       (s, d) => graft.streaming.JoinStream.runToCompletion(s, d),
-      Some("""WITH e AS (SELECT event_id, user_id, event_type,
+      Some(s"""WITH e AS (SELECT event_id, user_id, event_type,
                        CAST(ts AS TIMESTAMP) AS ts, value FROM events)
               SELECT c.event_id AS click_id, v.event_id AS view_id,
-                CASE WHEN abs(v.value) < 8.0e9 THEN floor((v.value) * 1e6 + 0.5) / 1e6 ELSE (v.value) END AS view_value
+                ${Portable.r6Sql("v.value")} AS view_value
               FROM e c JOIN e v ON c.user_id = v.user_id
                 AND c.event_type = 'click' AND v.event_type = 'view'
                 AND v.ts BETWEEN c.ts - INTERVAL 30 MINUTE AND c.ts""")),
@@ -2719,8 +2993,8 @@ object SparkEntry {
           .agg(count(lit(1)).as("n"),
             r6(sum(col("o_totalprice"))).as("total"))
       },
-      Some("""SELECT c_nationkey, count(*) AS n,
-                CASE WHEN abs(sum(o_totalprice)) < 8.0e9 THEN floor((sum(o_totalprice)) * 1e6 + 0.5) / 1e6 ELSE (sum(o_totalprice)) END AS total
+      Some(s"""SELECT c_nationkey, count(*) AS n,
+                ${Portable.r6Sql("sum(o_totalprice)")} AS total
               FROM orders JOIN customer ON o_custkey = c_custkey
               GROUP BY 1""")),
 
@@ -2838,8 +3112,8 @@ object SparkEntry {
           (abs(col("ap") - col("ex")) <=
             greatest(abs(col("ex")) * 0.02, lit(0.5)))
             .cast("int").as("approx_ok")),
-      Some("""SELECT event_type,
-                CASE WHEN abs(quantile_cont(value, 0.5)) < 8.0e9 THEN floor((quantile_cont(value, 0.5)) * 1e6 + 0.5) / 1e6 ELSE (quantile_cont(value, 0.5)) END AS p50_exact,
+      Some(s"""SELECT event_type,
+                ${Portable.r6Sql("quantile_cont(value, 0.5)")} AS p50_exact,
                 CAST(1 AS INTEGER) AS approx_ok
               FROM events GROUP BY 1""")),
 
@@ -2922,8 +3196,8 @@ object SparkEntry {
         .filter(col("v").isNotNull)
         .select(col("l_orderkey"), col("l_linenumber"), col("measure"),
           r6(col("v")).as("val")),
-      Some("""SELECT l_orderkey, l_linenumber, measure,
-                CASE WHEN abs(val) < 8.0e9 THEN floor((val) * 1e6 + 0.5) / 1e6 ELSE (val) END AS val
+      Some(s"""SELECT l_orderkey, l_linenumber, measure,
+                ${Portable.r6Sql("val")} AS val
               FROM (SELECT l_orderkey, l_linenumber, l_quantity,
                       l_extendedprice, l_discount
                     FROM lineitem WHERE l_orderkey < 100)
@@ -2997,8 +3271,8 @@ object SparkEntry {
           .agg(count(lit(1)).as("n_orders"),
             r6(sum(col("o_totalprice"))).as("total"))
       },
-      Some("""SELECT o_custkey, count(*) AS n_orders,
-                CASE WHEN abs(sum(o_totalprice)) < 8.0e9 THEN floor((sum(o_totalprice)) * 1e6 + 0.5) / 1e6 ELSE (sum(o_totalprice)) END AS total
+      Some(s"""SELECT o_custkey, count(*) AS n_orders,
+                ${Portable.r6Sql("sum(o_totalprice)")} AS total
               FROM orders GROUP BY 1""")),
 
     // stride-windowed token chunking (the RAG / pretraining chunker):
@@ -3157,13 +3431,13 @@ object SparkEntry {
       (s, d) => TimeSeries.timeWeightedAvg(ev(s, d),
         Seq(col("event_type"), to_date(col("ts")).as("day")),
         col("ts"), col("value"), col("event_id")),
-      Some("""WITH p AS (SELECT event_type, CAST(ts AS DATE) AS day, value,
+      Some(s"""WITH p AS (SELECT event_type, CAST(ts AS DATE) AS day, value,
                        epoch_us(lead(ts) OVER (PARTITION BY event_type,
                            CAST(ts AS DATE) ORDER BY ts, event_id))
                          - epoch_us(ts) AS w
                      FROM events)
               SELECT event_type, day,
-                CASE WHEN abs(sum(value * w) / sum(w)) < 8.0e9 THEN floor((sum(value * w) / sum(w)) * 1e6 + 0.5) / 1e6 ELSE (sum(value * w) / sum(w)) END AS twa,
+                ${Portable.r6Sql("sum(value * w) / sum(w)")} AS twa,
                 count(*) AS n_points
               FROM p GROUP BY 1, 2""")),
 
@@ -3173,13 +3447,13 @@ object SparkEntry {
     Q("f_counter_delta",
       (s, d) => TimeSeries.counterDelta(ev(s, d), col("user_id"),
         col("ts"), col("value"), col("event_id"), keyName = "user_id"),
-      Some("""WITH d AS (SELECT user_id, value,
+      Some(s"""WITH d AS (SELECT user_id, value,
                        value - lag(value) OVER (PARTITION BY user_id
                          ORDER BY ts, event_id) AS d
                      FROM events)
               SELECT user_id, count(*) AS n_points,
                 count(*) FILTER (WHERE d < 0) AS n_resets,
-                CASE WHEN abs(sum(CASE WHEN d IS NULL THEN 0 WHEN d < 0 THEN value ELSE d END)) < 8.0e9 THEN floor((sum(CASE WHEN d IS NULL THEN 0 WHEN d < 0 THEN value ELSE d END)) * 1e6 + 0.5) / 1e6 ELSE (sum(CASE WHEN d IS NULL THEN 0 WHEN d < 0 THEN value ELSE d END)) END
+                ${Portable.r6Sql("sum(CASE WHEN d IS NULL THEN 0 WHEN d < 0 THEN value ELSE d END)")}
                   AS total_increase
               FROM d GROUP BY 1""")),
 
@@ -3213,12 +3487,15 @@ object SparkEntry {
     Q("dq_heartbeat_uptime",
       (s, d) => TimeSeries.heartbeatUptime(ev(s, d), col("event_type"),
         col("ts"), col("event_id"), threshSeconds = 600.0),
-      Some("""WITH p AS (SELECT event_type, CAST(ts AS DATE) AS day, ts,
+      Some(s"""WITH p AS (SELECT event_type, CAST(ts AS DATE) AS day, ts,
                        lead(ts) OVER (PARTITION BY event_type, CAST(ts AS DATE)
                          ORDER BY ts, event_id) AS nxt
                      FROM events)
               SELECT event_type AS series, day, count(*) AS n_beats,
-                CASE WHEN abs(sum(CASE WHEN nxt IS NULL THEN least(600.0, (epoch_us(day + INTERVAL 1 DAY) - epoch_us(ts)) / 1e6) ELSE least(600.0, (epoch_us(nxt) - epoch_us(ts)) / 1e6) END) / 86400.0) < 8.0e9 THEN floor((sum(CASE WHEN nxt IS NULL THEN least(600.0, (epoch_us(day + INTERVAL 1 DAY) - epoch_us(ts)) / 1e6) ELSE least(600.0, (epoch_us(nxt) - epoch_us(ts)) / 1e6) END) / 86400.0) * 1e6 + 0.5) / 1e6 ELSE (sum(CASE WHEN nxt IS NULL THEN least(600.0, (epoch_us(day + INTERVAL 1 DAY) - epoch_us(ts)) / 1e6) ELSE least(600.0, (epoch_us(nxt) - epoch_us(ts)) / 1e6) END) / 86400.0) END AS uptime_frac
+                ${Portable.r6Sql(
+                  "sum(CASE WHEN nxt IS NULL THEN least(600.0, (epoch_us(day + INTERVAL 1 DAY) " +
+                    "- epoch_us(ts)) / 1e6) ELSE least(600.0, (epoch_us(nxt) - epoch_us(ts)) / " +
+                    "1e6) END) / 86400.0")} AS uptime_frac
               FROM p GROUP BY 1, 2""")),
 
     // CUBE completes the rollup/grouping-sets family: all four
@@ -3250,9 +3527,9 @@ object SparkEntry {
           r6(percent_rank().over(w)).as("pr"),
           r6(cume_dist().over(w)).as("cd"))
       },
-      Some("""SELECT o_orderkey, o_orderpriority, o_totalprice,
-                CASE WHEN abs(percent_rank() OVER w) < 8.0e9 THEN floor((percent_rank() OVER w) * 1e6 + 0.5) / 1e6 ELSE (percent_rank() OVER w) END AS pr,
-                CASE WHEN abs(cume_dist() OVER w) < 8.0e9 THEN floor((cume_dist() OVER w) * 1e6 + 0.5) / 1e6 ELSE (cume_dist() OVER w) END AS cd
+      Some(s"""SELECT o_orderkey, o_orderpriority, o_totalprice,
+                ${Portable.r6Sql("percent_rank() OVER w")} AS pr,
+                ${Portable.r6Sql("cume_dist() OVER w")} AS cd
               FROM orders
               WINDOW w AS (PARTITION BY o_orderpriority
                 ORDER BY o_totalprice)""")),
@@ -3332,14 +3609,14 @@ object SparkEntry {
       (s, d) => Quality.anomalyZscore(ev(s, d), col("event_type"),
         Seq(col("event_id"), col("event_type"), col("value")),
         col("value"), threshold = 2.5),
-      Some("""WITH s AS (SELECT event_type, sum(value) AS sv,
+      Some(s"""WITH s AS (SELECT event_type, sum(value) AS sv,
                        sum(value * value) AS sq, count(*) AS n
                      FROM events GROUP BY 1),
               z AS (SELECT e.event_id, e.event_type, e.value,
                       (e.value - s.sv / s.n)
                         / sqrt(s.sq / s.n - (s.sv / s.n) * (s.sv / s.n)) AS z
                     FROM events e JOIN s USING (event_type))
-              SELECT event_id, event_type, value, CASE WHEN abs(z) < 8.0e9 THEN floor((z) * 1e6 + 0.5) / 1e6 ELSE (z) END AS z,
+              SELECT event_id, event_type, value, ${Portable.r6Sql("z")} AS z,
                 CAST(abs(z) > 2.5 AS INTEGER) AS is_anomaly
               FROM z""")),
 
@@ -3350,7 +3627,7 @@ object SparkEntry {
     Q("text_unigram_logprob",
       (s, d) => TextOps.unigramLogProb(Tables.documents(s, d),
         col("doc_id"), col("text"), minCount = 500L),
-      Some("""WITH tok AS (SELECT doc_id,
+      Some(raw"""WITH tok AS (SELECT doc_id,
                        unnest(string_split_regex(lower(trim(text)),
                          '\s+')) AS t
                      FROM documents),
@@ -3358,7 +3635,7 @@ object SparkEntry {
               tot AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM f),
               v AS (SELECT t, c FROM f WHERE c >= 500)
               SELECT doc_id,
-                CASE WHEN abs(avg(log10(coalesce(v.c, 1) / (SELECT n FROM tot)))) < 8.0e9 THEN floor((avg(log10(coalesce(v.c, 1) / (SELECT n FROM tot)))) * 1e6 + 0.5) / 1e6 ELSE (avg(log10(coalesce(v.c, 1) / (SELECT n FROM tot)))) END AS avg_logprob,
+                ${Portable.r6Sql("avg(log10(coalesce(v.c, 1) / (SELECT n FROM tot)))")} AS avg_logprob,
                 count(*) AS n_tokens,
                 count(*) FILTER (WHERE v.c IS NULL) AS n_oov
               FROM tok LEFT JOIN v USING (t) GROUP BY doc_id""")),
@@ -3407,14 +3684,14 @@ object SparkEntry {
           measure = floor(col("value") * 100 + lit(0.5)))
         .select(col("bucket"), col("event_type"),
           r6(col("sum_v") / 100).as("sum_v"), col("n")),
-      Some("""WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, event_type,
+      Some(s"""WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, event_type,
                        floor(value * 100 + 0.5) AS vc FROM events),
               w AS (SELECT event_type, vc,
                       unnest(generate_series(
                         date_trunc('hour', ts) - INTERVAL 5 HOUR,
                         date_trunc('hour', ts), INTERVAL 1 HOUR)) AS bucket
                     FROM e)
-              SELECT bucket, event_type, CASE WHEN abs(sum(vc) / 100) < 8.0e9 THEN floor((sum(vc) / 100) * 1e6 + 0.5) / 1e6 ELSE (sum(vc) / 100) END AS sum_v,
+              SELECT bucket, event_type, ${Portable.r6Sql("sum(vc) / 100")} AS sum_v,
                 count(*) AS n
               FROM w GROUP BY 1, 2""")),
 
@@ -3573,7 +3850,7 @@ object SparkEntry {
         col("value"), nBins = 20)
         .select(col("group").as("event_type"), col("bin"), col("bin_lo"),
           col("n")),
-      Some("""WITH s AS (SELECT event_type, min(value) AS lo, max(value) AS hi
+      Some(s"""WITH s AS (SELECT event_type, min(value) AS lo, max(value) AS hi
                      FROM events GROUP BY 1),
               b AS (SELECT e.event_type,
                       CAST(least(floor((e.value - s.lo) / ((s.hi - s.lo) / 20)),
@@ -3581,7 +3858,7 @@ object SparkEntry {
                       s.lo, s.hi
                     FROM events e JOIN s USING (event_type))
               SELECT event_type, bin,
-                CASE WHEN abs(lo + bin * ((hi - lo) / 20)) < 8.0e9 THEN floor((lo + bin * ((hi - lo) / 20)) * 1e6 + 0.5) / 1e6 ELSE (lo + bin * ((hi - lo) / 20)) END AS bin_lo,
+                ${Portable.r6Sql("lo + bin * ((hi - lo) / 20)")} AS bin_lo,
                 count(*) AS n
               FROM b GROUP BY 1, 2, 3""")),
   )
@@ -3617,22 +3894,7 @@ object SparkEntry {
     Q("agg_funnel",
       (s, d) => EventAnalytics.funnelStages(ev(s, d), col("user_id"),
         col("ts"), col("event_type"), Seq("view", "click", "purchase")),
-      Some("""WITH ev0 AS (SELECT user_id, event_type,
-                       CAST(ts AS TIMESTAMP) AS ts FROM events),
-              v AS (SELECT user_id, min(ts) AS t1 FROM ev0
-                    WHERE event_type = 'view' GROUP BY 1),
-              c AS (SELECT e.user_id, min(e.ts) AS t2 FROM ev0 e
-                    JOIN v USING (user_id)
-                    WHERE e.event_type = 'click' AND e.ts > v.t1 GROUP BY 1),
-              p AS (SELECT e.user_id, min(e.ts) AS t3 FROM ev0 e
-                    JOIN c USING (user_id)
-                    WHERE e.event_type = 'purchase' AND e.ts > c.t2
-                    GROUP BY 1)
-              SELECT CASE WHEN t3 IS NOT NULL THEN 3
-                          WHEN t2 IS NOT NULL THEN 2 ELSE 1 END AS stage,
-                     CAST(count(*) AS INTEGER) AS n_users
-              FROM v LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)
-              GROUP BY 1""")),
+      Some(funnelStagesSql)),
 
     // weekly cohort retention: cohort = Monday of first active week; the
     // (user, week) grid is distinct before counting so count(*) is the
@@ -3673,7 +3935,12 @@ object SparkEntry {
                        sum(CAST(tf1 > 0 AS DOUBLE)) AS df1,
                        sum(CAST(tf2 > 0 AS DOUBLE)) AS df2
                      FROM base),
-              sc AS (SELECT doc_id, CASE WHEN abs(ln((n - df0 + 0.5) / (df0 + 0.5) + 1.0) * (tf0 * (1.2 + 1.0)) / (tf0 + 1.2 * (0.25 + (0.75 * dl) / avgdl)) + ln((n - df1 + 0.5) / (df1 + 0.5) + 1.0) * (tf1 * (1.2 + 1.0)) / (tf1 + 1.2 * (0.25 + (0.75 * dl) / avgdl)) + ln((n - df2 + 0.5) / (df2 + 0.5) + 1.0) * (tf2 * (1.2 + 1.0)) / (tf2 + 1.2 * (0.25 + (0.75 * dl) / avgdl))) < 8.0e9 THEN floor((ln((n - df0 + 0.5) / (df0 + 0.5) + 1.0) * (tf0 * (1.2 + 1.0)) / (tf0 + 1.2 * (0.25 + (0.75 * dl) / avgdl)) + ln((n - df1 + 0.5) / (df1 + 0.5) + 1.0) * (tf1 * (1.2 + 1.0)) / (tf1 + 1.2 * (0.25 + (0.75 * dl) / avgdl)) + ln((n - df2 + 0.5) / (df2 + 0.5) + 1.0) * (tf2 * (1.2 + 1.0)) / (tf2 + 1.2 * (0.25 + (0.75 * dl) / avgdl))) * 1e6 + 0.5) / 1e6 ELSE (ln((n - df0 + 0.5) / (df0 + 0.5) + 1.0) * (tf0 * (1.2 + 1.0)) / (tf0 + 1.2 * (0.25 + (0.75 * dl) / avgdl)) + ln((n - df1 + 0.5) / (df1 + 0.5) + 1.0) * (tf1 * (1.2 + 1.0)) / (tf1 + 1.2 * (0.25 + (0.75 * dl) / avgdl)) + ln((n - df2 + 0.5) / (df2 + 0.5) + 1.0) * (tf2 * (1.2 + 1.0)) / (tf2 + 1.2 * (0.25 + (0.75 * dl) / avgdl))) END AS bm25
+              sc AS (SELECT doc_id, ${Portable.r6Sql(
+                "ln((n - df0 + 0.5) / (df0 + 0.5) + 1.0) * (tf0 * (1.2 + 1.0)) / (tf0 + 1.2 * " +
+                  "(0.25 + (0.75 * dl) / avgdl)) + ln((n - df1 + 0.5) / (df1 + 0.5) + 1.0) * " +
+                  "(tf1 * (1.2 + 1.0)) / (tf1 + 1.2 * (0.25 + (0.75 * dl) / avgdl)) + ln((n - " +
+                  "df2 + 0.5) / (df2 + 0.5) + 1.0) * (tf2 * (1.2 + 1.0)) / (tf2 + 1.2 * (0.25 + " +
+                  "(0.75 * dl) / avgdl))")} AS bm25
                 FROM base, st)
               SELECT doc_id, bm25 FROM sc WHERE bm25 > 0
               ORDER BY bm25 DESC, doc_id LIMIT 50""")),
@@ -3684,15 +3951,15 @@ object SparkEntry {
     Q("dq_benford",
       (s, d) => Quality.benfordDigits(Tables.lineitem(s, d),
         col("l_extendedprice")),
-      Some("""WITH pos AS (SELECT l_extendedprice AS v FROM lineitem
+      Some(s"""WITH pos AS (SELECT l_extendedprice AS v FROM lineitem
                      WHERE l_extendedprice > 0),
               c AS (SELECT CAST(floor(v / power(10, floor(log10(v))))
                       AS INTEGER) AS digit, count(*) AS n
                     FROM pos GROUP BY 1),
               t AS (SELECT count(*) AS tot FROM pos)
-              SELECT digit, n, CASE WHEN abs(n / tot) < 8.0e9 THEN floor((n / tot) * 1e6 + 0.5) / 1e6 ELSE (n / tot) END AS observed_freq,
-                     CASE WHEN abs(log10(1.0 + 1.0 / digit)) < 8.0e9 THEN floor((log10(1.0 + 1.0 / digit)) * 1e6 + 0.5) / 1e6 ELSE (log10(1.0 + 1.0 / digit)) END AS expected_freq,
-                     CASE WHEN abs(abs(n / tot - log10(1.0 + 1.0 / digit))) < 8.0e9 THEN floor((abs(n / tot - log10(1.0 + 1.0 / digit))) * 1e6 + 0.5) / 1e6 ELSE (abs(n / tot - log10(1.0 + 1.0 / digit))) END
+              SELECT digit, n, ${Portable.r6Sql("n / tot")} AS observed_freq,
+                     ${Portable.r6Sql("log10(1.0 + 1.0 / digit)")} AS expected_freq,
+                     ${Portable.r6Sql("abs(n / tot - log10(1.0 + 1.0 / digit))")}
                        AS abs_dev
               FROM c, t""")),
 
@@ -3730,11 +3997,11 @@ object SparkEntry {
           .agg(r6(min(col("__m"))).as("median"),
             r6(expr("percentile(abs(value - __m), 0.5D)")).as("mad"))
       },
-      Some("""WITH m AS (SELECT event_type,
+      Some(s"""WITH m AS (SELECT event_type,
                       quantile_cont(value, 0.5) AS med
                     FROM events GROUP BY 1)
-              SELECT e.event_type, CASE WHEN abs(min(med)) < 8.0e9 THEN floor((min(med)) * 1e6 + 0.5) / 1e6 ELSE (min(med)) END AS median,
-                CASE WHEN abs(quantile_cont(abs(value - med), 0.5)) < 8.0e9 THEN floor((quantile_cont(abs(value - med), 0.5)) * 1e6 + 0.5) / 1e6 ELSE (quantile_cont(abs(value - med), 0.5)) END AS mad
+              SELECT e.event_type, ${Portable.r6Sql("min(med)")} AS median,
+                ${Portable.r6Sql("quantile_cont(abs(value - med), 0.5)")} AS mad
               FROM events e JOIN m USING (event_type)
               GROUP BY e.event_type""")),
 
@@ -3780,7 +4047,7 @@ object SparkEntry {
           when(den > 0,
             r6((n * sxy - sx * sy) / sqrt(den))).as("roll_corr"))
       },
-      Some("""WITH b AS (SELECT event_id, event_type,
+      Some(s"""WITH b AS (SELECT event_id, event_type,
                       round(value * 100, 0) AS x,
                       lag(round(value * 100, 0)) OVER (
                         PARTITION BY event_type
@@ -3799,7 +4066,7 @@ object SparkEntry {
                       ROWS BETWEEN 49 PRECEDING AND CURRENT ROW))
               SELECT event_id,
                 CASE WHEN (n * sxx - sx * sx) * (n * syy - sy * sy) > 0
-                  THEN CASE WHEN abs((n * sxy - sx * sy) / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))) < 8.0e9 THEN floor(((n * sxy - sx * sy) / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))) * 1e6 + 0.5) / 1e6 ELSE ((n * sxy - sx * sy) / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))) END
+                  THEN ${Portable.r6Sql("(n * sxy - sx * sy) / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))")}
                 END AS roll_corr
               FROM w""")),
 
@@ -3824,25 +4091,17 @@ object SparkEntry {
             r6(sum(when(col("t3").isNotNull, 1).otherwise(0)) /
               count(lit(1))).as("conversion_rate"))
       },
-      Some("""WITH ev0 AS (SELECT user_id, event_type,
+      Some(s"""WITH ev0 AS (SELECT user_id, event_type,
                        CAST(events.ts AS TIMESTAMP) AS ts,
                        date_trunc('week', events.ts) AS wk FROM events),
               f AS (SELECT user_id, min(wk) AS cohort_week FROM ev0
                     GROUP BY 1),
-              v AS (SELECT user_id, min(ts) AS t1 FROM ev0
-                    WHERE event_type = 'view' GROUP BY 1),
-              c AS (SELECT e.user_id, min(e.ts) AS t2 FROM ev0 e
-                    JOIN v USING (user_id)
-                    WHERE e.event_type = 'click' AND e.ts > v.t1 GROUP BY 1),
-              p AS (SELECT e.user_id, min(e.ts) AS t3 FROM ev0 e
-                    JOIN c USING (user_id)
-                    WHERE e.event_type = 'purchase' AND e.ts > c.t2
-                    GROUP BY 1)
+              $funnelCtesSql
               SELECT cohort_week,
                 CAST(count(*) AS INTEGER) AS n_users,
                 CAST(sum(CASE WHEN t3 IS NOT NULL THEN 1 ELSE 0 END)
                   AS INTEGER) AS n_converted,
-                CASE WHEN abs(sum(CASE WHEN t3 IS NOT NULL THEN 1 ELSE 0 END) / count(*)) < 8.0e9 THEN floor((sum(CASE WHEN t3 IS NOT NULL THEN 1 ELSE 0 END) / count(*)) * 1e6 + 0.5) / 1e6 ELSE (sum(CASE WHEN t3 IS NOT NULL THEN 1 ELSE 0 END) / count(*)) END AS conversion_rate
+                ${Portable.r6Sql("sum(CASE WHEN t3 IS NOT NULL THEN 1 ELSE 0 END) / count(*)")} AS conversion_rate
               FROM f LEFT JOIN p USING (user_id)
               GROUP BY cohort_week""")),
 
@@ -3966,7 +4225,7 @@ object SparkEntry {
           .select(col("l_orderkey"), col("l_linenumber"),
             r6(col("rate")).as("rate"))
       },
-      Some("""WITH dim AS (SELECT s_suppkey, s_acctbal * f AS rate,
+      Some(s"""WITH dim AS (SELECT s_suppkey, s_acctbal * f AS rate,
                       CAST(vf AS TIMESTAMP) AS valid_from,
                       CAST(vt AS TIMESTAMP) AS valid_to
                     FROM supplier, (VALUES
@@ -3974,7 +4233,7 @@ object SparkEntry {
                       ('1997-01-01 00:00:00', '1999-07-01 00:00:00', 1.1),
                       ('1999-07-01 00:00:00', '9999-01-01 00:00:00', 1.2))
                       AS v(vf, vt, f))
-              SELECT l_orderkey, l_linenumber, CASE WHEN abs(rate) < 8.0e9 THEN floor((rate) * 1e6 + 0.5) / 1e6 ELSE (rate) END AS rate
+              SELECT l_orderkey, l_linenumber, ${Portable.r6Sql("rate")} AS rate
               FROM lineitem JOIN dim ON l_suppkey = s_suppkey
                 AND l_shipdate >= valid_from AND l_shipdate < valid_to""")),
 
@@ -3997,7 +4256,7 @@ object SparkEntry {
               bcw AS (SELECT bg, c2, c1 FROM bc
                     JOIN uc ON string_split(bg, ' ')[1] = w1)
               SELECT doc_id,
-                CASE WHEN abs(avg(log10(CAST(c2 AS DOUBLE) / c1))) < 8.0e9 THEN floor((avg(log10(CAST(c2 AS DOUBLE) / c1))) * 1e6 + 0.5) / 1e6 ELSE (avg(log10(CAST(c2 AS DOUBLE) / c1))) END
+                ${Portable.r6Sql("avg(log10(CAST(c2 AS DOUBLE) / c1))")}
                   AS avg_logprob,
                 CAST(count(*) AS BIGINT) AS n_bigrams,
                 CAST(sum(CASE WHEN c2 = 1 THEN 1 ELSE 0 END) AS BIGINT)
@@ -4056,12 +4315,12 @@ object SparkEntry {
                 (count(lit(1)) * sum(col("__y") * col("__y")) -
                   sum(col("__y")) * sum(col("__y"))))).as("autocorr"))
       },
-      Some("""WITH p AS (SELECT event_type, value AS x,
+      Some(s"""WITH p AS (SELECT event_type, value AS x,
                       lag(value) OVER (PARTITION BY event_type
                         ORDER BY CAST(ts AS TIMESTAMP), event_id) AS y
                     FROM events)
               SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-                CASE WHEN abs((count(*) * sum(x * y) - sum(x) * sum(y)) / sqrt((count(*) * sum(x * x) - sum(x) * sum(x)) * (count(*) * sum(y * y) - sum(y) * sum(y)))) < 8.0e9 THEN floor(((count(*) * sum(x * y) - sum(x) * sum(y)) / sqrt((count(*) * sum(x * x) - sum(x) * sum(x)) * (count(*) * sum(y * y) - sum(y) * sum(y)))) * 1e6 + 0.5) / 1e6 ELSE ((count(*) * sum(x * y) - sum(x) * sum(y)) / sqrt((count(*) * sum(x * x) - sum(x) * sum(x)) * (count(*) * sum(y * y) - sum(y) * sum(y)))) END
+                ${Portable.r6Sql("(count(*) * sum(x * y) - sum(x) * sum(y)) / sqrt((count(*) * sum(x * x) - sum(x) * sum(x)) * (count(*) * sum(y * y) - sum(y) * sum(y)))")}
                   AS autocorr
               FROM p WHERE y IS NOT NULL GROUP BY event_type""")),
 
@@ -4110,13 +4369,13 @@ object SparkEntry {
               (col("__n") + lit(1.0)) / col("__n"))).as("gini"))
           .select(col("event_type"), col("gini"), col("__n").as("n"))
       },
-      Some("""WITH r AS (SELECT event_type, value,
+      Some(s"""WITH r AS (SELECT event_type, value,
                       row_number() OVER (PARTITION BY event_type
                         ORDER BY value, event_id) AS i,
                       count(*) OVER (PARTITION BY event_type) AS n
                     FROM events)
               SELECT event_type,
-                CASE WHEN abs(CASE WHEN sum(value) <> 0 THEN 2.0 * sum(i * value) / (n * sum(value)) - (n + 1.0) / n END) < 8.0e9 THEN floor((CASE WHEN sum(value) <> 0 THEN 2.0 * sum(i * value) / (n * sum(value)) - (n + 1.0) / n END) * 1e6 + 0.5) / 1e6 ELSE (CASE WHEN sum(value) <> 0 THEN 2.0 * sum(i * value) / (n * sum(value)) - (n + 1.0) / n END) END AS gini,
+                ${Portable.r6Sql("CASE WHEN sum(value) <> 0 THEN 2.0 * sum(i * value) / (n * sum(value)) - (n + 1.0) / n END")} AS gini,
                 CAST(n AS BIGINT) AS n
               FROM r GROUP BY event_type, n""")),
 
@@ -4152,15 +4411,12 @@ object SparkEntry {
             r6(least(greatest(col("value"), col("__lo")), col("__hi")))
               .as("winsorized"))
       },
-      Some("""WITH s AS (SELECT event_type,
+      Some(s"""WITH s AS (SELECT event_type,
                      quantile_cont(value, 0.05) AS lo,
                      quantile_cont(value, 0.95) AS hi
                    FROM events GROUP BY 1)
               SELECT event_id, e.event_type, value,
-                CASE WHEN abs(least(greatest(value, lo), hi)) < 8.0e9
-                  THEN floor((least(greatest(value, lo), hi)) * 1e6 + 0.5)
-                    / 1e6
-                  ELSE (least(greatest(value, lo), hi)) END AS winsorized
+                ${Portable.r6Sql("least(greatest(value, lo), hi)")} AS winsorized
               FROM events e JOIN s USING (event_type)""")),
 
     // first-order Markov transition counts of each user's event stream —
@@ -4197,21 +4453,13 @@ object SparkEntry {
             r6(avg(secs)).as("avg_seconds"),
             r6(max(secs)).as("max_seconds"))
       },
-      Some("""WITH ev0 AS (SELECT user_id, event_type,
+      Some(s"""WITH ev0 AS (SELECT user_id, event_type,
                        CAST(ts AS TIMESTAMP) AS ts FROM events),
-              v AS (SELECT user_id, min(ts) AS t1 FROM ev0
-                    WHERE event_type = 'view' GROUP BY 1),
-              c AS (SELECT e.user_id, min(e.ts) AS t2 FROM ev0 e
-                    JOIN v USING (user_id)
-                    WHERE e.event_type = 'click' AND e.ts > v.t1 GROUP BY 1),
-              p AS (SELECT e.user_id, min(e.ts) AS t3 FROM ev0 e
-                    JOIN c USING (user_id)
-                    WHERE e.event_type = 'purchase' AND e.ts > c.t2
-                    GROUP BY 1)
+              $funnelCtesSql
               SELECT CAST(count(*) AS INTEGER) AS n_converted,
-                CASE WHEN abs(avg((epoch_us(t3) - epoch_us(t1)) / 1e6)) < 8.0e9 THEN floor((avg((epoch_us(t3) - epoch_us(t1)) / 1e6)) * 1e6 + 0.5) / 1e6 ELSE (avg((epoch_us(t3) - epoch_us(t1)) / 1e6)) END
+                ${Portable.r6Sql("avg((epoch_us(t3) - epoch_us(t1)) / 1e6)")}
                   AS avg_seconds,
-                CASE WHEN abs(max((epoch_us(t3) - epoch_us(t1)) / 1e6)) < 8.0e9 THEN floor((max((epoch_us(t3) - epoch_us(t1)) / 1e6)) * 1e6 + 0.5) / 1e6 ELSE (max((epoch_us(t3) - epoch_us(t1)) / 1e6)) END
+                ${Portable.r6Sql("max((epoch_us(t3) - epoch_us(t1)) / 1e6)")}
                   AS max_seconds
               FROM v JOIN c USING (user_id) JOIN p USING (user_id)""")),
 
@@ -4227,10 +4475,10 @@ object SparkEntry {
             sum(col("n") * log(col("n"))) / sum(col("n"))).as("entropy"),
             sum(col("n")).as("n_events"))
       },
-      Some("""WITH c AS (SELECT user_id, event_type, count(*) AS n
+      Some(s"""WITH c AS (SELECT user_id, event_type, count(*) AS n
                      FROM events GROUP BY 1, 2)
               SELECT user_id,
-                CASE WHEN abs(ln(sum(n)) - sum(n * ln(n)) / sum(n)) < 8.0e9 THEN floor((ln(sum(n)) - sum(n * ln(n)) / sum(n)) * 1e6 + 0.5) / 1e6 ELSE (ln(sum(n)) - sum(n * ln(n)) / sum(n)) END AS entropy,
+                ${Portable.r6Sql("ln(sum(n)) - sum(n * ln(n)) / sum(n)")} AS entropy,
                 CAST(sum(n) AS BIGINT) AS n_events
               FROM c GROUP BY user_id""")),
 
@@ -4273,11 +4521,11 @@ object SparkEntry {
               r6((col("value") - col("__lo")) /
                 (col("__hi") - col("__lo")))).as("scaled"))
       },
-      Some("""WITH s AS (SELECT event_type, min(value) AS lo,
+      Some(s"""WITH s AS (SELECT event_type, min(value) AS lo,
                      max(value) AS hi FROM events GROUP BY 1)
               SELECT event_id, e.event_type, value,
                 CASE WHEN hi > lo
-                  THEN CASE WHEN abs((value - lo) / (hi - lo)) < 8.0e9 THEN floor(((value - lo) / (hi - lo)) * 1e6 + 0.5) / 1e6 ELSE ((value - lo) / (hi - lo)) END END AS scaled
+                  THEN ${Portable.r6Sql("(value - lo) / (hi - lo)")} END AS scaled
               FROM events e JOIN s USING (event_type)""")),
 
     // deterministic k-means (2 Lloyd rounds, k=8) over integer-quantized
@@ -4292,20 +4540,7 @@ object SparkEntry {
         graft.ml.KMeans.assignIterations(q, col("vec_id"), col("qv"),
           k = 8, stride = 37, iters = 2)
       },
-      Some("""WITH q AS (SELECT vec_id,
-                  list_transform(CAST(embedding AS DOUBLE[]),
-                    x -> floor(x * 100.0)) AS v FROM embeddings),
-              init AS (SELECT vec_id, v FROM q WHERE vec_id % 37 = 0
-                       ORDER BY vec_id LIMIT 8),
-              c0 AS (SELECT CAST(row_number() OVER (ORDER BY vec_id)
-                       AS INTEGER) AS cid, v FROM init),
-              d1 AS (SELECT q.vec_id, c.cid,
-                       list_sum(list_transform(range(1, 65),
-                         i -> (q.v[i] - c.v[i]) * (q.v[i] - c.v[i]))) AS dist
-                     FROM q, c0 c),
-              a1 AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
-                       row_number() OVER (PARTITION BY vec_id
-                         ORDER BY dist, cid) AS rn FROM d1) WHERE rn = 1),
+      Some(s"""WITH $kmeansFirstPassSql,
               m1 AS (SELECT a1.cid, i AS pos, avg(q.v[i]) AS m
                      FROM a1 JOIN q USING (vec_id),
                        unnest(range(1, 65)) AS t(i)
@@ -4319,7 +4554,7 @@ object SparkEntry {
               a2 AS (SELECT vec_id, cid, dist FROM (SELECT vec_id, cid,
                        dist, row_number() OVER (PARTITION BY vec_id
                          ORDER BY dist, cid) AS rn FROM d2) WHERE rn = 1)
-              SELECT vec_id, cid AS cluster, CASE WHEN abs(dist) < 8.0e9 THEN floor((dist) * 1e6 + 0.5) / 1e6 ELSE (dist) END AS dist
+              SELECT vec_id, cid AS cluster, ${Portable.r6Sql("dist")} AS dist
               FROM a2""")),
 
     // trailing 25-row EXACT median per user (robust rolling level of a
@@ -4361,7 +4596,7 @@ object SparkEntry {
             r6(when(col("__p") =!= 0,
               (col("value") - col("__p")) / col("__p"))).as("pct_change"))
       },
-      Some("""WITH t AS (SELECT event_id, value,
+      Some(s"""WITH t AS (SELECT event_id, value,
                       lag(value) OVER (PARTITION BY user_id
                         ORDER BY CAST(ts AS TIMESTAMP), event_id) AS p
                     FROM events),
@@ -4369,8 +4604,7 @@ object SparkEntry {
                       CASE WHEN p <> 0 THEN (value - p) / p END AS x
                     FROM t)
               SELECT event_id,
-                CASE WHEN abs(x) < 8.0e9
-                  THEN floor((x) * 1e6 + 0.5) / 1e6 ELSE (x) END
+                ${Portable.r6Sql("x")}
                   AS pct_change
               FROM r""")),
 
@@ -4380,15 +4614,7 @@ object SparkEntry {
     Q("agg_state_durations",
       (s, d) => TimeSeries.stateDurations(ev(s, d), col("user_id"),
         col("event_type"), col("ts"), col("event_id"), keyName = "user_id"),
-      Some("""WITH t AS (SELECT user_id, event_type AS state,
-                      CAST(ts AS TIMESTAMP) AS ts2,
-                      lead(CAST(ts AS TIMESTAMP)) OVER (PARTITION BY user_id
-                        ORDER BY CAST(ts AS TIMESTAMP), event_id) AS nxt
-                    FROM events)
-              SELECT user_id, state,
-                CASE WHEN abs(CAST(sum(epoch_us(nxt - ts2)) AS DOUBLE) / 1e6) < 8.0e9 THEN floor((CAST(sum(epoch_us(nxt - ts2)) AS DOUBLE) / 1e6) * 1e6 + 0.5) / 1e6 ELSE (CAST(sum(epoch_us(nxt - ts2)) AS DOUBLE) / 1e6) END
-                  AS dur_secs
-              FROM t WHERE nxt IS NOT NULL GROUP BY 1, 2""")),
+      Some(stateDurationsSql)),
 
     // missing-data gap listing per series (the outage twin of
     // dq_heartbeat_uptime): intervals between consecutive points longer
@@ -4397,12 +4623,12 @@ object SparkEntry {
       (s, d) => TimeSeries.gapDetect(ev(s, d), col("event_type"),
         col("ts"), col("event_id"), thresholdSeconds = 900,
         seriesName = "event_type"),
-      Some("""WITH t AS (SELECT event_type, CAST(ts AS TIMESTAMP) AS ts2,
+      Some(s"""WITH t AS (SELECT event_type, CAST(ts AS TIMESTAMP) AS ts2,
                       lead(CAST(ts AS TIMESTAMP)) OVER (PARTITION BY event_type
                         ORDER BY CAST(ts AS TIMESTAMP), event_id) AS nxt
                     FROM events)
               SELECT event_type, ts2 AS gap_start, nxt AS gap_end,
-                CASE WHEN abs(CAST(epoch_us(nxt - ts2) AS DOUBLE) / 1e6) < 8.0e9 THEN floor((CAST(epoch_us(nxt - ts2) AS DOUBLE) / 1e6) * 1e6 + 0.5) / 1e6 ELSE (CAST(epoch_us(nxt - ts2) AS DOUBLE) / 1e6) END
+                ${Portable.r6Sql("CAST(epoch_us(nxt - ts2) AS DOUBLE) / 1e6")}
                   AS gap_secs
               FROM t WHERE nxt IS NOT NULL
                 AND epoch_us(nxt - ts2) > CAST(900 AS BIGINT) * 1000000""")),
@@ -4420,7 +4646,7 @@ object SparkEntry {
         col("user_id"), col("ts"), col("event_id"), col("value"),
         frameRows = 20, alpha = 0.5)
         .select(col("event_id"), col("ewma")),
-      Some("""WITH src AS (SELECT event_id, user_id,
+      Some(s"""WITH src AS (SELECT event_id, user_id,
                       CAST(ts AS TIMESTAMP) AS ts2,
                       CASE WHEN event_id % 13 = 0 THEN NULL ELSE value END AS v
                     FROM events),
@@ -4431,7 +4657,7 @@ object SparkEntry {
                     FROM src)
               SELECT event_id,
                 CASE WHEN len(l) = 0 THEN NULL ELSE
-                  CASE WHEN abs(list_reduce(list_transform(generate_series(1, len(l)), i -> l[i] * power(0.5, len(l) - i)), (a, b) -> a + b) * 0.5 / (1 - power(0.5, len(l)))) < 8.0e9 THEN floor((list_reduce(list_transform(generate_series(1, len(l)), i -> l[i] * power(0.5, len(l) - i)), (a, b) -> a + b) * 0.5 / (1 - power(0.5, len(l)))) * 1e6 + 0.5) / 1e6 ELSE (list_reduce(list_transform(generate_series(1, len(l)), i -> l[i] * power(0.5, len(l) - i)), (a, b) -> a + b) * 0.5 / (1 - power(0.5, len(l)))) END END AS ewma
+                  ${Portable.r6Sql("list_reduce(list_transform(generate_series(1, len(l)), i -> l[i] * power(0.5, len(l) - i)), (a, b) -> a + b) * 0.5 / (1 - power(0.5, len(l)))")} END AS ewma
               FROM t""")),
 
     // day-over-day churn over the distinct (user, day) grid; the last
@@ -4457,14 +4683,14 @@ object SparkEntry {
     Q("agg_stickiness",
       (s, d) => EventAnalytics.stickiness(ev(s, d), col("user_id"),
         col("ts")),
-      Some("""WITH d AS (SELECT DISTINCT
+      Some(s"""WITH d AS (SELECT DISTINCT
                       CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE)
                         AS day, user_id FROM events),
               dau AS (SELECT day, count(*) AS dau FROM d GROUP BY 1),
               mau AS (SELECT CAST(date_trunc('month', day) AS DATE) AS m,
                        count(DISTINCT user_id) AS mau FROM d GROUP BY 1)
               SELECT day, dau, mau,
-                CASE WHEN abs(dau * 1.0 / mau) < 8.0e9 THEN floor((dau * 1.0 / mau) * 1e6 + 0.5) / 1e6 ELSE (dau * 1.0 / mau) END AS stickiness
+                ${Portable.r6Sql("dau * 1.0 / mau")} AS stickiness
               FROM dau JOIN mau
                 ON CAST(date_trunc('month', day) AS DATE) = mau.m""")),
 
@@ -4473,24 +4699,14 @@ object SparkEntry {
     Q("agg_session_stats",
       (s, d) => EventAnalytics.sessionStats(ev(s, d), col("user_id"),
         col("ts"), col("event_id")),
-      Some("""WITH t AS (SELECT user_id, event_id,
-                      CAST(ts AS TIMESTAMP) AS ts2,
-                      lag(CAST(ts AS TIMESTAMP)) OVER (PARTITION BY user_id
-                        ORDER BY CAST(ts AS TIMESTAMP), event_id) AS p
-                    FROM events),
-              s0 AS (SELECT user_id, ts2,
-                      sum(CASE WHEN p IS NULL
-                          OR ts2 > p + INTERVAL 30 MINUTE THEN 1 ELSE 0 END)
-                        OVER (PARTITION BY user_id ORDER BY ts2, event_id
-                          ROWS UNBOUNDED PRECEDING) AS sid
-                    FROM t),
+      Some(s"""WITH $sessionIdsSql,
               s AS (SELECT user_id, sid, count(*) AS n_ev,
                       epoch_us(max(ts2) - min(ts2)) AS dur_us
                     FROM s0 GROUP BY 1, 2)
               SELECT user_id, count(*) AS n_sessions,
-                CASE WHEN abs(CAST(sum(dur_us) AS DOUBLE) / 1e6 / count(*)) < 8.0e9 THEN floor((CAST(sum(dur_us) AS DOUBLE) / 1e6 / count(*)) * 1e6 + 0.5) / 1e6 ELSE (CAST(sum(dur_us) AS DOUBLE) / 1e6 / count(*)) END
+                ${Portable.r6Sql("CAST(sum(dur_us) AS DOUBLE) / 1e6 / count(*)")}
                   AS avg_dur_secs,
-                CASE WHEN abs(sum(n_ev) * 1.0 / count(*)) < 8.0e9 THEN floor((sum(n_ev) * 1.0 / count(*)) * 1e6 + 0.5) / 1e6 ELSE (sum(n_ev) * 1.0 / count(*)) END AS avg_events
+                ${Portable.r6Sql("sum(n_ev) * 1.0 / count(*)")} AS avg_events
               FROM s GROUP BY 1""")),
 
     // leakage-safe group split: every doc of a source lands in the same
@@ -4512,7 +4728,7 @@ object SparkEntry {
       (s, d) => TextOps.keywordsTopK(Tables.documents(s, d),
         col("doc_id"), col("text"), k = 3)
         .select(col("doc_id"), col("token"), col("rank"), col("score")),
-      Some("""WITH tok AS (SELECT doc_id,
+      Some(raw"""WITH tok AS (SELECT doc_id,
                       unnest(string_split_regex(lower(trim(text)), '\s+'))
                         AS token
                     FROM documents),
@@ -4521,7 +4737,7 @@ object SparkEntry {
               df AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
               n AS (SELECT count(*) AS n FROM documents),
               sc AS (SELECT tf.doc_id, tf.token,
-                      CASE WHEN abs(tf.tf * ln(n.n * 1.0 / df.df)) < 8.0e9 THEN floor((tf.tf * ln(n.n * 1.0 / df.df)) * 1e6 + 0.5) / 1e6 ELSE (tf.tf * ln(n.n * 1.0 / df.df)) END AS score
+                      ${Portable.r6Sql("tf.tf * ln(n.n * 1.0 / df.df)")} AS score
                     FROM tf JOIN df USING (token) CROSS JOIN n),
               r AS (SELECT doc_id, token, score,
                       row_number() OVER (PARTITION BY doc_id
@@ -4564,7 +4780,7 @@ object SparkEntry {
       (s, d) => TimeSeries.irate(ev(s, d), col("user_id"), col("ts"),
         col("event_id"), col("value"))
         .select(col("event_id"), col("rate")),
-      Some("""WITH t AS (SELECT event_id, value,
+      Some(s"""WITH t AS (SELECT event_id, value,
                       lag(value) OVER (PARTITION BY user_id
                         ORDER BY CAST(ts AS TIMESTAMP), event_id) AS pv,
                       epoch_us(CAST(ts AS TIMESTAMP) -
@@ -4572,7 +4788,7 @@ object SparkEntry {
                           ORDER BY CAST(ts AS TIMESTAMP), event_id)) AS dt_us
                     FROM events)
               SELECT event_id,
-                CASE WHEN abs(CASE WHEN dt_us > 0 THEN (CASE WHEN value >= pv THEN value - pv ELSE value END) / (CAST(dt_us AS DOUBLE) / 1e6) END) < 8.0e9 THEN floor((CASE WHEN dt_us > 0 THEN (CASE WHEN value >= pv THEN value - pv ELSE value END) / (CAST(dt_us AS DOUBLE) / 1e6) END) * 1e6 + 0.5) / 1e6 ELSE (CASE WHEN dt_us > 0 THEN (CASE WHEN value >= pv THEN value - pv ELSE value END) / (CAST(dt_us AS DOUBLE) / 1e6) END) END AS rate
+                ${Portable.r6Sql("CASE WHEN dt_us > 0 THEN (CASE WHEN value >= pv THEN value - pv ELSE value END) / (CAST(dt_us AS DOUBLE) / 1e6) END")} AS rate
               FROM t WHERE pv IS NOT NULL""")),
 
     // downtime attributed per calendar day: dq_gap_detect's gaps split
@@ -4582,7 +4798,7 @@ object SparkEntry {
       (s, d) => TimeSeries.gapDowntimeByDay(ev(s, d), col("event_type"),
         col("ts"), col("event_id"), thresholdSeconds = 900,
         seriesName = "event_type"),
-      Some("""WITH t AS (SELECT event_type, CAST(ts AS TIMESTAMP) AS ts2,
+      Some(s"""WITH t AS (SELECT event_type, CAST(ts AS TIMESTAMP) AS ts2,
                       lead(CAST(ts AS TIMESTAMP)) OVER (PARTITION BY event_type
                         ORDER BY CAST(ts AS TIMESTAMP), event_id) AS nxt
                     FROM events),
@@ -4596,7 +4812,7 @@ object SparkEntry {
                         INTERVAL 1 DAY)) AS day
                     FROM g)
               SELECT event_type, CAST(day AS DATE) AS day,
-                CASE WHEN abs(CAST(sum(epoch_us(least(ge, day + INTERVAL 1 DAY) - greatest(gs, day))) AS DOUBLE) / 1e6) < 8.0e9 THEN floor((CAST(sum(epoch_us(least(ge, day + INTERVAL 1 DAY) - greatest(gs, day))) AS DOUBLE) / 1e6) * 1e6 + 0.5) / 1e6 ELSE (CAST(sum(epoch_us(least(ge, day + INTERVAL 1 DAY) - greatest(gs, day))) AS DOUBLE) / 1e6) END AS down_secs
+                ${Portable.r6Sql("CAST(sum(epoch_us(least(ge, day + INTERVAL 1 DAY) - greatest(gs, day))) AS DOUBLE) / 1e6")} AS down_secs
               FROM x GROUP BY 1, 2""")),
 
     // URL canonicalization dedup: scheme/www/query/trailing-slash
@@ -4641,7 +4857,7 @@ object SparkEntry {
       (s, d) => Aggregates.weightedMedian(ev(s, d), col("event_type"),
         col("value"), lit(1) + col("event_id") % 5, col("event_id"),
         groupName = "event_type"),
-      Some("""WITH t AS (SELECT event_type, value, event_id,
+      Some(s"""WITH t AS (SELECT event_type, value, event_id,
                       1 + event_id % 5 AS w FROM events),
               c AS (SELECT event_type, value, w,
                       sum(w) OVER (PARTITION BY event_type
@@ -4649,7 +4865,7 @@ object SparkEntry {
                         ROWS UNBOUNDED PRECEDING) AS cw,
                       sum(w) OVER (PARTITION BY event_type) AS tw
                     FROM t)
-              SELECT event_type, CASE WHEN abs(min(value)) < 8.0e9 THEN floor((min(value)) * 1e6 + 0.5) / 1e6 ELSE (min(value)) END AS weighted_median
+              SELECT event_type, ${Portable.r6Sql("min(value)")} AS weighted_median
               FROM c WHERE 2 * cw >= tw GROUP BY 1""")),
 
     // exactly-once ingestion audit: natural-key groups delivered more
@@ -4707,14 +4923,14 @@ object SparkEntry {
       (s, d) => TimeSeries.rampRates(ev(s, d), col("event_type"),
         col("ts"), col("event_id"), col("value"),
         seriesName = "event_type"),
-      Some("""WITH t AS (SELECT event_type,
+      Some(s"""WITH t AS (SELECT event_type,
                       CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE)
                         AS day,
                       value - lag(value) OVER (PARTITION BY event_type
                         ORDER BY CAST(ts AS TIMESTAMP), event_id) AS d
                     FROM events)
-              SELECT event_type, day, CASE WHEN abs(max(d)) < 8.0e9 THEN floor((max(d)) * 1e6 + 0.5) / 1e6 ELSE (max(d)) END AS max_ramp_up,
-                CASE WHEN abs(min(d)) < 8.0e9 THEN floor((min(d)) * 1e6 + 0.5) / 1e6 ELSE (min(d)) END AS max_ramp_down
+              SELECT event_type, day, ${Portable.r6Sql("max(d)")} AS max_ramp_up,
+                ${Portable.r6Sql("min(d)")} AS max_ramp_down
               FROM t WHERE d IS NOT NULL GROUP BY 1, 2""")),
 
     // recency feature: seconds since the user's previous purchase at
@@ -4731,7 +4947,7 @@ object SparkEntry {
           r6((unix_micros(col("ts").cast("timestamp")) - lastPurchaseUs)
             .cast("double") / 1e6).as("secs_since_purchase"))
       },
-      Some("""WITH t AS (SELECT event_id, ts,
+      Some(s"""WITH t AS (SELECT event_id, ts,
                       max(CASE WHEN event_type = 'purchase'
                         THEN epoch_us(CAST(ts AS TIMESTAMP)) END)
                         OVER (PARTITION BY user_id
@@ -4740,7 +4956,7 @@ object SparkEntry {
                         AS last_us
                     FROM events)
               SELECT event_id,
-                CASE WHEN abs(CAST(epoch_us(CAST(ts AS TIMESTAMP)) - last_us AS DOUBLE) / 1e6) < 8.0e9 THEN floor((CAST(epoch_us(CAST(ts AS TIMESTAMP)) - last_us AS DOUBLE) / 1e6) * 1e6 + 0.5) / 1e6 ELSE (CAST(epoch_us(CAST(ts AS TIMESTAMP)) - last_us AS DOUBLE) / 1e6) END AS secs_since_purchase
+                ${Portable.r6Sql("CAST(epoch_us(CAST(ts AS TIMESTAMP)) - last_us AS DOUBLE) / 1e6")} AS secs_since_purchase
               FROM t""")),
 
     // join_asof through the CUSTOM physical operator (LogicalPlan +
@@ -4751,25 +4967,12 @@ object SparkEntry {
     // state per partition
     Q("join_asof_native",
       (s, d) => {
-        val e = ev(s, d)
-        val clicks = e.filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"), col("ts"))
-        val views = e.filter(col("event_type") === "view")
-          .groupBy(col("user_id"), col("ts"))
-          .agg(max_by(col("value"), col("event_id")).as("v_value"))
+        val (clicks, views) = asofInputs(s, d)
         graft.plans.NativeAsOf.joinPrior(clicks, views, Seq("user_id"),
             "ts", "ts", Seq("v_value"))
           .select(col("event_id"), col("user_id"), col("v_value"))
       },
-      Some("""WITH clicks AS (SELECT event_id, user_id,
-                  CAST(ts AS TIMESTAMP) AS ts2
-                FROM events WHERE event_type = 'click'),
-              views AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts2,
-                  arg_max(value, event_id) AS v_value
-                FROM events WHERE event_type = 'view' GROUP BY 1, 2)
-              SELECT c.event_id, c.user_id, v.v_value
-              FROM clicks c ASOF LEFT JOIN views v
-                ON c.user_id = v.user_id AND c.ts2 >= v.ts2""")),
+      Some(asofPriorSql)),
 
     // streaming twin of agg_state_durations: per-user (state, since)
     // scalars; each event closes and emits the previous dwell interval,
@@ -4777,15 +4980,7 @@ object SparkEntry {
     // dwells must equal the batch lead-based accounting
     Q("stream_state_durations",
       (s, d) => graft.streaming.StateDurationStream.runToCompletion(s, d),
-      Some("""WITH t AS (SELECT user_id, event_type AS state,
-                      CAST(ts AS TIMESTAMP) AS ts2,
-                      lead(CAST(ts AS TIMESTAMP)) OVER (PARTITION BY user_id
-                        ORDER BY CAST(ts AS TIMESTAMP), event_id) AS nxt
-                    FROM events)
-              SELECT user_id, state,
-                CASE WHEN abs(CAST(sum(epoch_us(nxt - ts2)) AS DOUBLE) / 1e6) < 8.0e9 THEN floor((CAST(sum(epoch_us(nxt - ts2)) AS DOUBLE) / 1e6) * 1e6 + 0.5) / 1e6 ELSE (CAST(sum(epoch_us(nxt - ts2)) AS DOUBLE) / 1e6) END
-                  AS dur_secs
-              FROM t WHERE nxt IS NOT NULL GROUP BY 1, 2""")),
+      Some(stateDurationsSql)),
 
     // stateful streaming threshold-crossing alerts (edge detection, one
     // scalar of state per user) — must equal the batch lag formulation
@@ -4817,7 +5012,7 @@ object SparkEntry {
             r6(sum(col("__c")).cast("double") / count(lit(1)))
               .as("conv_rate"))
       },
-      Some("""WITH v AS (SELECT user_id,
+      Some(s"""WITH v AS (SELECT user_id,
                       CASE WHEN CAST(concat('0x',
                           substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
                           AS BIGINT) % 2 = 0
@@ -4827,25 +5022,19 @@ object SparkEntry {
                     FROM events GROUP BY 1, 2)
               SELECT variant, count(*) AS n_users,
                 CAST(sum(converted) AS BIGINT) AS n_converted,
-                CASE WHEN abs(sum(converted) * 1.0 / count(*)) < 8.0e9 THEN floor((sum(converted) * 1.0 / count(*)) * 1e6 + 0.5) / 1e6 ELSE (sum(converted) * 1.0 / count(*)) END AS conv_rate
+                ${Portable.r6Sql("sum(converted) * 1.0 / count(*)")} AS conv_rate
               FROM v GROUP BY 1""")),
 
     // classic star-schema rollup: fact ⋈ three broadcast dims (the fact
     // side never shuffles for a join — plan-asserted in the spec), then
     // one keyed aggregate
     Q("join_star_broadcast",
-      (s, d) => Tables.orders(s, d)
-        .join(broadcast(Tables.customer(s, d)),
-          col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)),
-          col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, d)),
-          col("n_regionkey") === col("r_regionkey"))
+      (s, d) => ordersByRegion(s, d)
         .groupBy(col("r_name"), col("n_name"))
         .agg(count(lit(1)).as("n_orders"),
           r6(sum(col("o_totalprice"))).as("revenue")),
-      Some("""SELECT r.r_name, n.n_name, count(*) AS n_orders,
-                CASE WHEN abs(sum(o.o_totalprice)) < 8.0e9 THEN floor((sum(o.o_totalprice)) * 1e6 + 0.5) / 1e6 ELSE (sum(o.o_totalprice)) END AS revenue
+      Some(s"""SELECT r.r_name, n.n_name, count(*) AS n_orders,
+                ${Portable.r6Sql("sum(o.o_totalprice)")} AS revenue
               FROM orders o
               JOIN customer c ON o.o_custkey = c.c_custkey
               JOIN nation n ON c.c_nationkey = n.n_nationkey
@@ -4858,27 +5047,21 @@ object SparkEntry {
     Q("win_share_of_total",
       (s, d) => {
         val w = Window.partitionBy(col("r_name"))
-        Tables.orders(s, d)
-          .join(broadcast(Tables.customer(s, d)),
-            col("o_custkey") === col("c_custkey"))
-          .join(broadcast(Tables.nation(s, d)),
-            col("c_nationkey") === col("n_nationkey"))
-          .join(broadcast(Tables.region(s, d)),
-            col("n_regionkey") === col("r_regionkey"))
+        ordersByRegion(s, d)
           .groupBy(col("n_name"), col("r_name"))
           .agg(r6(sum(col("o_totalprice"))).as("revenue"))
           .withColumn("region_share",
             r6(col("revenue") / sum(col("revenue")).over(w)))
       },
-      Some("""WITH rev AS (SELECT n.n_name, r.r_name,
-                      CASE WHEN abs(sum(o.o_totalprice)) < 8.0e9 THEN floor((sum(o.o_totalprice)) * 1e6 + 0.5) / 1e6 ELSE (sum(o.o_totalprice)) END AS revenue
+      Some(s"""WITH rev AS (SELECT n.n_name, r.r_name,
+                      ${Portable.r6Sql("sum(o.o_totalprice)")} AS revenue
                     FROM orders o
                     JOIN customer c ON o.o_custkey = c.c_custkey
                     JOIN nation n ON c.c_nationkey = n.n_nationkey
                     JOIN region r ON n.n_regionkey = r.r_regionkey
                     GROUP BY 1, 2)
               SELECT n_name, r_name, revenue,
-                CASE WHEN abs(revenue / sum(revenue) OVER (PARTITION BY r_name)) < 8.0e9 THEN floor((revenue / sum(revenue) OVER (PARTITION BY r_name)) * 1e6 + 0.5) / 1e6 ELSE (revenue / sum(revenue) OVER (PARTITION BY r_name)) END
+                ${Portable.r6Sql("revenue / sum(revenue) OVER (PARTITION BY r_name)")}
                   AS region_share
               FROM rev""")),
 
@@ -4911,24 +5094,9 @@ object SparkEntry {
     // overlapping/touching windows merge into maximal islands — the
     // interval-union primitive (session coverage, outage windows)
     Q("agg_interval_coalesce",
-      (s, d) => Intervals.coalesceIntervals(ev(s, d), col("user_id"),
-        col("ts"), col("ts") + expr("INTERVAL 15 MINUTES"),
-        keyName = "user_id"),
-      Some("""WITH iv AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS s,
-                      CAST(ts AS TIMESTAMP) + INTERVAL 900 SECOND AS e
-                    FROM events),
-              t AS (SELECT user_id, s, e,
-                      max(epoch_us(e)) OVER (PARTITION BY user_id
-                        ORDER BY s, e
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                        AS pm
-                    FROM iv),
-              g AS (SELECT user_id, s, e,
-                      sum(CASE WHEN pm IS NULL OR epoch_us(s) > pm
-                        THEN 1 ELSE 0 END) OVER (PARTITION BY user_id
-                        ORDER BY s, e ROWS BETWEEN UNBOUNDED PRECEDING
-                          AND CURRENT ROW) AS island
-                    FROM t)
+      (s, d) => quarterHourIntervals(s, d)(Intervals.coalesceIntervals),
+      Some(s"""WITH $quarterHourIvSql,
+              $islandCtesSql
               SELECT user_id, min(s) AS island_start, max(e) AS island_end,
                 count(*) AS n_intervals
               FROM g GROUP BY user_id, island""")),
@@ -4936,28 +5104,13 @@ object SparkEntry {
     // union coverage: total covered seconds per user with overlap
     // counted once — same single keyed window, islands-sized reduce
     Q("agg_interval_coverage",
-      (s, d) => Intervals.unionCoverage(ev(s, d), col("user_id"),
-        col("ts"), col("ts") + expr("INTERVAL 15 MINUTES"),
-        keyName = "user_id"),
-      Some("""WITH iv AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS s,
-                      CAST(ts AS TIMESTAMP) + INTERVAL 900 SECOND AS e
-                    FROM events),
-              t AS (SELECT user_id, s, e,
-                      max(epoch_us(e)) OVER (PARTITION BY user_id
-                        ORDER BY s, e
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                        AS pm
-                    FROM iv),
-              g AS (SELECT user_id, s, e,
-                      sum(CASE WHEN pm IS NULL OR epoch_us(s) > pm
-                        THEN 1 ELSE 0 END) OVER (PARTITION BY user_id
-                        ORDER BY s, e ROWS BETWEEN UNBOUNDED PRECEDING
-                          AND CURRENT ROW) AS island
-                    FROM t),
+      (s, d) => quarterHourIntervals(s, d)(Intervals.unionCoverage),
+      Some(s"""WITH $quarterHourIvSql,
+              $islandCtesSql,
               i AS (SELECT user_id, min(s) AS s, max(e) AS e
                     FROM g GROUP BY user_id, island)
               SELECT user_id,
-                CASE WHEN abs(CAST(sum(epoch_us(e) - epoch_us(s)) AS DOUBLE) / 1e6) < 8.0e9 THEN floor((CAST(sum(epoch_us(e) - epoch_us(s)) AS DOUBLE) / 1e6) * 1e6 + 0.5) / 1e6 ELSE (CAST(sum(epoch_us(e) - epoch_us(s)) AS DOUBLE) / 1e6) END AS covered_secs,
+                ${Portable.r6Sql("CAST(sum(epoch_us(e) - epoch_us(s)) AS DOUBLE) / 1e6")} AS covered_secs,
                 count(*) AS n_islands
               FROM i GROUP BY 1""")),
 
@@ -4975,7 +5128,7 @@ object SparkEntry {
         frameRows = 20, k = 2.0, outDiv = 100.0)
         .select(col("event_id"), col("mid"), col("upper"), col("lower"),
           col("breakout")),
-      Some("""WITH t AS (SELECT event_id, vc,
+      Some(s"""WITH t AS (SELECT event_id, vc,
                       CAST(count(*) OVER w AS DOUBLE) AS n,
                       sum(vc) OVER w AS sx,
                       sum(vc * vc) OVER w AS sxx
@@ -4989,11 +5142,11 @@ object SparkEntry {
                         THEN greatest((sxx - sx * sx / n) / (n - 1), 0)
                         ELSE 0 END) AS sd
                     FROM t)
-              SELECT event_id, CASE WHEN abs(mean / 100) < 8.0e9 THEN floor((mean / 100) * 1e6 + 0.5) / 1e6 ELSE (mean / 100) END AS mid,
-                CASE WHEN abs((mean + 2 * sd) / 100) < 8.0e9 THEN floor(((mean + 2 * sd) / 100) * 1e6 + 0.5) / 1e6 ELSE ((mean + 2 * sd) / 100) END AS upper,
-                CASE WHEN abs((mean - 2 * sd) / 100) < 8.0e9 THEN floor(((mean - 2 * sd) / 100) * 1e6 + 0.5) / 1e6 ELSE ((mean - 2 * sd) / 100) END AS lower,
-                CASE WHEN CASE WHEN abs(vc / 100) < 8.0e9 THEN floor((vc / 100) * 1e6 + 0.5) / 1e6 ELSE (vc / 100) END > CASE WHEN abs((mean + 2 * sd) / 100) < 8.0e9 THEN floor(((mean + 2 * sd) / 100) * 1e6 + 0.5) / 1e6 ELSE ((mean + 2 * sd) / 100) END
-                    OR CASE WHEN abs(vc / 100) < 8.0e9 THEN floor((vc / 100) * 1e6 + 0.5) / 1e6 ELSE (vc / 100) END < CASE WHEN abs((mean - 2 * sd) / 100) < 8.0e9 THEN floor(((mean - 2 * sd) / 100) * 1e6 + 0.5) / 1e6 ELSE ((mean - 2 * sd) / 100) END
+              SELECT event_id, ${Portable.r6Sql("mean / 100")} AS mid,
+                ${Portable.r6Sql("(mean + 2 * sd) / 100")} AS upper,
+                ${Portable.r6Sql("(mean - 2 * sd) / 100")} AS lower,
+                CASE WHEN ${Portable.r6Sql("vc / 100")} > ${Portable.r6Sql("(mean + 2 * sd) / 100")}
+                    OR ${Portable.r6Sql("vc / 100")} < ${Portable.r6Sql("(mean - 2 * sd) / 100")}
                   THEN 1 ELSE 0 END AS breakout
               FROM f""")),
 
@@ -5003,7 +5156,7 @@ object SparkEntry {
       (s, d) => TimeSeries.rsi(ev(s, d), col("user_id"), col("ts"),
         col("event_id"), col("value"), frameRows = 14)
         .select(col("event_id"), col("rsi")),
-      Some("""WITH d AS (SELECT event_id, user_id,
+      Some(s"""WITH d AS (SELECT event_id, user_id,
                       CAST(ts AS TIMESTAMP) AS ts2,
                       value - lag(value) OVER (PARTITION BY user_id
                         ORDER BY CAST(ts AS TIMESTAMP), event_id) AS df
@@ -5016,7 +5169,7 @@ object SparkEntry {
                       ROWS BETWEEN 13 PRECEDING AND CURRENT ROW))
               SELECT event_id,
                 CASE WHEN g + l = 0 THEN NULL
-                  ELSE CASE WHEN abs(100 * g / (g + l)) < 8.0e9 THEN floor((100 * g / (g + l)) * 1e6 + 0.5) / 1e6 ELSE (100 * g / (g + l)) END END AS rsi
+                  ELSE ${Portable.r6Sql("100 * g / (g + l)")} END AS rsi
               FROM t""")),
 
     // forward as-of: next view at-or-after each click — the
@@ -5024,22 +5177,12 @@ object SparkEntry {
     // shuffle+sort composition with the frame looking forward
     Q("join_asof_forward",
       (s, d) => {
-        val e = ev(s, d)
-        val clicks = e.filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"), col("ts"))
-        val views = e.filter(col("event_type") === "view")
-          .groupBy(col("user_id"), col("ts"))
-          .agg(max_by(col("value"), col("event_id")).as("v_value"))
+        val (clicks, views) = asofInputs(s, d)
         AsOf.joinNext(clicks, views, Seq("user_id"),
             col("ts"), col("ts"), Seq("v_value"))
           .select(col("event_id"), col("user_id"), col("v_value"))
       },
-      Some("""WITH clicks AS (SELECT event_id, user_id,
-                  CAST(ts AS TIMESTAMP) AS ts2
-                FROM events WHERE event_type = 'click'),
-              views AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts2,
-                  arg_max(value, event_id) AS v_value
-                FROM events WHERE event_type = 'view' GROUP BY 1, 2)
+      Some(s"""WITH $asofCtesSql
               SELECT c.event_id, c.user_id, v.v_value
               FROM clicks c ASOF LEFT JOIN views v
                 ON c.user_id = v.user_id AND c.ts2 <= v.ts2""")),
@@ -5085,7 +5228,7 @@ object SparkEntry {
         c.groupBy(col("event_type"), col("week"))
           .agg(edge(0.5).as("p50"), edge(0.9).as("p90"), edge(0.99).as("p99"))
       },
-      Some("""WITH rng AS (SELECT event_type, min(value) AS lo,
+      Some(s"""WITH rng AS (SELECT event_type, min(value) AS lo,
                       max(value) AS hi FROM events GROUP BY 1),
               b AS (SELECT e.event_type,
                       CAST(date_trunc('week', CAST(e.ts AS TIMESTAMP))
@@ -5104,9 +5247,9 @@ object SparkEntry {
                       sum(n) OVER (PARTITION BY event_type, week) AS tot
                     FROM h)
               SELECT event_type, week,
-                CASE WHEN abs(min(CASE WHEN cum >= 0.5 * tot THEN lo + bin * (hi - lo) / 50.0 END)) < 8.0e9 THEN floor((min(CASE WHEN cum >= 0.5 * tot THEN lo + bin * (hi - lo) / 50.0 END)) * 1e6 + 0.5) / 1e6 ELSE (min(CASE WHEN cum >= 0.5 * tot THEN lo + bin * (hi - lo) / 50.0 END)) END AS p50,
-                CASE WHEN abs(min(CASE WHEN cum >= 0.9 * tot THEN lo + bin * (hi - lo) / 50.0 END)) < 8.0e9 THEN floor((min(CASE WHEN cum >= 0.9 * tot THEN lo + bin * (hi - lo) / 50.0 END)) * 1e6 + 0.5) / 1e6 ELSE (min(CASE WHEN cum >= 0.9 * tot THEN lo + bin * (hi - lo) / 50.0 END)) END AS p90,
-                CASE WHEN abs(min(CASE WHEN cum >= 0.99 * tot THEN lo + bin * (hi - lo) / 50.0 END)) < 8.0e9 THEN floor((min(CASE WHEN cum >= 0.99 * tot THEN lo + bin * (hi - lo) / 50.0 END)) * 1e6 + 0.5) / 1e6 ELSE (min(CASE WHEN cum >= 0.99 * tot THEN lo + bin * (hi - lo) / 50.0 END)) END AS p99
+                ${Portable.r6Sql("min(CASE WHEN cum >= 0.5 * tot THEN lo + bin * (hi - lo) / 50.0 END)")} AS p50,
+                ${Portable.r6Sql("min(CASE WHEN cum >= 0.9 * tot THEN lo + bin * (hi - lo) / 50.0 END)")} AS p90,
+                ${Portable.r6Sql("min(CASE WHEN cum >= 0.99 * tot THEN lo + bin * (hi - lo) / 50.0 END)")} AS p99
               FROM c GROUP BY 1, 2""")),
 
     // deterministic Poisson(1) bootstrap: per-row replication counts
@@ -5173,7 +5316,7 @@ object SparkEntry {
     Q("agg_cooccurrence",
       (s, d) => TextOps.cooccurrence(Tables.documents(s, d), col("doc_id"),
         col("text"), vocabSize = 50, minPairCount = 2L),
-      Some("""WITH tok AS (SELECT DISTINCT doc_id, unnest(
+      Some(raw"""WITH tok AS (SELECT DISTINCT doc_id, unnest(
                       string_split_regex(lower(trim(text)), '\s+')) AS token
                     FROM documents),
               dfreq AS (SELECT token, count(*) AS n_docs FROM tok
@@ -5185,7 +5328,7 @@ object SparkEntry {
               n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents)
               SELECT a.token AS token_a, b.token AS token_b,
                 count(*) AS n_both,
-                CASE WHEN abs(ln(count(*) * min(n.n) / (min(a.n_docs) * min(b.n_docs)))) < 8.0e9 THEN floor((ln(count(*) * min(n.n) / (min(a.n_docs) * min(b.n_docs)))) * 1e6 + 0.5) / 1e6 ELSE (ln(count(*) * min(n.n) / (min(a.n_docs) * min(b.n_docs)))) END AS pmi
+                ${Portable.r6Sql("ln(count(*) * min(n.n) / (min(a.n_docs) * min(b.n_docs)))")} AS pmi
               FROM hits a JOIN hits b
                 ON a.doc_id = b.doc_id AND a.token < b.token, n
               GROUP BY 1, 2 HAVING count(*) >= 2""")),
@@ -5230,8 +5373,8 @@ object SparkEntry {
             r6((col("__vc") - avg(col("__vc")).over(w)) / 100))
           .select(col("event_id"), col("residual"))
       },
-      Some("""SELECT event_id,
-                CASE WHEN abs((vc - avg(vc) OVER (PARTITION BY event_type, dw, hr)) / 100) < 8.0e9 THEN floor(((vc - avg(vc) OVER (PARTITION BY event_type, dw, hr)) / 100) * 1e6 + 0.5) / 1e6 ELSE ((vc - avg(vc) OVER (PARTITION BY event_type, dw, hr)) / 100) END AS residual
+      Some(s"""SELECT event_id,
+                ${Portable.r6Sql("(vc - avg(vc) OVER (PARTITION BY event_type, dw, hr)) / 100")} AS residual
               FROM (SELECT event_id, event_type,
                       round(value * 100, 0) AS vc,
                       date_part('dow', CAST(ts AS TIMESTAMP)) AS dw,
@@ -5247,7 +5390,7 @@ object SparkEntry {
             .otherwise("live")),
         col("event_type"), col("cohort"), col("value"),
         bins = 10, threshold = 0.2),
-      Some("""WITH src AS (SELECT event_type AS g,
+      Some(s"""WITH src AS (SELECT event_type AS g,
                       CASE WHEN CAST(ts AS TIMESTAMP)
                           < TIMESTAMP '2024-01-16' THEN 'ref'
                         ELSE 'live' END AS c, value AS v FROM events),
@@ -5269,7 +5412,7 @@ object SparkEntry {
                     FULL JOIN (SELECT * FROM n WHERE c = 'live') l
                       ON r.g = l.g AND r.bin = l.bin),
               p AS (SELECT f.g,
-                      CASE WHEN abs(sum((coalesce(nl, 0.5) / tl.t - coalesce(nr, 0.5) / tr.t) * ln((coalesce(nl, 0.5) / tl.t) / (coalesce(nr, 0.5) / tr.t)))) < 8.0e9 THEN floor((sum((coalesce(nl, 0.5) / tl.t - coalesce(nr, 0.5) / tr.t) * ln((coalesce(nl, 0.5) / tl.t) / (coalesce(nr, 0.5) / tr.t)))) * 1e6 + 0.5) / 1e6 ELSE (sum((coalesce(nl, 0.5) / tl.t - coalesce(nr, 0.5) / tr.t) * ln((coalesce(nl, 0.5) / tl.t) / (coalesce(nr, 0.5) / tr.t)))) END AS psi
+                      ${Portable.r6Sql("sum((coalesce(nl, 0.5) / tl.t - coalesce(nr, 0.5) / tr.t) * ln((coalesce(nl, 0.5) / tl.t) / (coalesce(nr, 0.5) / tr.t)))")} AS psi
                     FROM f JOIN tr ON f.g = tr.g JOIN tl ON f.g = tl.g
                     GROUP BY 1)
               SELECT g AS "group", psi,
@@ -5312,7 +5455,7 @@ object SparkEntry {
         col("user_id"), col("ts"), col("event_id"), col("vc"),
         col("w"), frameRows = 20)
         .select(col("event_id"), r6(col("vwap") / 100).as("vwap")),
-      Some("""WITH b AS (SELECT event_id, user_id,
+      Some(s"""WITH b AS (SELECT event_id, user_id,
                       CAST(ts AS TIMESTAMP) AS ts2,
                       round(value * 100, 0) AS vc,
                       CAST(event_id % 7 + 1 AS DOUBLE) AS w
@@ -5324,13 +5467,10 @@ object SparkEntry {
                       ORDER BY ts2, event_id
                       ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)),
                    v AS (SELECT event_id,
-                      CASE WHEN abs(x) < 8.0e9
-                        THEN floor((x) * 1e6 + 0.5) / 1e6
-                        ELSE (x) END / 100 AS y
+                      ${Portable.r6Sql("x")} / 100 AS y
                     FROM r)
               SELECT event_id,
-                CASE WHEN abs(y) < 8.0e9
-                  THEN floor((y) * 1e6 + 0.5) / 1e6 ELSE (y) END AS vwap
+                ${Portable.r6Sql("y")} AS vwap
               FROM v""")),
 
     // pairwise correlation matrix across event types on their aligned
@@ -5338,7 +5478,7 @@ object SparkEntry {
     Q("agg_corr_matrix",
       (s, d) => EventAnalytics.corrMatrix(ev(s, d), col("event_type"),
         to_date(col("ts")), col("value")),
-      Some("""WITH g AS (SELECT event_type AS s, CAST(ts AS DATE) AS b,
+      Some(s"""WITH g AS (SELECT event_type AS s, CAST(ts AS DATE) AS b,
                       round(avg(round(value * 100, 0)) * 100, 0) AS v
                     FROM events GROUP BY 1, 2),
               p AS (SELECT a.s AS series_a, b.s AS series_b,
@@ -5351,7 +5491,7 @@ object SparkEntry {
                 CASE WHEN sqrt(greatest(n_buckets * sxx - sx * sx, 0))
                     * sqrt(greatest(n_buckets * syy - sy * sy, 0)) = 0
                   THEN NULL
-                  ELSE CASE WHEN abs((n_buckets * sxy - sx * sy) / (sqrt(greatest(n_buckets * sxx - sx * sx, 0)) * sqrt(greatest(n_buckets * syy - sy * sy, 0)))) < 8.0e9 THEN floor(((n_buckets * sxy - sx * sy) / (sqrt(greatest(n_buckets * sxx - sx * sx, 0)) * sqrt(greatest(n_buckets * syy - sy * sy, 0)))) * 1e6 + 0.5) / 1e6 ELSE ((n_buckets * sxy - sx * sy) / (sqrt(greatest(n_buckets * sxx - sx * sx, 0)) * sqrt(greatest(n_buckets * syy - sy * sy, 0)))) END
+                  ELSE ${Portable.r6Sql("(n_buckets * sxy - sx * sy) / (sqrt(greatest(n_buckets * sxx - sx * sx, 0)) * sqrt(greatest(n_buckets * syy - sy * sy, 0)))")}
                 END AS r
               FROM p""")),
 
@@ -5427,7 +5567,7 @@ object SparkEntry {
             r6(sum(col("p_ts").isNotNull.cast("long")).cast("double")
               / count(lit(1))).as("conv_rate"))
       },
-      Some("""WITH su AS (SELECT event_id, user_id,
+      Some(s"""WITH su AS (SELECT event_id, user_id,
                       CAST(ts AS TIMESTAMP) AS ts2
                     FROM events WHERE event_type = 'signup'),
               pu AS (SELECT user_id, ts2 FROM (SELECT user_id,
@@ -5442,7 +5582,7 @@ object SparkEntry {
                       ON s.user_id = p.user_id AND s.ts2 <= p.ts2)
               SELECT day, count(*) AS signups,
                 CAST(sum(conv) AS BIGINT) AS converted,
-                CASE WHEN abs(CAST(sum(conv) AS DOUBLE) / count(*)) < 8.0e9 THEN floor((CAST(sum(conv) AS DOUBLE) / count(*)) * 1e6 + 0.5) / 1e6 ELSE (CAST(sum(conv) AS DOUBLE) / count(*)) END AS conv_rate
+                ${Portable.r6Sql("CAST(sum(conv) AS DOUBLE) / count(*)")} AS conv_rate
               FROM j GROUP BY 1""")),
 
     // CSV sink roundtrip: header write, schema-pinned read-back,
@@ -5470,7 +5610,7 @@ object SparkEntry {
         Multimodal.asPayload(Tables.documents(s, d), col("doc_id"),
           col("text")),
         windowBytes = 256, hopBytes = 128),
-      Some("""WITH w AS (SELECT doc_id AS media_id, text,
+      Some(s"""WITH w AS (SELECT doc_id AS media_id, text,
                       length(text) AS n,
                       unnest(range(0, greatest(CAST(
                         ceil((length(text) - 256) / 128.0) AS INT), 0) + 1))
@@ -5484,7 +5624,7 @@ object SparkEntry {
                     FROM w)
               SELECT media_id, win_idx, win_start,
                 CAST(len(samples) AS INTEGER) AS n_samples,
-                CASE WHEN abs(sqrt(list_sum(list_transform(samples, x -> CAST(x * x AS DOUBLE))) / len(samples))) < 8.0e9 THEN floor((sqrt(list_sum(list_transform(samples, x -> CAST(x * x AS DOUBLE))) / len(samples))) * 1e6 + 0.5) / 1e6 ELSE (sqrt(list_sum(list_transform(samples, x -> CAST(x * x AS DOUBLE))) / len(samples))) END AS rms,
+                ${Portable.r6Sql("sqrt(list_sum(list_transform(samples, x -> CAST(x * x AS DOUBLE))) / len(samples))")} AS rms,
                 CAST(list_max(samples) AS INTEGER) AS peak
               FROM f""")),
 
@@ -5496,7 +5636,7 @@ object SparkEntry {
     Q("agg_survival_curve",
       (s, d) => EventAnalytics.survivalCurve(ev(s, d), col("user_id"),
         col("ts")),
-      Some("""WITH u AS (SELECT user_id, min(CAST(ts AS DATE)) AS fd,
+      Some(s"""WITH u AS (SELECT user_id, min(CAST(ts AS DATE)) AS fd,
                       max(CAST(ts AS DATE)) AS ld FROM events GROUP BY 1),
               mx AS (SELECT max(ld) AS m FROM u),
               t AS (SELECT date_diff('day', fd, ld) AS tenure,
@@ -5515,7 +5655,10 @@ object SparkEntry {
                           END) OVER (ORDER BY tenure ROWS BETWEEN
                             UNBOUNDED PRECEDING AND CURRENT ROW) = 1
                         THEN 0.0
-                        ELSE CASE WHEN abs(exp(sum(CASE WHEN d_t = at_risk THEN 0 ELSE ln(1.0 - CAST(d_t AS DOUBLE) / at_risk) END) OVER (ORDER BY tenure ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))) < 8.0e9 THEN floor((exp(sum(CASE WHEN d_t = at_risk THEN 0 ELSE ln(1.0 - CAST(d_t AS DOUBLE) / at_risk) END) OVER (ORDER BY tenure ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))) * 1e6 + 0.5) / 1e6 ELSE (exp(sum(CASE WHEN d_t = at_risk THEN 0 ELSE ln(1.0 - CAST(d_t AS DOUBLE) / at_risk) END) OVER (ORDER BY tenure ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))) END
+                        ELSE ${Portable.r6Sql(
+                          "exp(sum(CASE WHEN d_t = at_risk THEN 0 ELSE ln(1.0 - CAST(d_t AS " +
+                            "DOUBLE) / at_risk) END) OVER (ORDER BY tenure ROWS BETWEEN " +
+                            "UNBOUNDED PRECEDING AND CURRENT ROW))")}
                         END AS survival
                     FROM k)
               SELECT CAST(tenure AS INTEGER) AS tenure, at_risk, d_t,
@@ -5528,22 +5671,11 @@ object SparkEntry {
     Q("stream_interval_union",
       (s, d) => graft.streaming.IntervalUnionStream
         .runToCompletion(s, d, widthSeconds = 900L),
-      Some("""WITH iv AS (SELECT user_id, event_id,
+      Some(s"""WITH iv AS (SELECT user_id, event_id,
                       CAST(ts AS TIMESTAMP) AS s,
                       CAST(ts AS TIMESTAMP) + INTERVAL 900 SECOND AS e
                     FROM events),
-              t AS (SELECT user_id, s, e,
-                      max(epoch_us(e)) OVER (PARTITION BY user_id
-                        ORDER BY s, e
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                        AS pm
-                    FROM iv),
-              g AS (SELECT user_id, s, e,
-                      sum(CASE WHEN pm IS NULL OR epoch_us(s) > pm
-                        THEN 1 ELSE 0 END) OVER (PARTITION BY user_id
-                        ORDER BY s, e ROWS BETWEEN UNBOUNDED PRECEDING
-                          AND CURRENT ROW) AS island
-                    FROM t),
+              $islandCtesSql,
               i AS (SELECT user_id, island, min(s) AS island_start,
                       max(e) AS island_end, count(*) AS n_intervals
                     FROM g GROUP BY 1, 2),
@@ -5630,12 +5762,11 @@ object SparkEntry {
     // and the SAME downstream operation tree (see rollingZscore doc)
     Q("win_rolling_zscore",
       (s, d) => TimeSeries.rollingZscore(
-        ev(s, d).withColumn("__vc",
-          round(col("value") * 100, 0).cast("long")),
+        evCents(s, d),
         col("event_type"), col("ts"), col("event_id"), col("__vc"),
         frameRows = 24)
         .select(col("event_id"), col("zscore")),
-      Some("""WITH src AS (SELECT event_id, event_type,
+      Some(s"""WITH src AS (SELECT event_id, event_type,
                       CAST(ts AS TIMESTAMP) AS ts2,
                       CAST(round(value * 100, 0) AS BIGINT) AS c
                     FROM events),
@@ -5650,7 +5781,7 @@ object SparkEntry {
               SELECT event_id,
                 CASE WHEN n < 2 OR (ss - s * (s / n)) / (n - 1) <= 0
                   THEN NULL
-                  ELSE CASE WHEN abs((c - s / n) / sqrt((ss - s * (s / n)) / (n - 1))) < 8.0e9 THEN floor(((c - s / n) / sqrt((ss - s * (s / n)) / (n - 1))) * 1e6 + 0.5) / 1e6 ELSE ((c - s / n) / sqrt((ss - s * (s / n)) / (n - 1))) END
+                  ELSE ${Portable.r6Sql("(c - s / n) / sqrt((ss - s * (s / n)) / (n - 1))")}
                 END AS zscore
               FROM f""")),
 
@@ -5660,8 +5791,7 @@ object SparkEntry {
     // sequential recursion, exact integer cents end-to-end
     Q("win_cusum",
       (s, d) => TimeSeries.cusum(
-        ev(s, d).withColumn("__vc",
-          round(col("value") * 100, 0).cast("long")),
+        evCents(s, d),
         col("event_type"), col("ts"), col("event_id"), col("__vc"))
         .select(col("event_id"), col("cusum_pos")),
       Some(cusumOracleSql)),
@@ -5680,14 +5810,14 @@ object SparkEntry {
       (s, d) => EventAnalytics.activityHeatmap(ev(s, d),
         col("event_type"), col("ts"))
         .withColumnRenamed("group", "event_type"),
-      Some("""WITH c AS (SELECT event_type,
+      Some(s"""WITH c AS (SELECT event_type,
                       CAST(isodow(CAST(ts AS TIMESTAMP)) AS INTEGER)
                         AS isodow,
                       CAST(hour(CAST(ts AS TIMESTAMP)) AS INTEGER) AS hr,
                       count(*) AS n
                     FROM events GROUP BY 1, 2, 3)
               SELECT event_type, isodow, hr, n,
-                CASE WHEN abs(n / sum(n) OVER (PARTITION BY event_type)) < 8.0e9 THEN floor((n / sum(n) OVER (PARTITION BY event_type)) * 1e6 + 0.5) / 1e6 ELSE (n / sum(n) OVER (PARTITION BY event_type)) END
+                ${Portable.r6Sql("n / sum(n) OVER (PARTITION BY event_type)")}
                   AS share
               FROM c""")),
 
@@ -5726,26 +5856,12 @@ object SparkEntry {
     // per-row expression — no range join; exact integer microseconds
     Q("join_interval_overlap",
       (s, d) => Intervals.dailyWindowOverlap(
-        Intervals.coalesceIntervals(ev(s, d), col("user_id"), col("ts"),
-          col("ts") + expr("INTERVAL 15 MINUTES"), keyName = "user_id"),
+        quarterHourIntervals(s, d)(Intervals.coalesceIntervals),
         col("user_id"), col("island_start"), col("island_end"),
         windowStartSec = 43200, windowEndSec = 64800,
         keyName = "user_id"),
-      Some("""WITH iv AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS s,
-                      CAST(ts AS TIMESTAMP) + INTERVAL 900 SECOND AS e
-                    FROM events),
-              t AS (SELECT user_id, s, e,
-                      max(epoch_us(e)) OVER (PARTITION BY user_id
-                        ORDER BY s, e
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                        AS pm
-                    FROM iv),
-              g AS (SELECT user_id, s, e,
-                      sum(CASE WHEN pm IS NULL OR epoch_us(s) > pm
-                        THEN 1 ELSE 0 END) OVER (PARTITION BY user_id
-                        ORDER BY s, e ROWS BETWEEN UNBOUNDED PRECEDING
-                          AND CURRENT ROW) AS island
-                    FROM t),
+      Some(s"""WITH $quarterHourIvSql,
+              $islandCtesSql,
               isl AS (SELECT user_id, min(s) AS s, max(e) AS e
                       FROM g GROUP BY user_id, island),
               b AS (SELECT user_id, s, e,
@@ -5772,11 +5888,10 @@ object SparkEntry {
     // float sums; see TimeSeries.macd)
     Q("win_macd",
       (s, d) => TimeSeries.macd(
-        ev(s, d).withColumn("__vc",
-          round(col("value") * 100, 0).cast("long")),
+        evCents(s, d),
         col("event_type"), col("ts"), col("__vc"),
         keyName = "event_type"),
-      Some("""WITH RECURSIVE daily AS (SELECT event_type,
+      Some(s"""WITH RECURSIVE daily AS (SELECT event_type,
                       CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE)
                         AS day,
                       CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
@@ -5802,8 +5917,8 @@ object SparkEntry {
                 FROM d JOIN rec r ON d.event_type = r.event_type
                   AND d.rn = r.rn + 1)
               SELECT event_type, day,
-                CASE WHEN abs(ema_fast - ema_slow) < 8.0e9 THEN floor((ema_fast - ema_slow) * 1e6 + 0.5) / 1e6 ELSE (ema_fast - ema_slow) END AS macd,
-                CASE WHEN abs(sig) < 8.0e9 THEN floor((sig) * 1e6 + 0.5) / 1e6 ELSE (sig) END AS signal
+                ${Portable.r6Sql("ema_fast - ema_slow")} AS macd,
+                ${Portable.r6Sql("sig")} AS signal
               FROM rec""")),
 
     // deterministic categorical encoding by frequency rank — the
@@ -5829,11 +5944,10 @@ object SparkEntry {
     // single edge division is deterministic (see robustScale doc)
     Q("f_robust_scale",
       (s, d) => Aggregates.robustScale(
-        ev(s, d).withColumn("__vc",
-          round(col("value") * 100, 0).cast("long")),
+        evCents(s, d),
         col("event_type"), col("__vc"))
         .select(col("event_id"), col("scaled")),
-      Some("""WITH src AS (SELECT event_id, event_type,
+      Some(s"""WITH src AS (SELECT event_id, event_type,
                       CAST(round(value * 100, 0) AS BIGINT) AS c
                     FROM events),
               st AS (SELECT event_type,
@@ -5843,7 +5957,7 @@ object SparkEntry {
                     FROM src GROUP BY 1)
               SELECT s.event_id,
                 CASE WHEN st.q3 > st.q1
-                  THEN CASE WHEN abs((s.c - st.med) / (st.q3 - st.q1)) < 8.0e9 THEN floor(((s.c - st.med) / (st.q3 - st.q1)) * 1e6 + 0.5) / 1e6 ELSE ((s.c - st.med) / (st.q3 - st.q1)) END END
+                  THEN ${Portable.r6Sql("(s.c - st.med) / (st.q3 - st.q1)")} END
                   AS scaled
               FROM src s JOIN st USING (event_type)""")),
 
@@ -5856,9 +5970,7 @@ object SparkEntry {
     Q("dedup_cluster_canonical",
       (s, d) => {
         val docs = withPlantedDups(Tables.documents(s, d))
-        val labels = Caches.scoped(Dedup.minhashLshPairs(docs,
-          col("doc_id"), col("text"), threshold = 0.5))(
-          Components.connectedComponents(_))
+        val labels = minhashComponents(docs)
         val toks = docs.select(col("doc_id").as("id"),
           TextOps.tokenCount(col("text")).cast("long").as("__n_tok"))
         val w = Window.partitionBy(col("component"))
@@ -5871,14 +5983,7 @@ object SparkEntry {
       },
       Some(s"""WITH RECURSIVE $plantedDocsSql,
               $minhashCtesSql,
-              dup AS (SELECT id_a, id_b FROM verified WHERE j >= 0.5),
-              sym AS (SELECT id_a AS src, id_b AS dst FROM dup
-                      UNION SELECT id_b, id_a FROM dup),
-              reach(src, dst) AS (
-                SELECT src, dst FROM sym
-                UNION
-                SELECT r.src, s2.dst FROM reach r JOIN sym s2
-                  ON r.dst = s2.src),
+              $componentsCtesSql,
               comp AS (SELECT src AS id, least(src, min(dst)) AS component
                        FROM reach GROUP BY src),
               tok AS (SELECT id,
@@ -5902,24 +6007,14 @@ object SparkEntry {
     Q("agg_bounce_rate",
       (s, d) => EventAnalytics.bounceRate(ev(s, d), col("user_id"),
         col("ts"), col("event_id")),
-      Some("""WITH t AS (SELECT user_id, event_id,
-                      CAST(ts AS TIMESTAMP) AS ts2,
-                      lag(CAST(ts AS TIMESTAMP)) OVER (PARTITION BY user_id
-                        ORDER BY CAST(ts AS TIMESTAMP), event_id) AS p
-                    FROM events),
-              s0 AS (SELECT user_id, ts2,
-                      sum(CASE WHEN p IS NULL
-                          OR ts2 > p + INTERVAL 30 MINUTE THEN 1 ELSE 0 END)
-                        OVER (PARTITION BY user_id ORDER BY ts2, event_id
-                          ROWS UNBOUNDED PRECEDING) AS sid
-                    FROM t),
+      Some(s"""WITH $sessionIdsSql,
               s AS (SELECT user_id, sid, count(*) AS n_ev,
                       min(ts2) AS start_ts
                     FROM s0 GROUP BY 1, 2)
               SELECT CAST(start_ts AS DATE) AS day, count(*) AS n_sessions,
                 CAST(sum(CASE WHEN n_ev = 1 THEN 1 ELSE 0 END) AS BIGINT)
                   AS n_bounce,
-                CASE WHEN abs(CAST(sum(CASE WHEN n_ev = 1 THEN 1 ELSE 0 END) AS BIGINT) / count(*)) < 8.0e9 THEN floor((CAST(sum(CASE WHEN n_ev = 1 THEN 1 ELSE 0 END) AS BIGINT) / count(*)) * 1e6 + 0.5) / 1e6 ELSE (CAST(sum(CASE WHEN n_ev = 1 THEN 1 ELSE 0 END) AS BIGINT) / count(*)) END AS bounce_rate
+                ${Portable.r6Sql("CAST(sum(CASE WHEN n_ev = 1 THEN 1 ELSE 0 END) AS BIGINT) / count(*)")} AS bounce_rate
               FROM s GROUP BY 1""")),
   )
 
@@ -5941,20 +6036,10 @@ object SparkEntry {
     // CTE, dyadic coefficients: zero fp-transcendental hash risk.
     Q("win_holt_linear",
       (s, d) => TimeSeries.holtLinear(
-        ev(s, d).withColumn("__vc",
-          round(col("value") * 100, 0).cast("long")),
+        evCents(s, d),
         col("event_type"), col("ts"), col("__vc"),
         keyName = "event_type"),
-      Some("""WITH RECURSIVE daily AS (SELECT event_type,
-                      CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE)
-                        AS day,
-                      CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
-                        AS DOUBLE) AS c
-                    FROM events GROUP BY 1, 2),
-              d AS (SELECT event_type, day, c,
-                      row_number() OVER (PARTITION BY event_type
-                        ORDER BY day) AS rn
-                    FROM daily),
+      Some(s"""WITH RECURSIVE $holtDailySql,
               rec AS (
                 SELECT event_type, rn, day, c, c AS lvl,
                     CAST(0.0 AS DOUBLE) AS trend
@@ -5966,9 +6051,9 @@ object SparkEntry {
                       + 0.5 * r.trend
                 FROM d JOIN rec r ON d.event_type = r.event_type
                   AND d.rn = r.rn + 1)
-              SELECT event_type, day, CASE WHEN abs(lvl) < 8.0e9 THEN floor((lvl) * 1e6 + 0.5) / 1e6 ELSE (lvl) END AS level,
-                CASE WHEN abs(trend) < 8.0e9 THEN floor((trend) * 1e6 + 0.5) / 1e6 ELSE (trend) END AS trend,
-                CASE WHEN abs(lvl + trend) < 8.0e9 THEN floor((lvl + trend) * 1e6 + 0.5) / 1e6 ELSE (lvl + trend) END AS forecast_1
+              SELECT event_type, day, ${Portable.r6Sql("lvl")} AS level,
+                ${Portable.r6Sql("trend")} AS trend,
+                ${Portable.r6Sql("lvl + trend")} AS forecast_1
               FROM rec""")),
 
     // percentile read over the MERGEABLE log2 histogram sketch: at
@@ -6008,7 +6093,7 @@ object SparkEntry {
       (s, d) => Aggregates.theilSen(ev(s, d), col("event_type"),
         col("ts"), round(col("value") * 100, 0), epoch = "2024-01-01",
         groupName = "event_type"),
-      Some("""WITH daily AS (SELECT event_type,
+      Some(s"""WITH daily AS (SELECT event_type,
                       CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE)
                         AS day,
                       sum(CAST(round(value * 100, 0) AS BIGINT)) AS c
@@ -6027,7 +6112,7 @@ object SparkEntry {
                         ORDER BY slope) AS rn,
                       count(*) OVER (PARTITION BY event_type) AS n
                     FROM sl)
-              SELECT event_type, CASE WHEN abs(avg(slope)) < 8.0e9 THEN floor((avg(slope)) * 1e6 + 0.5) / 1e6 ELSE (avg(slope)) END AS theil_sen_slope,
+              SELECT event_type, ${Portable.r6Sql("avg(slope)")} AS theil_sen_slope,
                 CAST(max(n) AS BIGINT) AS n_pairs
               FROM r WHERE rn IN ((n + 1) // 2, (n + 2) // 2)
               GROUP BY 1""")),
@@ -6064,12 +6149,11 @@ object SparkEntry {
     // exact long numerator/denominator, one division at the edge.
     Q("win_rolling_beta",
       (s, d) => TimeSeries.rollingBeta(
-        ev(s, d).withColumn("__vc",
-          round(col("value") * 100, 0).cast("long")),
+        evCents(s, d),
         col("event_type"), col("ts"), col("event_id"), col("__vc"),
         frameRows = 24)
         .select(col("event_id"), col("beta")),
-      Some("""WITH src AS (SELECT event_id, event_type,
+      Some(s"""WITH src AS (SELECT event_id, event_type,
                       CAST(ts AS TIMESTAMP) AS ts2,
                       CAST(round(value * 100, 0) AS BIGINT) AS y
                     FROM events),
@@ -6087,7 +6171,7 @@ object SparkEntry {
                       ROWS BETWEEN 23 PRECEDING AND CURRENT ROW))
               SELECT event_id,
                 CASE WHEN n < 2 OR n * sxx - sx * sx = 0 THEN NULL
-                  ELSE CASE WHEN abs(CAST(n * sxy - sx * sy AS DOUBLE) / CAST(n * sxx - sx * sx AS DOUBLE)) < 8.0e9 THEN floor((CAST(n * sxy - sx * sy AS DOUBLE) / CAST(n * sxx - sx * sx AS DOUBLE)) * 1e6 + 0.5) / 1e6 ELSE (CAST(n * sxy - sx * sy AS DOUBLE) / CAST(n * sxx - sx * sx AS DOUBLE)) END
+                  ELSE ${Portable.r6Sql("CAST(n * sxy - sx * sy AS DOUBLE) / CAST(n * sxx - sx * sx AS DOUBLE)")}
                 END AS beta
               FROM f""")),
 
@@ -6156,7 +6240,7 @@ object SparkEntry {
                        JOIN base x ON p.id_a = x.id
                        JOIN base y ON p.id_b = y.id
                        WHERE least(len(x.sh), len(y.sh)) > 0)
-              SELECT id_a, id_b, CASE WHEN abs(c) < 8.0e9 THEN floor((c) * 1e6 + 0.5) / 1e6 ELSE (c) END AS containment
+              SELECT id_a, id_b, ${Portable.r6Sql("c")} AS containment
               FROM cont WHERE c >= 0.8""")),
 
     // streaming top-3 event types per hour: counts maintained by the
@@ -6180,20 +6264,10 @@ object SparkEntry {
     // update rule on both engines, state = period+2 doubles per key.
     Q("win_holt_winters",
       (s, d) => TimeSeries.holtWinters(
-        ev(s, d).withColumn("__vc",
-          round(col("value") * 100, 0).cast("long")),
+        evCents(s, d),
         col("event_type"), col("ts"), col("__vc"),
         period = 7, keyName = "event_type"),
-      Some("""WITH RECURSIVE daily AS (SELECT event_type,
-                      CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE)
-                        AS day,
-                      CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
-                        AS DOUBLE) AS c
-                    FROM events GROUP BY 1, 2),
-              d AS (SELECT event_type, day, c,
-                      row_number() OVER (PARTITION BY event_type
-                        ORDER BY day) AS rn
-                    FROM daily),
+      Some(s"""WITH RECURSIVE $holtDailySql,
               init AS (SELECT event_type, sum(c) / 7 AS l0,
                          list_transform(list(c ORDER BY rn),
                            x -> x - sum(c) / 7) AS s0
@@ -6217,9 +6291,9 @@ object SparkEntry {
                         + 0.5 * (r.lvl + r.trend))) + 0.5 * r.seas[1])
                 FROM d JOIN rec r ON d.event_type = r.event_type
                   AND d.rn = r.rn + 1)
-              SELECT event_type, day, CASE WHEN abs(lvl) < 8.0e9 THEN floor((lvl) * 1e6 + 0.5) / 1e6 ELSE (lvl) END AS level,
-                CASE WHEN abs(trend) < 8.0e9 THEN floor((trend) * 1e6 + 0.5) / 1e6 ELSE (trend) END AS trend,
-                CASE WHEN abs(lvl + trend + seas[1]) < 8.0e9 THEN floor((lvl + trend + seas[1]) * 1e6 + 0.5) / 1e6 ELSE (lvl + trend + seas[1]) END AS forecast_1
+              SELECT event_type, day, ${Portable.r6Sql("lvl")} AS level,
+                ${Portable.r6Sql("trend")} AS trend,
+                ${Portable.r6Sql("lvl + trend + seas[1]")} AS forecast_1
               FROM rec""")),
 
     // exact audience-overlap matrix between event types (audience =
@@ -6228,14 +6302,14 @@ object SparkEntry {
     Q("agg_audience_overlap",
       (s, d) => EventAnalytics.audienceOverlap(ev(s, d),
         col("event_type"), col("user_id"), minEvents = 15),
-      Some("""WITH tu AS (SELECT event_type, user_id FROM events
+      Some(s"""WITH tu AS (SELECT event_type, user_id FROM events
                     GROUP BY 1, 2 HAVING count(*) >= 15),
               n AS (SELECT event_type, count(*) AS n FROM tu GROUP BY 1)
               SELECT a.event_type AS type_a, b.event_type AS type_b,
                 count(*) AS n_both,
                 CAST(any_value(na.n) AS BIGINT) AS n_a,
                 CAST(any_value(nb.n) AS BIGINT) AS n_b,
-                CASE WHEN abs(count(*) / (any_value(na.n) + any_value(nb.n) - count(*))) < 8.0e9 THEN floor((count(*) / (any_value(na.n) + any_value(nb.n) - count(*))) * 1e6 + 0.5) / 1e6 ELSE (count(*) / (any_value(na.n) + any_value(nb.n) - count(*))) END AS jaccard
+                ${Portable.r6Sql("count(*) / (any_value(na.n) + any_value(nb.n) - count(*))")} AS jaccard
               FROM tu a JOIN tu b ON a.user_id = b.user_id
                 AND a.event_type < b.event_type
               JOIN n na ON na.event_type = a.event_type
@@ -6307,7 +6381,7 @@ object SparkEntry {
               unix_micros(col("__hwm").cast("timestamp")) -
                 unix_micros(col("ts").cast("timestamp")))).as("max_late_us"))
       },
-      Some("""WITH a AS (SELECT event_type, CAST(ts AS TIMESTAMP) AS ts2,
+      Some(s"""WITH a AS (SELECT event_type, CAST(ts AS TIMESTAMP) AS ts2,
                       max(CAST(ts AS TIMESTAMP)) OVER (
                         PARTITION BY event_type
                         ORDER BY epoch_us(CAST(ts AS TIMESTAMP))
@@ -6320,7 +6394,7 @@ object SparkEntry {
               SELECT event_type, count(*) AS n,
                 CAST(sum(CASE WHEN ts2 < hwm THEN 1 ELSE 0 END) AS BIGINT)
                   AS n_late,
-                CASE WHEN abs(CAST(sum(CASE WHEN ts2 < hwm THEN 1 ELSE 0 END) AS BIGINT) / count(*)) < 8.0e9 THEN floor((CAST(sum(CASE WHEN ts2 < hwm THEN 1 ELSE 0 END) AS BIGINT) / count(*)) * 1e6 + 0.5) / 1e6 ELSE (CAST(sum(CASE WHEN ts2 < hwm THEN 1 ELSE 0 END) AS BIGINT) / count(*)) END AS late_frac,
+                ${Portable.r6Sql("CAST(sum(CASE WHEN ts2 < hwm THEN 1 ELSE 0 END) AS BIGINT) / count(*)")} AS late_frac,
                 CAST(max(CASE WHEN ts2 < hwm
                   THEN epoch_us(hwm) - epoch_us(ts2) END) AS BIGINT)
                   AS max_late_us
@@ -6508,15 +6582,7 @@ object SparkEntry {
     // order-invariant within tied blocks, so the result is exact.
     Q("win_max_concurrency",
       (s, d) => {
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts"), col("event_id"))
-        val sess = ev(s, d)
-          .withColumn("__prev", lag(col("ts"), 1).over(w))
-          .withColumn("__new", when(col("__prev").isNull ||
-            col("ts") > col("__prev") + expr("INTERVAL 30 MINUTES"),
-            lit(1)).otherwise(lit(0)))
-          .withColumn("sid", sum(col("__new"))
-            .over(w.rowsBetween(Window.unboundedPreceding, 0)))
+        val sess = sessionIds(s, d, "sid")
           .groupBy(col("user_id"), col("sid"))
           .agg(min(col("ts")).as("st"), max(col("ts")).as("en"))
         // one sessionize pass (r18): each session explodes into its
@@ -6572,7 +6638,7 @@ object SparkEntry {
             r6((col("ks") + lit(10.0) * col("gs") / col("gn")) /
               (col("kn") + lit(10))).as("enc"))
       },
-      Some("""WITH g AS (SELECT
+      Some(s"""WITH g AS (SELECT
                   CAST(sum(CASE WHEN value >= 100 THEN 1 ELSE 0 END)
                     AS BIGINT) AS gs,
                   count(*) AS gn FROM events),
@@ -6581,7 +6647,7 @@ object SparkEntry {
                     AS BIGINT) AS ks,
                   count(*) AS kn FROM events GROUP BY 1)
               SELECT event_type, kn AS n,
-                CASE WHEN abs((ks + 10.0 * gs / gn) / (kn + 10)) < 8.0e9 THEN floor(((ks + 10.0 * gs / gn) / (kn + 10)) * 1e6 + 0.5) / 1e6 ELSE ((ks + 10.0 * gs / gn) / (kn + 10)) END AS enc
+                ${Portable.r6Sql("(ks + 10.0 * gs / gn) / (kn + 10)")} AS enc
               FROM k, g""")),
 
     // Model-calibration reliability bins: a portable-hash pseudo-score
@@ -6590,10 +6656,7 @@ object SparkEntry {
     // exact integer sums. The eval-side twin of f_target_encode.
     Q("agg_calibration_bins",
       (s, d) => {
-        val t = ev(s, d).select(
-          graft.functions.PortableHash
-            .md5Long(col("event_id").cast("string"), 6).as("h"),
-          when(col("value") >= 100, 1L).otherwise(0L).as("lab"))
+        val t = hashedLabels(s, d)
         t.groupBy(expr("(h * 10) div 16777216").cast("long").as("bin"))
           .agg(count(lit(1)).as("n"),
             r6(sum(col("lab")) * lit(1.0) / count(lit(1)))
@@ -6601,16 +6664,12 @@ object SparkEntry {
             r6(sum(col("h")) / lit(16777216.0) / count(lit(1)))
               .as("mean_score"))
       },
-      Some("""WITH t AS (SELECT
-                  CAST(concat('0x', substr(md5(CAST(event_id AS VARCHAR)),
-                    1, 6)) AS BIGINT) AS h,
-                  CASE WHEN value >= 100 THEN 1 ELSE 0 END AS lab
-                FROM events)
+      Some(s"""WITH $hashedLabelsSql
               SELECT CAST((h * 10) // 16777216 AS BIGINT) AS bin,
                 count(*) AS n,
-                CASE WHEN abs(CAST(sum(lab) AS BIGINT) * 1.0 / count(*)) < 8.0e9 THEN floor((CAST(sum(lab) AS BIGINT) * 1.0 / count(*)) * 1e6 + 0.5) / 1e6 ELSE (CAST(sum(lab) AS BIGINT) * 1.0 / count(*)) END
+                ${Portable.r6Sql("CAST(sum(lab) AS BIGINT) * 1.0 / count(*)")}
                   AS mean_label,
-                CASE WHEN abs(CAST(sum(h) AS BIGINT) / 16777216.0 / count(*)) < 8.0e9 THEN floor((CAST(sum(h) AS BIGINT) / 16777216.0 / count(*)) * 1e6 + 0.5) / 1e6 ELSE (CAST(sum(h) AS BIGINT) / 16777216.0 / count(*)) END
+                ${Portable.r6Sql("CAST(sum(h) AS BIGINT) / 16777216.0 / count(*)")}
                   AS mean_score
               FROM t GROUP BY 1""")),
 
@@ -6667,7 +6726,7 @@ object SparkEntry {
             r6(abs(col("sa") * lit(1.0) / col("na") -
               col("sb") * lit(1.0) / col("nb"))).as("drift"))
       },
-      Some("""WITH pos AS (SELECT unnest(generate_series(1, 64)) AS j),
+      Some(s"""WITH pos AS (SELECT unnest(generate_series(1, 64)) AS j),
               q AS (SELECT e.label % 2 AS cohort, p.j,
                   CAST(floor(CAST(e.embedding[p.j] AS DOUBLE) * 127 + 0.5)
                     AS BIGINT) AS v
@@ -6675,9 +6734,9 @@ object SparkEntry {
               m AS (SELECT cohort, j, CAST(sum(v) AS BIGINT) AS s,
                   count(*) AS n
                 FROM q GROUP BY 1, 2)
-              SELECT a.j, CASE WHEN abs(a.s * 1.0 / a.n) < 8.0e9 THEN floor((a.s * 1.0 / a.n) * 1e6 + 0.5) / 1e6 ELSE (a.s * 1.0 / a.n) END AS mean_even,
-                CASE WHEN abs(b.s * 1.0 / b.n) < 8.0e9 THEN floor((b.s * 1.0 / b.n) * 1e6 + 0.5) / 1e6 ELSE (b.s * 1.0 / b.n) END AS mean_odd,
-                CASE WHEN abs(abs(a.s * 1.0 / a.n - b.s * 1.0 / b.n)) < 8.0e9 THEN floor((abs(a.s * 1.0 / a.n - b.s * 1.0 / b.n)) * 1e6 + 0.5) / 1e6 ELSE (abs(a.s * 1.0 / a.n - b.s * 1.0 / b.n)) END AS drift
+              SELECT a.j, ${Portable.r6Sql("a.s * 1.0 / a.n")} AS mean_even,
+                ${Portable.r6Sql("b.s * 1.0 / b.n")} AS mean_odd,
+                ${Portable.r6Sql("abs(a.s * 1.0 / a.n - b.s * 1.0 / b.n)")} AS drift
               FROM m a JOIN m b ON a.j = b.j
                 AND a.cohort = 0 AND b.cohort = 1""")),
 
@@ -6690,17 +6749,7 @@ object SparkEntry {
         Multimodal.asPayload(Tables.documents(s, d), col("doc_id"),
           col("text")),
         frameBytes = 128, thrCenti = 150),
-      Some("""WITH w AS (SELECT doc_id AS media_id, text,
-                  length(text) AS n,
-                  unnest(range(0, greatest(CAST(ceil(length(text) / 128.0)
-                    AS INT), 1))) AS frame_idx
-                FROM documents),
-              f AS (SELECT media_id, CAST(frame_idx AS INTEGER)
-                    AS frame_idx,
-                  [ord(substr(text, CAST(frame_idx * 128 + j + 1 AS INT),
-                    1)) FOR j IN range(0, least(128, n - frame_idx * 128))]
-                    AS samples
-                FROM w),
+      Some(s"""WITH $mediaFramesSql,
               g AS (SELECT media_id, frame_idx,
                   CAST(list_sum(samples) AS BIGINT) AS e,
                   CAST(len(samples) AS BIGINT) AS l
@@ -6745,11 +6794,7 @@ object SparkEntry {
         // checkpoint leaves no InMemoryRelation in the plan.
         Graph.triangleCount(edges.localCheckpoint(false))
       },
-      Some("""WITH li AS (SELECT DISTINCT l_orderkey AS ok,
-                    l_partkey AS pk FROM lineitem),
-              e AS (SELECT x.pk AS a, y.pk AS b
-                FROM li x JOIN li y ON x.ok = y.ok AND x.pk < y.pk
-                GROUP BY 1, 2 HAVING count(*) >= 2),
+      Some(s"""WITH $coOrderEdgesSql,
               w AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
                 FROM e e1 JOIN e e2 ON e1.a = e2.a AND e1.b < e2.b)
               SELECT least(w.x, w.y, w.z) AS x, count(*) AS n_triangles
@@ -6771,8 +6816,8 @@ object SparkEntry {
         .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
           r6(col("l_quantity") * col("p_retailprice"))
             .as("ext_retail")),
-      Some("""SELECT l.l_orderkey, l.l_linenumber, l.l_partkey,
-                CASE WHEN abs(l.l_quantity * p.p_retailprice) < 8.0e9 THEN floor((l.l_quantity * p.p_retailprice) * 1e6 + 0.5) / 1e6 ELSE (l.l_quantity * p.p_retailprice) END AS ext_retail
+      Some(s"""SELECT l.l_orderkey, l.l_linenumber, l.l_partkey,
+                ${Portable.r6Sql("l.l_quantity * p.p_retailprice")} AS ext_retail
               FROM lineitem l
               LEFT JOIN part p ON l.l_partkey = p.p_partkey""")),
 
@@ -7093,7 +7138,7 @@ object SparkEntry {
           when(lit(1.0) / (lit(1.0) + exp(-z)) >= 0.5, 1).otherwise(0)
             .as("keep"))
       },
-      Some("""WITH f AS (SELECT doc_id,
+      Some(raw"""WITH f AS (SELECT doc_id,
                   CAST(len(string_split_regex(lower(trim(text)), '\s+'))
                     AS BIGINT) AS n_tokens,
                   CAST(length(text) AS BIGINT) AS n_chars,
@@ -7104,7 +7149,7 @@ object SparkEntry {
                   -2.0 + 0.01 * n_tokens + 0.0005 * n_chars +
                     2.0 * (CAST(n_distinct AS DOUBLE) / n_tokens) AS z
                 FROM f)
-              SELECT doc_id, CASE WHEN abs(1.0 / (1.0 + exp(-z))) < 8.0e9 THEN floor((1.0 / (1.0 + exp(-z))) * 1e6 + 0.5) / 1e6 ELSE (1.0 / (1.0 + exp(-z))) END AS score,
+              SELECT doc_id, ${Portable.r6Sql("1.0 / (1.0 + exp(-z))")} AS score,
                 CASE WHEN 1.0 / (1.0 + exp(-z)) >= 0.5 THEN 1 ELSE 0 END
                   AS keep
               FROM z""")),
@@ -7134,7 +7179,7 @@ object SparkEntry {
                 .otherwise(lit(2.0) * log(lit(2.0) * col("__u"))))
               .as("noised"))
       },
-      Some("""WITH c AS (SELECT event_type, CAST(ts AS DATE) AS day,
+      Some(s"""WITH c AS (SELECT event_type, CAST(ts AS DATE) AS day,
                   count(*) AS n
                 FROM events GROUP BY 1, 2),
               u AS (SELECT event_type, day, n,
@@ -7143,7 +7188,7 @@ object SparkEntry {
                     / 4503599627370496.0 AS u01
                 FROM c)
               SELECT event_type, day, n,
-                CASE WHEN abs(n + CASE WHEN u01 >= 0.5 THEN -2.0 * ln(2.0 * (1.0 - u01)) ELSE 2.0 * ln(2.0 * u01) END) < 8.0e9 THEN floor((n + CASE WHEN u01 >= 0.5 THEN -2.0 * ln(2.0 * (1.0 - u01)) ELSE 2.0 * ln(2.0 * u01) END) * 1e6 + 0.5) / 1e6 ELSE (n + CASE WHEN u01 >= 0.5 THEN -2.0 * ln(2.0 * (1.0 - u01)) ELSE 2.0 * ln(2.0 * u01) END) END AS noised
+                ${Portable.r6Sql("n + CASE WHEN u01 >= 0.5 THEN -2.0 * ln(2.0 * (1.0 - u01)) ELSE 2.0 * ln(2.0 * u01) END")} AS noised
               FROM u""")),
 
     // Keyframe selection (ops/Multimodal.keyframesTopK): the 3 most
@@ -7154,17 +7199,7 @@ object SparkEntry {
         Multimodal.asPayload(Tables.documents(s, d), col("doc_id"),
           col("text")),
         frameBytes = 128, k = 3),
-      Some("""WITH w AS (SELECT doc_id AS media_id, text,
-                  length(text) AS n,
-                  unnest(range(0, greatest(CAST(ceil(length(text) / 128.0)
-                    AS INT), 1))) AS frame_idx
-                FROM documents),
-              f AS (SELECT media_id, CAST(frame_idx AS INTEGER)
-                    AS frame_idx,
-                  [ord(substr(text, CAST(frame_idx * 128 + j + 1 AS INT),
-                    1)) FOR j IN range(0, least(128, n - frame_idx * 128))]
-                    AS samples
-                FROM w),
+      Some(s"""WITH $mediaFramesSql,
               g AS (SELECT media_id, frame_idx,
                   CAST(list_sum(samples) AS BIGINT) AS e
                 FROM f WHERE len(samples) > 0),
@@ -7208,21 +7243,7 @@ object SparkEntry {
         cells.withColumn("rk", row_number().over(w).cast("int"))
           .filter(col("rk") <= 10)
       },
-      Some("""WITH q AS (SELECT vec_id,
-                  list_transform(CAST(embedding AS DOUBLE[]),
-                    x -> floor(x * 100.0)) AS v FROM embeddings),
-              init AS (SELECT vec_id, v FROM q WHERE vec_id % 37 = 0
-                       ORDER BY vec_id LIMIT 8),
-              c0 AS (SELECT CAST(row_number() OVER (ORDER BY vec_id)
-                       AS INTEGER) AS cid, v FROM init),
-              d1 AS (SELECT q.vec_id, c.cid,
-                       list_sum(list_transform(range(1, 65),
-                         i -> (q.v[i] - c.v[i]) * (q.v[i] - c.v[i])))
-                         AS dist
-                     FROM q, c0 c),
-              a1 AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
-                       row_number() OVER (PARTITION BY vec_id
-                         ORDER BY dist, cid) AS rn FROM d1) WHERE rn = 1),
+      Some(s"""WITH $kmeansFirstPassSql,
               r AS (SELECT vec_id, cid AS cluster,
                        CAST(row_number() OVER (PARTITION BY cid
                          ORDER BY CAST(concat('0x', substr(md5(
@@ -7284,7 +7305,7 @@ object SparkEntry {
             (pow(a("v") / a("n"), 2) / (a("n") - 1) +
              pow(b("v") / b("n"), 2) / (b("n") - 1)), 2).as("df"))
       },
-      Some("""WITH g AS (SELECT
+      Some(s"""WITH g AS (SELECT
                   CASE WHEN CAST(concat('0x',
                       substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
                       AS BIGINT) % 2 = 0 THEN 'A' ELSE 'B' END AS variant,
@@ -7296,7 +7317,11 @@ object SparkEntry {
                   AS n_a,
                 CAST(min(CASE WHEN variant = 'B' THEN n END) AS BIGINT)
                   AS n_b,
-                CASE WHEN abs((min(CASE WHEN variant = 'A' THEN m END) - min(CASE WHEN variant = 'B' THEN m END)) / sqrt(min(CASE WHEN variant = 'A' THEN v END) / min(CASE WHEN variant = 'A' THEN n END) + min(CASE WHEN variant = 'B' THEN v END) / min(CASE WHEN variant = 'B' THEN n END))) < 8.0e9 THEN floor(((min(CASE WHEN variant = 'A' THEN m END) - min(CASE WHEN variant = 'B' THEN m END)) / sqrt(min(CASE WHEN variant = 'A' THEN v END) / min(CASE WHEN variant = 'A' THEN n END) + min(CASE WHEN variant = 'B' THEN v END) / min(CASE WHEN variant = 'B' THEN n END))) * 1e6 + 0.5) / 1e6 ELSE ((min(CASE WHEN variant = 'A' THEN m END) - min(CASE WHEN variant = 'B' THEN m END)) / sqrt(min(CASE WHEN variant = 'A' THEN v END) / min(CASE WHEN variant = 'A' THEN n END) + min(CASE WHEN variant = 'B' THEN v END) / min(CASE WHEN variant = 'B' THEN n END))) END
+                ${Portable.r6Sql(
+                  "(min(CASE WHEN variant = 'A' THEN m END) - min(CASE WHEN variant = 'B' THEN " +
+                    "m END)) / sqrt(min(CASE WHEN variant = 'A' THEN v END) / min(CASE WHEN " +
+                    "variant = 'A' THEN n END) + min(CASE WHEN variant = 'B' THEN v END) / " +
+                    "min(CASE WHEN variant = 'B' THEN n END))")}
                   AS t_stat,
                 round(pow(min(CASE WHEN variant = 'A' THEN v END) /
                             min(CASE WHEN variant = 'A' THEN n END) +
@@ -7317,10 +7342,7 @@ object SparkEntry {
     // window sums over the CELL table (|types|·7 rows), not a rescan.
     Q("agg_chi2_independence",
       (s, d) => {
-        val cells = ev(s, d)
-          .groupBy(col("event_type"),
-            ScalarFns.dowPg(col("ts")).as("dow"))
-          .agg(count(lit(1)).cast("double").as("o"))
+        val cells = typeDowCells(s, d)
         val rowT = sum(col("o")).over(Window.partitionBy(col("event_type")))
         val colT = sum(col("o")).over(Window.partitionBy(col("dow")))
         val n = sum(col("o")).over(Window.partitionBy())
@@ -7331,16 +7353,13 @@ object SparkEntry {
             ((countDistinct(col("event_type")) - 1) *
              (countDistinct(col("dow")) - 1)).as("dof"))
       },
-      Some("""WITH cells AS (SELECT event_type,
-                  dayofweek(CAST(ts AS TIMESTAMP)) AS dow,
-                  CAST(count(*) AS DOUBLE) AS o
-                FROM events GROUP BY 1, 2),
+      Some(s"""WITH $typeDowCellsSql,
               e AS (SELECT event_type, dow, o,
                   sum(o) OVER (PARTITION BY event_type) *
                   sum(o) OVER (PARTITION BY dow) /
                   sum(o) OVER () AS e
                 FROM cells)
-              SELECT CASE WHEN abs(sum(pow(o - e, 2) / e)) < 8.0e9 THEN floor((sum(pow(o - e, 2) / e)) * 1e6 + 0.5) / 1e6 ELSE (sum(pow(o - e, 2) / e)) END AS chi2,
+              SELECT ${Portable.r6Sql("sum(pow(o - e, 2) / e)")} AS chi2,
                 (count(DISTINCT event_type) - 1) *
                 (count(DISTINCT dow) - 1) AS dof
               FROM e""")),
@@ -7364,11 +7383,11 @@ object SparkEntry {
           nz(r6(sin(dw * (lit(2) * lit(math.Pi) / 7)))).as("dow_sin"),
           nz(r6(cos(dw * (lit(2) * lit(math.Pi) / 7)))).as("dow_cos"))
       },
-      Some("""SELECT event_id,
-                CASE WHEN abs(sin(hour(CAST(ts AS TIMESTAMP)) * (2 * pi() / 24))) < 8.0e9 THEN floor((sin(hour(CAST(ts AS TIMESTAMP)) * (2 * pi() / 24))) * 1e6 + 0.5) / 1e6 ELSE (sin(hour(CAST(ts AS TIMESTAMP)) * (2 * pi() / 24))) END + 0.0 AS hr_sin,
-                CASE WHEN abs(cos(hour(CAST(ts AS TIMESTAMP)) * (2 * pi() / 24))) < 8.0e9 THEN floor((cos(hour(CAST(ts AS TIMESTAMP)) * (2 * pi() / 24))) * 1e6 + 0.5) / 1e6 ELSE (cos(hour(CAST(ts AS TIMESTAMP)) * (2 * pi() / 24))) END + 0.0 AS hr_cos,
-                CASE WHEN abs(sin(dayofweek(CAST(ts AS TIMESTAMP)) * (2 * pi() / 7))) < 8.0e9 THEN floor((sin(dayofweek(CAST(ts AS TIMESTAMP)) * (2 * pi() / 7))) * 1e6 + 0.5) / 1e6 ELSE (sin(dayofweek(CAST(ts AS TIMESTAMP)) * (2 * pi() / 7))) END + 0.0 AS dow_sin,
-                CASE WHEN abs(cos(dayofweek(CAST(ts AS TIMESTAMP)) * (2 * pi() / 7))) < 8.0e9 THEN floor((cos(dayofweek(CAST(ts AS TIMESTAMP)) * (2 * pi() / 7))) * 1e6 + 0.5) / 1e6 ELSE (cos(dayofweek(CAST(ts AS TIMESTAMP)) * (2 * pi() / 7))) END + 0.0 AS dow_cos
+      Some(s"""SELECT event_id,
+                ${Portable.r6Sql("sin(hour(CAST(ts AS TIMESTAMP)) * (2 * pi() / 24))")} + 0.0 AS hr_sin,
+                ${Portable.r6Sql("cos(hour(CAST(ts AS TIMESTAMP)) * (2 * pi() / 24))")} + 0.0 AS hr_cos,
+                ${Portable.r6Sql("sin(dayofweek(CAST(ts AS TIMESTAMP)) * (2 * pi() / 7))")} + 0.0 AS dow_sin,
+                ${Portable.r6Sql("cos(dayofweek(CAST(ts AS TIMESTAMP)) * (2 * pi() / 7))")} + 0.0 AS dow_cos
               FROM events""")),
 
     // Stationary distribution of the event-type Markov chain
@@ -7414,7 +7433,7 @@ object SparkEntry {
           .select(col("event_type"),
             r6(col("raw") / col("tot")).as("pi"))
       },
-      Some("""WITH seq AS (SELECT user_id, event_type,
+      Some(s"""WITH seq AS (SELECT user_id, event_type,
                   lead(event_type) OVER (PARTITION BY user_id
                     ORDER BY CAST(ts AS TIMESTAMP), event_id) AS nxt
                 FROM events),
@@ -7436,7 +7455,7 @@ object SparkEntry {
                   sum(pr / (SELECT k FROM k)) AS raw
                 FROM p16 GROUP BY 1)
               SELECT event_type,
-                CASE WHEN abs(raw / (SELECT sum(raw) FROM raw)) < 8.0e9 THEN floor((raw / (SELECT sum(raw) FROM raw)) * 1e6 + 0.5) / 1e6 ELSE (raw / (SELECT sum(raw) FROM raw)) END AS pi
+                ${Portable.r6Sql("raw / (SELECT sum(raw) FROM raw)")} AS pi
               FROM raw""")),
 
     // Deterministic negative sampling for contrastive training: k = 3
@@ -7508,7 +7527,7 @@ object SparkEntry {
                 .rowsBetween(Window.unboundedPreceding, Window.currentRow))
               / col("tot")).as("cum_share"))
       },
-      Some("""WITH rev AS (SELECT o_custkey, sum(o_totalprice) AS rev
+      Some(s"""WITH rev AS (SELECT o_custkey, sum(o_totalprice) AS rev
                 FROM orders GROUP BY 1),
               dec AS (SELECT o_custkey, rev,
                   CAST(ntile(10) OVER (ORDER BY rev, o_custkey)
@@ -7519,8 +7538,8 @@ object SparkEntry {
                 FROM dec GROUP BY 1),
               tot AS (SELECT sum(r) AS tot FROM bydec)
               SELECT decile, n_customers,
-                CASE WHEN abs(r / (SELECT tot FROM tot)) < 8.0e9 THEN floor((r / (SELECT tot FROM tot)) * 1e6 + 0.5) / 1e6 ELSE (r / (SELECT tot FROM tot)) END AS rev_share,
-                CASE WHEN abs(sum(r) OVER (ORDER BY decile ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) / (SELECT tot FROM tot)) < 8.0e9 THEN floor((sum(r) OVER (ORDER BY decile ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) / (SELECT tot FROM tot)) * 1e6 + 0.5) / 1e6 ELSE (sum(r) OVER (ORDER BY decile ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) / (SELECT tot FROM tot)) END AS cum_share
+                ${Portable.r6Sql("r / (SELECT tot FROM tot)")} AS rev_share,
+                ${Portable.r6Sql("sum(r) OVER (ORDER BY decile ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) / (SELECT tot FROM tot)")} AS cum_share
               FROM bydec""")),
 
     // Matrix-free top principal component by power iteration (2 fixed
@@ -7611,7 +7630,7 @@ object SparkEntry {
             r6(regr_r2(col("y"), col("x"))).as("r2"),
             count(lit(1)).as("n_points"))
       },
-      Some("""WITH toks AS (SELECT unnest(string_split_regex(
+      Some(raw"""WITH toks AS (SELECT unnest(string_split_regex(
                     lower(trim(text)), '\s+')) AS tok FROM documents),
               freq AS (SELECT tok, count(*) AS c FROM toks
                 WHERE tok <> '' GROUP BY 1),
@@ -7619,9 +7638,9 @@ object SparkEntry {
                   OVER (ORDER BY c DESC, tok) AS r FROM freq),
               top AS (SELECT ln(r) AS x, ln(c) AS y FROM ranked
                 WHERE r <= 200)
-              SELECT CASE WHEN abs(regr_slope(y, x)) < 8.0e9 THEN floor((regr_slope(y, x)) * 1e6 + 0.5) / 1e6 ELSE (regr_slope(y, x)) END AS zipf_slope,
-                CASE WHEN abs(regr_intercept(y, x)) < 8.0e9 THEN floor((regr_intercept(y, x)) * 1e6 + 0.5) / 1e6 ELSE (regr_intercept(y, x)) END AS log_c0,
-                CASE WHEN abs(regr_r2(y, x)) < 8.0e9 THEN floor((regr_r2(y, x)) * 1e6 + 0.5) / 1e6 ELSE (regr_r2(y, x)) END AS r2,
+              SELECT ${Portable.r6Sql("regr_slope(y, x)")} AS zipf_slope,
+                ${Portable.r6Sql("regr_intercept(y, x)")} AS log_c0,
+                ${Portable.r6Sql("regr_r2(y, x)")} AS r2,
                 CAST(count(*) AS BIGINT) AS n_points
               FROM top""")),
 
@@ -7661,7 +7680,7 @@ object SparkEntry {
           .orderBy(col("pmi").desc, col("w1"), col("w2"))
           .limit(50)
       },
-      Some("""WITH toks AS (SELECT string_split_regex(
+      Some(raw"""WITH toks AS (SELECT string_split_regex(
                     lower(trim(text)), '\s+') AS ts FROM documents),
               pairs AS (SELECT ts[i] AS w1, ts[i + 1] AS w2
                 FROM toks, unnest(range(1, len(ts))) AS t(i)
@@ -7672,7 +7691,7 @@ object SparkEntry {
               u1 AS (SELECT w1 AS w, count(*) AS c1 FROM pairs GROUP BY 1),
               u2 AS (SELECT w2 AS w, count(*) AS c2 FROM pairs GROUP BY 1)
               SELECT b.w1, b.w2, CAST(b.c12 AS BIGINT) AS c12,
-                CASE WHEN abs(ln(b.c12 * (SELECT n FROM n) / (u1.c1 * u2.c2))) < 8.0e9 THEN floor((ln(b.c12 * (SELECT n FROM n) / (u1.c1 * u2.c2))) * 1e6 + 0.5) / 1e6 ELSE (ln(b.c12 * (SELECT n FROM n) / (u1.c1 * u2.c2))) END
+                ${Portable.r6Sql("ln(b.c12 * (SELECT n FROM n) / (u1.c1 * u2.c2))")}
                   AS pmi
               FROM big b JOIN u1 ON u1.w = b.w1 JOIN u2 ON u2.w = b.w2
               ORDER BY pmi DESC, w1, w2 LIMIT 50""")),
@@ -7809,7 +7828,7 @@ object SparkEntry {
               (lit(1.0) - sum(col("p_g")))) / 2).as("t"))
           .filter(col("t") > 0.25)
       },
-      Some("""WITH counts AS (SELECT
+      Some(s"""WITH counts AS (SELECT
                   CAST(extract(hour FROM CAST(ts AS TIMESTAMP)) AS INTEGER)
                     AS hod,
                   CAST(floor(value / 100) AS BIGINT) AS band,
@@ -7822,9 +7841,9 @@ object SparkEntry {
                 FROM counts)
               SELECT hod, band,
                 CAST(min(n_cell) AS BIGINT) AS n_rows,
-                CASE WHEN abs((sum(abs(c / n_cell - p_g)) + (1.0 - sum(p_g))) / 2) < 8.0e9 THEN floor(((sum(abs(c / n_cell - p_g)) + (1.0 - sum(p_g))) / 2) * 1e6 + 0.5) / 1e6 ELSE ((sum(abs(c / n_cell - p_g)) + (1.0 - sum(p_g))) / 2) END AS t
+                ${Portable.r6Sql("(sum(abs(c / n_cell - p_g)) + (1.0 - sum(p_g))) / 2")} AS t
               FROM m GROUP BY 1, 2
-              HAVING CASE WHEN abs((sum(abs(c / n_cell - p_g)) + (1.0 - sum(p_g))) / 2) < 8.0e9 THEN floor(((sum(abs(c / n_cell - p_g)) + (1.0 - sum(p_g))) / 2) * 1e6 + 0.5) / 1e6 ELSE ((sum(abs(c / n_cell - p_g)) + (1.0 - sum(p_g))) / 2) END > 0.25""")),
+              HAVING ${Portable.r6Sql("(sum(abs(c / n_cell - p_g)) + (1.0 - sum(p_g))) / 2")} > 0.25""")),
 
     // Streaming A/B monitor (streaming/AbMonitorStream) — the live twin
     // of agg_welch_ttest: two rows of per-arm moment state (n, Σ, Σ²
@@ -7833,7 +7852,7 @@ object SparkEntry {
     // state. Oracle replays the identical cents formulas in batch.
     Q("stream_ab_monitor",
       (s, d) => graft.streaming.AbMonitorStream.runToCompletion(s, d),
-      Some("""WITH g AS (SELECT
+      Some(s"""WITH g AS (SELECT
                   CASE WHEN CAST(concat('0x',
                       substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
                       AS BIGINT) % 2 = 0 THEN 'A' ELSE 'B' END AS variant,
@@ -7861,8 +7880,8 @@ object SparkEntry {
                     (CAST(nb AS DOUBLE) - 1) AS vb
                 FROM p)
               SELECT na AS n_a, nb AS n_b,
-                CASE WHEN abs(ma) < 8.0e9 THEN floor((ma) * 1e6 + 0.5) / 1e6 ELSE (ma) END AS mean_a, CASE WHEN abs(mb) < 8.0e9 THEN floor((mb) * 1e6 + 0.5) / 1e6 ELSE (mb) END AS mean_b,
-                CASE WHEN abs((ma - mb) / sqrt(va / na + vb / nb)) < 8.0e9 THEN floor(((ma - mb) / sqrt(va / na + vb / nb)) * 1e6 + 0.5) / 1e6 ELSE ((ma - mb) / sqrt(va / na + vb / nb)) END AS t_stat,
+                ${Portable.r6Sql("ma")} AS mean_a, ${Portable.r6Sql("mb")} AS mean_b,
+                ${Portable.r6Sql("(ma - mb) / sqrt(va / na + vb / nb)")} AS t_stat,
                 round(pow(va / na + vb / nb, 2) /
                   (pow(va / na, 2) / (na - 1) +
                    pow(vb / nb, 2) / (nb - 1)), 2) AS df
@@ -7917,10 +7936,10 @@ object SparkEntry {
           r6(regr_slope(col("lq"), col("lp"))).as("elasticity"),
           r6(regr_intercept(col("lq"), col("lp"))).as("intercept"),
           r6(regr_r2(col("lq"), col("lp"))).as("r2")),
-      Some("""SELECT l_returnflag, count(*) AS n,
-                CASE WHEN abs(regr_slope(ln(l_quantity), ln(l_extendedprice / l_quantity))) < 8.0e9 THEN floor((regr_slope(ln(l_quantity), ln(l_extendedprice / l_quantity))) * 1e6 + 0.5) / 1e6 ELSE (regr_slope(ln(l_quantity), ln(l_extendedprice / l_quantity))) END AS elasticity,
-                CASE WHEN abs(regr_intercept(ln(l_quantity), ln(l_extendedprice / l_quantity))) < 8.0e9 THEN floor((regr_intercept(ln(l_quantity), ln(l_extendedprice / l_quantity))) * 1e6 + 0.5) / 1e6 ELSE (regr_intercept(ln(l_quantity), ln(l_extendedprice / l_quantity))) END AS intercept,
-                CASE WHEN abs(regr_r2(ln(l_quantity), ln(l_extendedprice / l_quantity))) < 8.0e9 THEN floor((regr_r2(ln(l_quantity), ln(l_extendedprice / l_quantity))) * 1e6 + 0.5) / 1e6 ELSE (regr_r2(ln(l_quantity), ln(l_extendedprice / l_quantity))) END AS r2
+      Some(s"""SELECT l_returnflag, count(*) AS n,
+                ${Portable.r6Sql("regr_slope(ln(l_quantity), ln(l_extendedprice / l_quantity))")} AS elasticity,
+                ${Portable.r6Sql("regr_intercept(ln(l_quantity), ln(l_extendedprice / l_quantity))")} AS intercept,
+                ${Portable.r6Sql("regr_r2(ln(l_quantity), ln(l_extendedprice / l_quantity))")} AS r2
               FROM lineitem GROUP BY 1""")),
 
     // Near-dup threshold operating curve: the pair-similarity histogram
@@ -7931,10 +7950,12 @@ object SparkEntry {
     // dedup_minhash_lsh; the sweep costs one extra decile-sized
     // aggregate, not one run per candidate threshold.
     Q("dedup_threshold_sweep",
-      (s, d) => Caches.scoped(Dedup.minhashLshPairs(
-        withPlantedDups(Tables.documents(s, d)),
-        col("doc_id"), col("text"), threshold = 0.3)) { pairs =>
-        val b = pairs
+      // unscoped like dedup_minhash_lsh: the plan is lazy, so the
+      // shingle-base cache must live until the harness clearCache
+      (s, d) => {
+        val b = Dedup.minhashLshPairs(
+            withPlantedDups(Tables.documents(s, d)),
+            col("doc_id"), col("text"), threshold = 0.3)
           .groupBy(floor(col("jaccard") * 10).cast("int").as("bucket"))
           .agg(count(lit(1)).as("n_pairs"))
         b.withColumn("n_pairs_cum",
@@ -7943,7 +7964,7 @@ object SparkEntry {
       },
       Some(s"""WITH $plantedDocsSql,
               $minhashCtesSql,
-              b AS (SELECT CAST(floor(CASE WHEN abs(j) < 8.0e9 THEN floor((j) * 1e6 + 0.5) / 1e6 ELSE (j) END * 10) AS INTEGER)
+              b AS (SELECT CAST(floor(${Portable.r6Sql("j")} * 10) AS INTEGER)
                       AS bucket, count(*) AS n_pairs
                     FROM verified WHERE j >= 0.3 GROUP BY 1)
               SELECT bucket, n_pairs,
@@ -7987,16 +8008,10 @@ object SparkEntry {
           col("s").as("s_a"), col("n").as("n_a"))
         val b = daily.select(col("event_type"), col("day").as("day_b"),
           col("s").as("s_b"), col("n").as("n_b"))
-        a.join(b, Seq("event_type")).filter(col("day_a") < col("day_b"))
-          .groupBy(col("event_type"))
-          .agg(sum(signum(col("s_b") * col("n_a") - col("s_a") * col("n_b"))
-              .cast("long")).as("s_stat"),
-            count(lit(1)).as("n_pairs"))
-          .select(col("event_type"), col("s_stat"), col("n_pairs"),
-            r6(col("s_stat").cast("double") / col("n_pairs"))
-              .as("tau"))
+        kendallTau(
+          a.join(b, Seq("event_type")).filter(col("day_a") < col("day_b")))
       },
-      Some("""WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
+      Some(s"""WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
                   sum(CAST(round(value * 100, 0) AS BIGINT)) AS s,
                   count(*) AS n
                 FROM events GROUP BY 1, 2),
@@ -8004,11 +8019,7 @@ object SparkEntry {
                   sign(b.s * a.n - a.s * b.n) AS sgn
                 FROM daily a JOIN daily b
                   ON a.event_type = b.event_type AND a.day < b.day)
-              SELECT event_type,
-                CAST(sum(sgn) AS BIGINT) AS s_stat,
-                count(*) AS n_pairs,
-                CASE WHEN abs(CAST(sum(sgn) AS DOUBLE) / count(*)) < 8.0e9 THEN floor((CAST(sum(sgn) AS DOUBLE) / count(*)) * 1e6 + 0.5) / 1e6 ELSE (CAST(sum(sgn) AS DOUBLE) / count(*)) END AS tau
-              FROM p GROUP BY 1""")),
+              $mannKendallTauSql""")),
 
     // Single change-point detection per series: the day t maximizing
     // |S_t·T − t·S_T| (integer CUSUM deviation of the prefix sum from
@@ -8037,7 +8048,7 @@ object SparkEntry {
               (col("bigt").cast("double") * col("s_tot")))
               .as("dev_norm"))
       },
-      Some("""WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
+      Some(s"""WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
                   sum(CAST(round(value * 100, 0) AS BIGINT)) AS s
                 FROM events GROUP BY 1, 2),
               scored AS (SELECT event_type, day,
@@ -8057,7 +8068,7 @@ object SparkEntry {
                 FROM dev)
               SELECT event_type, day AS change_day,
                 CAST(dev AS BIGINT) AS max_dev,
-                CASE WHEN abs(CAST(dev AS DOUBLE) / (CAST(bigt AS DOUBLE) * s_tot)) < 8.0e9 THEN floor((CAST(dev AS DOUBLE) / (CAST(bigt AS DOUBLE) * s_tot)) * 1e6 + 0.5) / 1e6 ELSE (CAST(dev AS DOUBLE) / (CAST(bigt AS DOUBLE) * s_tot)) END AS dev_norm
+                ${Portable.r6Sql("CAST(dev AS DOUBLE) / (CAST(bigt AS DOUBLE) * s_tot)")} AS dev_norm
               FROM r WHERE rk = 1""")),
 
     // Cramér's V — the effect size chi2 alone doesn't give (χ² grows
@@ -8066,10 +8077,7 @@ object SparkEntry {
     // agg_chi2_independence.
     Q("agg_cramers_v",
       (s, d) => {
-        val cells = ev(s, d)
-          .groupBy(col("event_type"),
-            ScalarFns.dowPg(col("ts")).as("dow"))
-          .agg(count(lit(1)).cast("double").as("o"))
+        val cells = typeDowCells(s, d)
         val rowT = sum(col("o")).over(Window.partitionBy(col("event_type")))
         val colT = sum(col("o")).over(Window.partitionBy(col("dow")))
         val n = sum(col("o")).over(Window.partitionBy())
@@ -8082,17 +8090,14 @@ object SparkEntry {
                   countDistinct(col("dow")) - 1)))).as("v"),
             min(col("bign")).cast("long").as("n"))
       },
-      Some("""WITH cells AS (SELECT event_type,
-                  dayofweek(CAST(ts AS TIMESTAMP)) AS dow,
-                  CAST(count(*) AS DOUBLE) AS o
-                FROM events GROUP BY 1, 2),
+      Some(s"""WITH $typeDowCellsSql,
               e AS (SELECT event_type, dow, o,
                   sum(o) OVER (PARTITION BY event_type) *
                   sum(o) OVER (PARTITION BY dow) /
                   sum(o) OVER () AS e,
                   sum(o) OVER () AS bign
                 FROM cells)
-              SELECT CASE WHEN abs(sqrt( sum(pow(o - e, 2) / e) / (min(bign) * least(count(DISTINCT event_type) - 1, count(DISTINCT dow) - 1)))) < 8.0e9 THEN floor((sqrt( sum(pow(o - e, 2) / e) / (min(bign) * least(count(DISTINCT event_type) - 1, count(DISTINCT dow) - 1)))) * 1e6 + 0.5) / 1e6 ELSE (sqrt( sum(pow(o - e, 2) / e) / (min(bign) * least(count(DISTINCT event_type) - 1, count(DISTINCT dow) - 1)))) END AS v,
+              SELECT ${Portable.r6Sql("sqrt( sum(pow(o - e, 2) / e) / (min(bign) * least(count(DISTINCT event_type) - 1, count(DISTINCT dow) - 1)))")} AS v,
                 CAST(min(bign) AS BIGINT) AS n
               FROM e""")),
 
@@ -8176,7 +8181,7 @@ object SparkEntry {
             r6((col("p0") - col("pr")) / col("p0"))
               .as("removal_effect"))
       },
-      Some("""WITH seq AS (SELECT user_id, event_type,
+      Some(s"""WITH seq AS (SELECT user_id, event_type,
                   row_number() OVER (PARTITION BY user_id
                     ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
                 FROM events),
@@ -8228,8 +8233,8 @@ object SparkEntry {
                    WHERE i = '__start' AND j = '__conv') s
                   ON s.rm = v.rm),
               basep AS (SELECT pr FROM pc WHERE rm = 'none')
-              SELECT rm AS channel, CASE WHEN abs(pr) < 8.0e9 THEN floor((pr) * 1e6 + 0.5) / 1e6 ELSE (pr) END AS p_conv_without,
-                CASE WHEN abs(((SELECT pr FROM basep) - pr) / (SELECT pr FROM basep)) < 8.0e9 THEN floor((((SELECT pr FROM basep) - pr) / (SELECT pr FROM basep)) * 1e6 + 0.5) / 1e6 ELSE (((SELECT pr FROM basep) - pr) / (SELECT pr FROM basep)) END AS removal_effect
+              SELECT rm AS channel, ${Portable.r6Sql("pr")} AS p_conv_without,
+                ${Portable.r6Sql("((SELECT pr FROM basep) - pr) / (SELECT pr FROM basep)")} AS removal_effect
               FROM pc WHERE rm <> 'none'""")),
 
     // Causal-impact-lite: linear counterfactual per series. Fit
@@ -8259,7 +8264,7 @@ object SparkEntry {
             r6((sum(col("s")) - sum(col("a") + col("b") * col("t"))) /
               sum(col("a") + col("b") * col("t"))).as("rel_lift"))
       },
-      Some("""WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
+      Some(s"""WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
                   sum(CAST(round(value * 100, 0) AS BIGINT)) AS s
                 FROM events GROUP BY 1, 2),
               dt AS (SELECT event_type, day, s,
@@ -8273,7 +8278,7 @@ object SparkEntry {
               SELECT d.event_type, count(*) AS n_post_days,
                 CAST(sum(d.s) AS BIGINT) AS actual_cents,
                 round(sum(f.a + f.b * d.t), 2) AS pred_cents,
-                CASE WHEN abs((sum(d.s) - sum(f.a + f.b * d.t)) / sum(f.a + f.b * d.t)) < 8.0e9 THEN floor(((sum(d.s) - sum(f.a + f.b * d.t)) / sum(f.a + f.b * d.t)) * 1e6 + 0.5) / 1e6 ELSE ((sum(d.s) - sum(f.a + f.b * d.t)) / sum(f.a + f.b * d.t)) END AS rel_lift
+                ${Portable.r6Sql("(sum(d.s) - sum(f.a + f.b * d.t)) / sum(f.a + f.b * d.t)")} AS rel_lift
               FROM dt d JOIN fit f USING (event_type)
               WHERE d.day >= DATE '2024-01-16' GROUP BY 1""")),
 
@@ -8408,7 +8413,7 @@ object SparkEntry {
             r6(sum(coalesce(col("in_v"), lit(0))) /
               count(lit(1)).cast("double")).as("coverage"))
       },
-      Some("""WITH toks AS (SELECT doc_id, unnest(string_split_regex(
+      Some(raw"""WITH toks AS (SELECT doc_id, unnest(string_split_regex(
                     lower(trim(text)), '\s+')) AS tok FROM documents),
               t AS (SELECT doc_id, tok FROM toks WHERE tok <> ''),
               vocab AS (SELECT tok FROM (SELECT tok, count(*) AS c,
@@ -8418,7 +8423,7 @@ object SparkEntry {
               SELECT doc_id, count(*) AS n_tokens,
                 CAST(sum(CASE WHEN tok IN (SELECT tok FROM vocab)
                   THEN 1 ELSE 0 END) AS BIGINT) AS n_covered,
-                CASE WHEN abs(sum(CASE WHEN tok IN (SELECT tok FROM vocab) THEN 1 ELSE 0 END) * 1.0 / count(*)) < 8.0e9 THEN floor((sum(CASE WHEN tok IN (SELECT tok FROM vocab) THEN 1 ELSE 0 END) * 1.0 / count(*)) * 1e6 + 0.5) / 1e6 ELSE (sum(CASE WHEN tok IN (SELECT tok FROM vocab) THEN 1 ELSE 0 END) * 1.0 / count(*)) END AS coverage
+                ${Portable.r6Sql("sum(CASE WHEN tok IN (SELECT tok FROM vocab) THEN 1 ELSE 0 END) * 1.0 / count(*)")} AS coverage
               FROM t GROUP BY 1""")),
 
     // Pure-SQL surface, end-to-end: the same engine driven entirely
@@ -8507,17 +8512,10 @@ object SparkEntry {
           col("day").as("day_a"), col("s").as("s_a"), col("n").as("n_a"))
         val b = daily.select(col("event_type"), col("dow"),
           col("day").as("day_b"), col("s").as("s_b"), col("n").as("n_b"))
-        a.join(b, Seq("event_type", "dow"))
-          .filter(col("day_a") < col("day_b"))
-          .groupBy(col("event_type"))
-          .agg(sum(signum(col("s_b") * col("n_a") - col("s_a") * col("n_b"))
-              .cast("long")).as("s_stat"),
-            count(lit(1)).as("n_pairs"))
-          .select(col("event_type"), col("s_stat"), col("n_pairs"),
-            r6(col("s_stat").cast("double") / col("n_pairs"))
-              .as("tau"))
+        kendallTau(a.join(b, Seq("event_type", "dow"))
+          .filter(col("day_a") < col("day_b")))
       },
-      Some("""WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
+      Some(s"""WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
                   dayofweek(CAST(CAST(ts AS DATE) AS TIMESTAMP)) AS dow,
                   sum(CAST(round(value * 100, 0) AS BIGINT)) AS s,
                   count(*) AS n
@@ -8527,11 +8525,7 @@ object SparkEntry {
                 FROM daily a JOIN daily b
                   ON a.event_type = b.event_type AND a.dow = b.dow
                     AND a.day < b.day)
-              SELECT event_type,
-                CAST(sum(sgn) AS BIGINT) AS s_stat,
-                count(*) AS n_pairs,
-                CASE WHEN abs(CAST(sum(sgn) AS DOUBLE) / count(*)) < 8.0e9 THEN floor((CAST(sum(sgn) AS DOUBLE) / count(*)) * 1e6 + 0.5) / 1e6 ELSE (CAST(sum(sgn) AS DOUBLE) / count(*)) END AS tau
-              FROM p GROUP BY 1""")),
+              $mannKendallTauSql""")),
 
     // Herfindahl–Hirschman concentration index per day: Σ share² over
     // event types — the market-concentration readout (how dominated is
@@ -8548,13 +8542,13 @@ object SparkEntry {
           .agg(count(lit(1)).as("n_types"),
             r6(sum(pow(col("c") / col("t"), 2))).as("hhi"))
       },
-      Some("""WITH cells AS (SELECT CAST(ts AS DATE) AS day, event_type,
+      Some(s"""WITH cells AS (SELECT CAST(ts AS DATE) AS day, event_type,
                   CAST(count(*) AS DOUBLE) AS c
                 FROM events GROUP BY 1, 2),
               t AS (SELECT day, c,
                   sum(c) OVER (PARTITION BY day) AS t FROM cells)
               SELECT day, count(*) AS n_types,
-                CASE WHEN abs(sum(pow(c / t, 2))) < 8.0e9 THEN floor((sum(pow(c / t, 2))) * 1e6 + 0.5) / 1e6 ELSE (sum(pow(c / t, 2))) END AS hhi
+                ${Portable.r6Sql("sum(pow(c / t, 2))")} AS hhi
               FROM t GROUP BY 1""")),
   )
 
@@ -8583,7 +8577,7 @@ object SparkEntry {
           .agg(count(lit(1)).as("n_days"),
             r6(corr(col("rn"), col("rv"))).as("spearman"))
       },
-      Some("""WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
+      Some(s"""WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
                   count(*) AS n,
                   CAST(sum(CAST(floor(value*100+0.5) AS BIGINT)) AS DOUBLE)
                     AS cents
@@ -8597,7 +8591,7 @@ object SparkEntry {
                       / 2.0 AS rv
                 FROM daily)
               SELECT event_type, count(*) AS n_days,
-                CASE WHEN abs(corr(rn, rv)) < 8.0e9 THEN floor((corr(rn, rv)) * 1e6 + 0.5) / 1e6 ELSE (corr(rn, rv)) END AS spearman
+                ${Portable.r6Sql("corr(rn, rv)")} AS spearman
               FROM r GROUP BY 1""")),
 
     // Two-sample Kolmogorov–Smirnov distance between the value
@@ -8608,10 +8602,7 @@ object SparkEntry {
     // single-partition window at any size).
     Q("dq_ks_test",
       (s, d) => {
-        val sdf = ev(s, d)
-          .filter(col("event_type").isin("click", "view"))
-          .select(col("value"),
-            when(col("event_type") === "click", 1L).otherwise(0L).as("i1"))
+        val sdf = clickViewSample(s, d)
         val g = sdf.groupBy(col("value"))
           .agg(sum(col("i1")).as("c1"),
             (count(lit(1)) - sum(col("i1"))).as("c2"))
@@ -8627,7 +8618,7 @@ object SparkEntry {
             col("cum2") / col("n2")))).as("ks_d"))
           .select(col("ks_d"), col("n1"), col("n2"))
       },
-      Some("""WITH s AS (SELECT value,
+      Some(s"""WITH s AS (SELECT value,
                   CASE WHEN event_type='click' THEN 1 ELSE 0 END AS i1
                 FROM events WHERE event_type IN ('click', 'view')),
               n AS (SELECT sum(i1) AS n1, count(*) - sum(i1) AS n2 FROM s),
@@ -8636,7 +8627,7 @@ object SparkEntry {
               c AS (SELECT value,
                   sum(c1) OVER (ORDER BY value) AS cum1,
                   sum(c2) OVER (ORDER BY value) AS cum2 FROM g)
-              SELECT CASE WHEN abs(max(abs(cum1 * 1.0 / n.n1 - cum2 * 1.0 / n.n2))) < 8.0e9 THEN floor((max(abs(cum1 * 1.0 / n.n1 - cum2 * 1.0 / n.n2))) * 1e6 + 0.5) / 1e6 ELSE (max(abs(cum1 * 1.0 / n.n1 - cum2 * 1.0 / n.n2))) END AS ks_d,
+              SELECT ${Portable.r6Sql("max(abs(cum1 * 1.0 / n.n1 - cum2 * 1.0 / n.n2))")} AS ks_d,
                 CAST(n.n1 AS BIGINT) AS n1, CAST(n.n2 AS BIGINT) AS n2
               FROM c, n GROUP BY n.n1, n.n2""")),
 
@@ -8666,7 +8657,7 @@ object SparkEntry {
             r6((col("n_both") / col("cnt_a")) /
               (col("cnt_c") / col("total"))).as("lift"))
       },
-      Some("""WITH ut AS (SELECT DISTINCT user_id, event_type FROM events),
+      Some(s"""WITH ut AS (SELECT DISTINCT user_id, event_type FROM events),
               n AS (SELECT count(DISTINCT user_id) AS total FROM events),
               na AS (SELECT event_type, count(*) AS cnt FROM ut GROUP BY 1),
               pairs AS (SELECT a.event_type AS ante, b.event_type AS cons,
@@ -8675,9 +8666,9 @@ object SparkEntry {
                   AND a.event_type < b.event_type
                 GROUP BY 1, 2)
               SELECT p.ante, p.cons, p.n_both,
-                CASE WHEN abs(p.n_both * 1.0 / n.total) < 8.0e9 THEN floor((p.n_both * 1.0 / n.total) * 1e6 + 0.5) / 1e6 ELSE (p.n_both * 1.0 / n.total) END AS support,
-                CASE WHEN abs(p.n_both * 1.0 / x.cnt) < 8.0e9 THEN floor((p.n_both * 1.0 / x.cnt) * 1e6 + 0.5) / 1e6 ELSE (p.n_both * 1.0 / x.cnt) END AS confidence,
-                CASE WHEN abs((p.n_both * 1.0 / x.cnt) / (y.cnt * 1.0 / n.total)) < 8.0e9 THEN floor(((p.n_both * 1.0 / x.cnt) / (y.cnt * 1.0 / n.total)) * 1e6 + 0.5) / 1e6 ELSE ((p.n_both * 1.0 / x.cnt) / (y.cnt * 1.0 / n.total)) END
+                ${Portable.r6Sql("p.n_both * 1.0 / n.total")} AS support,
+                ${Portable.r6Sql("p.n_both * 1.0 / x.cnt")} AS confidence,
+                ${Portable.r6Sql("(p.n_both * 1.0 / x.cnt) / (y.cnt * 1.0 / n.total)")}
                   AS lift
               FROM pairs p JOIN na x ON x.event_type = p.ante
               JOIN na y ON y.event_type = p.cons, n""")),
@@ -8806,10 +8797,7 @@ object SparkEntry {
     // standard no-tie-correction normal approximation (documented).
     Q("agg_mannwhitney_u",
       (s, d) => {
-        val sdf = ev(s, d)
-          .filter(col("event_type").isin("click", "view"))
-          .select(col("value"),
-            when(col("event_type") === "click", 1L).otherwise(0L).as("i1"))
+        val sdf = clickViewSample(s, d)
         val g = sdf.groupBy(col("value"))
           .agg(sum(col("i1")).as("c1"), count(lit(1)).as("ct"))
         val withBefore = ScalableRank.globalPrefixSum(g, floor(col("value")),
@@ -8827,7 +8815,7 @@ object SparkEntry {
             col("n1") * col("n2") / 2) /
             sqrt(col("n1") * col("n2") * (col("n1") + col("n2") + 1) / 12)).as("z"))
       },
-      Some("""WITH s AS (SELECT value,
+      Some(s"""WITH s AS (SELECT value,
                   CASE WHEN event_type='click' THEN 1 ELSE 0 END AS i1
                 FROM events WHERE event_type IN ('click', 'view')),
               r AS (SELECT i1,
@@ -8838,8 +8826,8 @@ object SparkEntry {
                   CAST(sum(i1) AS DOUBLE) AS n1,
                   CAST(count(*) - sum(i1) AS DOUBLE) AS n2 FROM r)
               SELECT CAST(n1 AS BIGINT) AS n1, CAST(n2 AS BIGINT) AS n2,
-                CASE WHEN abs(r1 - n1*(n1+1)/2) < 8.0e9 THEN floor((r1 - n1*(n1+1)/2) * 1e6 + 0.5) / 1e6 ELSE (r1 - n1*(n1+1)/2) END AS u1,
-                CASE WHEN abs((r1 - n1*(n1+1)/2 - n1*n2/2) / sqrt(n1*n2*(n1+n2+1)/12)) < 8.0e9 THEN floor(((r1 - n1*(n1+1)/2 - n1*n2/2) / sqrt(n1*n2*(n1+n2+1)/12)) * 1e6 + 0.5) / 1e6 ELSE ((r1 - n1*(n1+1)/2 - n1*n2/2) / sqrt(n1*n2*(n1+n2+1)/12)) END AS z
+                ${Portable.r6Sql("r1 - n1*(n1+1)/2")} AS u1,
+                ${Portable.r6Sql("(r1 - n1*(n1+1)/2 - n1*n2/2) / sqrt(n1*n2*(n1+n2+1)/12)")} AS z
               FROM agg""")),
 
     // Two-feature ridge regression in closed form: the regularized
@@ -8868,7 +8856,7 @@ object SparkEntry {
           r6(col("my") - b1 * col("m1") - b2 * col("m2")).as("b0"),
           col("n"))
       },
-      Some("""WITH s AS (SELECT value AS y,
+      Some(s"""WITH s AS (SELECT value AS y,
                   CAST(hour(CAST(ts AS TIMESTAMP)) AS DOUBLE) AS x1,
                   CAST(dayofweek(CAST(ts AS TIMESTAMP)) AS DOUBLE) AS x2
                 FROM events),
@@ -8877,9 +8865,12 @@ object SparkEntry {
                   var_pop(x2) AS v2, avg(x1) AS m1, avg(x2) AS m2,
                   avg(y) AS my, count(*) AS n FROM s)
               SELECT
-                CASE WHEN abs(((c1y*(v2 + 1.0/n) - c2y*c12) / ((v1 + 1.0/n)*(v2 + 1.0/n) - c12*c12))) < 8.0e9 THEN floor((((c1y*(v2 + 1.0/n) - c2y*c12) / ((v1 + 1.0/n)*(v2 + 1.0/n) - c12*c12))) * 1e6 + 0.5) / 1e6 ELSE (((c1y*(v2 + 1.0/n) - c2y*c12) / ((v1 + 1.0/n)*(v2 + 1.0/n) - c12*c12))) END AS b1,
-                CASE WHEN abs(((c2y*(v1 + 1.0/n) - c1y*c12) / ((v1 + 1.0/n)*(v2 + 1.0/n) - c12*c12))) < 8.0e9 THEN floor((((c2y*(v1 + 1.0/n) - c1y*c12) / ((v1 + 1.0/n)*(v2 + 1.0/n) - c12*c12))) * 1e6 + 0.5) / 1e6 ELSE (((c2y*(v1 + 1.0/n) - c1y*c12) / ((v1 + 1.0/n)*(v2 + 1.0/n) - c12*c12))) END AS b2,
-                CASE WHEN abs(my - ((c1y*(v2 + 1.0/n) - c2y*c12) / ((v1 + 1.0/n)*(v2 + 1.0/n) - c12*c12)) * m1 - ((c2y*(v1 + 1.0/n) - c1y*c12) / ((v1 + 1.0/n)*(v2 + 1.0/n) - c12*c12)) * m2) < 8.0e9 THEN floor((my - ((c1y*(v2 + 1.0/n) - c2y*c12) / ((v1 + 1.0/n)*(v2 + 1.0/n) - c12*c12)) * m1 - ((c2y*(v1 + 1.0/n) - c1y*c12) / ((v1 + 1.0/n)*(v2 + 1.0/n) - c12*c12)) * m2) * 1e6 + 0.5) / 1e6 ELSE (my - ((c1y*(v2 + 1.0/n) - c2y*c12) / ((v1 + 1.0/n)*(v2 + 1.0/n) - c12*c12)) * m1 - ((c2y*(v1 + 1.0/n) - c1y*c12) / ((v1 + 1.0/n)*(v2 + 1.0/n) - c12*c12)) * m2) END AS b0,
+                ${Portable.r6Sql("((c1y*(v2 + 1.0/n) - c2y*c12) / ((v1 + 1.0/n)*(v2 + 1.0/n) - c12*c12))")} AS b1,
+                ${Portable.r6Sql("((c2y*(v1 + 1.0/n) - c1y*c12) / ((v1 + 1.0/n)*(v2 + 1.0/n) - c12*c12))")} AS b2,
+                ${Portable.r6Sql(
+                  "my - ((c1y*(v2 + 1.0/n) - c2y*c12) / ((v1 + 1.0/n)*(v2 + 1.0/n) - c12*c12)) " +
+                    "* m1 - ((c2y*(v1 + 1.0/n) - c1y*c12) / ((v1 + 1.0/n)*(v2 + 1.0/n) - " +
+                    "c12*c12)) * m2")} AS b0,
                 CAST(n AS BIGINT) AS n
               FROM m""")),
 
@@ -8900,11 +8891,11 @@ object SparkEntry {
             r6(greatest(lit(0.0), lit(1.0) -
               var_pop(col("value") - col("hmean")) / var_pop(col("value")))).as("strength"))
       },
-      Some("""WITH hm AS (SELECT event_type,
+      Some(s"""WITH hm AS (SELECT event_type,
                   hour(CAST(ts AS TIMESTAMP)) AS h, avg(value) AS hmean
                 FROM events GROUP BY 1, 2)
               SELECT e.event_type, count(*) AS n,
-                CASE WHEN abs(greatest(0.0, 1.0 - var_pop(e.value - hm.hmean) / var_pop(e.value))) < 8.0e9 THEN floor((greatest(0.0, 1.0 - var_pop(e.value - hm.hmean) / var_pop(e.value))) * 1e6 + 0.5) / 1e6 ELSE (greatest(0.0, 1.0 - var_pop(e.value - hm.hmean) / var_pop(e.value))) END AS strength
+                ${Portable.r6Sql("greatest(0.0, 1.0 - var_pop(e.value - hm.hmean) / var_pop(e.value))")} AS strength
               FROM events e JOIN hm ON hm.event_type = e.event_type
                 AND hm.h = hour(CAST(e.ts AS TIMESTAMP))
               GROUP BY 1""")),
@@ -8934,14 +8925,14 @@ object SparkEntry {
             r6(-sum((col("cnt") / col("n")) *
               log2(col("cnt") / col("n")))).as("entropy_bits"))
       },
-      Some("""WITH ch AS (SELECT doc_id, unnest(regexp_extract_all(
+      Some(raw"""WITH ch AS (SELECT doc_id, unnest(regexp_extract_all(
                     lower(text), '\S')) AS c
                 FROM documents),
               f AS (SELECT doc_id, c, count(*) AS cnt FROM ch GROUP BY 1, 2),
               t AS (SELECT doc_id, c, cnt,
                   sum(cnt) OVER (PARTITION BY doc_id) AS n FROM f)
               SELECT doc_id, CAST(max(n) AS BIGINT) AS n_chars_nospace,
-                CASE WHEN abs(-sum((cnt*1.0/n) * log2(cnt*1.0/n))) < 8.0e9 THEN floor((-sum((cnt*1.0/n) * log2(cnt*1.0/n))) * 1e6 + 0.5) / 1e6 ELSE (-sum((cnt*1.0/n) * log2(cnt*1.0/n))) END
+                ${Portable.r6Sql("-sum((cnt*1.0/n) * log2(cnt*1.0/n))")}
                   AS entropy_bits
               FROM t GROUP BY 1""")),
 
@@ -8951,11 +8942,7 @@ object SparkEntry {
     // (beat this before shipping a model) applied to the hourly series.
     Q("ml_seasonal_naive",
       (s, d) => {
-        val h = ev(s, d)
-          .groupBy(col("event_type"),
-            date_trunc("hour", col("ts")).as("hr"))
-          .agg((sum(floor(col("value") * 100 + lit(0.5)).cast("long"))
-            .cast("double") / 100.0).as("y"))
+        val h = hourlyCentsSeries(s, d)
         val w = Window.partitionBy(col("event_type")).orderBy(col("hr"))
         h.withColumn("pred", lag(col("y"), 24).over(w))
           .filter(col("pred").isNotNull)
@@ -8966,16 +8953,12 @@ object SparkEntry {
               abs(col("y") - col("pred")) / abs(col("y")))) * 100)
               .as("mape"))
       },
-      Some("""WITH h AS (SELECT event_type,
-                  date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hr,
-                  CAST(sum(CAST(floor(value*100+0.5) AS BIGINT)) AS DOUBLE)
-                    / 100.0 AS y
-                FROM events GROUP BY 1, 2),
+      Some(s"""WITH $hourlyCentsSql,
               p AS (SELECT event_type, y, lag(y, 24) OVER
                   (PARTITION BY event_type ORDER BY hr) AS pred FROM h)
               SELECT event_type, count(*) AS n,
-                CASE WHEN abs(avg(abs(y - pred))) < 8.0e9 THEN floor((avg(abs(y - pred))) * 1e6 + 0.5) / 1e6 ELSE (avg(abs(y - pred))) END AS mae,
-                CASE WHEN abs(avg(CASE WHEN abs(y) >= 10 THEN abs(y - pred)/abs(y) END) * 100) < 8.0e9 THEN floor((avg(CASE WHEN abs(y) >= 10 THEN abs(y - pred)/abs(y) END) * 100) * 1e6 + 0.5) / 1e6 ELSE (avg(CASE WHEN abs(y) >= 10 THEN abs(y - pred)/abs(y) END) * 100) END AS mape
+                ${Portable.r6Sql("avg(abs(y - pred))")} AS mae,
+                ${Portable.r6Sql("avg(CASE WHEN abs(y) >= 10 THEN abs(y - pred)/abs(y) END) * 100")} AS mape
               FROM p WHERE pred IS NOT NULL GROUP BY 1""")),
 
     // OCR/markup-noise heuristics per document: longest consonant run
@@ -8996,7 +8979,7 @@ object SparkEntry {
           r6(col("sym_ratio")).as("symbol_ratio"),
           when(col("max_consonant_run") >= 5 || col("sym_ratio") > 0.3, 1)
             .otherwise(0).as("is_gibberish")),
-      Some("""WITH m AS (SELECT doc_id,
+      Some(raw"""WITH m AS (SELECT doc_id,
                   coalesce((SELECT max(length(r)) FROM unnest(
                     regexp_extract_all(lower(text),
                       '[bcdfghjklmnpqrstvwxz]+')) AS u(r)), 0)
@@ -9006,7 +8989,7 @@ object SparkEntry {
                 FROM documents)
               SELECT doc_id,
                 CAST(max_consonant_run AS BIGINT) AS max_consonant_run,
-                CASE WHEN abs(sym_ratio) < 8.0e9 THEN floor((sym_ratio) * 1e6 + 0.5) / 1e6 ELSE (sym_ratio) END AS symbol_ratio,
+                ${Portable.r6Sql("sym_ratio")} AS symbol_ratio,
                 CASE WHEN max_consonant_run >= 5 OR sym_ratio > 0.3
                   THEN 1 ELSE 0 END AS is_gibberish
               FROM m""")),
@@ -9024,11 +9007,7 @@ object SparkEntry {
     // and ranked with one codegen'd lambda; partitions are per type.
     Q("win_rolling_pct_rank",
       (s, d) => {
-        val h = ev(s, d)
-          .groupBy(col("event_type"),
-            date_trunc("hour", col("ts")).as("hr"))
-          .agg((sum(floor(col("value") * 100 + lit(0.5)).cast("long"))
-            .cast("double") / 100.0).as("y"))
+        val h = hourlyCentsSeries(s, d)
         val w = Window.partitionBy(col("event_type")).orderBy(col("hr"))
           .rowsBetween(-23, Window.currentRow)
         h.select(col("event_type"), col("hr"),
@@ -9037,17 +9016,13 @@ object SparkEntry {
             size(collect_list(col("y")).over(w)).cast("double"))
             .as("pct_rank"))
       },
-      Some("""WITH h AS (SELECT event_type,
-                  date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hr,
-                  CAST(sum(CAST(floor(value*100+0.5) AS BIGINT)) AS DOUBLE)
-                    / 100.0 AS y
-                FROM events GROUP BY 1, 2),
+      Some(s"""WITH $hourlyCentsSql,
               l AS (SELECT event_type, hr, y,
                   list(y) OVER (PARTITION BY event_type ORDER BY hr
                     ROWS BETWEEN 23 PRECEDING AND CURRENT ROW) AS w
                 FROM h)
               SELECT event_type, hr,
-                CASE WHEN abs(len(list_filter(w, x -> x <= y)) * 1.0 / len(w)) < 8.0e9 THEN floor((len(list_filter(w, x -> x <= y)) * 1.0 / len(w)) * 1e6 + 0.5) / 1e6 ELSE (len(list_filter(w, x -> x <= y)) * 1.0 / len(w)) END
+                ${Portable.r6Sql("len(list_filter(w, x -> x <= y)) * 1.0 / len(w)")}
                   AS pct_rank
               FROM l""")),
 
@@ -9097,7 +9072,7 @@ object SparkEntry {
                 col("value") === col("hi"), 1).otherwise(0)) /
               count(lit(1)).cast("double")).as("saturation_share"))
       },
-      Some("""WITH b AS (SELECT event_type, min(value) AS lo,
+      Some(s"""WITH b AS (SELECT event_type, min(value) AS lo,
                   max(value) AS hi
                 FROM events GROUP BY 1)
               SELECT e.event_type, count(*) AS n,
@@ -9105,7 +9080,7 @@ object SparkEntry {
                   AS BIGINT) AS n_at_min,
                 CAST(sum(CASE WHEN e.value = b.hi THEN 1 ELSE 0 END)
                   AS BIGINT) AS n_at_max,
-                CASE WHEN abs(sum(CASE WHEN e.value = b.lo OR e.value = b.hi THEN 1 ELSE 0 END) * 1.0 / count(*)) < 8.0e9 THEN floor((sum(CASE WHEN e.value = b.lo OR e.value = b.hi THEN 1 ELSE 0 END) * 1.0 / count(*)) * 1e6 + 0.5) / 1e6 ELSE (sum(CASE WHEN e.value = b.lo OR e.value = b.hi THEN 1 ELSE 0 END) * 1.0 / count(*)) END
+                ${Portable.r6Sql("sum(CASE WHEN e.value = b.lo OR e.value = b.hi THEN 1 ELSE 0 END) * 1.0 / count(*)")}
                   AS saturation_share
               FROM events e JOIN b ON b.event_type = e.event_type
               GROUP BY 1""")),
@@ -9123,13 +9098,13 @@ object SparkEntry {
           r6(count(lit(1)) /
             countDistinct(to_date(col("ts"))).cast("double"))
             .as("events_per_active_day")),
-      Some("""SELECT user_id,
+      Some(s"""SELECT user_id,
                 CAST(date_diff('day', min(CAST(ts AS DATE)),
                   max(CAST(ts AS DATE))) + 1 AS BIGINT) AS lifespan_days,
                 CAST(count(DISTINCT CAST(ts AS DATE)) AS BIGINT)
                   AS active_days,
                 count(*) AS n_events,
-                CASE WHEN abs(count(*) * 1.0 / count(DISTINCT CAST(ts AS DATE))) < 8.0e9 THEN floor((count(*) * 1.0 / count(DISTINCT CAST(ts AS DATE))) * 1e6 + 0.5) / 1e6 ELSE (count(*) * 1.0 / count(DISTINCT CAST(ts AS DATE))) END
+                ${Portable.r6Sql("count(*) * 1.0 / count(DISTINCT CAST(ts AS DATE))")}
                   AS events_per_active_day
               FROM events GROUP BY 1""")),
 
@@ -9156,7 +9131,7 @@ object SparkEntry {
             sqrt(((col("n1") - 1) * col("v1") + (col("n2") - 1) * col("v2"))
               / (col("n1") + col("n2") - 2))).as("cohens_d"))
       },
-      Some("""WITH s AS (SELECT event_type, value,
+      Some(s"""WITH s AS (SELECT event_type, value,
                   CASE WHEN dayofweek(CAST(ts AS TIMESTAMP)) IN (0, 6)
                     THEN 1 ELSE 0 END AS we
                 FROM events),
@@ -9170,7 +9145,7 @@ object SparkEntry {
                 FROM s GROUP BY 1)
               SELECT event_type, CAST(n1 AS BIGINT) AS n_weekday,
                 CAST(n2 AS BIGINT) AS n_weekend,
-                CASE WHEN abs((m1 - m2) / sqrt(((n1-1)*v1 + (n2-1)*v2) / (n1 + n2 - 2))) < 8.0e9 THEN floor(((m1 - m2) / sqrt(((n1-1)*v1 + (n2-1)*v2) / (n1 + n2 - 2))) * 1e6 + 0.5) / 1e6 ELSE ((m1 - m2) / sqrt(((n1-1)*v1 + (n2-1)*v2) / (n1 + n2 - 2))) END AS cohens_d
+                ${Portable.r6Sql("(m1 - m2) / sqrt(((n1-1)*v1 + (n2-1)*v2) / (n1 + n2 - 2))")} AS cohens_d
               FROM m""")),
 
     // Poisson rate estimation per series: events/day with the
@@ -9196,17 +9171,17 @@ object SparkEntry {
               lit(1.959964) * sqrt(col("total")) / col("days"))
               .as("ci_hi"))
       },
-      Some("""WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
+      Some(s"""WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
                   count(*) AS n
                 FROM events GROUP BY 1, 2),
               m AS (SELECT event_type, CAST(sum(n) AS DOUBLE) AS total,
                   CAST(count(*) AS DOUBLE) AS days FROM d GROUP BY 1)
               SELECT event_type, CAST(total AS BIGINT) AS n_events,
                 CAST(days AS BIGINT) AS n_days,
-                CASE WHEN abs(total / days) < 8.0e9 THEN floor((total / days) * 1e6 + 0.5) / 1e6 ELSE (total / days) END AS rate_per_day,
-                CASE WHEN abs(total / days - 1.959964 * sqrt(total) / days) < 8.0e9 THEN floor((total / days - 1.959964 * sqrt(total) / days) * 1e6 + 0.5) / 1e6 ELSE (total / days - 1.959964 * sqrt(total) / days) END
+                ${Portable.r6Sql("total / days")} AS rate_per_day,
+                ${Portable.r6Sql("total / days - 1.959964 * sqrt(total) / days")}
                   AS ci_lo,
-                CASE WHEN abs(total / days + 1.959964 * sqrt(total) / days) < 8.0e9 THEN floor((total / days + 1.959964 * sqrt(total) / days) * 1e6 + 0.5) / 1e6 ELSE (total / days + 1.959964 * sqrt(total) / days) END
+                ${Portable.r6Sql("total / days + 1.959964 * sqrt(total) / days")}
                   AS ci_hi
               FROM m""")),
 
@@ -9232,17 +9207,17 @@ object SparkEntry {
             r6(sum(when(col("c") === 1, 1).otherwise(0)) /
               count(lit(1)).cast("double")).as("hapax_share"))
       },
-      Some("""WITH toks AS (SELECT doc_id, unnest(string_split_regex(
+      Some(raw"""WITH toks AS (SELECT doc_id, unnest(string_split_regex(
                     lower(trim(text)), '\s+')) AS tok FROM documents),
               t AS (SELECT doc_id, tok FROM toks WHERE tok <> ''),
               f AS (SELECT doc_id, tok, count(*) AS c
                 FROM t GROUP BY 1, 2)
               SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
                 count(*) AS n_types,
-                CASE WHEN abs(count(*) * 1.0 / sum(c)) < 8.0e9 THEN floor((count(*) * 1.0 / sum(c)) * 1e6 + 0.5) / 1e6 ELSE (count(*) * 1.0 / sum(c)) END AS ttr,
+                ${Portable.r6Sql("count(*) * 1.0 / sum(c)")} AS ttr,
                 CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT)
                   AS n_hapax,
-                CASE WHEN abs(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) * 1.0 / count(*)) < 8.0e9 THEN floor((sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) * 1.0 / count(*)) * 1e6 + 0.5) / 1e6 ELSE (sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) * 1.0 / count(*)) END AS hapax_share
+                ${Portable.r6Sql("sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) * 1.0 / count(*)")} AS hapax_share
               FROM f GROUP BY 1""")),
 
     // Streaming twin of the activity bitmap's per-user stage: ONE long
@@ -9352,7 +9327,7 @@ object SparkEntry {
               ((col("n1") + col("n2")) * (col("n1") + col("n2")) *
                 (col("n1") + col("n2") - 1)))).as("z"))
       },
-      Some("""WITH d AS (SELECT CAST(ts AS DATE) AS day,
+      Some(s"""WITH d AS (SELECT CAST(ts AS DATE) AS day,
                   CAST(sum(CAST(floor(value*100+0.5) AS BIGINT)) AS DOUBLE)
                     AS rev
                 FROM events GROUP BY 1),
@@ -9370,7 +9345,7 @@ object SparkEntry {
               SELECT CAST(n1 AS BIGINT) AS n_above,
                 CAST(n2 AS BIGINT) AS n_below,
                 CAST(runs AS BIGINT) AS n_runs,
-                CASE WHEN abs((runs - (2*n1*n2/(n1+n2) + 1)) / sqrt(2*n1*n2*(2*n1*n2 - n1 - n2) / ((n1+n2)*(n1+n2)*(n1+n2-1)))) < 8.0e9 THEN floor(((runs - (2*n1*n2/(n1+n2) + 1)) / sqrt(2*n1*n2*(2*n1*n2 - n1 - n2) / ((n1+n2)*(n1+n2)*(n1+n2-1)))) * 1e6 + 0.5) / 1e6 ELSE ((runs - (2*n1*n2/(n1+n2) + 1)) / sqrt(2*n1*n2*(2*n1*n2 - n1 - n2) / ((n1+n2)*(n1+n2)*(n1+n2-1)))) END AS z
+                ${Portable.r6Sql("(runs - (2*n1*n2/(n1+n2) + 1)) / sqrt(2*n1*n2*(2*n1*n2 - n1 - n2) / ((n1+n2)*(n1+n2)*(n1+n2-1)))")} AS z
               FROM agg""")),
 
     // Rolling-origin (expanding-window) CV folds over the day dim —
@@ -9430,14 +9405,19 @@ object SparkEntry {
               lit(84.6) * (syllables / greatest(words, lit(1))
                 .cast("double"))).as("flesch"))
       },
-      Some("""SELECT doc_id,
+      Some(raw"""SELECT doc_id,
                 CAST(len(regexp_extract_all(lower(trim(text)), '\S+'))
                   AS BIGINT) AS n_words,
                 CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1)
                   AS BIGINT) AS n_sentences,
                 CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))
                   AS BIGINT) AS n_syllables,
-                CASE WHEN abs(206.835 - 1.015 * (len(regexp_extract_all(lower(trim(text)), '\S+')) * 1.0 / greatest(len(regexp_extract_all(text, '[.!?]+')), 1)) - 84.6 * (len(regexp_extract_all(lower(text), '[aeiouy]+')) * 1.0 / greatest(len(regexp_extract_all(lower(trim(text)), '\S+')), 1))) < 8.0e9 THEN floor((206.835 - 1.015 * (len(regexp_extract_all(lower(trim(text)), '\S+')) * 1.0 / greatest(len(regexp_extract_all(text, '[.!?]+')), 1)) - 84.6 * (len(regexp_extract_all(lower(text), '[aeiouy]+')) * 1.0 / greatest(len(regexp_extract_all(lower(trim(text)), '\S+')), 1))) * 1e6 + 0.5) / 1e6 ELSE (206.835 - 1.015 * (len(regexp_extract_all(lower(trim(text)), '\S+')) * 1.0 / greatest(len(regexp_extract_all(text, '[.!?]+')), 1)) - 84.6 * (len(regexp_extract_all(lower(text), '[aeiouy]+')) * 1.0 / greatest(len(regexp_extract_all(lower(trim(text)), '\S+')), 1))) END AS flesch
+                ${Portable.r6Sql(
+                  """206.835 - 1.015 * (len(regexp_extract_all(lower(trim(text)), '\S+')) * """ +
+                    """1.0 / greatest(len(regexp_extract_all(text, '[.!?]+')), 1)) - 84.6 * """ +
+                    """(len(regexp_extract_all(lower(text), '[aeiouy]+')) * 1.0 / """ +
+                    """greatest(len(regexp_extract_all(lower(trim(text)), '\S+')), 1))""")}
+                  AS flesch
               FROM documents""")),
 
     // Quantile normalization: map every value to its mid-rank uniform
@@ -9468,13 +9448,13 @@ object SparkEntry {
           .join(table, Seq("event_type", "value"))
           .select(col("event_id"), col("q"))
       },
-      Some("""WITH r AS (SELECT event_id, event_type, value,
+      Some(s"""WITH r AS (SELECT event_id, event_type, value,
                   rank() OVER (PARTITION BY event_type ORDER BY value) +
                     (count(*) OVER (PARTITION BY event_type, value) - 1)
                       / 2.0 AS ar,
                   count(*) OVER (PARTITION BY event_type) AS n
                 FROM events)
-              SELECT event_id, CASE WHEN abs(ar / n) < 8.0e9 THEN floor((ar / n) * 1e6 + 0.5) / 1e6 ELSE (ar / n) END AS q
+              SELECT event_id, ${Portable.r6Sql("ar / n")} AS q
               FROM r""")),
 
     // Per-day softmax share across series of the exact-cents revenue
@@ -9493,13 +9473,13 @@ object SparkEntry {
             r6(exp(col("x") - col("mx")) /
               sum(exp(col("x") - col("mx"))).over(wd)).as("share"))
       },
-      Some("""WITH d AS (SELECT CAST(ts AS DATE) AS day, event_type,
+      Some(s"""WITH d AS (SELECT CAST(ts AS DATE) AS day, event_type,
                   sum(CAST(floor(value*100+0.5) AS BIGINT)) / 10000.0 AS x
                 FROM events GROUP BY 1, 2),
               m AS (SELECT day, event_type, x,
                   max(x) OVER (PARTITION BY day) AS mx FROM d)
               SELECT day, event_type,
-                CASE WHEN abs(exp(x - mx) / sum(exp(x - mx)) OVER (PARTITION BY day)) < 8.0e9 THEN floor((exp(x - mx) / sum(exp(x - mx)) OVER (PARTITION BY day)) * 1e6 + 0.5) / 1e6 ELSE (exp(x - mx) / sum(exp(x - mx)) OVER (PARTITION BY day)) END AS share
+                ${Portable.r6Sql("exp(x - mx) / sum(exp(x - mx)) OVER (PARTITION BY day)")} AS share
               FROM m""")),
   )
 
@@ -9549,17 +9529,10 @@ object SparkEntry {
     // fold/recursive-CTE exactness contract.
     Q("win_heikin_ashi",
       (s, d) => TimeSeries.heikinAshi(
-        ev(s, d).withColumn("__vc",
-          floor(col("value") * 100 + lit(0.5)).cast("long")),
+        evFloorCents(s, d),
         col("event_type"), col("ts"), col("__vc"), col("event_id"),
         keyName = "event_type"),
-      Some("""WITH RECURSIVE k AS (SELECT event_type,
-                  CAST(ts AS DATE) AS day,
-                  CAST(floor(value*100+0.5) AS BIGINT) AS vc,
-                  lpad(CAST(epoch_us(CAST(ts AS TIMESTAMP)) AS VARCHAR),
-                    20, '0') ||
-                    lpad(CAST(event_id AS VARCHAR), 20, '0') AS ok
-                FROM events),
+      Some(s"""WITH RECURSIVE $candleTicksSql,
               daily AS (SELECT event_type, day,
                   CAST(arg_min(vc, ok) AS DOUBLE) AS o,
                   CAST(max(vc) AS DOUBLE) AS h,
@@ -9577,10 +9550,10 @@ object SparkEntry {
                     (r.ho + r.hc) / 2.0 AS ho
                 FROM d JOIN rec r ON d.event_type = r.event_type
                   AND d.rn = r.rn + 1)
-              SELECT event_type, day, CASE WHEN abs(ho) < 8.0e9 THEN floor((ho) * 1e6 + 0.5) / 1e6 ELSE (ho) END AS ha_open,
-                CASE WHEN abs(hc) < 8.0e9 THEN floor((hc) * 1e6 + 0.5) / 1e6 ELSE (hc) END AS ha_close,
-                CASE WHEN abs(greatest(h, ho, hc)) < 8.0e9 THEN floor((greatest(h, ho, hc)) * 1e6 + 0.5) / 1e6 ELSE (greatest(h, ho, hc)) END AS ha_high,
-                CASE WHEN abs(least(l, ho, hc)) < 8.0e9 THEN floor((least(l, ho, hc)) * 1e6 + 0.5) / 1e6 ELSE (least(l, ho, hc)) END AS ha_low
+              SELECT event_type, day, ${Portable.r6Sql("ho")} AS ha_open,
+                ${Portable.r6Sql("hc")} AS ha_close,
+                ${Portable.r6Sql("greatest(h, ho, hc)")} AS ha_high,
+                ${Portable.r6Sql("least(l, ho, hc)")} AS ha_low
               FROM rec""")),
 
     // Hodges–Lehmann location estimate per series: the median of all
@@ -9590,13 +9563,9 @@ object SparkEntry {
     // exact interpolated percentile.
     Q("agg_hodges_lehmann",
       (s, d) => {
-        val daily = graft.ops.Guards.assertGroupSizeBound(
-          ev(s, d)
-            .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-            .agg((sum(floor(col("value") * 100 + lit(0.5)).cast("long"))
-              .cast("double") / 100.0).as("rev")),
-          graft.ops.Guards.MaxPairGrainRows,
-          "agg_hodges_lehmann", col("event_type"))
+        val daily = graft.ops.Guards.assertGroupSizeBound(dailyRevenue(s, d),
+          graft.ops.Guards.MaxPairGrainRows, "agg_hodges_lehmann",
+          col("event_type"))
         val a = daily.select(col("event_type"), col("day").as("da"),
           col("rev").as("ra"))
         val b = daily.select(col("event_type").as("et2"),
@@ -9607,15 +9576,12 @@ object SparkEntry {
           .agg(count(lit(1)).as("n_pairs"),
             r6(percentile(col("w"), lit(0.5))).as("hl_estimate"))
       },
-      Some("""WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
-                  CAST(sum(CAST(floor(value*100+0.5) AS BIGINT)) AS DOUBLE)
-                    / 100.0 AS rev
-                FROM events GROUP BY 1, 2),
+      Some(s"""WITH $dailyRevenueSql,
               p AS (SELECT a.event_type, (a.rev + b.rev)/2.0 AS w
                 FROM d a JOIN d b ON a.event_type = b.event_type
                   AND a.day <= b.day)
               SELECT event_type, count(*) AS n_pairs,
-                CASE WHEN abs(quantile_cont(w, 0.5)) < 8.0e9 THEN floor((quantile_cont(w, 0.5)) * 1e6 + 0.5) / 1e6 ELSE (quantile_cont(w, 0.5)) END AS hl_estimate
+                ${Portable.r6Sql("quantile_cont(w, 0.5)")} AS hl_estimate
               FROM p GROUP BY 1""")),
 
     // Wilcoxon signed-rank test of day-vs-same-day-last-week revenue:
@@ -9625,10 +9591,7 @@ object SparkEntry {
     // ranking happens on the day dim per series.
     Q("agg_wilcoxon_signed_rank",
       (s, d) => {
-        val daily = ev(s, d)
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg((sum(floor(col("value") * 100 + lit(0.5)).cast("long"))
-            .cast("double") / 100.0).as("rev"))
+        val daily = dailyRevenue(s, d)
         val wk = Window.partitionBy(col("event_type")).orderBy(col("day"))
         val diffs = daily
           .withColumn("diff", col("rev") - lag(col("rev"), 7).over(wk))
@@ -9647,10 +9610,7 @@ object SparkEntry {
             r6((col("wplus") - col("n") * (col("n") + 1) / 4) /
               sqrt(col("n") * (col("n") + 1) * (lit(2) * col("n") + 1) / 24)).as("z"))
       },
-      Some("""WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
-                  CAST(sum(CAST(floor(value*100+0.5) AS BIGINT)) AS DOUBLE)
-                    / 100.0 AS rev
-                FROM events GROUP BY 1, 2),
+      Some(s"""WITH $dailyRevenueSql,
               pair AS (SELECT event_type, rev - lag(rev, 7) OVER
                   (PARTITION BY event_type ORDER BY day) AS diff FROM d),
               nz AS (SELECT event_type, diff FROM pair
@@ -9665,8 +9625,8 @@ object SparkEntry {
                   sum(CASE WHEN diff > 0 THEN ar ELSE 0 END) AS wplus
                 FROM r GROUP BY 1)
               SELECT event_type, CAST(n AS BIGINT) AS n_pairs,
-                CASE WHEN abs(wplus) < 8.0e9 THEN floor((wplus) * 1e6 + 0.5) / 1e6 ELSE (wplus) END AS w_plus,
-                CASE WHEN abs((wplus - n*(n+1)/4) / sqrt(n*(n+1)*(2*n+1)/24)) < 8.0e9 THEN floor(((wplus - n*(n+1)/4) / sqrt(n*(n+1)*(2*n+1)/24)) * 1e6 + 0.5) / 1e6 ELSE ((wplus - n*(n+1)/4) / sqrt(n*(n+1)*(2*n+1)/24)) END
+                ${Portable.r6Sql("wplus")} AS w_plus,
+                ${Portable.r6Sql("(wplus - n*(n+1)/4) / sqrt(n*(n+1)*(2*n+1)/24)")}
                   AS z
               FROM agg""")),
 
@@ -9697,7 +9657,7 @@ object SparkEntry {
           .orderBy(col("burstiness").desc, col("tok"))
           .limit(20)
       },
-      Some("""WITH toks AS (SELECT doc_id, unnest(string_split_regex(
+      Some(raw"""WITH toks AS (SELECT doc_id, unnest(string_split_regex(
                     lower(trim(text)), '\s+')) AS tok FROM documents),
               t AS (SELECT doc_id, tok FROM toks WHERE tok <> ''),
               ndocs AS (SELECT count(DISTINCT doc_id) AS nd FROM t),
@@ -9712,7 +9672,7 @@ object SparkEntry {
                     AS burstiness
                 FROM st, ndocs WHERE df >= 5)
               SELECT tok, CAST(df AS BIGINT) AS doc_freq,
-                total AS n_occurrences, CASE WHEN abs(burstiness) < 8.0e9 THEN floor((burstiness) * 1e6 + 0.5) / 1e6 ELSE (burstiness) END AS burstiness
+                total AS n_occurrences, ${Portable.r6Sql("burstiness")} AS burstiness
               FROM b ORDER BY burstiness DESC, tok LIMIT 20""")),
 
     // Expected + maximum calibration error: the scalar rollup of the
@@ -9721,10 +9681,7 @@ object SparkEntry {
     // to gate a scorer on instead of eyeballing ten bins.
     Q("agg_ece",
       (s, d) => {
-        val t = ev(s, d).select(
-          graft.functions.PortableHash
-            .md5Long(col("event_id").cast("string"), 6).as("h"),
-          when(col("value") >= 100, 1L).otherwise(0L).as("lab"))
+        val t = hashedLabels(s, d)
         val b = t.groupBy(expr("(h * 10) div 16777216").cast("long")
             .as("bin"))
           .agg(count(lit(1)).as("n"),
@@ -9738,11 +9695,7 @@ object SparkEntry {
             r6(max(abs(col("acc") - col("conf")))).as("mce"))
           .select(col("total").as("n"), col("ece"), col("mce"))
       },
-      Some("""WITH t AS (SELECT
-                  CAST(concat('0x', substr(md5(CAST(event_id AS VARCHAR)),
-                    1, 6)) AS BIGINT) AS h,
-                  CASE WHEN value >= 100 THEN 1 ELSE 0 END AS lab
-                FROM events),
+      Some(s"""WITH $hashedLabelsSql,
               b AS (SELECT CAST((h * 10) // 16777216 AS BIGINT) AS bin,
                   count(*) AS n,
                   CAST(sum(lab) AS BIGINT) * 1.0 / count(*) AS acc,
@@ -9750,8 +9703,8 @@ object SparkEntry {
                 FROM t GROUP BY 1),
               tot AS (SELECT sum(n) AS total FROM b)
               SELECT CAST(tot.total AS BIGINT) AS n,
-                CASE WHEN abs(sum((b.n * 1.0 / tot.total) * abs(b.acc - b.conf))) < 8.0e9 THEN floor((sum((b.n * 1.0 / tot.total) * abs(b.acc - b.conf))) * 1e6 + 0.5) / 1e6 ELSE (sum((b.n * 1.0 / tot.total) * abs(b.acc - b.conf))) END AS ece,
-                CASE WHEN abs(max(abs(b.acc - b.conf))) < 8.0e9 THEN floor((max(abs(b.acc - b.conf))) * 1e6 + 0.5) / 1e6 ELSE (max(abs(b.acc - b.conf))) END AS mce
+                ${Portable.r6Sql("sum((b.n * 1.0 / tot.total) * abs(b.acc - b.conf))")} AS ece,
+                ${Portable.r6Sql("max(abs(b.acc - b.conf))")} AS mce
               FROM b, tot GROUP BY tot.total""")),
   )
 
@@ -9818,7 +9771,7 @@ object SparkEntry {
             r6(sqrt(avg(pow(log(col("h") / col("l")), 2)) /
               (lit(4) * log(lit(2.0))))).as("parkinson_vol"))
       },
-      Some("""WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
+      Some(s"""WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
                   date_trunc('week', CAST(ts AS TIMESTAMP)) AS wk,
                   CAST(max(CAST(floor(value*100+0.5) AS BIGINT)) AS DOUBLE)
                     AS h,
@@ -9827,7 +9780,7 @@ object SparkEntry {
                 FROM events GROUP BY 1, 2, 3)
               SELECT event_type, CAST(wk AS DATE) AS week,
                 count(*) AS n_days,
-                CASE WHEN abs(sqrt(avg(pow(ln(h / l), 2)) / (4 * ln(2)))) < 8.0e9 THEN floor((sqrt(avg(pow(ln(h / l), 2)) / (4 * ln(2)))) * 1e6 + 0.5) / 1e6 ELSE (sqrt(avg(pow(ln(h / l), 2)) / (4 * ln(2)))) END
+                ${Portable.r6Sql("sqrt(avg(pow(ln(h / l), 2)) / (4 * ln(2)))")}
                   AS parkinson_vol
               FROM d WHERE l > 0 GROUP BY 1, 2""")),
 
@@ -9838,10 +9791,7 @@ object SparkEntry {
     // day dim (a 7-way band self-join of a ~30-row-per-type table).
     Q("dq_ljung_box",
       (s, d) => {
-        val daily = ev(s, d)
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg((sum(floor(col("value") * 100 + lit(0.5)).cast("long"))
-            .cast("double") / 100.0).as("rev"))
+        val daily = dailyRevenue(s, d)
         val mu = daily.groupBy(col("event_type"))
           .agg(avg(col("rev")).as("mu"))
         val c = daily.join(broadcast(mu), Seq("event_type"))
@@ -9867,10 +9817,7 @@ object SparkEntry {
               sum(col("r") * col("r") / (col("n") - col("k"))))
               .as("q_stat"))
       },
-      Some("""WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
-                  CAST(sum(CAST(floor(value*100+0.5) AS BIGINT)) AS DOUBLE)
-                    / 100.0 AS rev
-                FROM events GROUP BY 1, 2),
+      Some(s"""WITH $dailyRevenueSql,
               c AS (SELECT d.event_type, d.day, d.rev - m2.mu AS e
                 FROM d JOIN (SELECT event_type, avg(rev) AS mu
                   FROM d GROUP BY 1) m2
@@ -9887,7 +9834,7 @@ object SparkEntry {
               rho AS (SELECT l.event_type, l.k, l.sk / den.s0 AS r, den.n
                 FROM lags l JOIN den ON den.event_type = l.event_type)
               SELECT event_type, CAST(max(n) AS BIGINT) AS n_days,
-                CASE WHEN abs(max(n) * (max(n) + 2) * sum(r * r / (n - k))) < 8.0e9 THEN floor((max(n) * (max(n) + 2) * sum(r * r / (n - k))) * 1e6 + 0.5) / 1e6 ELSE (max(n) * (max(n) + 2) * sum(r * r / (n - k))) END
+                ${Portable.r6Sql("max(n) * (max(n) + 2) * sum(r * r / (n - k))")}
                   AS q_stat
               FROM rho GROUP BY 1""")),
 
@@ -9935,7 +9882,7 @@ object SparkEntry {
                 FROM pe x JOIN pe y ON x.s = y.s AND x.id < y.id
                 GROUP BY 1, 2)
               SELECT id_a, id_b,
-                CASE WHEN abs(ov * 1.0 / least(a.n, b.n)) < 8.0e9 THEN floor((ov * 1.0 / least(a.n, b.n)) * 1e6 + 0.5) / 1e6 ELSE (ov * 1.0 / least(a.n, b.n)) END AS containment
+                ${Portable.r6Sql("ov * 1.0 / least(a.n, b.n)")} AS containment
               FROM ov JOIN sizes a ON a.id = ov.id_a
               JOIN sizes b ON b.id = ov.id_b
               WHERE least(a.n, b.n) > 0
@@ -9973,7 +9920,7 @@ object SparkEntry {
               .as("lincoln_petersen"),
             col("true_distinct"))
       },
-      Some("""WITH bounds AS (SELECT min(CAST(ts AS DATE)) AS d1,
+      Some(s"""WITH bounds AS (SELECT min(CAST(ts AS DATE)) AS d1,
                   max(CAST(ts AS DATE)) AS d2 FROM events),
               s1 AS (SELECT DISTINCT user_id FROM events, bounds
                 WHERE CAST(ts AS DATE) = bounds.d1),
@@ -9986,7 +9933,7 @@ object SparkEntry {
               SELECT CAST(co.n1 AS BIGINT) AS n1,
                 CAST(co.n2 AS BIGINT) AS n2,
                 CAST(co.m AS BIGINT) AS n_both,
-                CASE WHEN abs(co.n1 * 1.0 * co.n2 / co.m) < 8.0e9 THEN floor((co.n1 * 1.0 * co.n2 / co.m) * 1e6 + 0.5) / 1e6 ELSE (co.n1 * 1.0 * co.n2 / co.m) END AS lincoln_petersen,
+                ${Portable.r6Sql("co.n1 * 1.0 * co.n2 / co.m")} AS lincoln_petersen,
                 CAST(tru.total AS BIGINT) AS true_distinct
               FROM co, tru""")),
   )
@@ -10016,7 +9963,7 @@ object SparkEntry {
             .as("mi_bits"))
           .select(col("tot").cast("long").as("n"), col("mi_bits"))
       },
-      Some("""WITH c AS (SELECT event_type AS x,
+      Some(s"""WITH c AS (SELECT event_type AS x,
                   hour(CAST(ts AS TIMESTAMP)) AS y,
                   CAST(count(*) AS DOUBLE) AS n FROM events GROUP BY 1, 2),
               t AS (SELECT x, y, n,
@@ -10025,7 +9972,7 @@ object SparkEntry {
                   sum(n) OVER (PARTITION BY y) AS ny
                 FROM c)
               SELECT CAST(sum(n) AS BIGINT) AS n,
-                CASE WHEN abs(sum((n / tot) * log2((n * tot) / (nx * ny)))) < 8.0e9 THEN floor((sum((n / tot) * log2((n * tot) / (nx * ny)))) * 1e6 + 0.5) / 1e6 ELSE (sum((n / tot) * log2((n * tot) / (nx * ny)))) END
+                ${Portable.r6Sql("sum((n / tot) * log2((n * tot) / (nx * ny)))")}
                   AS mi_bits
               FROM t GROUP BY tot""")),
 
@@ -10059,7 +10006,7 @@ object SparkEntry {
             .as("js_divergence_bits"),
           count(lit(1)).as("n_vocab"))
       },
-      Some("""WITH toks AS (SELECT source, unnest(string_split_regex(
+      Some(raw"""WITH toks AS (SELECT source, unnest(string_split_regex(
                     lower(trim(text)), '\s+')) AS tok
                 FROM documents WHERE source IN ('src0', 'src1')),
               t AS (SELECT source, tok FROM toks WHERE tok <> ''),
@@ -10074,7 +10021,7 @@ object SparkEntry {
               n AS (SELECT sum(ca) AS na, sum(cb) AS nb FROM p),
               d AS (SELECT p.tok, p.ca / n.na AS pa, p.cb / n.nb AS pb,
                   (p.ca / n.na + p.cb / n.nb) / 2 AS m FROM p, n)
-              SELECT CASE WHEN abs(0.5 * sum(CASE WHEN pa > 0 THEN pa * log2(pa / m) ELSE 0 END) + 0.5 * sum(CASE WHEN pb > 0 THEN pb * log2(pb / m) ELSE 0 END)) < 8.0e9 THEN floor((0.5 * sum(CASE WHEN pa > 0 THEN pa * log2(pa / m) ELSE 0 END) + 0.5 * sum(CASE WHEN pb > 0 THEN pb * log2(pb / m) ELSE 0 END)) * 1e6 + 0.5) / 1e6 ELSE (0.5 * sum(CASE WHEN pa > 0 THEN pa * log2(pa / m) ELSE 0 END) + 0.5 * sum(CASE WHEN pb > 0 THEN pb * log2(pb / m) ELSE 0 END)) END
+              SELECT ${Portable.r6Sql("0.5 * sum(CASE WHEN pa > 0 THEN pa * log2(pa / m) ELSE 0 END) + 0.5 * sum(CASE WHEN pb > 0 THEN pb * log2(pb / m) ELSE 0 END)")}
                   AS js_divergence_bits,
                 CAST(count(*) AS BIGINT) AS n_vocab
               FROM d""")),
@@ -10096,13 +10043,13 @@ object SparkEntry {
               .as("gumbel_mu"),
             r6(beta).as("gumbel_beta"))
       },
-      Some("""WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
+      Some(s"""WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
                   CAST(max(CAST(floor(value*100+0.5) AS BIGINT)) AS DOUBLE)
                     / 100.0 AS mx
                 FROM events GROUP BY 1, 2)
               SELECT event_type, count(*) AS n_days,
-                CASE WHEN abs(avg(mx) - 0.5772156649015329 * (stddev_samp(mx) * sqrt(6) / pi())) < 8.0e9 THEN floor((avg(mx) - 0.5772156649015329 * (stddev_samp(mx) * sqrt(6) / pi())) * 1e6 + 0.5) / 1e6 ELSE (avg(mx) - 0.5772156649015329 * (stddev_samp(mx) * sqrt(6) / pi())) END AS gumbel_mu,
-                CASE WHEN abs(stddev_samp(mx) * sqrt(6) / pi()) < 8.0e9 THEN floor((stddev_samp(mx) * sqrt(6) / pi()) * 1e6 + 0.5) / 1e6 ELSE (stddev_samp(mx) * sqrt(6) / pi()) END AS gumbel_beta
+                ${Portable.r6Sql("avg(mx) - 0.5772156649015329 * (stddev_samp(mx) * sqrt(6) / pi())")} AS gumbel_mu,
+                ${Portable.r6Sql("stddev_samp(mx) * sqrt(6) / pi()")} AS gumbel_beta
               FROM d GROUP BY 1""")),
 
     // Last-digit uniformity audit: χ² of the final cent digit against
@@ -10124,14 +10071,14 @@ object SparkEntry {
               .as("chi2"))
           .select(col("n"), col("n_digits"), col("chi2"))
       },
-      Some("""WITH d AS (SELECT
+      Some(s"""WITH d AS (SELECT
                   CAST(floor(value*100+0.5) AS BIGINT) % 10 AS dig,
                   count(*) AS n FROM events GROUP BY 1),
               t AS (SELECT dig, CAST(n AS DOUBLE) AS n,
                   sum(n) OVER () / 10.0 AS e FROM d)
               SELECT CAST(sum(n) AS BIGINT) AS n,
                 count(*) AS n_digits,
-                CASE WHEN abs(sum(pow(n - e, 2) / e)) < 8.0e9 THEN floor((sum(pow(n - e, 2) / e)) * 1e6 + 0.5) / 1e6 ELSE (sum(pow(n - e, 2) / e)) END AS chi2
+                ${Portable.r6Sql("sum(pow(n - e, 2) / e)")} AS chi2
               FROM t GROUP BY e""")),
 
     // Gains table: cumulative capture and lift by score decile,
@@ -10141,10 +10088,7 @@ object SparkEntry {
     // on the 10-row decile dim.
     Q("agg_gains_table",
       (s, d) => {
-        val t = ev(s, d).select(
-          graft.functions.PortableHash
-            .md5Long(col("event_id").cast("string"), 6).as("h"),
-          when(col("value") >= 100, 1L).otherwise(0L).as("lab"))
+        val t = hashedLabels(s, d)
         val b = t.groupBy(expr("(h * 10) div 16777216").cast("long")
             .as("decile"))
           .agg(count(lit(1)).as("n"), sum(col("lab")).as("pos"))
@@ -10160,11 +10104,7 @@ object SparkEntry {
             (sum(col("pos")).over(wAll) /
               sum(col("n")).over(wAll).cast("double"))).as("cum_lift"))
       },
-      Some("""WITH t AS (SELECT
-                  CAST(concat('0x', substr(md5(CAST(event_id AS VARCHAR)),
-                    1, 6)) AS BIGINT) AS h,
-                  CASE WHEN value >= 100 THEN 1 ELSE 0 END AS lab
-                FROM events),
+      Some(s"""WITH $hashedLabelsSql,
               b AS (SELECT CAST((h * 10) // 16777216 AS BIGINT) AS decile,
                   count(*) AS n, CAST(sum(lab) AS BIGINT) AS pos
                 FROM t GROUP BY 1),
@@ -10174,8 +10114,8 @@ object SparkEntry {
                   sum(pos) OVER () AS tot_pos, sum(n) OVER () AS tot_n
                 FROM b)
               SELECT decile, n, pos,
-                CASE WHEN abs(cum_pos * 1.0 / tot_pos) < 8.0e9 THEN floor((cum_pos * 1.0 / tot_pos) * 1e6 + 0.5) / 1e6 ELSE (cum_pos * 1.0 / tot_pos) END AS cum_capture,
-                CASE WHEN abs((cum_pos * 1.0 / cum_n) / (tot_pos * 1.0 / tot_n)) < 8.0e9 THEN floor(((cum_pos * 1.0 / cum_n) / (tot_pos * 1.0 / tot_n)) * 1e6 + 0.5) / 1e6 ELSE ((cum_pos * 1.0 / cum_n) / (tot_pos * 1.0 / tot_n)) END AS cum_lift
+                ${Portable.r6Sql("cum_pos * 1.0 / tot_pos")} AS cum_capture,
+                ${Portable.r6Sql("(cum_pos * 1.0 / cum_n) / (tot_pos * 1.0 / tot_n)")} AS cum_lift
               FROM c""")),
   )
 
@@ -10213,7 +10153,7 @@ object SparkEntry {
               lit(3) * (col("n") + 1)).as("h_stat"))
           .select(col("n").cast("long").as("n"), col("k"), col("h_stat"))
       },
-      Some("""WITH r AS (SELECT event_type,
+      Some(s"""WITH r AS (SELECT event_type,
                   rank() OVER (ORDER BY value) +
                     (count(*) OVER (PARTITION BY value) - 1) / 2.0 AS ar
                 FROM events),
@@ -10222,7 +10162,7 @@ object SparkEntry {
                 FROM r GROUP BY 1),
               t AS (SELECT sum(nj) AS n FROM g)
               SELECT CAST(t.n AS BIGINT) AS n, count(*) AS k,
-                CASE WHEN abs(12.0 / (t.n * (t.n + 1)) * sum(rj * rj / nj) - 3 * (t.n + 1)) < 8.0e9 THEN floor((12.0 / (t.n * (t.n + 1)) * sum(rj * rj / nj) - 3 * (t.n + 1)) * 1e6 + 0.5) / 1e6 ELSE (12.0 / (t.n * (t.n + 1)) * sum(rj * rj / nj) - 3 * (t.n + 1)) END AS h_stat
+                ${Portable.r6Sql("12.0 / (t.n * (t.n + 1)) * sum(rj * rj / nj) - 3 * (t.n + 1)")} AS h_stat
               FROM g, t GROUP BY t.n""")),
 
     // Friedman test: rank the k series WITHIN each day block, then ask
@@ -10254,7 +10194,7 @@ object SparkEntry {
           .select(col("n").cast("long").as("n_blocks"),
             col("k").cast("long").as("k"), col("chi2_f"))
       },
-      Some("""WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
+      Some(s"""WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
                   CAST(sum(CAST(floor(value*100+0.5) AS BIGINT)) AS DOUBLE)
                     AS rev
                 FROM events GROUP BY 1, 2),
@@ -10270,7 +10210,7 @@ object SparkEntry {
                   CAST(count(*) AS DOUBLE) AS k FROM g)
               SELECT CAST(dims.n AS BIGINT) AS n_blocks,
                 CAST(dims.k AS BIGINT) AS k,
-                CASE WHEN abs(12.0 / (dims.n * dims.k * (dims.k + 1)) * sum(rj * rj) - 3 * dims.n * (dims.k + 1)) < 8.0e9 THEN floor((12.0 / (dims.n * dims.k * (dims.k + 1)) * sum(rj * rj) - 3 * dims.n * (dims.k + 1)) * 1e6 + 0.5) / 1e6 ELSE (12.0 / (dims.n * dims.k * (dims.k + 1)) * sum(rj * rj) - 3 * dims.n * (dims.k + 1)) END AS chi2_f
+                ${Portable.r6Sql("12.0 / (dims.n * dims.k * (dims.k + 1)) * sum(rj * rj) - 3 * dims.n * (dims.k + 1)")} AS chi2_f
               FROM g, dims GROUP BY dims.n, dims.k""")),
 
     // Shingle novelty per document: the share of a doc's 3-shingles
@@ -10300,7 +10240,7 @@ object SparkEntry {
             r6(coalesce(col("n_novel"), lit(0L))
               / col("n_shingles").cast("double")).as("novelty"))
       },
-      Some("""WITH base AS (SELECT doc_id AS id,
+      Some(raw"""WITH base AS (SELECT doc_id AS id,
                   list_distinct([array_to_string(toks[i+1:i+3], ' ')
                      for i in range(0, greatest(len(toks) - 3, 0) + 1)])
                     AS sh
@@ -10312,7 +10252,7 @@ object SparkEntry {
               SELECT ex.id AS doc_id, count(*) AS n_shingles,
                 CAST(sum(CASE WHEN fo.first_id = ex.id THEN 1 ELSE 0 END)
                   AS BIGINT) AS n_novel,
-                CASE WHEN abs(sum(CASE WHEN fo.first_id = ex.id THEN 1 ELSE 0 END) * 1.0 / count(*)) < 8.0e9 THEN floor((sum(CASE WHEN fo.first_id = ex.id THEN 1 ELSE 0 END) * 1.0 / count(*)) * 1e6 + 0.5) / 1e6 ELSE (sum(CASE WHEN fo.first_id = ex.id THEN 1 ELSE 0 END) * 1.0 / count(*)) END AS novelty
+                ${Portable.r6Sql("sum(CASE WHEN fo.first_id = ex.id THEN 1 ELSE 0 END) * 1.0 / count(*)")} AS novelty
               FROM ex JOIN fo ON fo.s = ex.s GROUP BY 1""")),
 
     // Reciprocal-rank fusion of two orderings (value-rank and
@@ -10336,7 +10276,7 @@ object SparkEntry {
             r6(col("rrf")).as("rrf_score"),
             col("rnk").cast("long").as("rnk"))
       },
-      Some("""WITH r AS (SELECT event_id, event_type,
+      Some(s"""WITH r AS (SELECT event_id, event_type,
                   rank() OVER (PARTITION BY event_type
                     ORDER BY value DESC, event_id) AS rv,
                   rank() OVER (PARTITION BY event_type
@@ -10348,7 +10288,7 @@ object SparkEntry {
                   rank() OVER (PARTITION BY event_type
                     ORDER BY rrf DESC, event_id) AS rk
                 FROM f)
-              SELECT event_type, event_id, CASE WHEN abs(rrf) < 8.0e9 THEN floor((rrf) * 1e6 + 0.5) / 1e6 ELSE (rrf) END AS rrf_score,
+              SELECT event_type, event_id, ${Portable.r6Sql("rrf")} AS rrf_score,
                 CAST(rk AS BIGINT) AS rnk
               FROM k WHERE rk <= 10""")),
 
@@ -10372,7 +10312,7 @@ object SparkEntry {
           .select(col("event_type"), col("n").cast("long").as("n_users"),
             col("theil_t"))
       },
-      Some("""WITH u AS (SELECT event_type, user_id,
+      Some(s"""WITH u AS (SELECT event_type, user_id,
                   CAST(sum(CAST(floor(value*100+0.5) AS BIGINT)) AS DOUBLE)
                     AS x
                 FROM events GROUP BY 1, 2),
@@ -10380,7 +10320,7 @@ object SparkEntry {
                   CAST(count(*) AS DOUBLE) AS n
                 FROM u GROUP BY 1)
               SELECT u.event_type, CAST(m.n AS BIGINT) AS n_users,
-                CASE WHEN abs(sum((u.x / (m.mu * m.n)) * ln(u.x / m.mu))) < 8.0e9 THEN floor((sum((u.x / (m.mu * m.n)) * ln(u.x / m.mu))) * 1e6 + 0.5) / 1e6 ELSE (sum((u.x / (m.mu * m.n)) * ln(u.x / m.mu))) END
+                ${Portable.r6Sql("sum((u.x / (m.mu * m.n)) * ln(u.x / m.mu))")}
                   AS theil_t
               FROM u JOIN m ON m.event_type = u.event_type
               WHERE u.x > 0 GROUP BY 1, 2""")),
@@ -10403,12 +10343,12 @@ object SparkEntry {
             floor(lit(1000) * col("nh") * col("sh") / col("tot"))
               .cast("long").as("neyman_n"))
       },
-      Some("""WITH s AS (SELECT event_type,
+      Some(s"""WITH s AS (SELECT event_type,
                   CAST(count(*) AS DOUBLE) AS nh,
                   stddev_samp(value) AS sh FROM events GROUP BY 1),
               t AS (SELECT sum(nh * sh) AS tot FROM s)
               SELECT event_type, CAST(nh AS BIGINT) AS stratum_size,
-                CASE WHEN abs(sh) < 8.0e9 THEN floor((sh) * 1e6 + 0.5) / 1e6 ELSE (sh) END AS stratum_std,
+                ${Portable.r6Sql("sh")} AS stratum_std,
                 CAST(floor(1000 * nh * sh / t.tot) AS BIGINT) AS neyman_n
               FROM s, t""")),
   )
@@ -10424,11 +10364,7 @@ object SparkEntry {
     // floor-form round.
     Q("win_stochastic_oscillator",
       (s, d) => {
-        val daily = TimeSeries.ohlc(
-          ev(s, d).withColumn("__vc",
-            floor(col("value") * 100 + lit(0.5)).cast("long")),
-          col("event_type"), to_date(col("ts")), col("ts"),
-          col("__vc").cast("double"), col("event_id"))
+        val daily = dailyCandles(s, d)
         val fr = Window.partitionBy(col("series")).orderBy(col("bucket"))
           .rowsBetween(-13, Window.currentRow)
         val w3 = Window.partitionBy(col("series")).orderBy(col("bucket"))
@@ -10447,17 +10383,7 @@ object SparkEntry {
             .orderBy(col("day")).rowsBetween(-2, Window.currentRow)))
             .as("pct_d"))
       },
-      Some("""WITH k AS (SELECT event_type, CAST(ts AS DATE) AS day,
-                  CAST(floor(value*100+0.5) AS BIGINT) AS vc,
-                  lpad(CAST(epoch_us(CAST(ts AS TIMESTAMP)) AS VARCHAR),
-                    20, '0') ||
-                    lpad(CAST(event_id AS VARCHAR), 20, '0') AS ok
-                FROM events),
-              daily AS (SELECT event_type, day,
-                  CAST(max(vc) AS DOUBLE) AS h,
-                  CAST(min(vc) AS DOUBLE) AS l,
-                  CAST(arg_max(vc, ok) AS DOUBLE) AS c
-                FROM k GROUP BY 1, 2),
+      Some(s"""WITH $dailyHlcSql,
               w AS (SELECT event_type, day, c,
                   min(l) OVER fr AS lo, max(h) OVER fr AS hi
                 FROM daily WINDOW fr AS (PARTITION BY event_type
@@ -10480,11 +10406,7 @@ object SparkEntry {
     // back to H−L (prevC := C) on both engines.
     Q("win_atr",
       (s, d) => {
-        val daily = TimeSeries.ohlc(
-          ev(s, d).withColumn("__vc",
-            floor(col("value") * 100 + lit(0.5)).cast("long")),
-          col("event_type"), to_date(col("ts")), col("ts"),
-          col("__vc").cast("double"), col("event_id"))
+        val daily = dailyCandles(s, d)
         val w = Window.partitionBy(col("series")).orderBy(col("bucket"))
         val prevC = coalesce(lag(col("close"), 1).over(w), col("close"))
         val tr = daily.select(col("series").as("event_type"),
@@ -10497,17 +10419,7 @@ object SparkEntry {
               .rowsBetween(-13, Window.currentRow)) * lit(1e6) +
             lit(0.5)) / lit(1e6)).as("atr14"))
       },
-      Some("""WITH k AS (SELECT event_type, CAST(ts AS DATE) AS day,
-                  CAST(floor(value*100+0.5) AS BIGINT) AS vc,
-                  lpad(CAST(epoch_us(CAST(ts AS TIMESTAMP)) AS VARCHAR),
-                    20, '0') ||
-                    lpad(CAST(event_id AS VARCHAR), 20, '0') AS ok
-                FROM events),
-              daily AS (SELECT event_type, day,
-                  CAST(max(vc) AS DOUBLE) AS h,
-                  CAST(min(vc) AS DOUBLE) AS l,
-                  CAST(arg_max(vc, ok) AS DOUBLE) AS c
-                FROM k GROUP BY 1, 2),
+      Some(s"""WITH $dailyHlcSql,
               tr AS (SELECT event_type, day,
                   greatest(h - l,
                     abs(h - coalesce(lag(c) OVER w, c)),
@@ -10544,7 +10456,7 @@ object SparkEntry {
               (sum(log(col("x") / col("xk"))) / count(lit(1))))
               .as("hill_alpha"))
       },
-      Some("""WITH u AS (SELECT event_type, user_id,
+      Some(s"""WITH u AS (SELECT event_type, user_id,
                   CAST(sum(CAST(floor(value*100+0.5) AS BIGINT)) AS DOUBLE)
                     AS x
                 FROM events GROUP BY 1, 2),
@@ -10554,7 +10466,7 @@ object SparkEntry {
                 FROM u WHERE x > 0),
               kmin AS (SELECT event_type, x AS xk FROM r WHERE rk = 51)
               SELECT r.event_type, count(*) AS k,
-                CASE WHEN abs(1.0 / (sum(ln(r.x / kmin.xk)) / count(*))) < 8.0e9 THEN floor((1.0 / (sum(ln(r.x / kmin.xk)) / count(*))) * 1e6 + 0.5) / 1e6 ELSE (1.0 / (sum(ln(r.x / kmin.xk)) / count(*))) END
+                ${Portable.r6Sql("1.0 / (sum(ln(r.x / kmin.xk)) / count(*))")}
                   AS hill_alpha
               FROM r JOIN kmin ON kmin.event_type = r.event_type
               WHERE r.rk <= 50 GROUP BY 1""")),
@@ -10584,7 +10496,7 @@ object SparkEntry {
           r6((col("agree") / col("n") - pe) / (lit(1) - pe))
             .as("kappa"))
       },
-      Some("""WITH t AS (SELECT
+      Some(s"""WITH t AS (SELECT
                   CASE WHEN value >= 50 THEN 1 ELSE 0 END AS a,
                   CASE WHEN CAST(concat('0x', substr(md5(
                       CAST(event_id AS VARCHAR)), 1, 6)) AS BIGINT)
@@ -10596,9 +10508,9 @@ object SparkEntry {
                   CAST(sum(b) AS DOUBLE) AS nb
                 FROM t)
               SELECT CAST(n AS BIGINT) AS n,
-                CASE WHEN abs(agree / n) < 8.0e9 THEN floor((agree / n) * 1e6 + 0.5) / 1e6 ELSE (agree / n) END AS p_observed,
-                CASE WHEN abs((na*nb + (n-na)*(n-nb)) / (n*n)) < 8.0e9 THEN floor(((na*nb + (n-na)*(n-nb)) / (n*n)) * 1e6 + 0.5) / 1e6 ELSE ((na*nb + (n-na)*(n-nb)) / (n*n)) END AS p_expected,
-                CASE WHEN abs((agree/n - (na*nb + (n-na)*(n-nb))/(n*n)) / (1 - (na*nb + (n-na)*(n-nb))/(n*n))) < 8.0e9 THEN floor(((agree/n - (na*nb + (n-na)*(n-nb))/(n*n)) / (1 - (na*nb + (n-na)*(n-nb))/(n*n))) * 1e6 + 0.5) / 1e6 ELSE ((agree/n - (na*nb + (n-na)*(n-nb))/(n*n)) / (1 - (na*nb + (n-na)*(n-nb))/(n*n))) END AS kappa
+                ${Portable.r6Sql("agree / n")} AS p_observed,
+                ${Portable.r6Sql("(na*nb + (n-na)*(n-nb)) / (n*n)")} AS p_expected,
+                ${Portable.r6Sql("(agree/n - (na*nb + (n-na)*(n-nb))/(n*n)) / (1 - (na*nb + (n-na)*(n-nb))/(n*n))")} AS kappa
               FROM c""")),
 
     // Copeland tournament score: each day "votes" by daily revenue,
@@ -10634,7 +10546,7 @@ object SparkEntry {
           .agg(r6(sum(col("w"))).as("copeland_score"),
             count(lit(1)).as("n_opponents"))
       },
-      Some("""WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
+      Some(s"""WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
                   sum(CAST(floor(value*100+0.5) AS BIGINT)) AS rev
                 FROM events GROUP BY 1, 2),
               p AS (SELECT a.event_type AS x, b.event_type AS y,
@@ -10649,7 +10561,7 @@ object SparkEntry {
                 SELECT y, CASE WHEN net < 0 THEN 1.0
                   WHEN net = 0 THEN 0.5 ELSE 0 END FROM p)
               SELECT t AS event_type,
-                CASE WHEN abs(CAST(sum(w) AS DOUBLE)) < 8.0e9 THEN floor((CAST(sum(w) AS DOUBLE)) * 1e6 + 0.5) / 1e6 ELSE (CAST(sum(w) AS DOUBLE)) END AS copeland_score,
+                ${Portable.r6Sql("CAST(sum(w) AS DOUBLE)")} AS copeland_score,
                 count(*) AS n_opponents
               FROM s GROUP BY 1""")),
   )
@@ -10673,11 +10585,7 @@ object SparkEntry {
         // checkpoint history.
         Graph.clusteringCoefficient(edges.localCheckpoint(false))
       },
-      Some("""WITH li AS (SELECT DISTINCT l_orderkey AS ok,
-                    l_partkey AS pk FROM lineitem),
-              e AS (SELECT x.pk AS a, y.pk AS b
-                FROM li x JOIN li y ON x.ok = y.ok AND x.pk < y.pk
-                GROUP BY 1, 2 HAVING count(*) >= 2),
+      Some(s"""WITH $coOrderEdgesSql,
               deg AS (SELECT n, count(*) AS d FROM (
                   SELECT a AS n FROM e UNION ALL SELECT b FROM e)
                 GROUP BY 1),
@@ -10689,7 +10597,7 @@ object SparkEntry {
               SELECT CAST((SELECT count(*) FROM e) AS BIGINT) AS n_edges,
                 CAST(wedges.w AS BIGINT) AS n_wedges,
                 CAST(tri.t AS BIGINT) AS n_triangles,
-                CASE WHEN abs(3.0 * tri.t / wedges.w) < 8.0e9 THEN floor((3.0 * tri.t / wedges.w) * 1e6 + 0.5) / 1e6 ELSE (3.0 * tri.t / wedges.w) END AS clustering_coeff
+                ${Portable.r6Sql("3.0 * tri.t / wedges.w")} AS clustering_coeff
               FROM wedges, tri""")),
 
     // Degree histogram of the same graph — the first thing anyone
@@ -10700,11 +10608,7 @@ object SparkEntry {
         .select(explode(array(col("a"), col("b"))).as("n"))
         .groupBy(col("n")).agg(count(lit(1)).as("degree"))
         .groupBy(col("degree")).agg(count(lit(1)).as("n_nodes")),
-      Some("""WITH li AS (SELECT DISTINCT l_orderkey AS ok,
-                    l_partkey AS pk FROM lineitem),
-              e AS (SELECT x.pk AS a, y.pk AS b
-                FROM li x JOIN li y ON x.ok = y.ok AND x.pk < y.pk
-                GROUP BY 1, 2 HAVING count(*) >= 2),
+      Some(s"""WITH $coOrderEdgesSql,
               deg AS (SELECT n, count(*) AS degree FROM (
                   SELECT a AS n FROM e UNION ALL SELECT b FROM e)
                 GROUP BY 1)
@@ -10732,7 +10636,7 @@ object SparkEntry {
             r6((col("s") - col("mu")) / (col("s") + col("mu")))
               .as("burstiness"))
       },
-      Some("""WITH g AS (SELECT user_id,
+      Some(s"""WITH g AS (SELECT user_id,
                   epoch_us(CAST(ts AS TIMESTAMP)) -
                     lag(epoch_us(CAST(ts AS TIMESTAMP))) OVER
                       (PARTITION BY user_id
@@ -10743,7 +10647,7 @@ object SparkEntry {
                 FROM g WHERE gap IS NOT NULL GROUP BY 1
                 HAVING count(*) >= 2)
               SELECT user_id, n_gaps,
-                CASE WHEN abs((s - mu) / (s + mu)) < 8.0e9 THEN floor(((s - mu) / (s + mu)) * 1e6 + 0.5) / 1e6 ELSE ((s - mu) / (s + mu)) END AS burstiness
+                ${Portable.r6Sql("(s - mu) / (s + mu)")} AS burstiness
               FROM m""")),
 
     // Floor-trader pivot points from the PREVIOUS day's candle
@@ -10752,11 +10656,7 @@ object SparkEntry {
     // inputs). Exact integer candles, one lag window.
     Q("win_pivot_points",
       (s, d) => {
-        val daily = TimeSeries.ohlc(
-          ev(s, d).withColumn("__vc",
-            floor(col("value") * 100 + lit(0.5)).cast("long")),
-          col("event_type"), to_date(col("ts")), col("ts"),
-          col("__vc").cast("double"), col("event_id"))
+        val daily = dailyCandles(s, d)
         val w = Window.partitionBy(col("series")).orderBy(col("bucket"))
         val p = daily.select(col("series").as("event_type"),
             col("bucket").as("day"),
@@ -10772,28 +10672,18 @@ object SparkEntry {
           r6(piv + (col("ph") - col("pl"))).as("r2"),
           r6(piv - (col("ph") - col("pl"))).as("s2"))
       },
-      Some("""WITH k AS (SELECT event_type, CAST(ts AS DATE) AS day,
-                  CAST(floor(value*100+0.5) AS BIGINT) AS vc,
-                  lpad(CAST(epoch_us(CAST(ts AS TIMESTAMP)) AS VARCHAR),
-                    20, '0') ||
-                    lpad(CAST(event_id AS VARCHAR), 20, '0') AS ok
-                FROM events),
-              daily AS (SELECT event_type, day,
-                  CAST(max(vc) AS DOUBLE) AS h,
-                  CAST(min(vc) AS DOUBLE) AS l,
-                  CAST(arg_max(vc, ok) AS DOUBLE) AS c
-                FROM k GROUP BY 1, 2),
+      Some(s"""WITH $dailyHlcSql,
               prev AS (SELECT event_type, day,
                   lag(h) OVER w AS ph, lag(l) OVER w AS pl,
                   lag(c) OVER w AS pc
                 FROM daily WINDOW w AS (PARTITION BY event_type
                   ORDER BY day))
               SELECT event_type, day,
-                CASE WHEN abs((ph + pl + pc) / 3) < 8.0e9 THEN floor(((ph + pl + pc) / 3) * 1e6 + 0.5) / 1e6 ELSE ((ph + pl + pc) / 3) END AS pivot,
-                CASE WHEN abs(2 * (ph + pl + pc) / 3 - pl) < 8.0e9 THEN floor((2 * (ph + pl + pc) / 3 - pl) * 1e6 + 0.5) / 1e6 ELSE (2 * (ph + pl + pc) / 3 - pl) END AS r1,
-                CASE WHEN abs(2 * (ph + pl + pc) / 3 - ph) < 8.0e9 THEN floor((2 * (ph + pl + pc) / 3 - ph) * 1e6 + 0.5) / 1e6 ELSE (2 * (ph + pl + pc) / 3 - ph) END AS s1,
-                CASE WHEN abs((ph + pl + pc) / 3 + (ph - pl)) < 8.0e9 THEN floor(((ph + pl + pc) / 3 + (ph - pl)) * 1e6 + 0.5) / 1e6 ELSE ((ph + pl + pc) / 3 + (ph - pl)) END AS r2,
-                CASE WHEN abs((ph + pl + pc) / 3 - (ph - pl)) < 8.0e9 THEN floor(((ph + pl + pc) / 3 - (ph - pl)) * 1e6 + 0.5) / 1e6 ELSE ((ph + pl + pc) / 3 - (ph - pl)) END AS s2
+                ${Portable.r6Sql("(ph + pl + pc) / 3")} AS pivot,
+                ${Portable.r6Sql("2 * (ph + pl + pc) / 3 - pl")} AS r1,
+                ${Portable.r6Sql("2 * (ph + pl + pc) / 3 - ph")} AS s1,
+                ${Portable.r6Sql("(ph + pl + pc) / 3 + (ph - pl)")} AS r2,
+                ${Portable.r6Sql("(ph + pl + pc) / 3 - (ph - pl)")} AS s2
               FROM prev WHERE ph IS NOT NULL""")),
   )
 
@@ -10808,8 +10698,7 @@ object SparkEntry {
     // series.
     Q("win_obv",
       (s, d) => {
-        val k = ev(s, d).withColumn("__vc",
-          floor(col("value") * 100 + lit(0.5)).cast("long"))
+        val k = evFloorCents(s, d)
         val okey = concat(
           lpad(unix_micros(col("ts").cast("timestamp")).cast("string"),
             20, "0"),
@@ -10961,11 +10850,7 @@ object SparkEntry {
     // floor-form round only on the midline division.
     Q("win_donchian",
       (s, d) => {
-        val daily = TimeSeries.ohlc(
-          ev(s, d).withColumn("__vc",
-            floor(col("value") * 100 + lit(0.5)).cast("long")),
-          col("event_type"), to_date(col("ts")), col("ts"),
-          col("__vc").cast("double"), col("event_id"))
+        val daily = dailyCandles(s, d)
         val fr = Window.partitionBy(col("series")).orderBy(col("bucket"))
           .rowsBetween(-13, Window.currentRow)
         daily.select(col("series").as("event_type"),
@@ -10975,17 +10860,7 @@ object SparkEntry {
           (floor((max(col("high")).over(fr) + min(col("low")).over(fr)) /
             2 * lit(1e6) + lit(0.5)) / lit(1e6)).as("channel_mid"))
       },
-      Some("""WITH k AS (SELECT event_type, CAST(ts AS DATE) AS day,
-                  CAST(floor(value*100+0.5) AS BIGINT) AS vc,
-                  lpad(CAST(epoch_us(CAST(ts AS TIMESTAMP)) AS VARCHAR),
-                    20, '0') ||
-                    lpad(CAST(event_id AS VARCHAR), 20, '0') AS ok
-                FROM events),
-              daily AS (SELECT event_type, day,
-                  CAST(max(vc) AS DOUBLE) AS h,
-                  CAST(min(vc) AS DOUBLE) AS l,
-                  CAST(arg_max(vc, ok) AS DOUBLE) AS c
-                FROM k GROUP BY 1, 2)
+      Some(s"""WITH $dailyHlcSql
               SELECT event_type, day,
                 max(h) OVER fr AS channel_high,
                 min(l) OVER fr AS channel_low,

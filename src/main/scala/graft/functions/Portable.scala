@@ -34,8 +34,8 @@ import org.apache.spark.sql.functions._
   * SparkEntry.scala header): rounding is half-toward-+infinity, not
   * HALF_UP — negatives differ at exact `.5e-6` boundaries by design.
   *
-  * The oracle twin of every `r6` call must use [[r6Sql]]'s expansion —
-  * tools/retire_round6.py rewrote both sides in lockstep (round 16).
+  * The oracle twin of every `r6` call calls [[r6Sql]] (and of every
+  * `r4` call, [[r4Sql]]), so both engines read one definition.
   */
 object Portable {
 

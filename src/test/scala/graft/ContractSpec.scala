@@ -39,4 +39,8 @@ class ContractSpec extends SparkSpecBase {
     }
     assert(broken.isEmpty, s"broken queries:\n${broken.mkString("\n")}")
   }
+
+  test("the flagship entry returns rows") {
+    assert(SparkEntry.entry(spark).count() > 0)
+  }
 }
