@@ -1,8 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{FileSourceMetadataAttribute, RowOrdering}
+import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Scale-safe global row numbering / positional operators.
   *
@@ -17,6 +23,9 @@ import org.apache.spark.sql.functions._
   *
   * Requires `bucket` to be monotone in `orderCols` (a coarse prefix of the
   * global ordering), which holds for any time-bucket of a time ordering.
+  * [[downsampleStride]] needs this only on its fallback: when the input's
+  * files are proven stored in the global order it numbers rows from the
+  * scan and ignores `bucket`.
   */
 object ScalableRank {
 
@@ -217,17 +226,124 @@ object ScalableRank {
   /** Stride downsample to at most `maxPoints` rows (reference
     * `src/api/main.py:1038-1045`): step = ceil(n / maxPoints), keep rows at
     * global positions 0, step, 2·step, … of the given ordering.
+    *
+    * When [[storedOrderBases]] proves that `df`'s parquet files hold its
+    * rows in that order, the position is the file's base plus
+    * `_metadata.row_index` and the result is a narrow filter over `df`
+    * (one proof job, no exchange) — the reference serves this read from a
+    * time-ordered hypertable, so row order costs it nothing either.
+    * Otherwise it falls back to the bucket-offset [[globalRowNumber]].
+    * Both paths return `df`'s columns and, for a total order, the same
+    * rows.
     */
   def downsampleStride(
       df: DataFrame,
       bucket: Column,
       orderCols: Seq[Column],
       maxPoints: Int): DataFrame = {
-    val rn = "__graft_rn"
-    val numbered = globalRowNumber(df, bucket, orderCols, rn, Some("__graft_n"))
-    numbered
-      .withColumn("__graft_step", ceil(col("__graft_n") / lit(maxPoints)).cast("long"))
-      .filter(pmod(col(rn) - 1, col("__graft_step")) === 0)
-      .drop(rn, "__graft_n", "__graft_step")
+    require(maxPoints >= 1, s"downsampleStride needs maxPoints >= 1, got $maxPoints")
+    storedOrderBases(df, orderCols) match {
+      case Some((bases, n)) =>
+        val step = (n - 1) / maxPoints + 1
+        df.filter(pmod(typedLit(bases).apply(FilePath) + RowIndex, lit(step)) === 0)
+      case None =>
+        val rn = "__graft_rn"
+        val numbered = globalRowNumber(df, bucket, orderCols, rn, Some("__graft_n"))
+        numbered
+          .withColumn("__graft_step", ceil(col("__graft_n") / lit(maxPoints)).cast("long"))
+          .filter(pmod(col(rn) - 1, col("__graft_step")) === 0)
+          .drop(rn, "__graft_n", "__graft_step")
+    }
+  }
+
+  private val FilePath = col("_metadata.file_path")
+  private val RowIndex = col("_metadata.row_index")
+
+  /** Rows `lo..hi` of `file`, read back to back by one proof task, with
+    * the proof row (file, row index, order-key columns) at each end.
+    * `rising` is false if the task met a key that did not rise strictly;
+    * it stops reading there.
+    */
+  private final case class Run(file: String, lo: Long, hi: Long,
+      first: InternalRow, last: InternalRow, rising: Boolean)
+
+  /** Proves that `df`'s rows are stored in strictly ascending `orderCols`
+    * order — within each parquet file by `_metadata.row_index`, and file
+    * after file — and returns each file's base (the global 0-based
+    * position of its row index 0) with the total row count n. One narrow
+    * job, like `RDD.zipWithIndex`'s offsets job. `None` when `df` is not a
+    * deterministic scan of files with row indexes, or the proof fails:
+    * unsorted rows, a tie on the full key, overlapping files, a file whose
+    * rows are not one contiguous index range (a filter removed rows in its
+    * middle), or no rows at all.
+    */
+  private def storedOrderBases(
+      df: DataFrame,
+      orderCols: Seq[Column]): Option[(Map[String, Long], Long)] = {
+    val planned =
+      try df.orderBy(orderCols: _*).queryExecution.analyzed match {
+        case s: Sort if df.queryExecution.analyzed.deterministic &&
+            s.order.forall(_.deterministic) =>
+          val keys = s.order.flatMap(_.references).distinct
+          val sel = df.select(FilePath +: RowIndex +:
+            keys.map(a => col(s"`${a.name.replace("`", "``")}`")): _*)
+          sel.queryExecution.analyzed match {
+            // `_metadata` is the scan's, not a user column of that name
+            case p: Project if p.projectList.take(2).flatMap(_.references)
+                .forall(a => FileSourceMetadataAttribute.isValid(a.metadata)) &&
+                keys.forall(p.outputSet.contains) => Some((sel, s.order, p.output))
+            case _ => None
+          }
+        case _ => None
+      } catch { case _: AnalysisException => None }
+    planned.flatMap { case (sel, orders, out) =>
+      val runs = sel.queryExecution.toRdd.mapPartitions { rows =>
+        proofRuns(rows, RowOrdering.create(orders, out))
+      }.collect()
+      val ord = RowOrdering.create(orders, out)
+      val files = runs.groupBy(_.file).values.map(_.sortBy(_.lo)).toSeq
+        .sortBy(_.head.first)(ord)
+      val rises = runs.forall(_.rising) && files.forall(rs =>
+        rs.zip(rs.tail).forall { case (a, b) => b.lo == a.hi + 1 && ord.lt(a.last, b.first) })
+      val disjoint = files.zip(files.drop(1)).forall { case (a, b) =>
+        ord.lt(a.last.last, b.head.first) }
+      if (files.isEmpty || !rises || !disjoint) None
+      else {
+        val ends = files.scanLeft(0L)((off, rs) => off + rs.last.hi - rs.head.lo + 1)
+        Some((files.zip(ends).map { case (rs, off) => rs.head.file -> (off - rs.head.lo) }.toMap,
+          ends.last))
+      }
+    }
+  }
+
+  /** One proof task: its rows cut into [[Run]]s of consecutive row
+    * indexes of one file. The scan reuses its row object, so each run's
+    * first row and the row just read are kept as copies. */
+  private def proofRuns(
+      rows: Iterator[InternalRow],
+      ord: Ordering[InternalRow]): Iterator[Run] = {
+    val runs = ArrayBuffer.empty[Run]
+    var file: UTF8String = null
+    var lo, hi = 0L
+    var first, last: InternalRow = null
+    var rising = true
+    def close(): Unit =
+      if (file != null) runs += Run(file.toString, lo, hi, first, last, rising)
+    while (rising && rows.hasNext) {
+      val row = rows.next()
+      val i = row.getLong(1)
+      if (file != null && i == hi + 1 && row.getUTF8String(0) == file) {
+        rising = ord.lt(last, row)
+      } else {
+        close()
+        file = row.getUTF8String(0).clone()
+        lo = i
+        first = row.copy()
+      }
+      hi = i
+      last = if (hi == lo) first else row.copy()
+    }
+    close()
+    runs.iterator
   }
 }

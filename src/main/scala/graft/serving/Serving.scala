@@ -9,9 +9,12 @@ import graft.ops.{Aggregates, Relational, ScalableRank}
   * named DataFrame functions over the same tables — the serving surface a
   * Spark Connect / cached-DataFrame deployment would expose. Thin
   * compositions of the core ops. Most reads end in limit/TakeOrdered or
-  * a tiny aggregate; `chartSeries` does not — its global row numbering
-  * (`ScalableRank.globalRowNumber`) shuffles every input row before the
-  * stride filter keeps `maxPoints` of them.
+  * a tiny aggregate. `chartSeries` numbers rows in the global order:
+  * one narrow proof job per call checks that the parquet files hold the
+  * rows in that order, and if so the stride is a filter on
+  * `_metadata.row_index` with no shuffle; if not,
+  * `ScalableRank.downsampleStride` falls back to the bucket-offset
+  * numbering, which shuffles every row.
   */
 object Serving {
 
@@ -64,7 +67,7 @@ object Serving {
         max(when(col("was_rate_limited"), calledAt)).as("last_limited_at"))
 
   /** Chart payload: stride-downsampled to at most `maxPoints`
-    * (`main.py:1038-1045`). */
+    * (`main.py:1038-1045`); `bucket` is read only on the fallback. */
   def chartSeries(
       df: DataFrame,
       bucket: Column,

@@ -148,15 +148,13 @@ class ScalableOpsSpec extends SparkSpecBase {
   }
 
   test("downsampleStride keeps ceil(n/max) spacing incl. first row") {
-    val got = ScalableRank.downsampleStride(ev,
-      date_trunc("week", col("ts")), Seq(col("ts"), col("event_id")), 100)
+    val order = Seq(col("ts"), col("event_id"))
     val n = ev.count()
-    val step = math.ceil(n / 100.0).toLong
-    assert(got.count() == (n + step - 1) / step)
-    // first row of the global order must be kept
-    val first = ev.orderBy(col("ts"), col("event_id")).limit(1)
-      .select(col("event_id")).first().getLong(0)
-    assert(got.filter(col("event_id") === first).count() == 1)
+    for (m <- Seq(1, 7, 100, n.toInt, n.toInt + 5)) {
+      val got = ScalableRank.downsampleStride(ev, date_trunc("week", col("ts")), order, m)
+      val want = SortedStrideSpec.strideReference(ev, order, m)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, s"maxPoints $m")
+    }
   }
 
   test("medianImpute fills nulls with exact per-group median") {
