@@ -245,7 +245,11 @@ object ScalableRank {
     storedOrderBases(df, orderCols) match {
       case Some((bases, n)) =>
         val step = (n - 1) / maxPoints + 1
-        df.filter(pmod(typedLit(bases).apply(FilePath) + RowIndex, lit(step)) === 0)
+        // base and step travel in one map literal, which generated code
+        // references instead of inlining, so every call reuses one
+        // compiled class; an inlined step recompiled it per maxPoints
+        val at = typedLit(bases.map { case (f, base) => f -> (base, step) }).apply(FilePath)
+        df.filter(pmod(at("_1") + RowIndex, at("_2")) === 0)
       case None =>
         val rn = "__graft_rn"
         val numbered = globalRowNumber(df, bucket, orderCols, rn, Some("__graft_n"))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -54,6 +55,17 @@ class SortedStrideSpec extends SparkSpecBase {
     val got = ScalableRank.downsampleStride(ev, date_trunc("week", col("ts")), evOrder, 100)
     assertNarrow(got)
     assertSameRows(got, strideReference(ev, evOrder, 100))
+  }
+
+  test("the narrow path generates the same code for every maxPoints") {
+    def code(maxPoints: Int) = {
+      val got = stride(ev, evOrder, maxPoints)
+      assertNarrow(got)
+      got.queryExecution.executedPlan.collect { case w: WholeStageCodegenExec => w.doCodeGen()._2 }
+    }
+    // CodeAndComment equality is the codegen cache key: equal code means
+    // one compiled class serves both calls
+    assert(code(7).nonEmpty && code(7) == code(9))
   }
 
   test("several disjoint sorted files take the narrow path") {
