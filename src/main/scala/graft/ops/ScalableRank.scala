@@ -247,7 +247,7 @@ object ScalableRank {
         val step = (n - 1) / maxPoints + 1
         // base and step travel in one map literal, which generated code
         // references instead of inlining, so every call reuses one
-        // compiled class; an inlined step recompiled it per maxPoints
+        // compiled class; an inlined step would compile one per maxPoints
         val at = typedLit(bases.map { case (f, base) => f -> (base, step) }).apply(FilePath)
         df.filter(pmod(at("_1") + RowIndex, at("_2")) === 0)
       case None =>
