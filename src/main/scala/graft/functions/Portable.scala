@@ -30,8 +30,9 @@ import org.apache.spark.sql.functions._
   * - null/NaN/±Inf: the guard comparison is false (engines agree NaN is
   *   greater-than-everything) → pass-through on both sides.
   *
-  * Semantic note (shared with the micro-unit sum convention,
-  * SparkEntry.scala header): rounding is half-toward-+infinity, not
+  * Semantic note (shared with the micro-unit sum convention in the
+  * `SparkEntry` scaladoc, the conventions every `graft.queries` family
+  * follows): rounding is half-toward-+infinity, not
   * HALF_UP — negatives differ at exact `.5e-6` boundaries by design.
   *
   * The oracle twin of every `r6` call calls [[r6Sql]] (and of every

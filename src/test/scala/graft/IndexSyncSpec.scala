@@ -33,19 +33,23 @@ class IndexSyncSpec extends AnyFunSuite {
   }
 
   test("INDEX.md's registration lines point at real Q(\"key\" sites") {
-    // spot-integrity: every `SparkEntry.scala:N` reference must have the
-    // key's registration on that exact line, so the index's line numbers
-    // can be trusted as clickable navigation
-    val entry = java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala"))
-    val rowRe = """^\| `([a-z0-9_]+)` \| SparkEntry\.scala:(\d+) \|""".r
+    // spot-integrity: every `<file>.scala:N` reference must have the
+    // key's registration on that exact line of that file, so the index's
+    // line numbers can be trusted as clickable navigation
+    val rowRe = """^\| `([a-z0-9_]+)` \| ([\w/]+\.scala):(\d+) \|""".r
     val rows = java.nio.file.Files.readAllLines(
         java.nio.file.Paths.get("INDEX.md")).asScala
-      .flatMap(rowRe.findFirstMatchIn(_).map(m => (m.group(1), m.group(2).toInt)))
+      .flatMap(rowRe.findFirstMatchIn(_)
+        .map(m => (m.group(1), m.group(2), m.group(3).toInt)))
     assert(rows.nonEmpty)
-    rows.foreach { case (key, ln) =>
-      assert(ln >= 1 && ln <= entry.size && entry.get(ln - 1).contains(s"""Q("$key""""),
-        s"INDEX.md says $key is registered at SparkEntry.scala:$ln but " +
+    val files = rows.map(_._2).distinct.map { f =>
+      f -> java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(s"src/main/scala/graft/$f"))
+    }.toMap
+    rows.foreach { case (key, file, ln) =>
+      val src = files(file)
+      assert(ln >= 1 && ln <= src.size && src.get(ln - 1).contains(s"""Q("$key""""),
+        s"INDEX.md says $key is registered at $file:$ln but " +
           "that line does not contain its registration — regenerate the index")
     }
   }

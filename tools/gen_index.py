@@ -5,8 +5,8 @@
 SURVEY.md's round-ordered tables. This tool derives, per registered
 query key:
 
-  - the registration site (SparkEntry.scala:line — where the Spark plan
-    is declared and the oracle SQL lives next to it);
+  - the registration site (queries/<Family>.scala:line — where the Spark
+    plan is declared and the oracle SQL lives next to it);
   - the implementation modules the registration body calls into
     (graft.ops/features/exports/... objects referenced before the next
     registration starts);
@@ -26,8 +26,8 @@ import re
 from collections import OrderedDict
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-ENTRY = os.path.join(REPO, "src/main/scala/graft/SparkEntry.scala")
 SRC = os.path.join(REPO, "src/main/scala/graft")
+QUERIES = os.path.join(SRC, "queries")
 TEST = os.path.join(REPO, "src/test/scala/graft")
 SCALE = os.path.join(REPO, "SCALE.md")
 
@@ -47,18 +47,26 @@ def module_map():
 
 
 def registrations():
-    """key -> (line, body) from SparkEntry's Q("key", ...) sites."""
-    with open(ENTRY) as fh:
-        lines = fh.readlines()
-    sites = []  # (key, line_no_1based)
-    for i, ln in enumerate(lines):
-        m = re.search(r'\bQ\("([a-z0-9_]+)"', ln)
-        if m:
-            sites.append((m.group(1), i + 1))
+    """key -> ("queries/<File>.scala:line", body) from every Q("key", ...)
+    site under graft/queries/. A body runs from its Q line to the next
+    key's leading comment, so a key's modules come from its own call."""
     out = OrderedDict()
-    for j, (key, ln) in enumerate(sites):
-        end = sites[j + 1][1] - 1 if j + 1 < len(sites) else len(lines)
-        out[key] = (ln, "".join(lines[ln - 1:end]))
+    for f in sorted(os.listdir(QUERIES)):
+        if not f.endswith(".scala"):
+            continue
+        with open(os.path.join(QUERIES, f)) as fh:
+            lines = fh.readlines()
+        sites = []  # (key, line_no_1based)
+        for i, ln in enumerate(lines):
+            m = re.search(r'\bQ\("([a-z0-9_]+)"', ln)
+            if m:
+                sites.append((m.group(1), i + 1))
+        for j, (key, ln) in enumerate(sites):
+            end = sites[j + 1][1] - 1 if j + 1 < len(sites) else len(lines)
+            while end > ln and (lines[end - 1].lstrip().startswith("//")
+                                or not lines[end - 1].strip()):
+                end -= 1
+            out[key] = (f"queries/{f}:{ln}", "".join(lines[ln - 1:end]))
     return out
 
 
@@ -113,7 +121,8 @@ def main():
         found = []
         for obj in re.findall(r"\b([A-Z]\w+)\.", body):
             p = mods.get(obj)
-            if p and "SparkEntry" not in p and p not in found:
+            if p and "SparkEntry" not in p and "/queries/" not in p \
+                    and p not in found:
                 found.append(p)
         mod_refs[k] = found
 
@@ -134,8 +143,8 @@ def main():
             "`python3 tools/gen_index.py` — do not edit by\nhand; "
             "IndexSyncSpec fails `sbt test` when this file and "
             "`SparkEntry.queries`\ndisagree.\n\n"
-            "- **registered**: `SparkEntry.scala` line declaring the "
-            "plan + oracle SQL.\n"
+            "- **registered**: `src/main/scala/graft/` file and line "
+            "declaring the plan +\n  oracle SQL.\n"
             "- **modules**: implementation files under "
             "`src/main/scala/graft/` the\n  registration calls into "
             "(empty = inline DataFrame expression).\n"
@@ -149,7 +158,7 @@ def main():
             "| key | registered | modules | specs | SCALE.md |\n"
             "|---|---|---|---|---|\n")
         for k, ln, mm, sp, sc in rows:
-            out.write(f"| `{k}` | SparkEntry.scala:{ln} | {mm} | {sp} "
+            out.write(f"| `{k}` | {ln} | {mm} | {sp} "
                       f"| {sc} |\n")
     print(f"[gen_index] wrote INDEX.md with {len(rows)} keys")
 
