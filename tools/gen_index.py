@@ -8,8 +8,8 @@ query key:
   - the registration site (queries/<Family>.scala:line — where the Spark
     plan is declared and the oracle SQL lives next to it);
   - the implementation modules the registration body calls into
-    (graft.ops/features/exports/... objects referenced before the next
-    registration starts);
+    (graft.ops/features/exports/... objects referenced from its Q line
+    up to the next key's leading comment);
   - the spec files that exercise the key or its modules;
   - the SCALE.md section(s) that measure or adjudicate the key.
 
@@ -127,12 +127,12 @@ def main():
         mod_refs[k] = found
 
     rows = []
-    for k, (ln, _) in regs.items():
+    for k, (site, _) in regs.items():
         mm = mod_refs[k] or ["src/main/scala/graft/SparkEntry.scala"]
         mm = [m.replace("src/main/scala/graft/", "") for m in mm]
         sp = [s for s in specs[k]]
         sc = scales[k][:2]
-        rows.append((k, ln, ", ".join(mm[:3]), ", ".join(sp[:3]) or "—",
+        rows.append((k, site, ", ".join(mm[:3]), ", ".join(sp[:3]) or "—",
                      "; ".join(sc) or "—"))
 
     with open(os.path.join(REPO, "INDEX.md"), "w") as out:
@@ -157,8 +157,8 @@ def main():
             f"{len(rows)} keys.\n\n"
             "| key | registered | modules | specs | SCALE.md |\n"
             "|---|---|---|---|---|\n")
-        for k, ln, mm, sp, sc in rows:
-            out.write(f"| `{k}` | {ln} | {mm} | {sp} "
+        for k, site, mm, sp, sc in rows:
+            out.write(f"| `{k}` | {site} | {mm} | {sp} "
                       f"| {sc} |\n")
     print(f"[gen_index] wrote INDEX.md with {len(rows)} keys")
 
