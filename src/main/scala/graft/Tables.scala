@@ -20,15 +20,12 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * per-request work: every read here goes through [[read]], which infers
   * a path's schema once (Spark 4 runs a schema-merge JOB for that, even
   * for one footer) and then reads with the schema pinned, so a warm read
-  * launches zero Spark jobs. The process-wide entry per path holds a
-  * fingerprint — the sorted leaf files as (path, length, mtime) plus the
-  * session values of the parquet inference confs ([[inferenceConfs]]) —
-  * and the schema inferred under it. Any change to the fingerprint (a
-  * file added, removed, rewritten or touched, or an inference conf
-  * flipped) re-infers and REPLACES the path's entry, so the map holds one
-  * entry per path. A rewrite that keeps every leaf file's path, length
-  * and mtime is invisible to the fingerprint; Spark's own writers never
-  * produce one (every write names fresh part files).
+  * launches zero Spark jobs. The schemas are a [[TableFacts.Memo]] keyed
+  * on the path: its fingerprint is the sorted leaf files as (path,
+  * length, mtime) plus the session values of the parquet inference confs
+  * ([[inferenceConfs]]). Any change to the fingerprint (a file added,
+  * removed, rewritten or touched, or an inference conf flipped) re-infers
+  * and REPLACES the path's entry, so the map holds one entry per path.
   */
 object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
@@ -42,33 +39,17 @@ object Tables {
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled")
 
-  private case class Fingerprint(
-      files: Seq[(String, Long, Long)], confs: Seq[String])
-
-  private val schemas =
-    new ConcurrentHashMap[String, (Fingerprint, StructType)]()
+  private val schemas = new TableFacts.Memo[String, StructType]
 
   /** The one parquet read of this object: the cached schema when the
     * path's fingerprint still matches, otherwise one inference that
-    * replaces the entry. The listing runs BEFORE the inference, so an
-    * entry's fingerprint is never newer than its schema — a concurrent
-    * rewrite costs at most one extra inference on the next read, never a
-    * stale schema. */
+    * replaces the entry. */
   private def read(spark: SparkSession, path: String): DataFrame = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = leaves(fs, fs.getFileStatus(p))
-      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
-      .sortBy(_._1)
-    val fp = Fingerprint(files, inferenceConfs.map(spark.conf.get))
-    val schema = Option(schemas.get(path)).collect {
-      case (`fp`, cached) => cached
-    }.getOrElse {
-      val inferred = spark.read.parquet(path).schema
-      schemas.put(path, (fp, inferred))
-      inferred
-    }
-    spark.read.schema(schema).parquet(path)
+    val fp = TableFacts.Fingerprint.of(leaves(fs, fs.getFileStatus(p)),
+      inferenceConfs.map(spark.conf.get))
+    spark.read.schema(schemas(path, fp)(spark.read.parquet(path).schema)).parquet(path)
   }
 
   /** Leaf files under `st`. Plain status calls, not `listFiles`: on the

@@ -4,11 +4,14 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{FileSourceMetadataAttribute, RowOrdering}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, FileSourceMetadataAttribute, RowOrdering, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.TableFacts
+import graft.TableFacts.StoredOrder
 
 /** Scale-safe global row numbering / positional operators.
   *
@@ -227,14 +230,17 @@ object ScalableRank {
     * `src/api/main.py:1038-1045`): step = ceil(n / maxPoints), keep rows at
     * global positions 0, step, 2·step, … of the given ordering.
     *
-    * When [[storedOrderBases]] proves that `df`'s parquet files hold its
-    * rows in that order, the position is the file's base plus
-    * `_metadata.row_index` and the result is a narrow filter over `df`
-    * (one proof job, no exchange) — the reference serves this read from a
+    * When [[storedOrder]] proves that `df`'s parquet files hold its rows
+    * in that order with strictly rising keys, the position is the file's
+    * base plus `_metadata.row_index` and the result is a narrow filter
+    * over `df`, with no exchange — the reference serves this read from a
     * time-ordered hypertable, so row order costs it nothing either.
     * Otherwise it falls back to the bucket-offset [[globalRowNumber]].
     * Both paths return `df`'s columns and, for a total order, the same
-    * rows.
+    * rows. The proof's facts are memoized for a bare scan (see
+    * [[graft.TableFacts]]): the first call on a table's files runs one
+    * proof job, later calls on unchanged files run none. Any other input
+    * runs the proof job on every call.
     */
   def downsampleStride(
       df: DataFrame,
@@ -242,13 +248,14 @@ object ScalableRank {
       orderCols: Seq[Column],
       maxPoints: Int): DataFrame = {
     require(maxPoints >= 1, s"downsampleStride needs maxPoints >= 1, got $maxPoints")
-    storedOrderBases(df, orderCols) match {
-      case Some((bases, n)) =>
-        val step = (n - 1) / maxPoints + 1
+    storedOrder(df, orderCols).filter(_.strict) match {
+      case Some(o) =>
+        val step = (o.n - 1) / maxPoints + 1
         // base and step travel in one map literal, which generated code
         // references instead of inlining, so every call reuses one
         // compiled class; an inlined step would compile one per maxPoints
-        val at = typedLit(bases.map { case (f, base) => f -> (base, step) }).apply(FilePath)
+        val at = typedLit(o.files.map { case (f, (base, _)) => f -> (base, step) })
+          .apply(FilePath)
         df.filter(pmod(at("_1") + RowIndex, at("_2")) === 0)
       case None =>
         val rn = "__graft_rn"
@@ -265,25 +272,31 @@ object ScalableRank {
 
   /** Rows `lo..hi` of `file`, read back to back by one proof task, with
     * the proof row (file, row index, order-key columns) at each end.
-    * `rising` is false if the task met a key that did not rise strictly;
-    * it stops reading there.
+    * `sorted` is false if the task met a key that fell; it stops reading
+    * there. `strict` is false if some key did not rise strictly.
     */
   private final case class Run(file: String, lo: Long, hi: Long,
-      first: InternalRow, last: InternalRow, rising: Boolean)
+      first: InternalRow, last: InternalRow, sorted: Boolean, strict: Boolean)
 
-  /** Proves that `df`'s rows are stored in strictly ascending `orderCols`
-    * order — within each parquet file by `_metadata.row_index`, and file
-    * after file — and returns each file's base (the global 0-based
-    * position of its row index 0) with the total row count n. One narrow
-    * job, like `RDD.zipWithIndex`'s offsets job. `None` when `df` is not a
+  /** Proves that `df`'s rows are stored in ascending `orderCols` order —
+    * within each parquet file by `_metadata.row_index`, and file after
+    * file — and returns what the proof learned ([[StoredOrder]]: each
+    * file's base and row count, the first and last key, and whether keys
+    * rise strictly or only never fall). One narrow job, like
+    * `RDD.zipWithIndex`'s offsets job. `None` when `df` is not a
     * deterministic scan of files with row indexes, or the proof fails:
-    * unsorted rows, a tie on the full key, overlapping files, a file whose
-    * rows are not one contiguous index range (a filter removed rows in its
-    * middle), or no rows at all.
+    * unsorted rows, overlapping files, a file whose rows are not one
+    * contiguous index range (a filter removed rows in its middle), or no
+    * rows at all.
+    *
+    * For a bare parquet scan the result, failure included, is memoized
+    * in [[graft.TableFacts]] on the files' fingerprint. With `memoOnly`
+    * any other input returns `None` without running the proof.
     */
-  private def storedOrderBases(
+  private[graft] def storedOrder(
       df: DataFrame,
-      orderCols: Seq[Column]): Option[(Map[String, Long], Long)] = {
+      orderCols: Seq[Column],
+      memoOnly: Boolean = false): Option[StoredOrder] = {
     val planned =
       try df.orderBy(orderCols: _*).queryExecution.analyzed match {
         case s: Sort if df.queryExecution.analyzed.deterministic &&
@@ -295,28 +308,43 @@ object ScalableRank {
             // `_metadata` is the scan's, not a user column of that name
             case p: Project if p.projectList.take(2).flatMap(_.references)
                 .forall(a => FileSourceMetadataAttribute.isValid(a.metadata)) &&
-                keys.forall(p.outputSet.contains) => Some((sel, s.order, p.output))
+                keys.forall(p.outputSet.contains) => Some((s, sel, p.output))
             case _ => None
           }
         case _ => None
       } catch { case _: AnalysisException => None }
-    planned.flatMap { case (sel, orders, out) =>
-      val runs = sel.queryExecution.toRdd.mapPartitions { rows =>
-        proofRuns(rows, RowOrdering.create(orders, out))
-      }.collect()
-      val ord = RowOrdering.create(orders, out)
-      val files = runs.groupBy(_.file).values.map(_.sortBy(_.lo)).toSeq
-        .sortBy(_.head.first)(ord)
-      val rises = runs.forall(_.rising) && files.forall(rs =>
-        rs.zip(rs.tail).forall { case (a, b) => b.lo == a.hi + 1 && ord.lt(a.last, b.first) })
-      val disjoint = files.zip(files.drop(1)).forall { case (a, b) =>
-        ord.lt(a.last.last, b.head.first) }
-      if (files.isEmpty || !rises || !disjoint) None
-      else {
-        val ends = files.scanLeft(0L)((off, rs) => off + rs.last.hi - rs.head.lo + 1)
-        Some((files.zip(ends).map { case (rs, off) => rs.head.file -> (off - rs.head.lo) }.toMap,
-          ends.last))
-      }
+    planned.flatMap { case (s, sel, out) =>
+      lazy val proved = prove(sel, s.order, out)
+      TableFacts.storedOrder(df, s)(proved).getOrElse(if (memoOnly) None else proved)
+    }
+  }
+
+  /** The proof job over `sel` (file path, row index, order-key columns)
+    * and the driver's check of its runs. */
+  private def prove(
+      sel: DataFrame,
+      orders: Seq[SortOrder],
+      out: Seq[Attribute]): Option[StoredOrder] = {
+    val runs = sel.queryExecution.toRdd.mapPartitions { rows =>
+      proofRuns(rows, RowOrdering.create(orders, out))
+    }.collect()
+    val ord = RowOrdering.create(orders, out)
+    val files = runs.groupBy(_.file).values.map(_.sortBy(_.lo)).toSeq
+      .sortBy(rs => (rs.head.first, rs.last.last))(Ordering.Tuple2(ord, ord))
+    // every run join and file join keeps keys in order (`le`)
+    def joined(le: (InternalRow, InternalRow) => Boolean) =
+      files.forall(rs => rs.zip(rs.tail).forall { case (a, b) => le(a.last, b.first) }) &&
+        files.zip(files.drop(1)).forall { case (a, b) => le(a.last.last, b.head.first) }
+    val contiguous = files.forall(rs => rs.zip(rs.tail).forall { case (a, b) => b.lo == a.hi + 1 })
+    val sorted = contiguous && runs.forall(_.sorted) && joined(ord.lteq)
+    if (files.isEmpty || !sorted) None
+    else {
+      val ends = files.scanLeft(0L)((off, rs) => off + rs.last.hi - rs.head.lo + 1)
+      Some(StoredOrder(
+        files.zip(ends).map { case (rs, off) =>
+          rs.head.file -> (off - rs.head.lo, rs.last.hi - rs.head.lo + 1) }.toMap,
+        ends.last, files.head.head.first, files.last.last.last,
+        strict = runs.forall(_.strict) && joined(ord.lt)))
     }
   }
 
@@ -330,19 +358,22 @@ object ScalableRank {
     var file: UTF8String = null
     var lo, hi = 0L
     var first, last: InternalRow = null
-    var rising = true
+    var sorted, strict = true
     def close(): Unit =
-      if (file != null) runs += Run(file.toString, lo, hi, first, last, rising)
-    while (rising && rows.hasNext) {
+      if (file != null) runs += Run(file.toString, lo, hi, first, last, sorted, strict)
+    while (sorted && rows.hasNext) {
       val row = rows.next()
       val i = row.getLong(1)
       if (file != null && i == hi + 1 && row.getUTF8String(0) == file) {
-        rising = ord.lt(last, row)
+        val c = ord.compare(last, row)
+        sorted = c <= 0
+        strict &&= c < 0
       } else {
         close()
         file = row.getUTF8String(0).clone()
         lo = i
         first = row.copy()
+        strict = true
       }
       hi = i
       last = if (hi == lo) first else row.copy()

@@ -63,45 +63,6 @@ private[graft] object DedupQueries {
     """list_distinct([array_to_string(toks[i+1:i+3], ' ')
        for i in range(0, greatest(len(toks) - 3, 0) + 1)])"""
 
-  /** Shared DuckDB CTE chain computing the verified MinHash-LSH pair
-    * set over the planted docs (follows [[plantedDocsSql]] in a WITH) —
-    * ends with CTE `verified(id_a, id_b, j)`. One definition shared by
-    * the pair query and the connected-components query.
-    */
-  private val minhashCtesSql = s"""base AS (SELECT id, $shinglesSql AS sh
-                       FROM (SELECT id,
-                               string_split_regex(lower(trim(text)), '\\s+')
-                                 AS toks
-                             FROM docs)),
-              hb AS (SELECT id,
-                       CAST(concat('0x', substr(md5(s), 1, 7)) AS BIGINT) AS b
-                     FROM (SELECT id, unnest(sh) AS s FROM base)),
-              sigs AS (SELECT id, j,
-                         min((1000003 * (j + 1) * b + 666019 * (j + 1))
-                           % 2147483647) AS sig
-                       FROM hb, range(16) r(j) GROUP BY 1, 2),
-              bandskey AS (SELECT id, (j // 4) AS band_idx,
-                             string_agg(CAST(sig AS VARCHAR), '-' ORDER BY j)
-                               AS band_key
-                           FROM sigs GROUP BY 1, 2),
-              bcount AS (SELECT band_idx, band_key, count(*) AS n
-                         FROM bandskey GROUP BY 1, 2),
-              pruned AS (SELECT bk.id, bk.band_idx, bk.band_key
-                         FROM bandskey bk
-                         JOIN bcount c USING (band_idx, band_key)
-                         WHERE c.n <= 1000),
-              pairs AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
-                        FROM pruned a JOIN pruned b
-                          USING (band_idx, band_key)
-                        WHERE a.id < b.id),
-              verified AS (SELECT p.id_a, p.id_b,
-                             CAST(len(list_intersect(x.sh, y.sh)) AS DOUBLE)
-                               / len(list_distinct(list_concat(x.sh, y.sh)))
-                               AS j
-                           FROM pairs p
-                           JOIN base x ON p.id_a = x.id
-                           JOIN base y ON p.id_b = y.id)"""
-
   /** Parameterized DuckDB twin of [[Dedup.bandKeys]]: the tokenize →
     * shingle → md5-base → affine-signature → band-key chain over source
     * CTE `src`, CTE names prefixed with `p` so two sides (corpus and
@@ -123,6 +84,32 @@ private[graft] object DedupQueries {
                     string_agg(CAST(sig AS VARCHAR), '-' ORDER BY j)
                       AS band_key
                   FROM ${p}sigs GROUP BY 1, 2)"""
+
+  /** Shared DuckDB CTE chain computing the verified MinHash-LSH pair
+    * set over the planted docs (follows [[plantedDocsSql]] in a WITH) —
+    * the [[bandCtesSql]] chain over `docs`, then band pruning, pairs and
+    * their Jaccard; ends with CTE `verified(id_a, id_b, j)`. One
+    * definition shared by the pair query and the connected-components
+    * query.
+    */
+  private val minhashCtesSql = s"""${bandCtesSql("docs", "")},
+              bcount AS (SELECT band_idx, band_key, count(*) AS n
+                         FROM bands GROUP BY 1, 2),
+              pruned AS (SELECT bk.id, bk.band_idx, bk.band_key
+                         FROM bands bk
+                         JOIN bcount c USING (band_idx, band_key)
+                         WHERE c.n <= 1000),
+              pairs AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
+                        FROM pruned a JOIN pruned b
+                          USING (band_idx, band_key)
+                        WHERE a.id < b.id),
+              verified AS (SELECT p.id_a, p.id_b,
+                             CAST(len(list_intersect(x.sh, y.sh)) AS DOUBLE)
+                               / len(list_distinct(list_concat(x.sh, y.sh)))
+                               AS j
+                           FROM pairs p
+                           JOIN base x ON p.id_a = x.id
+                           JOIN base y ON p.id_b = y.id)"""
 
   val queries: Seq[Q] = Seq(
     Q("dedup_exact",

@@ -2,11 +2,9 @@ package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
 import java.util.concurrent.{Callable, Executors}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampNTZType
@@ -17,23 +15,6 @@ import org.apache.spark.sql.types.TimestampNTZType
   * encoding switch must never be served a stale schema).
   */
 class TablesReadSpec extends SparkSpecBase {
-
-  /** Spark jobs started while `body` runs, counted off the drained
-    * listener bus. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    org.apache.spark.graft.ListenerBusDrain.drain(sc)
-    sc.addSparkListener(l)
-    try {
-      body
-      org.apache.spark.graft.ListenerBusDrain.drain(sc)
-    } finally sc.removeSparkListener(l)
-    n.get
-  }
 
   private val baseUs = 1704067200L * 1000000L // 2024-01-01 00:00:00 UTC
   private val expectSpan = (baseUs, baseUs + 47L * 3600000000L, 48L)

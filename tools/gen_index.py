@@ -128,8 +128,7 @@ def main():
 
     rows = []
     for k, (site, _) in regs.items():
-        mm = mod_refs[k] or ["src/main/scala/graft/SparkEntry.scala"]
-        mm = [m.replace("src/main/scala/graft/", "") for m in mm]
+        mm = [m.replace("src/main/scala/graft/", "") for m in mod_refs[k]]
         sp = [s for s in specs[k]]
         sc = scales[k][:2]
         rows.append((k, site, ", ".join(mm[:3]), ", ".join(sp[:3]) or "—",
