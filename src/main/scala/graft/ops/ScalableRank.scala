@@ -320,7 +320,7 @@ object ScalableRank {
   }
 
   /** The proof job over `sel` (file path, row index, order-key columns)
-    * and the driver's check of its runs. */
+    * and the check of its collected runs. */
   private def prove(
       sel: DataFrame,
       orders: Seq[SortOrder],
