@@ -26,7 +26,8 @@ import org.apache.spark.sql.types.DataType
   *
   * Memo contract ([[Memo]]): one entry per key, holding the value derived
   * under the key's [[Fingerprint]]; a changed fingerprint re-derives and
-  * REPLACES the entry. The `Tables` schema cache is one such memo. Here
+  * REPLACES the entry. The `Tables` schema cache, events span and
+  * week-chunked events copy are such memos. Here
   * the fingerprint's files come from the relation's own file index, so
   * they are the files the scan reads, and facts are kept only for a
   * bare scan: deterministic projections over one parquet relation, with

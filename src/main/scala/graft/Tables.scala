@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -28,8 +26,10 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * and REPLACES the path's entry, so the map holds one entry per path.
   */
 object Tables {
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    read(spark, s"$sfDir/$name.parquet")
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    read(spark, path, fingerprint(spark, path))
+  }
 
   /** The session confs that change what parquet schema inference returns
     * for the same files; their values are part of the fingerprint. */
@@ -41,16 +41,19 @@ object Tables {
 
   private val schemas = new TableFacts.Memo[String, StructType]
 
-  /** The one parquet read of this object: the cached schema when the
-    * path's fingerprint still matches, otherwise one inference that
-    * replaces the entry. */
-  private def read(spark: SparkSession, path: String): DataFrame = {
+  /** `path`'s leaf files under the session's inference confs. */
+  private def fingerprint(spark: SparkSession, path: String): TableFacts.Fingerprint = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fp = TableFacts.Fingerprint.of(leaves(fs, fs.getFileStatus(p)),
+    TableFacts.Fingerprint.of(leaves(fs, fs.getFileStatus(p)),
       inferenceConfs.map(spark.conf.get))
-    spark.read.schema(schemas(path, fp)(spark.read.parquet(path).schema)).parquet(path)
   }
+
+  /** The one parquet read of this object: the cached schema when the
+    * path's fingerprint `fp` still matches, otherwise one inference that
+    * replaces the entry. */
+  private def read(spark: SparkSession, path: String, fp: TableFacts.Fingerprint): DataFrame =
+    spark.read.schema(schemas(path, fp)(spark.read.parquet(path).schema)).parquet(path)
 
   /** Leaf files under `st`. Plain status calls, not `listFiles`: on the
     * local filesystem a located status also loads each file's
@@ -59,13 +62,20 @@ object Tables {
     if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(leaves(fs, _))
     else Seq(st)
 
-  /** Raw events read with `nanosAsLong` set: the probe and the read share
-    * one schema lookup. The conf must be set before the read — without
-    * it a NANOS-encoded file throws before any branch is taken. */
-  private def rawEvents(spark: SparkSession, sfDir: String): DataFrame = {
+  private def eventsPath(sfDir: String): String = s"$sfDir/events.parquet"
+
+  /** The events fingerprint, taken with `nanosAsLong` set: the conf must
+    * be set before the read — without it a NANOS-encoded file throws
+    * before any branch is taken. */
+  private def eventsFingerprint(spark: SparkSession, sfDir: String): TableFacts.Fingerprint = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    read(spark, s"$sfDir/events.parquet")
+    fingerprint(spark, eventsPath(sfDir))
   }
+
+  /** Raw events read under [[eventsFingerprint]]: the probe and the read
+    * share one schema lookup. */
+  private def rawEvents(spark: SparkSession, sfDir: String): DataFrame =
+    read(spark, eventsPath(sfDir), eventsFingerprint(spark, sfDir))
 
   private def tsIsLong(raw: DataFrame): Boolean =
     raw.schema("ts").dataType == LongType
@@ -104,16 +114,17 @@ object Tables {
     * own scale killer: per-file open/listing cost swamps the scan),
     * fine enough that a typical export window prunes most of a year.
     * In a deployment this IS the table's storage layout; for the
-    * harness it is materialized once per (JVM, sfDir) under tmpdir. This
-    * JVM owns that directory, so the schema read back right after the
-    * write is kept beside it and every later read pins it (zero jobs).
+    * harness it is materialized under tmpdir once per events fingerprint
+    * (a rewritten events file gets a fresh copy). This JVM owns that
+    * directory, so the schema read back right after the write is kept
+    * beside it and every later read pins it (zero jobs).
     */
   def eventsChunked(
       s: SparkSession,
       d: String,
       fromDay: String,
       toDay: String): DataFrame = {
-    val (dir, schema) = partitionedEvents.computeIfAbsent(d, _ => {
+    val (dir, schema) = chunkedCopies(d, eventsFingerprint(s, d)) {
       // harness hygiene: the materialized copy dies with the JVM (in a
       // deployment the layout is the permanent table, not a copy)
       val tmp = Scratch.dir("graft_events_chunked")
@@ -134,7 +145,7 @@ object Tables {
         .sortWithinPartitions(col("chunk"), col("ts"))
         .write.mode("overwrite").partitionBy("chunk").parquet(tmp)
       (tmp, s.read.parquet(tmp).schema)
-    })
+    }
     // the chunk containing fromDay starts at that week's Monday
     // (date_trunc('week') is ISO — Monday), matching Spark's week rule
     val fromChunk = java.time.LocalDate.parse(fromDay)
@@ -148,30 +159,28 @@ object Tables {
       .drop("chunk")
   }
 
-  private val partitionedEvents =
-    new ConcurrentHashMap[String, (String, StructType)]()
+  private val chunkedCopies = new TableFacts.Memo[String, (String, StructType)]
 
-  /** (min day, max day) of the events table, cached per (JVM, sfDir) —
-    * one 1-column scan at plan-build time. Callers that want "the whole
+  /** (min day, max day) of the events table, memoized on its fingerprint
+    * — one 1-column scan at plan-build time. Callers that want "the whole
     * table, but through the chunk-pruned path" (the feature views over
     * the harness data) use this instead of hardcoding dates, so the
     * window tracks whatever the testdata generator produced. */
   def eventsSpan(s: SparkSession, d: String): (String, String) =
-    eventsSpans.computeIfAbsent(d, _ => {
+    spans(d, eventsFingerprint(s, d)) {
       val r = loadEvents(s, d)
         .agg(min(to_date(col("ts"))).cast("string"),
           max(to_date(col("ts"))).cast("string"))
         .first()
       // min/max over zero rows are NULL — fail with a clear message
       // instead of caching a poisoned (null, null) span that would NPE
-      // in every later eventsChunked call this JVM
+      // in every later eventsChunked call on these files
       require(!r.isNullAt(0) && !r.isNullAt(1),
         s"eventsSpan: events table at $d is empty or all-null ts")
       (r.getString(0), r.getString(1))
-    })
+    }
 
-  private val eventsSpans =
-    new ConcurrentHashMap[String, (String, String)]()
+  private val spans = new TableFacts.Memo[String, (String, String)]
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = load(s, d, "nation")

@@ -19,87 +19,135 @@ import graft.TableFacts.StoredOrder
   * (`src/processing/export_pipeline.py:129-207`, `src/api/main.py:1038-1045`)
   * are positional over a global time order. A bare
   * `row_number().over(Window.orderBy(ts))` funnels the table through one
-  * partition. Instead: count rows per coarse bucket (a tiny aggregate),
-  * turn the counts into per-bucket starting offsets with a window over the
-  * *bucket list* (thousands of rows at most), broadcast the offsets back,
-  * and number rows within each bucket independently.
+  * partition. Instead every operator here rides one bucket-offset core:
+  * measure each coarse bucket (a row count or a value sum; a tiny
+  * aggregate), turn the measures into per-bucket exclusive offsets and a
+  * total with windows over the *bucket list* (thousands of rows at most),
+  * broadcast those back, and number rows within each bucket
+  * independently. With `partitionBy` keys the offsets and totals restart
+  * per partition, as in a `Window.partitionBy(keys)` ordering.
   *
-  * Requires `bucket` to be monotone in `orderCols` (a coarse prefix of the
-  * global ordering), which holds for any time-bucket of a time ordering.
-  * [[downsampleStride]] needs this only on its fallback: when the input's
-  * files are proven stored in the global order it numbers rows from the
-  * scan and ignores `bucket`.
+  * Two preconditions, stated once for every operator here:
+  *  - `bucket` is monotone ASCENDING in `orderCols` within each partition
+  *    (a coarse prefix of the ordering, as any time-bucket of a time
+  *    ordering is); for a DESC ordering pass the negated bucket.
+  *  - the bucket count per partition is bounded by the value domain (a
+  *    day grid, a price band), never by the row count: the offsets
+  *    relation is broadcast.
+  *
+  * Rows whose bucket or partition keys are null are dropped.
+  * [[downsampleStride]] needs the preconditions only on its fallback:
+  * when the input's files are proven stored in the global order it
+  * numbers rows from the scan and ignores `bucket`.
   */
 object ScalableRank {
 
   private val B = "__graft_bucket"
+  private val Offset = "__graft_offset"
+  private val Total = "__graft_total"
+
+  /** `df` with the partition keys and `bucket` as named columns, and
+    * the names of the keys. */
+  private def keyed(
+      df: DataFrame,
+      partitionBy: Seq[Column],
+      bucket: Column): (DataFrame, Seq[String]) = {
+    val keys = partitionBy.indices.map(i => s"__graft_part$i")
+    (keys.zip(partitionBy).foldLeft(df) { case (d, (k, c)) => d.withColumn(k, c) }
+      .withColumn(B, bucket), keys)
+  }
+
+  /** The core: `withB` joined through a broadcast with, per (keys,
+    * bucket), [[Offset]] (`measure`, aggregated per bucket as `m`, summed
+    * over the partition's earlier buckets) and [[Total]] (over all of
+    * it). A caller that drops [[Total]] leaves no window for it. */
+  private def withOffsets(
+      withB: DataFrame,
+      keys: Seq[String],
+      measure: Column,
+      m: String): DataFrame = {
+    val parts = Window.partitionBy(keys.map(col): _*)
+    // Tiny: one row per (keys, bucket). The windows over it are safe.
+    val offsets = withB
+      .groupBy((keys :+ B).map(col): _*)
+      .agg(measure.as(m))
+      .withColumn(Offset, coalesce(
+        sum(col(m)).over(parts.orderBy(col(B))
+          .rowsBetween(Window.unboundedPreceding, -1)),
+        lit(0L)))
+      .withColumn(Total, sum(col(m)).over(parts))
+      .drop(m)
+    withB.join(broadcast(offsets), keys :+ B)
+  }
+
+  /** The within-bucket window of [[withOffsets]]'s rows. */
+  private def inBucket(keys: Seq[String], orderCols: Seq[Column]) =
+    Window.partitionBy((keys :+ B).map(col): _*).orderBy(orderCols: _*)
 
   /** Adds a 1-based global row number column named `name`, plus (when
     * `totalName` is set) the total row count — derived from the same
     * per-bucket count pass, so callers that need `n` (splits, strides)
-    * don't pay a second scan.
+    * don't pay a second scan. With `partitionBy` keys both restart per
+    * partition.
     */
   def globalRowNumber(
       df: DataFrame,
       bucket: Column,
       orderCols: Seq[Column],
       name: String,
-      totalName: Option[String] = None): DataFrame = {
-    val withB = df.withColumn(B, bucket)
-    // Tiny: one row per bucket. The unpartitioned windows over it are safe.
-    val offsets = withB
-      .groupBy(col(B))
-      .agg(count(lit(1)).as("__graft_cnt"))
-      .withColumn(
-        "__graft_offset",
-        coalesce(
-          sum(col("__graft_cnt"))
-            .over(Window.orderBy(col(B)).rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .withColumn("__graft_total",
-        sum(col("__graft_cnt")).over(Window.partitionBy()))
-      .drop("__graft_cnt")
-    val wLocal = Window.partitionBy(col(B)).orderBy(orderCols: _*)
-    val numbered = withB
-      .join(broadcast(offsets), Seq(B))
-      .withColumn(
-        name,
-        (row_number().over(wLocal).cast("long") + col("__graft_offset")))
-    totalName match {
-      case Some(t) => numbered.withColumnRenamed("__graft_total", t)
-        .drop(B, "__graft_offset")
-      case None => numbered.drop(B, "__graft_offset", "__graft_total")
-    }
+      totalName: Option[String] = None,
+      partitionBy: Seq[Column] = Nil): DataFrame = {
+    val (withB, keys) = keyed(df, partitionBy, bucket)
+    val numbered = withOffsets(withB, keys, count(lit(1)), "__graft_cnt")
+      .withColumn(name,
+        row_number().over(inBucket(keys, orderCols)).cast("long") + col(Offset))
+    totalName.fold(numbered.drop(Total))(numbered.withColumnRenamed(Total, _))
+      .drop(keys :+ B :+ Offset: _*)
+  }
+
+  /** Labels a row with the first of the `cuts` (ratio, label) whose
+    * first `floor(n · ratio)` rows (the reference's `int(n * ratio)`)
+    * hold it, else `rest`. The ratios must rise strictly inside (0, 1):
+    * one outside (or NaN) would give a silent one-label split. */
+  private def chronoLabel(
+      df: DataFrame,
+      bucket: Column,
+      orderCols: Seq[Column],
+      name: String,
+      cuts: Seq[(Double, String)],
+      rest: String): DataFrame = {
+    val ratios = cuts.map(_._1)
+    require(ratios.forall(r => r > 0 && r < 1) &&
+        ratios.zip(ratios.tail).forall { case (a, b) => a < b },
+      s"split cuts must rise strictly inside (0, 1), got ${ratios.mkString(", ")}")
+    val (rn, n) = ("__graft_rn", "__graft_n")
+    def within(r: Double) = col(rn) <= floor(col(n) * lit(r))
+    val label = cuts.tail.foldLeft(when(within(cuts.head._1), lit(cuts.head._2))) {
+      case (w, (r, l)) => w.when(within(r), lit(l))
+    }.otherwise(lit(rest))
+    globalRowNumber(df, bucket, orderCols, rn, Some(n))
+      .withColumn(name, label)
+      .drop(rn, n)
   }
 
   /** Chronological ratio split (reference `export_pipeline.py:129-207`):
     * first `floor(n * (1 - testRatio))` rows by the global order → "train",
-    * rest → "test". Emits a `split` label column; row count semantics match
-    * the reference's `int(n * (1 - r))` floor.
+    * rest → "test". Emits a `split` label column; `testRatio` must lie in
+    * (0, 1).
     */
   def chronoSplit(
       df: DataFrame,
       bucket: Column,
       orderCols: Seq[Column],
       testRatio: Double,
-      name: String = "split"): DataFrame = {
-    val rn = "__graft_rn"
-    val numbered = globalRowNumber(df, bucket, orderCols, rn, Some("__graft_n"))
-    numbered
-      .withColumn(
-        name,
-        when(col(rn) <= floor(col("__graft_n") * lit(1.0 - testRatio)), lit("train"))
-          .otherwise(lit("test")))
-      .drop(rn, "__graft_n")
-  }
+      name: String = "split"): DataFrame =
+    chronoLabel(df, bucket, orderCols, name, Seq((1.0 - testRatio) -> "train"), "test")
 
   /** Chronological three-way split (reference
     * `export_pipeline.py:164-207` `split_chronological_three_way`):
     * train = first `floor(n·(1−val−test))` rows of the global order,
-    * val = the next `floor(n·val)`-ish band up to `floor(n·(1−test))`,
-    * test = the rest — the boundary arithmetic matches the reference's
-    * `int(n * ratio)` cutoffs exactly. Same bucket-offset global
-    * numbering as [[chronoSplit]] (no global sort, no collect).
+    * val = the rows up to `floor(n·(1−test))`, test = the rest. Both
+    * ratios must be positive and sum below 1.
     */
   def chronoSplitThreeWay(
       df: DataFrame,
@@ -107,31 +155,16 @@ object ScalableRank {
       orderCols: Seq[Column],
       valRatio: Double = 0.15,
       testRatio: Double = 0.15,
-      name: String = "split"): DataFrame = {
-    require(valRatio > 0 && testRatio > 0 && valRatio + testRatio < 1,
-      s"ratios must be positive and sum below 1, got $valRatio/$testRatio")
-    val rn = "__graft_rn"
-    val numbered = globalRowNumber(df, bucket, orderCols, rn, Some("__graft_n"))
-    numbered
-      .withColumn(
-        name,
-        when(col(rn) <= floor(col("__graft_n") *
-            lit(1.0 - valRatio - testRatio)), lit("train"))
-          .when(col(rn) <= floor(col("__graft_n") * lit(1.0 - testRatio)),
-            lit("val"))
-          .otherwise(lit("test")))
-      .drop(rn, "__graft_n")
-  }
+      name: String = "split"): DataFrame =
+    chronoLabel(df, bucket, orderCols, name,
+      Seq((1.0 - valRatio - testRatio) -> "train", (1.0 - testRatio) -> "val"), "test")
 
   /** Adds a global running sum of `value` over the global ordering —
-    * the same bucket-offset decomposition as [[globalRowNumber]], but
-    * summing a value column instead of counting rows: per-bucket totals
-    * (tiny aggregate) → exclusive bucket offsets (window over the bucket
-    * list) → broadcast back → within-bucket running sum. By default the
-    * sum is EXCLUSIVE (tokens/bytes *before* this row), which is the
-    * form positional packing needs; `inclusive = true` gives the
-    * classic cumulative sum. `value` must be non-null; `bucket` must be
-    * monotone in `orderCols`.
+    * the core summing a value column instead of counting rows. By
+    * default the sum is EXCLUSIVE (tokens/bytes *before* this row),
+    * which is the form positional packing needs; `inclusive = true`
+    * gives the classic cumulative sum. With `partitionBy` keys the sum
+    * restarts per partition. `value` must be non-null.
     */
   def globalPrefixSum(
       df: DataFrame,
@@ -139,26 +172,16 @@ object ScalableRank {
       orderCols: Seq[Column],
       value: Column,
       name: String,
-      inclusive: Boolean = false): DataFrame = {
-    val withB = df.withColumn(B, bucket).withColumn("__graft_v", value.cast("long"))
-    val offsets = withB
-      .groupBy(col(B))
-      .agg(sum(col("__graft_v")).as("__graft_bsum"))
-      .withColumn(
-        "__graft_offset",
-        coalesce(
-          sum(col("__graft_bsum"))
-            .over(Window.orderBy(col(B)).rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .drop("__graft_bsum")
+      inclusive: Boolean = false,
+      partitionBy: Seq[Column] = Nil): DataFrame = {
+    val V = "__graft_v"
+    val (withB, keys) = keyed(df, partitionBy, bucket)
     val upper = if (inclusive) 0L else -1L
-    val wLocal = Window.partitionBy(col(B)).orderBy(orderCols: _*)
-      .rowsBetween(Window.unboundedPreceding, upper)
-    withB
-      .join(broadcast(offsets), Seq(B))
-      .withColumn(name,
-        coalesce(sum(col("__graft_v")).over(wLocal), lit(0L)) + col("__graft_offset"))
-      .drop(B, "__graft_v", "__graft_offset")
+    val running = sum(col(V)).over(inBucket(keys, orderCols)
+      .rowsBetween(Window.unboundedPreceding, upper))
+    withOffsets(withB.withColumn(V, value.cast("long")), keys, sum(col(V)), "__graft_bsum")
+      .withColumn(name, coalesce(running, lit(0L)) + col(Offset))
+      .drop(keys ++ Seq(B, V, Offset, Total): _*)
   }
 
   /** Concatenate-and-split sequence packing — the pretraining layout
@@ -184,13 +207,13 @@ object ScalableRank {
       .drop(p)
   }
 
-  /** Exact `ntile(k)` over a GLOBAL ordering without the
-    * single-partition window (r19, VERDICT r18 item 3): a bare
+  /** Exact `ntile(k)` over a GLOBAL ordering (per partition with
+    * `partitionBy` keys) without the single-partition window: a bare
     * `ntile(k).over(Window.orderBy(...))` funnels the whole relation
     * through one reducer — a one-task wall at 100 TB on any row-scale
     * input (customer/user dims grow with data). This computes the
-    * identical tile assignment from [[globalRowNumber]]'s bucket-offset
-    * global row number plus the standard SQL split formula (the first
+    * identical tile assignment from [[globalRowNumber]]'s row number
+    * and total plus the standard SQL split formula (the first
     * `n % k` tiles take `n div k + 1` rows, the rest `n div k` — what
     * Spark's and DuckDB's NTile both implement), all in exact integer
     * arithmetic:
@@ -201,21 +224,19 @@ object ScalableRank {
     *
     * (`n < k` degenerates to tile = rn via the first branch — cut = n
     * and `n div k` = 0 never divides because the ELSE arm is
-    * unreached.) Same contract as every operator here: `bucket` must be
-    * monotone ASCENDING in `orderCols` (for a DESC ordering pass the
-    * negated column), and the bucket count must be value-domain-bounded
-    * (the offsets relation is broadcast).
+    * unreached.) `bucket` follows the object's preconditions.
     */
   def globalNtile(
       df: DataFrame,
       bucket: Column,
       orderCols: Seq[Column],
       k: Int,
-      name: String): DataFrame = {
+      name: String,
+      partitionBy: Seq[Column] = Nil): DataFrame = {
     require(k >= 1, s"ntile needs k >= 1, got $k")
     val rn = "__graft_ntile_rn"
     val nT = "__graft_ntile_n"
-    val numbered = globalRowNumber(df, bucket, orderCols, rn, Some(nT))
+    val numbered = globalRowNumber(df, bucket, orderCols, rn, Some(nT), partitionBy)
     numbered
       .withColumn(name, expr(
         s"""CASE WHEN `$rn` <= (`$nT` % $k) * ((`$nT` div $k) + 1)

@@ -2143,13 +2143,11 @@ private[graft] object AggQueries {
     // since last purchase), frequency (purchase count), monetary
     // (Σcents), each cut into quintiles (unique-keyed ntile ties), the
     // three digits concatenated into the segment code. The per-user
-    // aggregate is the only corpus-sized pass. The three quintiles come
-    // from ScalableRank.globalNtile (r19): the user dim GROWS with data
-    // (150→1.5k per SF step; row-scale at 100 TB), so the old three
-    // unpartitioned ntile(5) windows were one-reducer funnels. Buckets
-    // per ordering are value-domain-bounded and ASC-monotone: the day
-    // grid for recency, the negated count for f DESC, the negated
-    // 4096-cent band for m DESC.
+    // aggregate is the only corpus-sized pass. The quintiles come from
+    // ScalableRank.globalNtile partitioned by metric: the user dim grows
+    // with data (row-scale at 100 TB), so an ntile(5) window over it
+    // would be a one-reducer funnel. Bands: the day grid for recency,
+    // the negated count for f DESC, the negated 4096-cent band for m.
     Q("agg_rfm_segments",
       (s, d) => {
         val maxDay = ev(s, d).agg(max(to_date(col("ts"))).as("d0"))
@@ -2166,14 +2164,9 @@ private[graft] object AggQueries {
           // twice (offsets + numbering join) — uncached, each consumer
           // re-runs the corpus-sized purchase aggregate. User-dim rows.
           .localCheckpoint(false)
-        // all three quintiles ride ONE bucket-offset machinery (§2.4):
-        // unpivot (metric, value) so one offsets aggregate, one
-        // numbering window and one pivot-back serve r/f/m together —
-        // the chained per-metric form re-numbers the user dim three
-        // times. v is ASC-uniform (negated for the DESC metrics); the
-        // band is value-domain-bounded per metric (day grid / negated
-        // count / negated 4096-cent band), met leads every key so the
-        // three metrics never share a partition or an offset.
+        // unpivot (metric, value) so one numbering pass and one
+        // pivot-back serve r/f/m together; v is ASC-uniform (negated for
+        // the DESC metrics), the band value-domain-bounded per metric
         val unp = per.select(col("user_id"), col("recency_days"),
             col("f"), col("m"),
             explode(array(
@@ -2183,32 +2176,12 @@ private[graft] object AggQueries {
               struct(lit(3).as("met"), (-col("m")).as("v"))))
               .as("x"))
           .select(col("user_id"), col("recency_days"), col("f"), col("m"),
-            col("x.met").as("met"),
-            col("x.v").as("v"),
-            when(col("x.met") === 3, expr("x.v div 4096"))
-              .otherwise(col("x.v")).as("band"))
-        val offs = unp.groupBy(col("met"), col("band"))
-          .agg(count(lit(1)).as("__c"))
-          .withColumn("__off", coalesce(sum(col("__c")).over(
-            Window.partitionBy(col("met")).orderBy(col("band"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .withColumn("__n",
-            sum(col("__c")).over(Window.partitionBy(col("met"))))
-          .drop("__c")
-        val tiled = unp
-          .join(broadcast(offs), Seq("met", "band"))
-          .withColumn("__rn", row_number().over(
-            Window.partitionBy(col("met"), col("band"))
-              .orderBy(col("v"), col("user_id"))).cast("long") +
-            col("__off"))
-          // the standard SQL ntile split (globalNtile's formula): the
-          // first n%5 tiles take (n div 5)+1 rows, the rest n div 5
-          .withColumn("__t", expr(
-            """CASE WHEN __rn <= (__n % 5) * ((__n div 5) + 1)
-                 THEN ((__rn - 1) div ((__n div 5) + 1)) + 1
-                 ELSE (__n % 5) +
-                   ((__rn - 1 - (__n % 5) * ((__n div 5) + 1))
-                     div (__n div 5)) + 1 END""").cast("int"))
+            col("x.met").as("met"), col("x.v").as("v"))
+        val band = when(col("met") === 3, expr("v div 4096"))
+          .otherwise(col("v"))
+        val tiled = ScalableRank.globalNtile(unp, band,
+          Seq(col("v"), col("user_id")), 5, "__t",
+          partitionBy = Seq(col("met")))
         tiled.groupBy(col("user_id"), col("recency_days"),
             col("f"), col("m"))
           .agg(max(when(col("met") === 1, col("__t"))).as("r_q"),

@@ -1480,28 +1480,22 @@ private[graft] object FeatureQueries {
 
     // Quantile normalization: map every value to its mid-rank uniform
     // quantile WITHIN its series — the rank-based feature transform
-    // that kills distribution drift. No per-type whole-partition sort
-    // anywhere: the grouped (type, value) support rides ONE bucketed
-    // global prefix sum ordered (type, value); subtracting each type's
-    // broadcast offset converts the global running count into the
-    // per-type one, and the transform table joins back to the rows.
+    // that kills distribution drift. The grouped (type, value) support
+    // takes its per-type count of smaller values from a bucketed prefix
+    // sum partitioned by type, so no per-type whole-partition sort runs.
     Q("f_quantile_normalize",
       (s, d) => {
         val g = ev(s, d).groupBy(col("event_type"), col("value"))
           .agg(count(lit(1)).as("ct"))
-        val cum = ScalableRank.globalPrefixSum(g,
-          struct(col("event_type"), floor(col("value"))),
-          Seq(col("event_type"), col("value")), col("ct"), "gbefore",
-          inclusive = false)
+        val before = ScalableRank.globalPrefixSum(g, floor(col("value")),
+          Seq(col("value")), col("ct"), "before",
+          partitionBy = Seq(col("event_type")))
         val totals = g.groupBy(col("event_type"))
           .agg(sum(col("ct")).as("ntype"))
-          .withColumn("offset", coalesce(
-            sum(col("ntype")).over(Window.orderBy(col("event_type"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        val table = cum.join(broadcast(totals), Seq("event_type"))
+        val table = before.join(broadcast(totals), Seq("event_type"))
           .select(col("event_type"), col("value"),
-            r6((col("gbefore") - col("offset") +
-              (col("ct") + 1) / lit(2.0)) / col("ntype")).as("q"))
+            r6((col("before") + (col("ct") + 1) / lit(2.0)) /
+              col("ntype")).as("q"))
         ev(s, d).select(col("event_id"), col("event_type"), col("value"))
           .join(table, Seq("event_type", "value"))
           .select(col("event_id"), col("q"))

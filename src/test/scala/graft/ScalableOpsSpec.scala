@@ -119,6 +119,10 @@ class ScalableOpsSpec extends SparkSpecBase {
       .agg(min(struct($"ts", $"event_id"))).first().getStruct(0)
     assert(maxTrainTs.getAs[java.time.LocalDateTime]("ts")
       .compareTo(minTestTs.getAs[java.time.LocalDateTime]("ts")) <= 0)
+    // a ratio outside (0, 1) or NaN would give a one-label split
+    for (bad <- Seq(-0.2, 0.0, 1.0, 1.5, Double.NaN))
+      intercept[IllegalArgumentException](ScalableRank.chronoSplit(ev,
+        date_trunc("week", col("ts")), Seq(col("ts"), col("event_id")), bad))
   }
 
   test("upsertNothing: no existing keys pass, batch dedup applies") {

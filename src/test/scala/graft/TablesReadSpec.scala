@@ -12,7 +12,8 @@ import org.apache.spark.sql.types.TimestampNTZType
 /** The `Tables` schema cache: a table's schema is resolved once per file
   * fingerprint, so building a warm read starts no Spark job, while a
   * rewritten file is re-inferred on its next read (the round-9 ts
-  * encoding switch must never be served a stale schema).
+  * encoding switch must never be served a stale schema). The events
+  * span and week-chunked copy follow a rewrite the same way.
   */
 class TablesReadSpec extends SparkSpecBase {
 
@@ -86,6 +87,21 @@ class TablesReadSpec extends SparkSpecBase {
     assert(!Tables.eventsTsIsLong(spark, dir.toString))
     assert(batchSpan(dir.toString) == expectSpan)
     assert(jobsDuring(Tables.events(spark, dir.toString)) == 0)
+  }
+
+  test("eventsSpan and eventsChunked follow an in-place rewrite of " +
+    "events.parquet") {
+    val path = Files.createTempDirectory("graft_tables_span")
+    val dir = path.toString
+    writeEventsFile(path, microsTs)
+    assert(Tables.eventsSpan(spark, dir) == (("2024-01-01", "2024-01-02")))
+    assert(Tables.eventsChunked(spark, dir, "2024-01-01", "2024-01-02").count() == 48)
+
+    // the same 48 hours, 30 days later
+    writeEventsFile(path, us => microsTs(us + 30L * 86400000000L))
+    assert(Tables.eventsSpan(spark, dir) == (("2024-01-31", "2024-02-01")))
+    assert(Tables.eventsChunked(spark, dir, "2024-01-31", "2024-02-01").count() == 48)
+    assert(Tables.eventsChunked(spark, dir, "2024-01-01", "2024-01-02").count() == 0)
   }
 
   test("four threads reading a cold events table agree on schema and count") {
